@@ -269,9 +269,9 @@ def q_bm25_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Filter-then-score through block-max WAND: the doc predicate pushes
     down into the doc-table parquet scan, the resulting doc_id set
     becomes an in-kernel bitset, blocks containing no eligible doc are
-    metadata-pruned before decode (operators/wand.py
-    prune_blocks_by_allowed), and masked WAND keeps every bound a valid
-    upper bound so the top-k is exactly filter-then-score."""
+    metadata-pruned inside the per-bucket kernel before decode
+    (operators/wand.py blocks_containing), and masked WAND keeps every
+    bound a valid upper bound so the top-k is exactly filter-then-score."""
     import numpy as np
 
     from docs_indexer_spark.operators.wand import wand_topk

@@ -145,29 +145,30 @@ def phrase_match_blocks(
 
     LEAD-WITH-THE-RAREST (Lucene's advance()-driven conjunction,
     re-expressed at block granularity): the result docs are a subset of
-    the RAREST term's docs, so the rare term's doc_ids are decoded
-    FIRST (O(df_rare) — its doc-id stream, not positions) and every
-    other term keeps only the blocks whose [first_doc_id, last_doc_id]
-    CONTAINS at least one rare doc — a vectorized searchsorted over the
-    sorted rare-doc array inside a mapInPandas filter on block METADATA
-    (no decode, no join).  A "the <rare-word>" phrase then decodes
-    O(df_rare) of the head term's postings instead of O(df_head).
+    the RAREST term's docs, so the position decode groups the blocks by
+    bucket, decodes the rare term's doc ids there FIRST (O(df_rare) —
+    its doc-id stream, not positions) and decodes another term's block
+    only if its [first_doc_id, last_doc_id] CONTAINS at least one rare
+    doc — a vectorized searchsorted over block METADATA inside the same
+    kernel (spimi.decode_position_blocks ``lead_term``): no job before
+    the decode, no second Python stage.  A "the <rare-word>" phrase then
+    decodes O(df_rare) of the head term's postings instead of O(df_head).
     Block-RANGE overlap against the rare term's own blocks would NOT
     work: a sparse term's 128-posting blocks span wide doc ranges that
     cover the whole space.
 
     ``term_dfs`` (term_id → df) lets the caller supply document
-    frequencies it already holds (IndexReader's persisted df_stats; the
-    fused build's df relation) so NO extra job runs here; without it one
-    block-metadata aggregate computes them.  Pruning engages only when
-    it can pay: with rare docs uniformly spread, the kept fraction of a
-    head term's blocks is ≈ 1 − e^(−λ) for λ = B·df_rare/df_head (B =
-    postings per block), so pruning requires df_rare·B ≤ df_head
-    (λ ≤ 1 → ≥37% skipped, far more for clustered or very rare terms)
-    and df_rare ≤ 200k so the rare-doc array stays driver/closure-sized;
-    both-terms-frequent phrases pay O(Σ df) like every positional
-    engine.  Joins always run in ascending-df order so intermediate
-    results never exceed the rarest relation.
+    frequencies it already holds (IndexReader's driver-side term table;
+    the fused build's df relation) so NO extra job runs here; without it
+    one block-metadata aggregate computes them.  Pruning engages only
+    when it can pay for the bucket shuffle it needs: with rare docs
+    uniformly spread, the kept fraction of a head term's blocks is
+    ≈ 1 − e^(−λ) for λ = B·df_rare/df_head (B = postings per block), so
+    pruning requires df_rare·B ≤ df_head (λ ≤ 1 → ≥37% skipped, far more
+    for clustered or very rare terms); both-terms-frequent phrases pay
+    O(Σ df) like every positional engine.  Intersections always run in
+    ascending-df order so intermediate results never exceed the rarest
+    relation.
 
     ``block_size`` is B in that calibration — callers reading a
     PUBLISHED index should pass the generation's recorded block size
@@ -200,47 +201,20 @@ def phrase_match_blocks(
         )
     rare = min(set(tids), key=lambda t: nd[t])
     df_max = max(nd[t] for t in set(tids))
-    if (
-        len(set(tids)) > 1
-        and nd[rare] * block_size <= df_max
-        and nd[rare] <= 200_000
-    ):
-        import numpy as np
-
-        from docs_indexer_spark.operators.compression import (
-            delta_decode_doc_ids,
-        )
-
-        rare_docs = np.sort(np.concatenate([
-            delta_decode_doc_ids(r["doc_ids_bin"])
-            for r in cand.filter(F.col("term_id") == rare)
-            .select("doc_ids_bin").collect()
-        ] or [np.array([], dtype=np.int64)]))
-
-        def _keep_containing(pdfs):
-            for pdf in pdfs:
-                lo = np.searchsorted(
-                    rare_docs, pdf["first_doc_id"].values, side="left"
-                )
-                hi = np.searchsorted(
-                    rare_docs, pdf["last_doc_id"].values, side="right"
-                )
-                yield pdf[hi > lo]
-
-        others = cand.filter(F.col("term_id") != rare).mapInPandas(
-            _keep_containing, schema=cand.schema
-        )
-        cand = others.unionByName(cand.filter(F.col("term_id") == rare))
+    lead = (
+        rare if len(set(tids)) > 1 and nd[rare] * block_size <= df_max
+        else None
+    )
     # ONE decode pass + ONE doc-keyed aggregate instead of k−1 joins:
     # the old per-term join chain both re-ran the (Catalyst-opaque)
     # positional decode once per phrase term AND paid an exchange per
-    # join side.  Here every candidate block decodes exactly once and a
+    # join side.  Here every candidate block decodes at most once and a
     # conditional aggregate pivots each doc's per-term position arrays
     # into one row — first(when(term_id = tᵢ, positions − offsetᵢ))
     # is deterministic because decoded postings hold exactly one row per
     # (term, doc).  Docs missing any phrase term aggregate to NULL for
     # that slot and are dropped — inner-join semantics unchanged.
-    dec = decode_position_blocks(cand)
+    dec = decode_position_blocks(cand, lead_term=lead)
     aggs = [
         F.first(
             F.when(

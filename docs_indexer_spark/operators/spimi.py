@@ -409,62 +409,101 @@ def build_blocks(
     )
 
 
-def decode_position_blocks(blocks: DataFrame) -> DataFrame:
-    """Block index (positions=True) → (term_id, doc_id, positions) rows.
+_POSITIONS_SCHEMA = "term_id long, doc_id long, positions array<int>"
 
-    Used by the phrase plane: the caller filters term_id IN (phrase terms)
-    FIRST so the parquet scan prunes to the handful of terms' blocks; the
-    decode is a vectorized mapInArrow (per-block numpy, never per-posting
-    Python).  Positions un-delta by segmented cumsum keyed on the tf runs.
-    """
+
+def _positions_batch(rows) -> pa.RecordBatch:
+    """Decode positional block rows (an Arrow batch or table) into
+    (term_id, doc_id, positions) postings — per-block numpy, never
+    per-posting Python.  Positions un-delta by segmented cumsum keyed on
+    the tf runs."""
     from docs_indexer_spark.operators.compression import (
         delta_decode_doc_ids,
         varint_decode,
     )
 
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            names = batch.schema.names
-            col = {n: batch.column(names.index(n)) for n in
-                   ("term_id", "doc_ids_bin", "tfs_bin", "positions_bin")}
-            out_tid, out_ids, out_vals, out_offs = [], [], [], [0]
-            for r in range(batch.num_rows):
-                ids = delta_decode_doc_ids(col["doc_ids_bin"][r].as_py())
-                tfs = varint_decode(col["tfs_bin"][r].as_py()).astype(np.int64)
-                gaps = varint_decode(
-                    col["positions_bin"][r].as_py()
-                ).astype(np.int64)
-                starts = np.concatenate(([0], np.cumsum(tfs)))[:-1]
-                c = np.cumsum(gaps)
-                base = c[starts] - gaps[starts]
-                pos = c - np.repeat(base, tfs)
-                tid = col["term_id"][r].as_py()
-                out_tid.append(np.full(len(ids), tid, dtype=np.int64))
-                out_ids.append(ids)
-                out_vals.append(pos)
-                last = out_offs[-1]
-                out_offs.extend((last + np.cumsum(tfs)).tolist())
-            tids = np.concatenate(out_tid)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(tids, type=pa.int64()),
-                    pa.array(np.concatenate(out_ids), type=pa.int64()),
-                    pa.ListArray.from_arrays(
-                        pa.array(out_offs, type=pa.int32()),
-                        pa.array(
-                            np.concatenate(out_vals).astype(np.int32),
-                            type=pa.int32(),
-                        ),
-                    ),
-                ],
-                names=["term_id", "doc_id", "positions"],
-            )
-
-    return blocks.mapInArrow(
-        kernel, schema="term_id long, doc_id long, positions array<int>"
+    out_tid, out_ids, out_vals, out_offs = [], [], [np.empty(0, np.int64)], [0]
+    for tid, ids_bin, tfs_bin, pos_bin in zip(
+        rows.column("term_id").to_pylist(),
+        rows.column("doc_ids_bin").to_pylist(),
+        rows.column("tfs_bin").to_pylist(),
+        rows.column("positions_bin").to_pylist(),
+    ):
+        ids = delta_decode_doc_ids(ids_bin)
+        tfs = varint_decode(tfs_bin).astype(np.int64)
+        gaps = varint_decode(pos_bin).astype(np.int64)
+        starts = np.concatenate(([0], np.cumsum(tfs)))[:-1]
+        c = np.cumsum(gaps)
+        base = c[starts] - gaps[starts]
+        out_tid.append(np.full(len(ids), tid, dtype=np.int64))
+        out_ids.append(ids)
+        out_vals.append(c - np.repeat(base, tfs))
+        out_offs.extend((out_offs[-1] + np.cumsum(tfs)).tolist())
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array(np.concatenate(out_tid or [np.empty(0, np.int64)]),
+                     type=pa.int64()),
+            pa.array(np.concatenate(out_ids or [np.empty(0, np.int64)]),
+                     type=pa.int64()),
+            pa.ListArray.from_arrays(
+                pa.array(out_offs, type=pa.int32()),
+                pa.array(np.concatenate(out_vals).astype(np.int32),
+                         type=pa.int32()),
+            ),
+        ],
+        names=["term_id", "doc_id", "positions"],
     )
+
+
+def decode_position_blocks(
+    blocks: DataFrame, lead_term: int | None = None
+) -> DataFrame:
+    """Block index (positions=True) → (term_id, doc_id, positions) rows.
+
+    Used by the phrase plane: the caller filters term_id IN (phrase terms)
+    FIRST so the parquet scan prunes to the handful of terms' blocks; the
+    decode is one vectorized Arrow kernel (:func:`_positions_batch`).
+
+    ``lead_term`` (a term_id among the rows) turns on rarest-lead block
+    pruning INSIDE the decode: the rows group by bucket — buckets are
+    disjoint doc ranges, so a group holds every block of its docs — and
+    per bucket the lead term's doc ids are decoded first (its doc-id
+    stream only); every other term's block is decoded only if its
+    ``[first_doc_id, last_doc_id]`` range holds one of them
+    (wand.blocks_containing).  A dropped block's postings sit in docs
+    without the lead term, which a phrase containing it can never match.
+    """
+    if lead_term is None:
+        def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+            for batch in batches:
+                if batch.num_rows:
+                    yield _positions_batch(batch)
+
+        return blocks.mapInArrow(kernel, schema=_POSITIONS_SCHEMA)
+
+    from docs_indexer_spark.operators.compression import delta_decode_doc_ids
+    from docs_indexer_spark.operators.wand import blocks_containing
+
+    lead_term = int(lead_term)
+
+    def per_bucket(table: pa.Table) -> pa.Table:
+        is_lead = table.column("term_id").to_numpy() == lead_term
+        lead_docs = np.sort(np.concatenate([np.empty(0, np.int64)] + [
+            delta_decode_doc_ids(b) for b in
+            table.column("doc_ids_bin").filter(pa.array(is_lead)).to_pylist()
+        ]))
+        keep = is_lead | blocks_containing(
+            table.column("first_doc_id").to_numpy(),
+            table.column("last_doc_id").to_numpy(),
+            lead_docs,
+        )
+        kept = _positions_batch(table.filter(pa.array(keep)))
+        return pa.Table.from_batches([kept])
+
+    return blocks.select(
+        "term_id", "bucket", "first_doc_id", "last_doc_id",
+        "doc_ids_bin", "tfs_bin", "positions_bin",
+    ).groupBy("bucket").applyInArrow(per_bucket, schema=_POSITIONS_SCHEMA)
 
 
 def write_blocks(blocks: DataFrame, path: str, term_partitions: int = 32) -> None:

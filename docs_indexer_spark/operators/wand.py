@@ -17,7 +17,7 @@ tie-break (score DESC, doc_id ASC) stays exact versus the exact scorer.
 from __future__ import annotations
 
 import heapq
-from typing import Iterable, Mapping
+from typing import TYPE_CHECKING, Iterable, Mapping
 
 import numpy as np
 import pandas as pd
@@ -29,6 +29,9 @@ from docs_indexer_spark.operators.compression import (
     decode_tf_norms,
     delta_decode_doc_ids,
 )
+
+if TYPE_CHECKING:
+    from pyspark.broadcast import Broadcast
 
 _EXHAUSTED = np.iinfo(np.int64).max
 
@@ -53,15 +56,47 @@ def _in_sorted(values: np.ndarray, sorted_arr: np.ndarray) -> np.ndarray:
     return sorted_arr[idx] == values
 
 
+def blocks_containing(
+    firsts: np.ndarray, lasts: np.ndarray, sorted_ids: np.ndarray
+) -> np.ndarray:
+    """Boolean mask of the blocks whose ``[first_doc_id, last_doc_id]``
+    range holds at least one of ``sorted_ids`` (a SORTED doc-id array) —
+    two searchsorted calls over block METADATA, no decode.  The one block
+    pruning primitive of the serving kernels: the filter bitset in the
+    WAND and exact-scorer kernels, the rarest term's docs in the phrase
+    position decode.  A block it drops can only decode to postings the
+    caller would discard."""
+    lo = np.searchsorted(sorted_ids, firsts, side="left")
+    hi = np.searchsorted(sorted_ids, lasts, side="right")
+    return hi > lo
+
+
+def broadcast_allowed(sc, allowed) -> "Broadcast | None":
+    """A filter's doc ids as ONE broadcast (one ship per executor, not a
+    closure copy per task).  ``allowed`` is a doc-id array in any order,
+    or a ``Broadcast`` of a sorted unique int64 array that the caller
+    owns (IndexReader's filter memo), which is passed through.  None
+    when the filter admits no document."""
+    from pyspark.broadcast import Broadcast
+
+    if isinstance(allowed, Broadcast):
+        return allowed if len(allowed.value) else None
+    arr = np.unique(np.asarray(allowed, dtype=np.int64))
+    return sc.broadcast(arr) if len(arr) else None
+
+
 class _TermList:
     """Cursor over one term's blocks within a bucket (doc_id-sorted).
 
     ``allowed`` (sorted unique int64 array or None) is the filter bitset
-    of a FILTERED query: postings outside it are dropped at decode time,
-    so the WAND walk only ever sees eligible documents.  Block metadata
-    (max-scores, ranges) is computed over the unfiltered superset, which
-    keeps every bound a valid UPPER bound — pruning stays exact, it just
-    prunes a little less tightly than a filter-aware index would.
+    of a FILTERED query: blocks whose doc range holds no allowed doc are
+    dropped from the list before anything decodes (:func:`blocks_containing`),
+    and postings outside it are dropped at decode time, so the WAND walk
+    only ever sees eligible documents.  A dropped block holds no eligible
+    posting, and a kept block's max-score is computed over its unfiltered
+    postings, so every bound stays a valid UPPER bound — pruning stays
+    exact, it just prunes a little less tightly than a filter-aware index
+    would.
     """
 
     __slots__ = ("idf", "firsts", "lasts", "maxes", "ids_bins", "norms_bins",
@@ -71,6 +106,11 @@ class _TermList:
     def __init__(self, blocks: pd.DataFrame, idf: float,
                  allowed: np.ndarray | None = None,
                  doc_range: tuple[int, int] | None = None) -> None:
+        if allowed is not None:
+            blocks = blocks[blocks_containing(
+                blocks["first_doc_id"].values, blocks["last_doc_id"].values,
+                allowed,
+            )]
         blocks = blocks.sort_values(["bucket", "block_seq"])
         self.idf = idf
         self.allowed = allowed
@@ -362,52 +402,12 @@ def wand_topk_lists(
     return out
 
 
-def prune_blocks_by_allowed(
-    hit: DataFrame, allowed: np.ndarray, allowed_bc=None
-) -> DataFrame:
-    """Drop blocks whose [first_doc_id, last_doc_id] range contains NO
-    allowed doc — vectorized searchsorted over block METADATA, no
-    decode (the same containment primitive as phrase rarest-lead
-    pruning).  With a selective filter most of a head term's blocks
-    disappear before any decompression happens.
-
-    The predicate runs on a METADATA-ONLY projection so the compressed
-    posting binaries never cross the JVM↔Arrow boundary just to be
-    filtered (they used to round-trip through pandas twice — once here,
-    once in the decode kernel); the surviving keys broadcast back as a
-    left-semi join.  ``(term_id, first_doc_id)`` is a unique block key:
-    one term's block doc-ranges are pairwise disjoint (buckets are doc
-    ranges, blocks within a bucket are sequential slices)."""
-    from pyspark.sql.types import StructType
-
-    fields = {f.name: f for f in hit.schema.fields}
-    key_schema = StructType(
-        [fields["term_id"], fields["first_doc_id"]]
-    )
-    meta = hit.select("term_id", "first_doc_id", "last_doc_id")
-
-    def _keep(pdfs):
-        # prefer the broadcast handle (one ship per executor) over the
-        # closure copy (one ship per task) when the caller provides it
-        arr = allowed_bc.value if allowed_bc is not None else allowed
-
-        for pdf in pdfs:
-            lo = np.searchsorted(arr, pdf["first_doc_id"].values, "left")
-            hi = np.searchsorted(arr, pdf["last_doc_id"].values, "right")
-            yield pdf[hi > lo][["term_id", "first_doc_id"]]
-
-    keep = meta.mapInPandas(_keep, schema=key_schema)
-    return hit.join(
-        F.broadcast(keep), ["term_id", "first_doc_id"], "left_semi"
-    )
-
-
 def wand_topk(
     blocks: DataFrame,
     idf: Mapping[int, float],
     query_term_ids: Iterable[int],
     k: int = DEFAULT_TOP_K,
-    allowed: np.ndarray | None = None,
+    allowed: "np.ndarray | Broadcast | None" = None,
     split: int | str = 1,
     after: "tuple[float, int] | None" = None,
     est_n_blocks: int | None = None,
@@ -416,13 +416,14 @@ def wand_topk(
     """Distributed block-max WAND: per-bucket WAND (exact within the
     bucket's doc range) → global TakeOrderedAndProject(k).
 
-    ``allowed`` (int64 doc_ids, any order; deduped/sorted here) runs
-    the query FILTERED — OpenSearch's bool {must: match, filter: ...}
-    shape: blocks with no eligible doc are pruned by metadata before
-    decode, and decoded postings are masked by the filter bitset, so
-    only eligible documents can enter the heap.  Exactness argument in
-    :class:`_TermList`.  The array ships to executors in the task
-    closure — the caller (IndexReader.search) bounds its size and
+    ``allowed`` (int64 doc_ids, any order; or a broadcast the caller
+    owns — see :func:`broadcast_allowed`) runs the query FILTERED —
+    OpenSearch's bool {must: match, filter: ...} shape: inside each
+    bucket's kernel, blocks with no eligible doc are pruned by their
+    metadata before decode and decoded postings are masked by the filter
+    bitset, so only eligible documents can enter the heap.  Exactness
+    argument in :class:`_TermList`.  The ids ship to executors as one
+    broadcast — the caller (IndexReader.search) bounds their number and
     routes larger filters through the exact scorer's semi-join.
 
     ``split`` > 1 sub-divides every bucket's doc range into ``split``
@@ -452,21 +453,15 @@ def wand_topk(
         return blocks.sparkSession.createDataFrame([], "doc_id long, score double")
     allowed_bc = None
     if allowed is not None:
-        allowed = np.unique(np.asarray(allowed, dtype=np.int64))
-        if len(allowed) == 0:
+        allowed_bc = broadcast_allowed(blocks.sparkSession.sparkContext, allowed)
+        if allowed_bc is None:
             return blocks.sparkSession.createDataFrame(
                 [], "doc_id long, score double"
             )
-        # ship the bitset as a BROADCAST, not a task closure: at 500k ids
-        # × split>1 the closure copy is ~4 MB serialized per task, the
-        # broadcast one ship per executor (r5 verdict minor #2)
-        allowed_bc = blocks.sparkSession.sparkContext.broadcast(allowed)
     hit = blocks.filter(F.col("term_id").isin(terms)).select(
         "term_id", "bucket", "block_seq", "first_doc_id", "last_doc_id",
         "max_score", "doc_ids_bin", "tf_norms_bin",
     )
-    if allowed is not None:
-        hit = prune_blocks_by_allowed(hit, None, allowed_bc=allowed_bc)
 
     bounds = None
     if (

@@ -3,26 +3,41 @@ path (/root/reference/test/integrationtest.sh:19 → OpenSearch `_search`,
 SURVEY.md §3.3):
 
     analyze query string with the index's analyzer
-    → per-term idf lookup (filter on df_stats — tiny collect)
+    → per-term idf lookup (driver-side: xxhash64 term ids searched in the
+      reader's sorted (term_id, df) arrays — no Spark job)
     → block-max WAND (or exact scoring) over the published block index
     → top-k (score desc, doc_id asc)
     → join the doc store for rendering fields
 
 Execution boundaries: driver parses/plans, executors scan + score their
-buckets, TakeOrderedAndProject merges k rows to the driver.
+buckets, TakeOrderedAndProject merges k rows to the driver.  Every query
+kind runs its scoring kernel as its ONE Python stage and starts no Spark
+job while planning (docs/DESIGN.md "Serving cost model").
 """
 
 from __future__ import annotations
 
 import math
+import os
+import threading
+from collections import OrderedDict
 
+import numpy as np
+import pyarrow.dataset as ds
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from docs_indexer_spark.config import DEFAULT_TOP_K, BM25Params
 from docs_indexer_spark.functions.analysis import analyze_text
+from docs_indexer_spark.functions.xxh import spark_xxhash64_str
 from docs_indexer_spark.operators import bm25, wand
 from docs_indexer_spark.sources.catalog import SnapshotCatalog
+
+# resolved string filters one reader keeps (doc-id array + broadcast
+# each, ≤ max_driver_filter_docs ids): the working set of a serving
+# front-end's facet filters, at most 8 × 4 MB at the default bound
+FILTER_MEMO_SIZE = 8
 
 
 class IndexReader:
@@ -45,18 +60,59 @@ class IndexReader:
         self.analyzer = meta["metrics"].get("analyzer", "english")
         self.n_docs = int(meta["metrics"]["n_docs"])
         self.blocks = catalog.read_at(spark, self.gen_path, "blocks.parquet")
-        # vocabulary-sized and consulted by EVERY query (idf + term-id
-        # lookups): cached for the reader's lifetime; close() releases
-        self.df_stats = catalog.read_at(
-            spark, self.gen_path, "df_stats.parquet"
-        ).persist()
+        # the vocabulary's (term_id, df), sorted by term_id: 16 B per term
+        # on the driver, read once with pyarrow.  Query terms resolve by
+        # searchsorted on their driver-side xxhash64 ids, so idf and
+        # block-count estimates cost no Spark job per query.
+        tbl = pq.read_table(
+            os.path.join(self.gen_path, "df_stats.parquet"),
+            columns=["term_id", "df"],
+        )
+        ids = tbl.column("term_id").to_numpy().astype(np.int64)
+        order = np.argsort(ids, kind="stable")
+        self._term_ids = ids[order]
+        self._term_dfs = tbl.column("df").to_numpy().astype(np.int64)[order]
+        # the SymSpell deletion index (variant → term), sorted and
+        # range-partitioned by variant; None for generations published
+        # before it existed
+        dels = os.path.join(self.gen_path, "deletions.parquet")
+        self._deletions = (
+            ds.dataset(dels, format="parquet") if os.path.exists(dels) else None
+        )
+        self._lock = threading.Lock()
+        self._df_stats: DataFrame | None = None
+        # where string → (sorted doc ids, their broadcast or None if empty)
+        self._filters: "OrderedDict[str, tuple]" = OrderedDict()
         # per-bucket doc-id bounds, lazily cached once per generation —
         # lets wand_topk's auto-split decide and slice with NO per-query
         # block-metadata job (see _bucket_bounds)
         self._bounds_cache: "list[tuple[int, int, int]] | None" = None
 
+    @property
+    def df_stats(self) -> DataFrame:
+        """The pinned (term, term_id, df) relation for the STRING-keyed
+        paths (prefix expansion, highlight stems, more_like_this, fuzzy on
+        generations without a deletion index): persisted on first use,
+        released by :meth:`close`."""
+        with self._lock:
+            if self._df_stats is None:
+                self._df_stats = self.catalog.read_at(
+                    self.spark, self.gen_path, "df_stats.parquet"
+                ).persist()
+            return self._df_stats
+
     def close(self) -> None:
-        self.df_stats.unpersist()
+        """Release what the reader owns: the persisted df_stats and every
+        memoized filter broadcast."""
+        with self._lock:
+            memo = list(self._filters.values())
+            self._filters.clear()
+            rel, self._df_stats = self._df_stats, None
+        for _, bc in memo:
+            if bc is not None:
+                bc.destroy()
+        if rel is not None:
+            rel.unpersist()
 
     def _blocks_for(self, term_ids: list[int]) -> DataFrame:
         """Per-query block relation, manifest-pruned to the files whose
@@ -75,22 +131,27 @@ class IndexReader:
         except (FileNotFoundError, ValueError):
             return self.blocks
 
-    def _idf_df(self, terms: list[str]):
-        """term strings → ({term_id: idf}, {term_id: df}) via the
-        published df_stats table (which carries the string↔id mapping;
-        vocabulary-sized, filtered to |query| rows before the collect).
-        The df map rides along so callers can estimate block counts
-        without another metadata job."""
-        if not terms:
-            return {}, {}
-        rows = self.df_stats.filter(F.col("term").isin(terms)).collect()
+    def _dfs(self, term_ids) -> dict[int, int]:
+        """term_id → df for the ids present in the vocabulary (an
+        unindexed term gets no entry)."""
+        ids = np.unique(np.asarray(list(term_ids), dtype=np.int64))
+        if not len(ids) or not len(self._term_ids):
+            return {}
+        i = np.searchsorted(self._term_ids, ids)
+        i[i == len(self._term_ids)] = len(self._term_ids) - 1
+        hit = self._term_ids[i] == ids
+        return dict(zip(ids[hit].tolist(), self._term_dfs[i[hit]].tolist()))
+
+    def _idf_of(self, df: int) -> float:
         n = self.n_docs
-        idf = {
-            int(r["term_id"]): math.log(1.0 + (n - r["df"] + 0.5) / (r["df"] + 0.5))
-            for r in rows
-        }
-        dfs = {int(r["term_id"]): int(r["df"]) for r in rows}
-        return idf, dfs
+        return math.log(1.0 + (n - df + 0.5) / (df + 0.5))
+
+    def _idf_df(self, terms: list[str]):
+        """term strings → ({term_id: idf}, {term_id: df}) from the
+        driver-side term table.  The df map rides along so callers can
+        estimate block counts without a metadata job."""
+        dfs = self._dfs(spark_xxhash64_str(t) for t in terms)
+        return {t: self._idf_of(df) for t, df in dfs.items()}, dfs
 
     def _idf(self, terms: list[str]) -> dict[int, float]:
         return self._idf_df(terms)[0]
@@ -125,19 +186,34 @@ class IndexReader:
     ):
         """Evaluate a search filter against the pinned doc store.
 
-        Returns ``(allowed_array, allowed_df)`` — exactly one non-None —
-        or ``(None, None)`` for no filter.  The predicate (a Column or a
+        Returns ``(allowed, allowed_df)`` — exactly one non-None — or
+        ``(None, None)`` for no filter.  The predicate (a Column or a
         SQL string) is PUSHED DOWN into the doc-store parquet scan
         (keyword/date fields are plain columns, so min/max row-group
         pruning applies).  A selective filter (≤ ``max_driver_docs``
         hits) collects to a sorted doc_id array the scorers use as an
         in-kernel bitset — the OpenSearch filter-context shape; a broad
         filter stays a distributed relation for a semi-join, since low
-        selectivity means near-exhaustive scoring anyway."""
+        selectivity means near-exhaustive scoring anyway.
+
+        A selective STRING filter is memoized for the reader's pinned
+        generation: its sorted ids and their one broadcast (``allowed``
+        is then that broadcast; an empty filter stays an empty array),
+        so a repeated filter costs no Spark job and no new broadcast.
+        The memo is an LRU of :data:`FILTER_MEMO_SIZE` entries shared by
+        concurrent queries; eviction and :meth:`close` destroy the
+        broadcast, so run a filtered result before the reader resolves
+        that many further distinct filters or closes.  Column and
+        DataFrame predicates resolve per query."""
         if where is None:
             return None, None
-        import numpy as np
-
+        if isinstance(where, str):
+            with self._lock:
+                memo = self._filters.get(where)
+                if memo is not None:
+                    self._filters.move_to_end(where)
+            if memo is not None and len(memo[0]) <= max_driver_docs:
+                return (memo[0] if memo[1] is None else memo[1]), None
         if isinstance(where, DataFrame):
             # pre-resolved doc_id relation (search_hybrid resolves the
             # predicate ONCE and shares it across arms)
@@ -149,9 +225,33 @@ class IndexReader:
         # stops early on broad filters instead of counting the whole
         # qualifying set and then scanning it a second time to collect
         pdf = sel.limit(max_driver_docs + 1).toPandas()
-        if len(pdf) <= max_driver_docs:
-            return np.sort(pdf["doc_id"].to_numpy(dtype=np.int64)), None
-        return None, sel
+        if len(pdf) > max_driver_docs:
+            return None, sel
+        ids = np.unique(pdf["doc_id"].to_numpy(dtype=np.int64))
+        if not isinstance(where, str):
+            return ids, None
+        return self._memoize_filter(where, ids), None
+
+    def _memoize_filter(self, where: str, ids: np.ndarray):
+        """Insert a resolved string filter into the LRU memo; returns
+        what the scorers take as ``allowed`` for it."""
+        bc = self.spark.sparkContext.broadcast(ids) if len(ids) else None
+        dropped = []
+        with self._lock:
+            memo = self._filters.get(where)
+            if memo is not None:
+                # a concurrent query resolved the same filter first
+                dropped.append(bc)
+                ids, bc = memo
+                self._filters.move_to_end(where)
+            else:
+                self._filters[where] = (ids, bc)
+                while len(self._filters) > FILTER_MEMO_SIZE:
+                    dropped.append(self._filters.popitem(last=False)[1][1])
+        for old in dropped:
+            if old is not None:
+                old.destroy()
+        return ids if bc is None else bc
 
     def search(
         self,
@@ -201,7 +301,7 @@ class IndexReader:
         idf, dfs = self._idf_df(sorted(set(terms)))
         ids = sorted(idf)
         blocks = self._blocks_for(ids)
-        allowed_arr, allowed_df = self._resolve_filter(
+        allowed, allowed_df = self._resolve_filter(
             where, max_driver_filter_docs
         )
         if operator == "and":
@@ -210,7 +310,7 @@ class IndexReader:
                 return self.spark.createDataFrame([], "doc_id long, score double")
             return bm25.score_from_blocks(
                 blocks, idf, ids, k=k, require_all=True,
-                allowed=allowed_arr if allowed_arr is not None else allowed_df,
+                allowed=allowed if allowed is not None else allowed_df,
                 after=search_after,
             )
         if allowed_df is not None:
@@ -222,20 +322,22 @@ class IndexReader:
             )
         if exact:
             return bm25.score_from_blocks(
-                blocks, idf, ids, k=k, allowed=allowed_arr, after=search_after
+                blocks, idf, ids, k=k, allowed=allowed, after=search_after
             )
         # block-count estimate from the dfs already in hand: Σ ceil(df/B)
         # undercounts only when a term's postings spread over many
-        # buckets, so pad by one bucket's worth of blocks per term —
-        # a perf-only decision either way (split never changes results)
-        fast = split == "auto" and allowed_arr is None
+        # buckets, so pad by one bucket's worth of blocks per term.  A
+        # filter does not shrink it: every hit block still ships to the
+        # bucket kernels, which prune it there.  A perf-only decision
+        # either way (split never changes results).
+        fast = split == "auto"
         est = None
         if fast:
             bsz = int(self.meta["metrics"].get("block_size") or 128)
             n_buckets = max(1, len(self._bucket_bounds()))
             est = sum(-(-df // bsz) + n_buckets for df in dfs.values())
         return wand.wand_topk(
-            blocks, idf, ids, k=k, allowed=allowed_arr, split=split,
+            blocks, idf, ids, k=k, allowed=allowed, split=split,
             after=search_after,
             est_n_blocks=est,
             bounds_rows=self._bucket_bounds() if fast else None,
@@ -243,10 +345,10 @@ class IndexReader:
 
     def _filter_arg(self, where, max_driver_docs: int = 500_000):
         """``where`` → the ``allowed`` argument for the block scorers
-        (bitset array if selective, doc_id relation otherwise, None if
-        unfiltered)."""
-        arr, df = self._resolve_filter(where, max_driver_docs)
-        return arr if arr is not None else df
+        (bitset array or its memoized broadcast if selective, doc_id
+        relation otherwise, None if unfiltered)."""
+        allowed, df = self._resolve_filter(where, max_driver_docs)
+        return allowed if allowed is not None else df
 
     def search_prefix(
         self,
@@ -268,35 +370,28 @@ class IndexReader:
             .limit(max_expansions)
             .collect()
         )
-        n = self.n_docs
-        idf = {
-            int(r["term_id"]): math.log(1.0 + (n - r["df"] + 0.5) / (r["df"] + 0.5))
-            for r in rows
-        }
+        idf = {int(r["term_id"]): self._idf_of(r["df"]) for r in rows}
         ids = sorted(idf)
         return bm25.score_from_blocks(
             self._blocks_for(ids), idf, ids, k=k,
             allowed=self._filter_arg(where),
         )
 
-    def _fuzzy_candidates_df(
+    def _fuzzy_candidates(
         self, terms: list[str], fuzziness: int
-    ) -> DataFrame:
-        """Plan producing the (term, term_id, df) rows that MAY sit
-        within ``fuzziness`` Damerau-OSA of some query term — via the
-        published SymSpell deletion index (equi-join on the query's own
-        deletion variants; one job for all query terms), falling back
-        for pre-deletion-index generations to a df_stats scan bounded by
-        threshold-Levenshtein ≤ 2·fuzziness (lev ≤ 2·OSA, so the bound
-        is a superset).  Either way the caller OSA-verifies; the result
-        is O(neighborhood) rows, never the vocabulary."""
-        from docs_indexer_spark.operators.suggest import _deletion_variants
+    ) -> list[tuple[str, int, int]]:
+        """(term, term_id, df) of the vocabulary terms that MAY sit
+        within ``fuzziness`` Damerau-OSA of some query term — O(
+        neighborhood) rows, never the vocabulary; the caller OSA-verifies.
 
-        try:
-            dels = self.catalog.read_at(
-                self.spark, self.gen_path, "deletions.parquet"
-            )
-        except FileNotFoundError:
+        With the published SymSpell deletion index, the query terms'
+        deletion variants filter ``deletions.parquet`` with pyarrow (the
+        table is sorted by variant, so row-group statistics skip most of
+        it) and the candidates' dfs come from the driver-side term table:
+        no Spark job.  Generations published before the deletion index
+        fall back to a df_stats scan bounded by threshold-Levenshtein
+        ≤ 2·fuzziness (lev ≤ 2·OSA, so the bound is a superset)."""
+        if self._deletions is None:
             cond = None
             for t in terms:
                 c = (
@@ -305,16 +400,23 @@ class IndexReader:
                     F.levenshtein(F.col("term"), F.lit(t), 2 * fuzziness) >= 0
                 )
                 cond = c if cond is None else (cond | c)
-            return self.df_stats.filter(cond)
+            return [
+                (r["term"], int(r["term_id"]), int(r["df"]))
+                for r in self.df_stats.filter(cond).collect()
+            ]
+        from docs_indexer_spark.operators.suggest import _deletion_variants
+
         variants = sorted(
             {v for t in terms for v in _deletion_variants(t, fuzziness)}
         )
-        cands = (
-            dels.filter(F.col("variant").isin(variants))
-            .select("term")
-            .distinct()
-        )
-        return self.df_stats.join(F.broadcast(cands), "term")
+        words = sorted(set(
+            self._deletions.to_table(
+                columns=["term"], filter=ds.field("variant").isin(variants)
+            ).column("term").to_pylist()
+        ))
+        ids = [spark_xxhash64_str(w) for w in words]
+        dfs = self._dfs(ids)
+        return [(w, t, dfs[t]) for w, t in zip(words, ids) if t in dfs]
 
     def search_fuzzy(
         self,
@@ -331,31 +433,27 @@ class IndexReader:
         ONE edit, matching Lucene's FuzzyQuery automaton, where plain
         Levenshtein would miss it.
 
-        Serving shape: query deletion variants equi-join the published
-        SymSpell ``deletions.parquet`` (candidate superset, one job, no
-        vocabulary scan), exact OSA verifies the collected candidates
-        driver-side, the surviving expansion is capped per query term to
-        ``max_expansions`` by descending df (Lucene default 50), and the
-        union BM25-sums through the block index."""
-        from docs_indexer_spark.functions.analysis import analyze_text
+        Serving shape: query deletion variants probe the published
+        SymSpell ``deletions.parquet`` driver-side (candidate superset, no
+        Spark job, no vocabulary scan — :meth:`_fuzzy_candidates`), exact
+        OSA verifies the candidates, the surviving expansion is capped per
+        query term to ``max_expansions`` by descending df (Lucene default
+        50), and the union BM25-sums through the block index."""
         from docs_indexer_spark.functions.fuzzy import osa_distance
 
         terms = sorted(set(analyze_text(query, self.analyzer)))
         if not terms:
             return self.spark.createDataFrame([], "doc_id long, score double")
-        rows = self._fuzzy_candidates_df(terms, fuzziness).collect()
-        n = self.n_docs
+        cands = self._fuzzy_candidates(terms, fuzziness)
         idf: dict[int, float] = {}
         for t in terms:
             verified = [
-                r for r in rows
-                if osa_distance(r["term"], t, cap=fuzziness) <= fuzziness
+                c for c in cands
+                if osa_distance(c[0], t, cap=fuzziness) <= fuzziness
             ]
-            verified.sort(key=lambda r: (-r["df"], r["term"]))
-            for r in verified[:max_expansions]:
-                idf[int(r["term_id"])] = math.log(
-                    1.0 + (n - r["df"] + 0.5) / (r["df"] + 0.5)
-                )
+            verified.sort(key=lambda c: (-c[2], c[0]))
+            for _, tid, df in verified[:max_expansions]:
+                idf[tid] = self._idf_of(df)
         ids = sorted(idf)
         return bm25.score_from_blocks(
             self._blocks_for(ids), idf, ids, k=k,
@@ -391,25 +489,14 @@ class IndexReader:
             )
         terms = [t for t, _ in terms_pos]
         offsets = [p for _, p in terms_pos]
-        # term_id = xxhash64(term), computed driver-side with the
-        # bit-identical pure-Python XXH64 (functions/xxh.py — pinned
-        # against Spark) so no per-query hashing job runs; dfs come from
-        # the persisted df_stats relation (tiny filter-collect) so
-        # phrase_match_blocks runs no metadata job, early-outs on
-        # unindexed terms, and can decide rarest-lead pruning from real
-        # document frequencies
-        from docs_indexer_spark.functions.xxh import spark_xxhash64_str
-
+        # term ids and dfs from the driver-side term table: no Spark job
+        # before the decode, an early-out on unindexed terms inside
+        # phrase_match_blocks, and real document frequencies for its
+        # rarest-lead decision
         term_ids = [spark_xxhash64_str(t) for t in terms]
-        term_dfs = {
-            int(r["term_id"]): int(r["df"])
-            for r in self.df_stats.filter(
-                F.col("term_id").isin(term_ids)
-            ).collect()
-        }
         res = phrase_match_blocks(
             self._blocks_for(term_ids), term_ids, offsets=offsets,
-            term_dfs=term_dfs,
+            term_dfs=self._dfs(term_ids),
             block_size=self.meta["metrics"].get("block_size"),
         )
         if where is not None:

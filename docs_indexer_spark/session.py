@@ -56,7 +56,10 @@ def spread(df, min_partitions: int | None = None, key: str | None = None):
     executor has.  At the 100-TB target the scan has thousands of
     partitions and this is a no-op; the repartition only fires when the
     input is narrower than the session's parallelism, so it never adds a
-    shuffle at scale.  The partition probe builds lineage only — no job.
+    shuffle at scale.  The partition-count probe below is NOT free:
+    under AQE it runs the stages beneath ``df``'s first exchange as one
+    Spark job (2.8-3.4 s on the first call in a fresh JVM, measured on a
+    2,100-document ingest corpus with 3 local cores of a 4-core machine).
 
     Pass ``key`` (a column name) when the result feeds both sides of a
     self-join: hash partitioning is deterministic, so the two subtrees stay

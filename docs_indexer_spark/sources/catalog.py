@@ -45,6 +45,18 @@ class CommitConflictError(RuntimeError):
     retries or aborts)."""
 
 
+def _written_schema(path: str):
+    """The Spark schema a Spark writer recorded in the footer of the
+    parquet file ``path``, or None for a file written by another tool."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructType
+
+    raw = (pq.read_metadata(path).metadata or {}).get(
+        b"org.apache.spark.sql.parquet.row.metadata"
+    )
+    return StructType.fromJson(json.loads(raw)) if raw else None
+
+
 class SnapshotCatalog:
     def __init__(self, root: str) -> None:
         self.root = root
@@ -352,7 +364,14 @@ class SnapshotCatalog:
             # caller's IN-filter yields zero rows from it
             keep = [os.path.join(root, manifest["files"][0]["file"])] \
                 if manifest["files"] else [root]
-        return spark.read.parquet(*keep)
+        reader = spark.read
+        schema = _written_schema(keep[0]) if keep[0] != root else None
+        if schema is not None:
+            # Spark infers a parquet schema with a Spark JOB (one per
+            # read); a per-query read takes the writer's recorded schema
+            # from one footer on the driver instead
+            reader = reader.schema(schema)
+        return reader.parquet(*keep)
 
     # -- incremental snapshot scan (Iceberg incremental-read analogue) ----
     def incremental(self, spark: SparkSession, table: str, name: str,

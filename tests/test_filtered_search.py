@@ -136,15 +136,17 @@ def test_empty_filter_returns_empty(fused):
 
 
 def test_block_metadata_pruning_drops_blocks(fused, allowed):
-    """A one-doc filter must prune almost every block before decode."""
+    """A one-doc filter must prune almost every block before decode: the
+    kernels' block test keeps fewer blocks than the query hits."""
     one = np.array(allowed[:1], dtype=np.int64)
     idf = _idf_map(fused, TERMS)
     hit = fused.blocks.filter(
         F.col("term_id").isin(sorted(idf))
-    ).select("term_id", "first_doc_id", "last_doc_id",
-             "doc_ids_bin", "tf_norms_bin")
-    total = hit.count()
-    kept = wand.prune_blocks_by_allowed(hit, one).count()
+    ).select("first_doc_id", "last_doc_id").toPandas()
+    total = len(hit)
+    kept = int(wand.blocks_containing(
+        hit["first_doc_id"].values, hit["last_doc_id"].values, one
+    ).sum())
     assert kept < total
 
 
@@ -498,3 +500,154 @@ def test_wand_split_overflow_guard_extreme_doc_ids(spark):
             [(r["doc_id"], r["score"]) for r in got],
         )
     assert len(base) == 10
+
+
+def test_filter_emptying_buckets_equals_filter_then_score(
+    spark, positional_index
+):
+    """A filter whose docs all sit in the first doc-range bucket leaves
+    every other bucket without one eligible block: the kernels prune
+    those buckets to nothing and must still give filter-then-score
+    through WAND at split 1, 2 and 4, the exact scorer and AND."""
+    from docs_indexer_spark.plans.query import IndexReader
+
+    reader = IndexReader(spark, positional_index)
+    where = "doc_id < 100"
+    q = " ".join(TERMS)
+    ids = sorted(reader._idf(TERMS))
+    hit = reader.blocks.filter(F.col("term_id").isin(ids)).select(
+        "bucket", "first_doc_id", "last_doc_id"
+    ).toPandas()
+    kept = wand.blocks_containing(
+        hit["first_doc_id"].values, hit["last_doc_id"].values,
+        np.arange(100, dtype=np.int64),
+    )
+    emptied = set(hit["bucket"]) - set(hit["bucket"][kept])
+    assert len(emptied) >= 2, "the filter must empty whole buckets"
+
+    def expect(rows):
+        return sorted(
+            ((r["doc_id"], r["score"]) for r in rows if r["doc_id"] < 100),
+            key=lambda x: (-x[1], x[0]),
+        )[:10]
+
+    want = expect(reader.search(q, k=100_000, exact=True).collect())
+    assert want
+    for kwargs in ({"split": 1}, {"split": 2}, {"split": 4}, {"exact": True}):
+        got = reader.search(q, k=10, where=where, **kwargs).collect()
+        rank_identical(want, [(r["doc_id"], r["score"]) for r in got])
+    want_and = expect(
+        reader.search(q, k=100_000, operator="and").collect()
+    )
+    assert want_and
+    got = reader.search(q, k=10, where=where, operator="and").collect()
+    rank_identical(want_and, [(r["doc_id"], r["score"]) for r in got])
+    reader.close()
+
+
+def test_filter_memo_bounds_and_releases_broadcasts(
+    spark, positional_index, monkeypatch
+):
+    """Resolved string filters are memoized per reader in a bounded LRU:
+    3× the bound of distinct filters leave at most the bound of live
+    broadcasts, a repeated filter reuses its broadcast without a Spark
+    job, and close() destroys every one."""
+    from pyspark import SparkContext
+
+    from docs_indexer_spark.plans.query import FILTER_MEMO_SIZE, IndexReader
+
+    created = []
+    real = SparkContext.broadcast
+
+    def recording(self, value):
+        bc = real(self, value)
+        created.append(bc)
+        return bc
+
+    monkeypatch.setattr(SparkContext, "broadcast", recording)
+
+    def live():
+        return sum(bool(bc._jbroadcast.isValid()) for bc in created)
+
+    reader = IndexReader(spark, positional_index)
+    wheres = [f"n_chars >= {i}" for i in range(3 * FILTER_MEMO_SIZE)]
+    for w in wheres:
+        reader._filter_arg(w)
+        assert live() <= FILTER_MEMO_SIZE
+    assert len(created) == len(wheres) and live() == FILTER_MEMO_SIZE
+
+    sc = spark.sparkContext
+    sc.setJobGroup("filter-memo-hit", "memoized filter")
+    try:
+        again = reader._filter_arg(wheres[-1])
+    finally:
+        sc.setJobGroup("", "")
+    assert again is created[-1] and len(created) == len(wheres)
+    assert sc.statusTracker().getJobIdsForGroup("filter-memo-hit") == []
+
+    reader.close()
+    assert live() == 0
+
+
+def test_filter_memo_under_concurrent_queries(
+    spark, serving_docs, positional_index, monkeypatch
+):
+    """One reader serves concurrent queries: threads resolving an
+    overlapping set of 1.5× the memo bound of filters (so inserts race,
+    repeat and evict) each get their filter's exact doc set, and
+    afterwards exactly the memoized broadcasts are live — a lost update
+    would leak one or destroy one still memoized."""
+    import sys
+    import threading
+
+    from pyspark import SparkContext
+    from pyspark.broadcast import Broadcast
+
+    from docs_indexer_spark.plans.query import FILTER_MEMO_SIZE, IndexReader
+
+    created = []
+    real = SparkContext.broadcast
+
+    def recording(self, value):
+        bc = real(self, value)
+        created.append(bc)
+        return bc
+
+    monkeypatch.setattr(SparkContext, "broadcast", recording)
+    rows = serving_docs.select("doc_id", "n_chars").collect()
+    bounds = [300 + 20 * i for i in range(FILTER_MEMO_SIZE * 3 // 2)]
+    want = {
+        b: sorted(r["doc_id"] for r in rows if r["n_chars"] >= b)
+        for b in bounds
+    }
+    reader = IndexReader(spark, positional_index)
+    errors = []
+
+    def client(t):
+        try:
+            for j in range(6):
+                b = bounds[(t * 5 + j * 7) % len(bounds)]
+                got = reader._filter_arg(f"n_chars >= {b}")
+                ids = got.value if isinstance(got, Broadcast) else got
+                if list(ids) != want[b]:
+                    errors.append((b, len(ids), len(want[b])))
+        except Exception as e:  # surfaced by the assertion below
+            errors.append(repr(e))
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=client, args=(t,)) for t in range(8)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=300)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(th.is_alive() for th in threads)
+    assert not errors, errors
+    assert len(reader._filters) <= FILTER_MEMO_SIZE
+    live = {id(bc) for bc in created if bc._jbroadcast.isValid()}
+    assert live == {id(bc) for _, bc in reader._filters.values()}
+    reader.close()
+    assert not any(bc._jbroadcast.isValid() for bc in created)

@@ -91,16 +91,33 @@ def test_search_fuzzy_transposition_via_symspell(spark, fuzzy_index):
            for r in reader.search_fuzzy("winodw", k=5).collect()]
     assert got == want and got, "transposition must match at fuzziness 1"
 
-    # plan audit: the SymSpell candidate path is an equi-join probe —
-    # no levenshtein anywhere in the candidate plan
-    plan = reader._fuzzy_candidates_df(
-        ["winodw"], 1
-    )._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "extended"
-        )
-    )
-    assert "levenshtein" not in plan.lower()
+    # plan audit: the SymSpell candidate probe reads ONLY
+    # deletions.parquet, through the variant filter, on the driver — it
+    # starts no Spark job, so it neither scans df_stats nor runs
+    # levenshtein anywhere
+    dels = reader._deletions
+    root = os.path.join(gen, "deletions.parquet")
+    assert dels.files and all(f.startswith(root) for f in dels.files)
+    reads = []
+
+    class Recording:
+        def to_table(self, **kwargs):
+            reads.append(kwargs)
+            return dels.to_table(**kwargs)
+
+    reader._deletions = Recording()
+    sc = spark.sparkContext
+    sc.setJobGroup("fuzzy-candidate-audit", "candidate probe")
+    try:
+        cands = reader._fuzzy_candidates(["winodw"], 1)
+    finally:
+        sc.setJobGroup("", "")
+    assert sc.statusTracker().getJobIdsForGroup("fuzzy-candidate-audit") == []
+    assert len(reads) == 1 and reads[0]["columns"] == ["term"]
+    flt = str(reads[0]["filter"])
+    assert "variant" in flt and "is_in" in flt
+    assert "window" in {term for term, _, _ in cands}
+    reader._deletions = dels
     reader.close()
 
 
@@ -259,3 +276,64 @@ def test_symspell_deletion_neighborhoods_complete_for_osa():
                 assert na & nb, (a, b, d)
                 checked += 1
     assert checked > 300  # the sweep actually exercised the property
+
+
+def test_driver_term_table_equals_df_stats(spark, fuzzy_index):
+    """The reader's driver-side (term_id, df) arrays answer every
+    vocabulary term of the published index with its df_stats row, keyed
+    by the driver-side xxhash64 of the term; an unindexed term gets no
+    entry."""
+    from docs_indexer_spark.functions.xxh import spark_xxhash64_str
+    from docs_indexer_spark.plans.query import IndexReader
+
+    cat, _ = fuzzy_index
+    reader = IndexReader(spark, cat)
+    rows = reader.df_stats.collect()
+    want = {int(r["term_id"]): int(r["df"]) for r in rows}
+    assert len(want) == len(rows) > 0
+    assert reader._dfs(spark_xxhash64_str(r["term"]) for r in rows) == want
+    assert reader._idf_df(sorted(r["term"] for r in rows))[1] == want
+    assert reader._idf_df(["zzqxv"]) == ({}, {})
+    reader.close()
+
+
+@pytest.mark.parametrize("fuzziness", [1, 2])
+def test_fuzzy_candidates_equal_osa_recomputation(spark, fuzzy_index, fuzziness):
+    """For 20 misspelled words, the OSA-verified candidates of the
+    deletion-index probe equal a brute-force recomputation over the
+    whole df_stats vocabulary — same terms, term ids and dfs."""
+    import random
+
+    from docs_indexer_spark.plans.query import IndexReader
+
+    cat, _ = fuzzy_index
+    reader = IndexReader(spark, cat)
+    vocab = sorted(
+        (r["term"], int(r["term_id"]), int(r["df"]))
+        for r in reader.df_stats.collect()
+    )
+    rng = random.Random(fuzziness)
+    stems = [v[0] for v in vocab if len(v[0]) >= 3]
+    words = []
+    for i in range(20):
+        term = rng.choice(stems)
+        j = rng.randrange(len(term) - 1)
+        words.append([
+            term[:j] + term[j + 1] + term[j] + term[j + 2:],  # transpose
+            term[:j] + "q" + term[j + 1:],                     # substitute
+            term[:j] + term[j + 1:],                           # delete
+            term[:j] + "x" + term[j:],                         # insert
+        ][i % 4])
+    matched = 0
+    for w in words:
+        want = {
+            v for v in vocab if osa_distance(v[0], w, cap=fuzziness) <= fuzziness
+        }
+        got = {
+            c for c in reader._fuzzy_candidates([w], fuzziness)
+            if osa_distance(c[0], w, cap=fuzziness) <= fuzziness
+        }
+        assert got == want, w
+        matched += bool(want)
+    assert matched == len(words)
+    reader.close()

@@ -282,3 +282,30 @@ def test_phrase_blocks_rarest_lead_pruning(spark):
     missing = spark.createDataFrame([("zz-not-a-term",)], "t string") \
         .select(F.xxhash64("t")).collect()[0][0]
     assert phrase_match_blocks(blocks, [tids[0], missing]).count() == 0
+
+
+def test_search_phrase_rarest_lead_equals_positions(
+    spark, serving_docs, positional_index, phrase_pairs
+):
+    """A published-index phrase query whose rarest-lead pruning engages
+    (the per-bucket decode drops the head term's blocks that hold no
+    rare-term doc) equals phrase_occurrences over the token positions —
+    doc ids, occurrence counts and first positions, in rank order."""
+    from docs_indexer_spark.plans.query import IndexReader
+
+    phrase = list(phrase_pairs["rare_lead"])
+    postings = token_positions(serving_docs, analyzer="stop")
+    want = sorted(
+        ((r["doc_id"], r["n_occurrences"], r["first_pos"])
+         for r in phrase_occurrences(postings, phrase).collect()),
+        key=lambda x: (-x[1], x[0]),
+    )
+    assert want
+    reader = IndexReader(spark, positional_index)
+    res = reader.search_phrase(" ".join(phrase), k=1000)
+    got = [(r["doc_id"], r["n_occurrences"], r["first_pos"])
+           for r in res.collect()]
+    plan = res._jdf.queryExecution().executedPlan().toString()
+    assert "FlatMapGroupsInArrow" in plan, "rarest-lead pruning must engage"
+    assert got == want
+    reader.close()

@@ -5,6 +5,8 @@ These are the `.explain("formatted")` properties a 100-TB deployment
 depends on; a silent optimizer-shape regression should fail CI, not a
 cluster."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -105,3 +107,65 @@ def test_parity_probes_stay_sliced(spark):
     src_cos = inspect.getsource(E.q_embedding_pair_cosine)
     assert "doc_id" in src_jac and "< 60" in src_jac.replace("<60", "< 60")
     assert "vec_id" in src_cos and "< 80" in src_cos.replace("<80", "< 80")
+
+
+# physical nodes that run Python (a pandas/Arrow UDF stage or a row UDF)
+_PYTHON_NODES = re.compile(
+    r"\b(FlatMapGroupsInPandas|FlatMapGroupsInArrow|MapInPandas|MapInArrow"
+    r"|ArrowEvalPython|BatchEvalPython)\b"
+)
+
+
+def _executed_python_nodes(df) -> list[str]:
+    """Python nodes of an EXECUTED adaptive plan (its final plan only)."""
+    plan = _plan(df)
+    assert "isFinalPlan=true" in plan
+    return _PYTHON_NODES.findall(plan.split("== Initial Plan ==")[0])
+
+
+def test_serving_runs_one_python_stage_per_query(
+    spark, positional_index, phrase_pairs
+):
+    """Serving cost gate: every Python stage pays a fixed per-task worker
+    start-up (docs/DESIGN.md "Serving cost model"), so each IndexReader
+    query kind must run its scoring kernel as its ONLY Python node, and
+    — once a warm-up query has cached the reader's per-generation state
+    and filter — building the query must start no Spark job."""
+    from docs_indexer_spark.plans.query import IndexReader
+
+    reader = IndexReader(spark, positional_index)
+    where = "lang = 'de'"
+    kinds = {
+        "bm25": lambda: reader.search("spark join window", k=10),
+        "and": lambda: reader.search("spark join", k=10, operator="and"),
+        "phrase": lambda: reader.search_phrase(
+            " ".join(phrase_pairs["dense"]), k=10
+        ),
+        "phrase_rare_lead": lambda: reader.search_phrase(
+            " ".join(phrase_pairs["rare_lead"]), k=10
+        ),
+        "fuzzy": lambda: reader.search_fuzzy("winodw", k=10),
+        "filtered": lambda: reader.search(
+            "spark join window", k=10, where=where
+        ),
+    }
+    for run in kinds.values():
+        assert run().collect()
+    sc = spark.sparkContext
+    nodes = {}
+    for name, run in kinds.items():
+        group = f"plan-shape-{name}"
+        sc.setJobGroup(group, name)
+        try:
+            df = run()
+        finally:
+            sc.setJobGroup("", "")
+        assert sc.statusTracker().getJobIdsForGroup(group) == [], name
+        df.collect()
+        nodes[name] = _executed_python_nodes(df)
+    assert all(len(v) == 1 for v in nodes.values()), nodes
+    # both phrase routes are covered: plain decode and the per-bucket
+    # rarest-lead decode
+    assert nodes["phrase"] == ["MapInArrow"], nodes
+    assert nodes["phrase_rare_lead"] == ["FlatMapGroupsInArrow"], nodes
+    reader.close()
