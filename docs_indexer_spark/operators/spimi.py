@@ -472,6 +472,8 @@ def decode_position_blocks(
     ``[first_doc_id, last_doc_id]`` range holds one of them
     (wand.blocks_containing).  A dropped block's postings sit in docs
     without the lead term, which a phrase containing it can never match.
+    The grouping shuffles every hit block, a fixed cost the caller
+    weighs against the blocks it skips (phrase.LEAD_MIN_SKIPPED_BLOCKS).
     """
     if lead_term is None:
         def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:

@@ -35,8 +35,9 @@ from docs_indexer_spark.operators import bm25, wand
 from docs_indexer_spark.sources.catalog import SnapshotCatalog
 
 # resolved string filters one reader keeps (doc-id array + broadcast
-# each, ≤ max_driver_filter_docs ids): the working set of a serving
-# front-end's facet filters, at most 8 × 4 MB at the default bound
+# each, ≤ max_driver_filter_docs ids).  The memo only pays for traffic
+# that repeats a filter string; 8 is a memory bound (8 × 4 MB of ids at
+# the default max_driver_filter_docs), not a measured working set
 FILTER_MEMO_SIZE = 8
 
 
@@ -201,10 +202,10 @@ class IndexReader:
         is then that broadcast; an empty filter stays an empty array),
         so a repeated filter costs no Spark job and no new broadcast.
         The memo is an LRU of :data:`FILTER_MEMO_SIZE` entries shared by
-        concurrent queries; eviction and :meth:`close` destroy the
-        broadcast, so run a filtered result before the reader resolves
-        that many further distinct filters or closes.  Column and
-        DataFrame predicates resolve per query."""
+        concurrent queries.  Eviction only unpersists the broadcast, so a
+        query built before its filter was evicted still runs; :meth:`close`
+        destroys the memoized ones, so run filtered results before closing
+        the reader.  Column and DataFrame predicates resolve per query."""
         if where is None:
             return None, None
         if isinstance(where, str):
@@ -236,21 +237,28 @@ class IndexReader:
         """Insert a resolved string filter into the LRU memo; returns
         what the scorers take as ``allowed`` for it."""
         bc = self.spark.sparkContext.broadcast(ids) if len(ids) else None
-        dropped = []
+        unused, evicted = None, []
         with self._lock:
             memo = self._filters.get(where)
             if memo is not None:
-                # a concurrent query resolved the same filter first
-                dropped.append(bc)
+                # a concurrent query resolved the same filter first; ours
+                # was never handed out
+                unused = bc
                 ids, bc = memo
                 self._filters.move_to_end(where)
             else:
                 self._filters[where] = (ids, bc)
                 while len(self._filters) > FILTER_MEMO_SIZE:
-                    dropped.append(self._filters.popitem(last=False)[1][1])
-        for old in dropped:
+                    evicted.append(self._filters.popitem(last=False)[1][1])
+        if unused is not None:
+            unused.destroy()
+        # an evicted broadcast may still sit in the closure of a query
+        # built but not yet run: only drop the executors' copies (a later
+        # task re-fetches it) and leave the rest to Spark's ContextCleaner
+        # once no DataFrame holds it
+        for old in evicted:
             if old is not None:
-                old.destroy()
+                old.unpersist()
         return ids if bc is None else bc
 
     def search(
@@ -581,7 +589,6 @@ class IndexReader:
         )
         if not tf:
             return self.spark.createDataFrame([], "doc_id long, score double")
-        n = self.n_docs
         stats = self.df_stats.filter(
             F.col("term").isin(sorted(tf))
             & (F.col("df") >= min_doc_freq)
@@ -589,8 +596,7 @@ class IndexReader:
         weighted = sorted(
             (
                 (
-                    -tf[r["term"]]
-                    * math.log(1.0 + (n - r["df"] + 0.5) / (r["df"] + 0.5)),
+                    -tf[r["term"]] * self._idf_of(r["df"]),
                     r["term"],
                     int(r["term_id"]),
                     r["df"],
@@ -598,10 +604,7 @@ class IndexReader:
                 for r in stats
             ),
         )[:max_query_terms]
-        idf = {
-            tid: math.log(1.0 + (n - df + 0.5) / (df + 0.5))
-            for _, _, tid, df in weighted
-        }
+        idf = {tid: self._idf_of(df) for _, _, tid, df in weighted}
         ids = sorted(idf)
         top = bm25.score_from_blocks(
             self._blocks_for(ids), idf, ids, k=k + 1

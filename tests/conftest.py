@@ -85,8 +85,9 @@ def phrase_pairs(serving_docs):
     """Two adjacent term pairs of :func:`serving_docs` under the stop
     analyzer, as ``{"rare_lead": (a, b), "dense": (a, b)}`` in document
     order: in ``rare_lead`` the rarer term is rare enough for phrase
-    rarest-lead pruning to engage (df_rare · BLOCK_SIZE ≤ df_head), in
-    ``dense`` it is not."""
+    rarest-lead pruning to engage (df_rare · BLOCK_SIZE ≤ df_head, once
+    a test lifts ``phrase.LEAD_MIN_SKIPPED_BLOCKS``, which this small
+    corpus never reaches), in ``dense`` it is not."""
     from collections import Counter
 
     from docs_indexer_spark.config import BLOCK_SIZE

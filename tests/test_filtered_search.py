@@ -545,18 +545,14 @@ def test_filter_emptying_buckets_equals_filter_then_score(
     reader.close()
 
 
-def test_filter_memo_bounds_and_releases_broadcasts(
-    spark, positional_index, monkeypatch
-):
-    """Resolved string filters are memoized per reader in a bounded LRU:
-    3× the bound of distinct filters leave at most the bound of live
-    broadcasts, a repeated filter reuses its broadcast without a Spark
-    job, and close() destroys every one."""
+def _record_broadcasts(monkeypatch):
+    """Record every broadcast created and every one released (unpersisted
+    or destroyed) from here on: ``(created, released)``, ``released``
+    mapping ``id(bc)`` → ``"unpersist"`` / ``"destroy"``."""
     from pyspark import SparkContext
+    from pyspark.broadcast import Broadcast
 
-    from docs_indexer_spark.plans.query import FILTER_MEMO_SIZE, IndexReader
-
-    created = []
+    created, released = [], {}
     real = SparkContext.broadcast
 
     def recording(self, value):
@@ -564,10 +560,36 @@ def test_filter_memo_bounds_and_releases_broadcasts(
         created.append(bc)
         return bc
 
+    def releasing(how):
+        orig = getattr(Broadcast, how)
+
+        def release(self, blocking=False):
+            released.setdefault(id(self), how)
+            return orig(self, blocking)
+
+        return release
+
     monkeypatch.setattr(SparkContext, "broadcast", recording)
+    monkeypatch.setattr(Broadcast, "unpersist", releasing("unpersist"))
+    monkeypatch.setattr(Broadcast, "destroy", releasing("destroy"))
+    return created, released
+
+
+def test_filter_memo_bounds_and_releases_broadcasts(
+    spark, positional_index, monkeypatch
+):
+    """Resolved string filters are memoized per reader in a bounded LRU:
+    3× the bound of distinct filters leave at most the bound of live
+    (unreleased) broadcasts, an evicted one is unpersisted but not
+    destroyed (a query built before the eviction may still hold it), a
+    repeated filter reuses its broadcast without a Spark job, and close()
+    destroys every memoized one."""
+    from docs_indexer_spark.plans.query import FILTER_MEMO_SIZE, IndexReader
+
+    created, released = _record_broadcasts(monkeypatch)
 
     def live():
-        return sum(bool(bc._jbroadcast.isValid()) for bc in created)
+        return sum(id(bc) not in released for bc in created)
 
     reader = IndexReader(spark, positional_index)
     wheres = [f"n_chars >= {i}" for i in range(3 * FILTER_MEMO_SIZE)]
@@ -575,6 +597,9 @@ def test_filter_memo_bounds_and_releases_broadcasts(
         reader._filter_arg(w)
         assert live() <= FILTER_MEMO_SIZE
     assert len(created) == len(wheres) and live() == FILTER_MEMO_SIZE
+    evicted = created[: -FILTER_MEMO_SIZE]
+    assert all(released.get(id(bc)) == "unpersist" for bc in evicted)
+    assert all(bc._jbroadcast.isValid() for bc in evicted)
 
     sc = spark.sparkContext
     sc.setJobGroup("filter-memo-hit", "memoized filter")
@@ -587,6 +612,41 @@ def test_filter_memo_bounds_and_releases_broadcasts(
 
     reader.close()
     assert live() == 0
+    assert not any(
+        bc._jbroadcast.isValid() for bc in created[-FILTER_MEMO_SIZE:]
+    )
+
+
+def test_query_built_before_its_filter_is_evicted_still_runs(
+    spark, positional_index
+):
+    """search() returns a lazy DataFrame whose kernel closure holds the
+    memoized filter broadcast.  Evicting that filter (another client of
+    the same reader resolving FILTER_MEMO_SIZE new filters) before the
+    query runs must not break it: the query still returns its
+    filter-then-score answer on every scorer route."""
+    from docs_indexer_spark.plans.query import FILTER_MEMO_SIZE, IndexReader
+
+    reader = IndexReader(spark, positional_index)
+    where = "n_chars >= 400"
+    q = " ".join(TERMS)
+    routes = ({}, {"split": 2}, {"exact": True}, {"operator": "and"})
+    want = [
+        [(r["doc_id"], r["score"])
+         for r in reader.search(q, k=10, where=where, **kw).collect()]
+        for kw in routes
+    ]
+    assert all(want)
+    reader.close()
+
+    reader = IndexReader(spark, positional_index)
+    pending = [reader.search(q, k=10, where=where, **kw) for kw in routes]
+    for i in range(FILTER_MEMO_SIZE):
+        reader._filter_arg(f"n_chars >= {500 + i}")
+    assert where not in reader._filters
+    for w, df in zip(want, pending):
+        rank_identical(w, [(r["doc_id"], r["score"]) for r in df.collect()])
+    reader.close()
 
 
 def test_filter_memo_under_concurrent_queries(
@@ -595,25 +655,17 @@ def test_filter_memo_under_concurrent_queries(
     """One reader serves concurrent queries: threads resolving an
     overlapping set of 1.5× the memo bound of filters (so inserts race,
     repeat and evict) each get their filter's exact doc set, and
-    afterwards exactly the memoized broadcasts are live — a lost update
-    would leak one or destroy one still memoized."""
+    afterwards exactly the memoized broadcasts are unreleased, every
+    evicted one unpersisted and none of them destroyed — a lost update
+    would leak one or release one still memoized."""
     import sys
     import threading
 
-    from pyspark import SparkContext
     from pyspark.broadcast import Broadcast
 
     from docs_indexer_spark.plans.query import FILTER_MEMO_SIZE, IndexReader
 
-    created = []
-    real = SparkContext.broadcast
-
-    def recording(self, value):
-        bc = real(self, value)
-        created.append(bc)
-        return bc
-
-    monkeypatch.setattr(SparkContext, "broadcast", recording)
+    created, released = _record_broadcasts(monkeypatch)
     rows = serving_docs.select("doc_id", "n_chars").collect()
     bounds = [300 + 20 * i for i in range(FILTER_MEMO_SIZE * 3 // 2)]
     want = {
@@ -622,13 +674,18 @@ def test_filter_memo_under_concurrent_queries(
     }
     reader = IndexReader(spark, positional_index)
     errors = []
+    handed_out = set()
 
     def client(t):
         try:
             for j in range(6):
                 b = bounds[(t * 5 + j * 7) % len(bounds)]
                 got = reader._filter_arg(f"n_chars >= {b}")
-                ids = got.value if isinstance(got, Broadcast) else got
+                if isinstance(got, Broadcast):
+                    handed_out.add(id(got))
+                    ids = got.value
+                else:
+                    ids = got
                 if list(ids) != want[b]:
                     errors.append((b, len(ids), len(want[b])))
         except Exception as e:  # surfaced by the assertion below
@@ -647,7 +704,14 @@ def test_filter_memo_under_concurrent_queries(
     assert not any(th.is_alive() for th in threads)
     assert not errors, errors
     assert len(reader._filters) <= FILTER_MEMO_SIZE
-    live = {id(bc) for bc in created if bc._jbroadcast.isValid()}
-    assert live == {id(bc) for _, bc in reader._filters.values()}
+    memo = {id(bc) for _, bc in reader._filters.values()}
+    live = {id(bc) for bc in created if id(bc) not in released}
+    assert live == memo
+    # a broadcast some query holds is never destroyed while the reader
+    # is open; only a duplicate that lost the insert race (never handed
+    # out) is
+    assert not {
+        i for i, how in released.items() if how == "destroy"
+    } & handed_out
     reader.close()
-    assert not any(bc._jbroadcast.isValid() for bc in created)
+    assert all(id(bc) in released for bc in created)

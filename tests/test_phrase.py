@@ -230,12 +230,16 @@ def test_phrase_blocks_offsets_first_pos(spark, phrase_docs):
     assert got == {0: (2, 0), 1: (1, 5), 3: (1, 0)}
 
 
-def test_phrase_blocks_rarest_lead_pruning(spark):
+def test_phrase_blocks_rarest_lead_pruning(spark, monkeypatch):
     """Lead-with-the-rarest (round 4): a skewed phrase (head term +
     rarer co-occurring term) must produce matches identical to the
     position-postings oracle through the pruned block path, and a
     phrase containing a term absent from the index answers empty
-    WITHOUT decoding any blocks (metadata-only early-out)."""
+    WITHOUT decoding any blocks (metadata-only early-out).  The
+    fixed-cost floor is lifted: 300 docs never reach it."""
+    from docs_indexer_spark.operators import phrase as phrase_mod
+
+    monkeypatch.setattr(phrase_mod, "LEAD_MIN_SKIPPED_BLOCKS", 0)
     docs = spark.read.parquet(
         "/root/testdata/sf0.001/documents.parquet"
     ).filter(F.col("doc_id") < 300)
@@ -285,12 +289,16 @@ def test_phrase_blocks_rarest_lead_pruning(spark):
 
 
 def test_search_phrase_rarest_lead_equals_positions(
-    spark, serving_docs, positional_index, phrase_pairs
+    spark, serving_docs, positional_index, phrase_pairs, monkeypatch
 ):
     """A published-index phrase query whose rarest-lead pruning engages
     (the per-bucket decode drops the head term's blocks that hold no
     rare-term doc) equals phrase_occurrences over the token positions —
-    doc ids, occurrence counts and first positions, in rank order."""
+    doc ids, occurrence counts and first positions, in rank order.  On
+    this small index the head term has too few blocks for the lead to
+    pay for its shuffle, so the default takes the plain decode (same
+    answer) and the test lifts the fixed-cost floor to engage it."""
+    from docs_indexer_spark.operators import phrase as phrase_mod
     from docs_indexer_spark.plans.query import IndexReader
 
     phrase = list(phrase_pairs["rare_lead"])
@@ -302,10 +310,18 @@ def test_search_phrase_rarest_lead_equals_positions(
     )
     assert want
     reader = IndexReader(spark, positional_index)
-    res = reader.search_phrase(" ".join(phrase), k=1000)
-    got = [(r["doc_id"], r["n_occurrences"], r["first_pos"])
-           for r in res.collect()]
-    plan = res._jdf.queryExecution().executedPlan().toString()
+
+    def run():
+        res = reader.search_phrase(" ".join(phrase), k=1000)
+        got = [(r["doc_id"], r["n_occurrences"], r["first_pos"])
+               for r in res.collect()]
+        return got, res._jdf.queryExecution().executedPlan().toString()
+
+    got, plan = run()
+    assert "FlatMapGroupsInArrow" not in plan, "too few blocks to pay"
+    assert got == want
+    monkeypatch.setattr(phrase_mod, "LEAD_MIN_SKIPPED_BLOCKS", 0)
+    got, plan = run()
     assert "FlatMapGroupsInArrow" in plan, "rarest-lead pruning must engage"
     assert got == want
     reader.close()
