@@ -1,72 +1,42 @@
-"""Fused index build: documents → compressed blocks with minimal shuffles.
+"""Documents → compressed blocks in one call, without staging.
 
-The classic pipeline (token_relations + spimi.build_blocks) moves the
-corpus through FOUR data-sized shuffles: per-doc counts, the stem re-agg,
-doclens, and the (term, bucket) encode exchange.  On a memory-bandwidth-
+The same two steps every index build runs (plans/build_index runs them
+per resumable slice, with a parquet checkpoint between them):
+
+    postings.token_relations   tokenize once → vocabulary dictionary
+                               (stemming on distinct surface forms) →
+                               broadcast-join → encode rows with dl
+                               attached [aggregated (term_id, doc_id, dl)
+                               postings: exchange 1 of the tf path]
+    spimi.index_stats          N, id range (docs), Σcf and the df bound
+                               (dictionary) — no pass over postings
+    spimi.build_blocks         (term_id, bucket) exchange → sort → encode
+                               kernel → df and max_score from block
+                               metadata
+
+so the tf path moves the corpus through TWO data-sized shuffles and the
+positions path through ONE (occurrence rows; the kernel's run length is
+tf, so no position list is ever aggregated).  On a memory-bandwidth-
 bound box (see docs/DESIGN.md "Scaling investigation trail") the shuffle
-bytes ARE the scaling ceiling.  This module cuts them to TWO (tf path) or
-ONE (positions path):
-
-tf path (default):
-    docs → tokenize once → explode
-         → broadcast-join the term dictionary (rid → term_id; stopword
-           forms absent, so the inner join filters them for free)
-         → groupBy(term_id, doc_id, dl).count()        [exchange 1 —
-           map-side partial agg collapses the Zipf head BEFORE any bytes
-           move; dl rides as a group key so doclens never shuffle]
-         → BM25 norm computed natively between the exchanges
-         → (term_id, bucket, doc_id, tf:int, norm:float32) ≈ 28 B/posting
-         → repartition(term_id, bucket) → sort → encode kernel
-         → df per term from block metadata (window over block-granularity
-           rows, 128× smaller than postings), max_score = idf · max_norm
-
-positions path (positions=True):
-    the posexplode index rides each occurrence row through ONE
-    (term_id, bucket) exchange; after the sort, the kernel's adjacent-
-    duplicate run length IS tf and the run's rows ARE the posting's
-    positions — no collect_list aggregation ever materializes.
+bytes ARE the scaling ceiling.
 
 A pure occurrence-level single-shuffle variant of the tf path was built
-and MEASURED SLOWER (1M-doc Zipf(1.05) corpus: local[8] 214 s vs the
-aggregated 2-exchange shape; raw occurrences are ~2.7× posting rows on
-web-like skew, which out-costs the exchange it saves) — that is why the
-default path aggregates first.  Keep the measurement habit: the winning
-shape depends on occ/postings ratio, i.e. on the corpus.
-
-Global stats come from metadata and the dictionary instead of extra
-passes: N = docs.count() (parquet rowcount), total post-stop tokens =
-Σcf over retained dictionary rows (stemming preserves counts), avgdl =
-total/N — this also makes bench-path N/avgdl consistent with the
-published-build path (round-1 ADVICE item).
-
-Trade-offs vs the classic path (kept for the staged/resumable build):
-- the dictionary must broadcast (vocab-sized; gated, AQE fallback above);
-- df is derived from blocks, so a term's df and its blocks cannot drift.
+and MEASURED SLOWER (1M-doc Zipf(1.05) corpus, local[8]: raw occurrences
+are ~2.7× posting rows on web-like skew, which out-costs the exchange it
+saves) — that is why the tf path aggregates first.  Keep the measurement
+habit: the winning shape depends on the occ/postings ratio, i.e. on the
+corpus.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from docs_indexer_spark.config import BM25Params
-from docs_indexer_spark.functions.analysis import ENGLISH_STOPWORDS
-from docs_indexer_spark.operators.postings import (
-    _tokenize_col,
-    idf_col,
-    term_dictionary,
-)
-from docs_indexer_spark.operators.spimi import (
-    _encode_runs,
-    _make_kernel,
-    _RunCarry,
-    blocks_schema,
-)
+from docs_indexer_spark.operators.postings import token_relations
+from docs_indexer_spark.operators.spimi import build_blocks, index_stats
 
 
 class FusedBuild:
@@ -77,17 +47,15 @@ class FusedBuild:
     long-lived session otherwise accumulates one cached dict per build).
     """
 
-    def __init__(self, blocks, terms, n_docs, avgdl, cached=None):
+    def __init__(self, blocks, terms, n_docs, avgdl, relations):
         self.blocks = blocks
         self.terms = terms
         self.n_docs = n_docs
         self.avgdl = avgdl
-        self._cached = cached
+        self._relations = relations
 
     def unpersist(self) -> None:
-        if self._cached is not None:
-            self._cached.unpersist()
-            self._cached = None
+        self._relations.unpersist()
 
     def df_stats(self) -> DataFrame:
         """(term_id, df) derived from block metadata — by construction
@@ -95,58 +63,6 @@ class FusedBuild:
         return self.blocks.groupBy("term_id").agg(
             F.sum("n_docs").cast("long").alias("df")
         )
-
-
-def _make_fused_kernel(norm_dtype, k1, b, avgdl, positions: bool,
-                       store_tf: bool = False):
-    """Kernel over occurrence rows sorted by (term_id, bucket, doc_id
-    [, pos]): dedupe adjacent equal (term_id, bucket, doc_id) into
-    postings (run length = tf), compute the BM25 length norm vectorized,
-    then reuse the block encoder.  Carry-over holds the trailing
-    (term_id, bucket) run of RAW rows between Arrow batches."""
-
-    def flush(cols: dict) -> pa.RecordBatch:
-        t = cols["term_id"]
-        bk = cols["bucket"]
-        d = cols["doc_id"]
-        n = len(t)
-        change = np.empty(n, dtype=bool)
-        change[0] = True
-        change[1:] = (
-            (t[1:] != t[:-1]) | (bk[1:] != bk[:-1]) | (d[1:] != d[:-1])
-        )
-        ps = np.flatnonzero(change)
-        tf = np.diff(np.append(ps, n)).astype(np.int64)
-        dl = cols["dl"][ps].astype(np.float64)
-        norms = tf / (tf + k1 * (1.0 - b + b * dl / avgdl))
-        deduped = {
-            "term_id": t[ps],
-            "bucket": bk[ps],
-            "doc_id": d[ps],
-            "tf": tf,
-            "tf_norm": norms,
-        }
-        pos = (cols["pos"].astype(np.int64), tf) if positions else None
-        return _encode_runs(deduped, norm_dtype, pos, store_tf=store_tf)
-
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        # occurrence rows, so runs are cf-sized (a head term's run spans
-        # thousands of batches) — the chunk-list carry (spimi._RunCarry)
-        # keeps run assembly O(n) instead of O(run²)
-        carry = _RunCarry(positions=False)
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            cols = {
-                name: batch.column(j).to_numpy(zero_copy_only=False)
-                for j, name in enumerate(batch.schema.names)
-            }
-            for mcols, _ in carry.feed(cols, None):
-                yield flush(mcols)
-        for mcols, _ in carry.flush():
-            yield flush(mcols)
-
-    return kernel
 
 
 def fused_build_blocks(
@@ -157,167 +73,20 @@ def fused_build_blocks(
     params: BM25Params = BM25Params(),
     n_buckets: int | None = None,
     norm_dtype=np.float32,
-    shuffle_partitions: int | None = None,
     target_run_postings: int = 1_000_000,
     positions: bool = False,
-    broadcast_vocab_limit: int = 50_000_000,
     store_tf: bool = False,
 ) -> FusedBuild:
-    """Build the compressed block index from raw documents with one
-    data-sized shuffle.  See module docstring for the plan shape."""
-    from docs_indexer_spark.functions.analysis import (
-        stop_filter_col,
-        tokens_col,
+    """Build the compressed block index from raw documents.  See the
+    module docstring for the plan shape."""
+    rel = token_relations(
+        docs, text_col, id_col=id_col, analyzer=analyzer, positions=positions
     )
-    from docs_indexer_spark.session import spread
-
-    spark = docs.sparkSession
-
-    # ---- dictionary + corpus stats (vocab-sized; one tiny collect) ----
-    rdict = term_dictionary(docs, text_col, analyzer).persist()
-    drow = rdict.agg(
-        F.sum("cf").alias("total"),
-        F.count(F.lit(1)).alias("v"),
-        F.max("cf").alias("max_cf"),
-    ).collect()[0]
-    total_tokens = int(drow["total"] or 0)
-    vocab_size = int(drow["v"])
-    # one metadata-ish scan for corpus count + id range (merging these
-    # driver jobs matters at low core counts, where fixed per-job latency
-    # is what the dict/stats stage's scaling loses to)
-    idrow = docs.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.max(id_col).alias("mx"),
-        F.min(id_col).alias("mn"),
-    ).collect()[0]
-    n_docs = int(idrow["n"])
-    avgdl = (total_tokens / n_docs) if n_docs else 0.0
-    max_id = int(idrow["mx"]) if idrow["mx"] is not None else 0
-    min_id = int(idrow["mn"]) if idrow["mn"] is not None else 0
-
-    if n_buckets is None:
-        # max df ≤ max cf: a safe (slightly generous) bucket-count bound
-        # without a postings aggregation to measure true df
-        max_df_bound = int(drow["max_cf"] or 1)
-        n_buckets = min(1024, max(1, -(-max_df_bound // target_run_postings)))
-    span_d = max(1.0, float(max_id - min_id + 1) / n_buckets)
-
-    # ---- the one data-sized pass ----
-    if analyzer == "english":
-        toks = _tokenize_col(F.col(text_col))
-        # possessive-aware stopword test WITHOUT a per-token regexp:
-        # strip("'s$") ∈ STOP ⟺ token ∈ STOP ∪ {s+"'s" | s ∈ STOP} —
-        # precompute the 66-entry union once and test membership only
-        # (the regexp_replace ran interpreted per token occurrence; this
-        # dl filter touches every token of the corpus)
-        stop_plus = sorted(
-            ENGLISH_STOPWORDS | {w + "'s" for w in ENGLISH_STOPWORDS}
-        )
-        stop_arr = F.array(*[F.lit(w) for w in stop_plus])
-        kept = F.filter(
-            F.col("_toks"),
-            lambda tk: ~F.array_contains(stop_arr, tk),
-        )
-    else:
-        toks = tokens_col(text_col)
-        if analyzer == "stop":
-            toks = stop_filter_col(toks)
-        kept = F.col("_toks")
-
-    # dl MUST materialize below the explode: a select that combines
-    # explode(...) with other expressions plans as Project-over-Generate,
-    # i.e. the expression re-evaluates per OCCURRENCE row — the
-    # interpreted stopword-filter HOF per token-row was measured at ~25×
-    # the whole encode stage.  withColumn + a separate explode-select puts
-    # a Generate between the two Projects, so dl computes once per doc.
-    base = spread(docs, key=id_col).select(
-        F.col(id_col).alias("doc_id"), toks.alias("_toks")
-    ).withColumn("dl", F.size(kept).cast("int"))
-    if positions:
-        occ = base.select(
-            "doc_id", "dl", F.posexplode("_toks").alias("pos", "raw")
-        ).select(
-            "doc_id", "dl", F.col("pos").cast("int").alias("pos"),
-            F.xxhash64("raw").alias("rid"),
-        )
-    else:
-        occ = base.select("doc_id", "dl", F.explode("_toks").alias("raw")).select(
-            "doc_id", "dl", F.xxhash64("raw").alias("rid")
-        )
-
-    dict_side = rdict.select("rid", "term_id")
-    if vocab_size <= broadcast_vocab_limit:
-        dict_side = F.broadcast(dict_side)
-    bucket = F.greatest(
-        F.lit(0),
-        F.least(
-            F.lit(n_buckets - 1),
-            F.floor(
-                (F.col("doc_id").cast("double") - F.lit(float(min_id)))
-                / F.lit(span_d)
-            ).cast("int"),
-        ),
+    stats = index_stats(docs, rel.dictionary, id_col)
+    blocks = build_blocks(
+        rel.rows, stats, params=params, n_buckets=n_buckets,
+        norm_dtype=norm_dtype, target_run_postings=target_run_postings,
+        store_tf=store_tf,
     )
-    if not shuffle_partitions:
-        sc = spark.sparkContext
-        shuffle_partitions = max(sc.defaultParallelism * 2, 16)
-
-    if positions:
-        # positions ride per-occurrence rows through ONE exchange; tf is
-        # recovered as the kernel's run length, so no collect_list agg.
-        # (An aggregated shuffle would have to carry position ARRAYS —
-        # worse than the raw rows it saves.)
-        enriched = (
-            occ.join(dict_side, "rid")
-            .withColumn("bucket", bucket)
-            .select("term_id", "bucket", "doc_id", "dl", "pos")
-        )
-        part = enriched.repartition(shuffle_partitions, "term_id", "bucket")
-        raw = part.sortWithinPartitions(
-            "term_id", "bucket", "doc_id", "pos"
-        ).mapInArrow(
-            _make_fused_kernel(norm_dtype, params.k1, params.b, avgdl, True),
-            schema=blocks_schema(positions=True, raw=True),
-        )
-    else:
-        # tf path: aggregate FIRST so the groupBy's map-side partial agg
-        # collapses the Zipf head before any bytes move (measured: raw
-        # occurrence rows are ~2.7× postings on a Zipf(1.05) corpus and
-        # the all-occurrence shuffle LOST to the classic path); the BM25
-        # norm is computed between the two exchanges so the encode
-        # exchange carries (term_id, bucket, doc_id, tf:int, norm:float32)
-        # ≈ 28 B/posting and dl never moves again.
-        postings = occ.join(dict_side, "rid").groupBy(
-            "term_id", "doc_id", "dl"
-        ).agg(F.count(F.lit(1)).cast("int").alias("tf"))
-        norm = F.col("tf") / (
-            F.col("tf")
-            + params.k1
-            * (1.0 - params.b + params.b * F.col("dl") / F.lit(avgdl))
-        )
-        norm_sql = "double" if norm_dtype == np.float64 else "float"
-        enriched = (
-            postings.withColumn("tf_norm", norm.cast(norm_sql))
-            .withColumn("bucket", bucket)
-            .select("term_id", "bucket", "doc_id", "tf", "tf_norm")
-        )
-        part = enriched.repartition(shuffle_partitions, "term_id", "bucket")
-        raw = part.sortWithinPartitions("term_id", "bucket", "doc_id").mapInArrow(
-            _make_kernel(norm_dtype, store_tf=store_tf),
-            schema=blocks_schema(store_tf=store_tf, raw=True),
-        )
-
-    # df from block metadata: Σ n_docs over the term's blocks.  A window
-    # keeps the plan single-pass (no self-join that would re-run the
-    # kernel); it shuffles BLOCK-granularity rows only.  At the extreme
-    # where one term's blocks alone overflow a task, write raw blocks to
-    # the warehouse first and attach idf on re-read (the staged build's
-    # publish step does exactly that).
-    w = Window.partitionBy("term_id")
-    blocks = (
-        raw.withColumn("_df", F.sum("n_docs").over(w))
-        .withColumn("max_score", F.col("max_norm") * idf_col(F.col("_df"), n_docs))
-        .drop("max_norm", "_df")
-    )
-    terms = rdict.select("term_id", "term").distinct()
-    return FusedBuild(blocks, terms, n_docs, avgdl, cached=rdict)
+    terms = rel.dictionary.select("term_id", "term").distinct()
+    return FusedBuild(blocks, terms, stats.n_docs, stats.avgdl, rel)

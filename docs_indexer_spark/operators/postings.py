@@ -3,22 +3,29 @@
 Reference analogue: the index OpenSearch builds when the reference calls
 ``es.index`` per document (/root/reference/hugo.py:349-355) — term →
 postings with term frequencies, document frequencies, document lengths —
-re-expressed Spark-first (SURVEY.md §2 B6):
+re-expressed Spark-first (SURVEY.md §2 B6).
+
+Two planes live here:
+
+- the build's analysis step, :func:`token_relations`: one tokenize
+  pass → vocabulary dictionary (stemming on distinct surface forms) →
+  encode rows with ``dl`` attached, which ``spimi.build_blocks`` turns
+  into compressed blocks.  Every index build (plans/build_index and
+  operators/fused) goes through it;
+- the uncompressed SQL-parity relations the oracle twins score from::
 
     docs → tokens (native expr or pandas UDF)
-         → posexplode → groupBy(term, doc_id).count()        [postings]
-         → groupBy(term).count()                             [df_stats]
+         → explode → groupBy(term, doc_id).count()           [postings]
          → size(tokens) per doc                              [doc_lengths]
 
 Scale notes (100 TB / 10^12 docs):
 - the (term, doc_id) groupBy is skew-safe: key cardinality is huge and
   Spark's hash aggregate does map-side partial aggregation, so the Zipf
   head ("the") still distributes across all tasks at this stage;
-- df_stats groupBy(term) is a count over already-unique (term, doc_id)
-  rows; partial aggregation again absorbs the head before the shuffle;
-- nothing here is a UDF except the english-analyzer tokenizer (stemming is
-  inherently per-token Python → Arrow-batched pandas UDF; the simple/stop
-  chains are 100% native and stay in WholeStageCodegen).
+- nothing here is a UDF except stemming (the english chain's Porter
+  stemmer, per distinct surface form in the build, per token in the
+  parity plane's :func:`with_tokens`); the simple/stop chains are 100%
+  native and stay in WholeStageCodegen.
 """
 
 from __future__ import annotations
@@ -67,84 +74,70 @@ def with_tokens(
 class TokenRelations:
     """Result bundle of :func:`token_relations`.
 
-    - ``postings``: (term_id|term, doc_id, tf)
-    - ``doclens``:  (doc_id, dl) — post-stopword token count per doc
-    - ``terms``:    (term_id, term) dictionary (None in string mode)
-    - ``surfaces``: (raw, term_id) surface-form dictionary — every raw
-      token form that analyzes to each term (stem inversion); published so
-      the highlighter can wrap "running"/"runs" for a query stem "run"
+    - ``rows``: the encode rows :func:`spimi.build_blocks` consumes, with
+      the post-stopword document length ``dl`` attached —
+      ``(term_id, doc_id, dl, pos)`` occurrence rows when built with
+      positions, else ``(term_id, doc_id, dl, tf)`` postings;
+    - ``dictionary``: ``(raw, term_id, term, cf)`` — every raw surface
+      form the index keeps, its analyzed term and raw collection
+      frequency.  Its ``(raw, term_id)`` pairs are the published surface
+      dictionary the highlighter inverts stems with; Σcf is the
+      post-stopword token count (stemming preserves counts).
 
-    When built with ``cache=True`` the intermediate counts relation is
-    persisted; call :meth:`unpersist` when done with ALL of the outputs,
-    or a long-lived session accumulates cached relations per call.
+    The dictionary is persisted (it is read by every action over
+    ``rows`` and by the caller); call :meth:`unpersist` once both are
+    consumed, or a long-lived session accumulates one per call.
     """
 
-    def __init__(self, postings, doclens, terms=None, cached=None, surfaces=None):
-        self.postings = postings
-        self.doclens = doclens
-        self.terms = terms
-        self.surfaces = surfaces
-        self._cached = cached
+    def __init__(self, rows: DataFrame, dictionary: DataFrame):
+        self.rows = rows
+        self.dictionary = dictionary
 
     def unpersist(self) -> None:
-        if self._cached is not None:
-            self._cached.unpersist()
-            self._cached = None
-
-    def __iter__(self):  # backwards-compatible unpacking
-        return iter((self.postings, self.doclens))
+        self.dictionary.unpersist()
 
 
-def term_dictionary(
-    docs: DataFrame,
-    text_col: str = "text",
-    analyzer: str = "english",
-) -> DataFrame:
-    """(rid, term_id, term, cf) — the vocabulary dictionary.
+# surface forms each chain drops (dl does not count them, the dictionary
+# omits them).  english is possessive-aware without a per-token regexp:
+# strip("'s$") ∈ STOP ⟺ token ∈ STOP ∪ {s+"'s" | s ∈ STOP}
+_DROPPED = {
+    "english": sorted(ENGLISH_STOPWORDS | {w + "'s" for w in ENGLISH_STOPWORDS}),
+    "stop": sorted(ENGLISH_STOPWORDS),
+}
 
-    ``rid`` is xxhash64 of the raw surface form, ``term_id`` xxhash64 of
-    the analyzed term, ``cf`` the raw collection frequency.  The analysis
-    chain (possessive strip → stopword filter → Porter stem for
-    ``english``) runs on DISTINCT surface forms only — O(|vocab|) Python,
-    never O(tokens); stopword surface forms are dropped, so an inner join
-    on rid filters occurrences for free.  Σcf over the retained rows is
-    the post-stopword corpus token count (stemming is count-preserving),
-    which gives avgdl without a doclens aggregation.
+
+def _dropped(analyzer: str):
+    """Array literal of the forms ``analyzer`` drops, or None."""
+    words = _DROPPED.get(analyzer)
+    return F.array(*[F.lit(w) for w in words]) if words else None
+
+
+def term_dictionary(tokens: DataFrame, analyzer: str) -> DataFrame:
+    """(raw, term_id, term, cf) over the ``_toks`` arrays of ``tokens``.
+
+    The analysis chain (possessive strip → stopword filter → Porter stem
+    for ``english``) runs on DISTINCT surface forms only — O(|vocab|)
+    Python, never O(tokens).  Stopword forms are dropped here, at the
+    vocabulary level, so an inner join on the raw form filters their
+    occurrences for free.
     """
-    from pyspark.sql.types import StringType
-
-    from docs_indexer_spark.session import spread
-
+    rdict = tokens.select(F.explode("_toks").alias("raw")).groupBy("raw").agg(
+        F.count(F.lit(1)).alias("cf")
+    )
+    dropped = _dropped(analyzer)
+    if dropped is not None:
+        rdict = rdict.filter(~F.array_contains(dropped, F.col("raw")))
+    term = F.col("raw")
     if analyzer == "english":
-        toks = _tokenize_col(F.col(text_col))
-    else:
-        toks = tokens_col(text_col)
-        if analyzer == "stop":
-            toks = stop_filter_col(toks)
-
-    base = spread(docs).select(F.explode(toks).alias("raw"))
-    rdict = base.groupBy("raw").agg(F.count(F.lit(1)).alias("cf"))
-
-    if analyzer == "english":
-        stripped = F.regexp_replace(F.col("raw"), "'s$", "")
-        stop_arr = F.array(*[F.lit(w) for w in sorted(ENGLISH_STOPWORDS)])
-        rdict = rdict.select(
-            "raw", F.xxhash64("raw").alias("rid"), stripped.alias("stripped"), "cf"
-        ).filter(~F.array_contains(stop_arr, F.col("stripped")))
-
         @F.pandas_udf(StringType())
         def _stem(series):
             from docs_indexer_spark.functions.porter import porter_stem
 
             return series.map(porter_stem)
 
-        rdict = rdict.withColumn("term", _stem(F.col("stripped"))).drop("stripped")
-    else:
-        rdict = rdict.select(
-            "raw", F.xxhash64("raw").alias("rid"), F.col("raw").alias("term"), "cf"
-        )
-    return rdict.select(
-        "raw", "rid", F.xxhash64("term").alias("term_id"), "term", "cf"
+        term = _stem(F.regexp_replace(term, "'s$", ""))
+    return rdict.withColumn("term", term).select(
+        "raw", F.xxhash64("term").alias("term_id"), "term", "cf"
     )
 
 
@@ -153,107 +146,91 @@ def token_relations(
     text_col: str = "text",
     id_col: str = "doc_id",
     analyzer: str = "english",
-    cache: bool = True,
-    term_ids: bool = False,
     positions: bool = False,
 ) -> TokenRelations:
-    """(postings, doclens[, term dictionary]) with BOTH the Python boundary
-    and the string traffic minimized.
+    """The analysis step of every index build: documents → encode rows +
+    vocabulary dictionary, with the Python boundary and the string
+    traffic both minimized.
 
-    The naive formulation stems every token occurrence in a pandas UDF —
-    O(total tokens) Python calls (10^14 at the 100 TB target) — and drags
-    term STRINGS through every shuffle.  BM25 postings need neither
-    positions nor strings, so the chain factors:
+    Stemming every token occurrence in a pandas UDF would be O(total
+    tokens) Python calls (10^14 at the 100 TB target) and would drag term
+    STRINGS through every shuffle.  Instead:
 
-      tokenize (native regexp_extract_all, apostrophe-aware — the exact
-                oracle regex; possessive/stopword handling moves to the
-                vocabulary level so no per-token transform runs at all)
-      → explode → (doc_id, xxhash64(raw)) numeric pairs
-      → per-doc counts: hash agg over two int64 columns (map-side combine;
-        profiled ~25% faster than the string-keyed agg and far lighter GC)
-      → vocabulary dictionary: groupBy(raw) — output is vocab-sized, the
-        partial agg collapses the Zipf mass early
-      → possessive strip + stopword filter + Porter stem on the DICTIONARY
-        (O(|vocab|) Python in one tiny pandas UDF)
-      → join counts ⨝ dictionary on the int64 raw-hash (AQE picks
-        broadcast when the dictionary is small)
-      → re-aggregate on (term_id, doc_id) — stem conflation can merge
-        counts (batch+batches); still all-numeric
+      tokenize once (native regexp, apostrophe-aware — the exact oracle
+                regex for ``english``; the [^a-z0-9]+ split otherwise)
+      → dictionary: groupBy(raw) — vocabulary-sized, the partial agg
+        collapses the Zipf mass early; possessive strip + stopword filter
+        + Porter stem run on it (O(|vocab|) Python in one tiny UDF)
+      → explode (posexplode with positions) → broadcast-join the
+        dictionary on xxhash64(raw): rid → term_id, stopword forms absent
+      → positions: one row per occurrence, ``pos`` its index in the
+        analyzed stream BEFORE stopword removal (Lucene position
+        increments); the encoder's run length over equal
+        (term_id, doc_id) rows is tf, so no position list is ever
+        aggregated.  Without positions: one groupBy(term_id, doc_id, dl)
+        count — map-side partial aggregation collapses the Zipf head
+        before any bytes move, and stem conflation (batch+batches) merges
+        here.
 
-    doclens = Σtf per doc AFTER the stop filter (stemming is
-    count-preserving).  Docs with zero tokens are handled downstream
-    (dl=0 via the doc-store left join).
+    ``dl`` (indexed tokens per doc) is computed once per document before
+    the explode and rides each row as a column, so doclens never need a
+    separate aggregate or a doc_id-keyed join.  Docs without a single
+    indexed token emit no rows.
 
     64-bit hash collisions (raw-hash or term_id) merge two terms; at a
     10^8 web vocabulary the expected number of collisions is <1 and the
-    effect is a slightly blended posting list — documented trade for
-    keeping 10^12-row shuffles string-free.  Set ``term_ids=False`` to
-    reattach term strings (vocabulary-sized broadcast join) for
-    SQL-parity / debugging planes.
+    effect is a slightly blended posting list — the documented trade for
+    keeping 10^12-row shuffles string-free.  The dictionary always
+    broadcasts: it is vocabulary-sized (16 B per surface form), and a
+    build that slices its corpus (plans/build_index) broadcasts one
+    slice's vocabulary at a time.
     """
     from docs_indexer_spark.session import spread
 
-    docs = spread(docs)
-    if analyzer == "english":
-        toks = _tokenize_col(F.col(text_col))
-    else:
-        # simple split — the SQL-parity tokenizer (DuckDB twin uses the
-        # same [^a-z0-9]+ split)
-        toks = tokens_col(text_col)
-        if analyzer == "stop":
-            toks = stop_filter_col(toks)
+    # simple split — the SQL-parity tokenizer (DuckDB twin uses the same
+    # [^a-z0-9]+ split) — except for english, which uses the oracle regex
+    toks = (
+        _tokenize_col(F.col(text_col)) if analyzer == "english"
+        else tokens_col(text_col)
+    )
+    dropped = _dropped(analyzer)
+    if analyzer == "stop" and not positions:
+        # no position increments to keep: filter the stream up front
+        toks, dropped = stop_filter_col(toks), None
 
+    # dl MUST materialize below the explode: a select that combines
+    # explode(...) with other expressions plans as Project-over-Generate,
+    # i.e. the expression re-evaluates per OCCURRENCE row — the
+    # interpreted stopword-filter HOF per token-row was measured at ~25×
+    # the whole encode stage.  withColumn + a separate explode-select puts
+    # a Generate between the two Projects, so dl computes once per doc.
+    tokens = spread(docs, key=id_col).select(
+        F.col(id_col).alias("doc_id"), toks.alias("_toks")
+    )
+    kept = F.col("_toks")
+    if dropped is not None:
+        kept = F.filter(kept, lambda t: ~F.array_contains(dropped, t))
+    tokens = tokens.withColumn("dl", F.size(kept).cast("int"))
+    dictionary = term_dictionary(tokens, analyzer).persist()
+    rid = F.xxhash64("raw").alias("rid")
     if positions:
-        # token positions index the ANALYZED stream pre-filter, so
-        # vocabulary-level stopword drops keep Lucene position increments;
-        # for the stop chain that means exploding the UNFILTERED tokens
-        # (the dictionary join drops stopword occurrences anyway)
-        if analyzer == "stop":
-            toks = tokens_col(text_col)
-        base = docs.select(
-            F.col(id_col), F.posexplode(toks).alias("pos", "raw")
-        )
-        counts = base.select(
-            F.col(id_col),
-            F.col("pos").cast("int").alias("pos"),
-            F.xxhash64("raw").alias("rid"),
-        ).groupBy(id_col, "rid").agg(
-            F.count(F.lit(1)).cast("int").alias("tf"),
-            F.sort_array(F.collect_list("pos")).alias("positions"),
-        )
+        occ = tokens.select(
+            "doc_id", "dl", F.posexplode("_toks").alias("pos", "raw")
+        ).select("doc_id", "dl", F.col("pos").cast("int").alias("pos"), rid)
     else:
-        base = docs.select(F.col(id_col), F.explode(toks).alias("raw"))
-        counts = base.select(
-            F.col(id_col), F.xxhash64("raw").alias("rid")
-        ).groupBy(id_col, "rid").agg(F.count(F.lit(1)).cast("int").alias("tf"))
-    cached = None
-    if cache:
-        counts = cached = counts.persist()
-
-    # vocabulary dictionary: second tokenize pass, but its agg output is
-    # vocab-sized (cheaper than caching the 10^12-row exploded relation)
-    rdict = term_dictionary(docs, text_col, analyzer)
-
-    pos_aggs = (
-        [F.array_sort(F.flatten(F.collect_list("positions"))).alias("positions")]
-        if positions
-        else []
+        occ = tokens.select(
+            "doc_id", "dl", F.explode("_toks").alias("raw")
+        ).select("doc_id", "dl", rid)
+    joined = occ.join(
+        F.broadcast(dictionary.select(rid, "term_id")), "rid"
     )
-    postings = (
-        counts.join(rdict.select("rid", "term_id"), "rid")
-        .groupBy("term_id", id_col)
-        .agg(F.sum("tf").cast("int").alias("tf"), *pos_aggs)
-    )
-    # post-stop doclens: stopword rows dropped by the inner dictionary join
-    doclens = postings.groupBy(id_col).agg(F.sum("tf").cast("int").alias("dl"))
-    terms = rdict.select("term_id", "term").distinct()
-
-    surfaces = rdict.select("raw", "term_id")
-    if not term_ids:
-        postings = postings.join(F.broadcast(terms), "term_id").drop("term_id")
-    return TokenRelations(
-        postings, doclens, terms, cached=cached, surfaces=surfaces
-    )
+    if positions:
+        rows = joined.select("term_id", "doc_id", "dl", "pos")
+    else:
+        rows = joined.groupBy("term_id", "doc_id", "dl").agg(
+            F.count(F.lit(1)).cast("int").alias("tf")
+        )
+    return TokenRelations(rows, dictionary)
 
 
 def _tokenize_col(text):

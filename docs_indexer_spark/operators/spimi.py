@@ -1,11 +1,14 @@
 """SPIMI-style compressed posting-block construction with a salted,
 doc-range-bucketed merge (SURVEY.md §2 C1 + C2).
 
-Input: the uncompressed postings relation (term, doc_id, tf) plus document
-lengths and global stats.  Output: the block index
+Input: the encode rows of ``postings.token_relations`` — (term_id,
+doc_id, dl, tf) postings, or (term_id, doc_id, dl, pos) occurrence rows
+for a positional index — plus corpus statistics (:func:`index_stats`).
+Output: the block index
 
-    (term, bucket, block_seq, n_docs, first_doc_id, last_doc_id,
-     max_tf, max_score, doc_ids_bin, tfs_bin, tf_norms_bin)
+    (term_id, bucket, block_seq, n_docs, first_doc_id, last_doc_id,
+     max_tf, doc_ids_bin, [tfs_bin,] tf_norms_bin, [positions_bin,]
+     max_score)
 
 Skew story (the part the reference never had — it ran 1 OpenSearch shard,
 /root/reference/common.py:6): a Zipf-head term like "the" may appear in a
@@ -23,27 +26,30 @@ doc_id — the salt.  Consequences:
 - block-max WAND also exploits the bucketing: buckets partition the doc
   space, so per-bucket WAND + global top-k merge is exact.
 
-Execution shape: ``repartition(term, bucket)`` →
-``sortWithinPartitions(term, bucket, doc_id)`` → ``mapInPandas`` with a
-carry-over between Arrow batches.  NOT ``groupBy().applyInPandas()`` — that
-materializes one pandas DataFrame per (term, bucket) group, and with a 30k
-vocabulary × 32 buckets the ~1 ms/group protocol overhead dominates
-(measured 113 s for a 2000-doc corpus).  The mapInPandas kernel sees whole
-10k-row Arrow batches and slices groups with numpy change-point detection —
-same output, ~none of the per-group overhead.
+Execution shape: ``repartition(term_id, bucket)`` →
+``sortWithinPartitions(term_id, bucket, doc_id[, pos])`` → ``mapInArrow``
+with a carry-over between Arrow batches.  NOT
+``groupBy().applyInPandas()`` — that materializes one pandas DataFrame per
+(term, bucket) group, and with a 30k vocabulary × 32 buckets the ~1
+ms/group protocol overhead dominates (measured 113 s for a 2000-doc
+corpus).  The kernel sees whole Arrow batches and slices postings and
+groups with numpy change-point detection — same output, ~none of the
+per-group overhead.
 
-All arithmetic (idf, tf-norm) is native Column math; Python appears only in
-the block encoder (numpy varint inside the Arrow batch).
+Python appears only in the encode kernel (tf-norm and varint in numpy
+inside the Arrow batch); idf and max_score are native Column math over
+block rows.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Iterator, NamedTuple
 
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from docs_indexer_spark.config import BLOCK_SIZE, BM25Params
 from docs_indexer_spark.operators.compression import varint_encode_with_lengths
@@ -56,35 +62,21 @@ from docs_indexer_spark.operators.postings import idf_col
 # keep it: per-posting position counts equal the tfs and segment the
 # positions_bin stream on decode.  ``store_tf=True`` opts a tf-path build
 # back in for debugging/inspection.
-BLOCKS_SCHEMA = (
-    "term_id long, bucket int, block_seq int, n_docs int, "
-    "first_doc_id long, last_doc_id long, max_tf int, max_score double, "
-    "doc_ids_bin binary, tf_norms_bin binary"
-)
-# opt-in positional stream (reference mapping term_vector
-# with_positions_offsets, mappings/hugo.json:6,48,60): per posting, the
-# delta-gapped varint positions (first absolute); per-posting counts are
-# the decoded tfs_bin, which positional blocks therefore retain
-BLOCKS_POS_SCHEMA = BLOCKS_SCHEMA.replace(
-    "doc_ids_bin binary", "doc_ids_bin binary, tfs_bin binary"
-) + ", positions_bin binary"
-
-
-def blocks_schema(positions: bool = False, store_tf: bool = False,
-                  raw: bool = False) -> str:
-    """DDL schema of a block row for the given build options.  ``raw``
-    selects the pre-idf kernel output (max_norm instead of max_score)."""
-    s = BLOCKS_POS_SCHEMA if positions else BLOCKS_SCHEMA
-    if store_tf and not positions:
-        s = s.replace("doc_ids_bin binary", "doc_ids_bin binary, tfs_bin binary")
-    return s.replace("max_score", "max_norm") if raw else s
-
-
-# kernel output before the block-level idf join
-_RAW_BLOCKS_SCHEMA = blocks_schema(raw=True)
-_RAW_BLOCKS_POS_SCHEMA = blocks_schema(positions=True, raw=True)
-
-_COLS = ["term_id", "bucket", "doc_id", "tf", "tf_norm"]
+def _kernel_schema(positions: bool, store_tf: bool) -> str:
+    """DDL schema of the encode kernel's block row: the published row
+    with ``max_norm`` where ``max_score`` (= idf · max_norm, attached
+    after the encode) goes.  Positional blocks add the opt-in positions
+    stream (reference mapping term_vector with_positions_offsets,
+    mappings/hugo.json:6,48,60): per posting, the delta-gapped varint
+    positions (first absolute), segmented on decode by the tfs_bin counts
+    they therefore retain."""
+    tfs = ", tfs_bin binary" if positions or store_tf else ""
+    return (
+        "term_id long, bucket int, block_seq int, n_docs int, "
+        "first_doc_id long, last_doc_id long, max_tf int, max_norm double, "
+        f"doc_ids_bin binary{tfs}, tf_norms_bin binary"
+        + (", positions_bin binary" if positions else "")
+    )
 
 
 def _encode_positions(pos_vals, pos_lens, bs, be):
@@ -126,8 +118,8 @@ def _encode_runs(cols: dict, norm_dtype, pos=None, store_tf: bool = False) -> pa
     ids = cols["doc_id"].astype(np.int64, copy=False)
     tfs = cols["tf"].astype(np.uint64, copy=False)
     norms = cols["tf_norm"].astype(norm_dtype, copy=False)
-    # per-block MAX NORM only; max_score = idf * max_norm is attached by a
-    # block-granularity join after encoding (idf is constant per term, so
+    # per-block MAX NORM only; max_score = idf * max_norm is attached at
+    # block granularity after encoding (idf is constant per term, so
     # carrying it on every posting row through shuffle+sort+Arrow wasted
     # 8 B/row; IEEE multiply by a positive constant is monotone, so
     # idf*max(norm) is the exact same upper bound as max(idf*norm))
@@ -205,41 +197,26 @@ class _RunCarry:
 
     Holding back the trailing (term_id, bucket) run between batches must
     NOT re-concatenate the accumulated run per batch: a head term's run
-    can span thousands of 10k-row batches (cf-sized in the fused path,
-    10^8 postings/bucket at 10^12 docs in the classic path) and per-batch
-    concatenation is O(run²) copying — measured 127 s vs ~4 s on a 20k-doc
-    Zipf corpus.  Chunks are appended to a list and concatenated exactly
-    once, when the run completes.
+    can span thousands of batches (it is cf-sized with positions, up to
+    10^8 postings per bucket at 10^12 docs without) and per-batch
+    concatenation is O(run²) copying — measured 127 s vs ~4 s on a
+    20k-doc Zipf corpus.  Chunks are appended to a list and concatenated
+    exactly once, when the run completes.
     """
 
-    def __init__(self, positions: bool):
-        self.positions = positions
+    def __init__(self):
         self.chunks: list[dict] = []
-        self.pos_chunks: list[tuple] = []
         self.key = None  # (term_id, bucket) of the pending run
 
-    def empty(self) -> bool:
-        return not self.chunks
-
-    def _merged(self, head, head_pos):
+    def _merged(self, head):
         parts = self.chunks + ([head] if head is not None else [])
-        cols = (
-            parts[0]
-            if len(parts) == 1
-            else {k: np.concatenate([p[k] for p in parts]) for k in parts[0]}
-        )
-        pos = None
-        if self.positions:
-            pparts = self.pos_chunks + ([head_pos] if head_pos is not None else [])
-            pos = (
-                np.concatenate([p[0] for p in pparts]),
-                np.concatenate([p[1] for p in pparts]),
-            ) if len(pparts) > 1 else pparts[0]
-        return cols, pos
+        if len(parts) == 1:
+            return parts[0]
+        return {k: np.concatenate([p[k] for p in parts]) for k in parts[0]}
 
-    def feed(self, cols: dict, pos):
-        """Consume one batch; yield (merged_cols, merged_pos) for every
-        completed stretch (≥1 full runs)."""
+    def feed(self, cols: dict):
+        """Consume one batch; yield the merged columns of every completed
+        stretch (≥1 full runs)."""
         t, b = cols["term_id"], cols["bucket"]
         batch_key = (t[-1], b[-1])
         tail = (t == t[-1]) & (b == b[-1])
@@ -247,101 +224,152 @@ class _RunCarry:
         if split == 0:
             # whole batch is one run
             if self.chunks and self.key != batch_key:
-                yield self._merged(None, None)
-                self.chunks, self.pos_chunks = [], []
+                yield self._merged(None)
+                self.chunks = []
             self.chunks.append(cols)
-            if self.positions:
-                self.pos_chunks.append(pos)
             self.key = batch_key
             return
-        head = {k: v[:split] for k, v in cols.items()}
-        head_pos = None
-        tail_pos = None
-        if self.positions:
-            vsplit = int(pos[1][:split].sum())
-            head_pos = (pos[0][:vsplit], pos[1][:split])
-            tail_pos = (pos[0][vsplit:], pos[1][split:])
         # the head closes the pending run (the encoder's change-point scan
         # handles the case where the head actually starts a NEW run)
-        yield self._merged(head, head_pos)
+        yield self._merged({k: v[:split] for k, v in cols.items()})
         self.chunks = [{k: v[split:] for k, v in cols.items()}]
-        self.pos_chunks = [tail_pos] if self.positions else []
         self.key = batch_key
 
     def flush(self):
         if self.chunks:
-            yield self._merged(None, None)
-            self.chunks, self.pos_chunks = [], []
+            yield self._merged(None)
+            self.chunks = []
 
 
-def _make_kernel(norm_dtype, positions: bool = False, store_tf: bool = False):
+def _make_kernel(norm_dtype, k1: float, b: float, avgdl: float,
+                 positions: bool, store_tf: bool):
+    """The block-encode kernel over encode rows sorted by (term_id,
+    bucket, doc_id[, pos]).
+
+    A posting is a run of equal (term_id, bucket, doc_id) rows; its tf is
+    the sum of the run's ``tf`` column — one row per posting when the
+    rows were aggregated, one row per occurrence (count 1, so the run
+    length) when they carry positions, in which case the run's ``pos``
+    values ARE the posting's sorted positions.  The BM25 length norm is
+    computed here in numpy, in the same IEEE operation order as
+    ``tf / (tf + k1·(1 − b + b·dl/avgdl))`` in SQL."""
+
+    def flush(cols: dict) -> pa.RecordBatch:
+        t, bk, d = cols["term_id"], cols["bucket"], cols["doc_id"]
+        n = len(t)
+        change = np.empty(n, dtype=bool)
+        change[0] = True
+        change[1:] = (t[1:] != t[:-1]) | (bk[1:] != bk[:-1]) | (d[1:] != d[:-1])
+        ps = np.flatnonzero(change)
+        if positions:
+            tf = np.diff(np.append(ps, n)).astype(np.int64)
+        else:
+            tf = np.add.reduceat(cols["tf"].astype(np.int64), ps)
+        dl = cols["dl"][ps].astype(np.float64)
+        postings = {
+            "term_id": t[ps],
+            "bucket": bk[ps],
+            "doc_id": d[ps],
+            "tf": tf,
+            "tf_norm": tf / (tf + k1 * (1.0 - b + b * dl / avgdl)),
+        }
+        pos = (cols["pos"].astype(np.int64), tf) if positions else None
+        return _encode_runs(postings, norm_dtype, pos, store_tf=store_tf)
+
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        carry = _RunCarry(positions)
+        carry = _RunCarry()
         for batch in batches:
             if batch.num_rows == 0:
                 continue
-            names = batch.schema.names
             cols = {
                 name: batch.column(j).to_numpy(zero_copy_only=False)
-                for j, name in enumerate(names)
-                if name != "positions"
+                for j, name in enumerate(batch.schema.names)
             }
-            pos = None
-            if positions:
-                la = batch.column(names.index("positions"))
-                pos = (
-                    la.flatten().to_numpy(zero_copy_only=False).astype(np.int64),
-                    la.value_lengths().to_numpy(zero_copy_only=False).astype(np.int64),
-                )
-            for mcols, mpos in carry.feed(cols, pos):
-                yield _encode_runs(mcols, norm_dtype, mpos, store_tf=store_tf)
-        for mcols, mpos in carry.flush():
-            yield _encode_runs(mcols, norm_dtype, mpos, store_tf=store_tf)
+            for mcols in carry.feed(cols):
+                yield flush(mcols)
+        for mcols in carry.flush():
+            yield flush(mcols)
 
     return kernel
 
 
+class IndexStats(NamedTuple):
+    """Corpus statistics an encode needs, all from the doc store and the
+    vocabulary dictionary — never from a pass over postings."""
+
+    n_docs: int
+    avgdl: float
+    min_doc_id: int
+    max_doc_id: int
+    # upper bound on any term's df: max over term_id of Σcf (a doc
+    # containing a term holds ≥1 of its occurrences; summing over the
+    # raw forms a stem conflates keeps the bound under stemming)
+    max_df: int
+
+
+def index_stats(docs: DataFrame, dictionary: DataFrame,
+                id_col: str = "doc_id") -> IndexStats:
+    """:class:`IndexStats` in two small Spark jobs: a count/min/max over
+    the documents (parquet footers answer it when ``docs`` is a stored
+    doc table) and a vocabulary-sized aggregate over the dictionary —
+    Σcf is the post-stopword token count, so avgdl = Σcf / N."""
+    d = docs.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.min(id_col).alias("mn"),
+        F.max(id_col).alias("mx"),
+    ).collect()[0]
+    v = dictionary.groupBy("term_id").agg(F.sum("cf").alias("cf")).agg(
+        F.sum("cf").alias("total"), F.max("cf").alias("max_df")
+    ).collect()[0]
+    n = int(d["n"])
+    return IndexStats(
+        n_docs=n,
+        avgdl=int(v["total"] or 0) / n if n else 0.0,
+        min_doc_id=int(d["mn"] or 0),
+        max_doc_id=int(d["mx"] or 0),
+        max_df=int(v["max_df"] or 0),
+    )
+
+
 def build_blocks(
-    postings: DataFrame,
-    doclens: DataFrame,
-    dfs: DataFrame,
-    n_docs: int,
-    avgdl: float,
-    max_doc_id: int,
-    min_doc_id: int = 0,
+    rows: DataFrame,
+    stats: IndexStats,
     params: BM25Params = BM25Params(),
     n_buckets: int | None = None,
     norm_dtype=np.float32,
-    shuffle_partitions: int | None = None,
     target_run_postings: int = 1_000_000,
-    positions: bool = False,
     store_tf: bool = False,
 ) -> DataFrame:
-    """(term, doc_id, tf) ⨝ dl ⨝ df → compressed block index.
+    """Encode rows (:func:`postings.token_relations`) → compressed block
+    index, with ONE data-sized shuffle.
 
-    ``positions=True`` expects a ``positions array<int>`` column on the
-    postings relation (see operators/phrase.token_positions) and emits a
-    ``positions_bin`` delta-varint stream per block — the term_vector
-    with_positions analogue; per-posting counts equal the tfs.
+    Plan: bucket = doc-id range → repartition(term_id, bucket) →
+    sortWithinPartitions(term_id, bucket, doc_id[, pos]) → the encode
+    kernel (mapInArrow) → df per term as Σ n_docs over its blocks (a
+    window over block rows, ~BLOCK_SIZE× fewer than postings) →
+    max_score = idf(df) · max_norm.  df is derived from the blocks, so a
+    term's df and its blocks cannot drift.
 
-    ``n_buckets`` defaults to ADAPTIVE: ceil(max(df) / target_run_postings)
-    clamped to [1, 1024].  The bucket count trades head-term task size
-    (run ≈ max_df / n_buckets postings — keep ≲ 1M ≈ 8 MB so no single
-    merge task is outsized) against tail fragmentation (a term with
-    df < n_buckets splits into single-posting runs whose per-block
-    metadata inflates the index).  Deriving it from the actual max
-    document frequency keeps small corpora at 1 bucket (zero
-    fragmentation) and 10^12-doc corpora at the cap (head term 10^11 df →
+    Rows carrying a ``pos`` column (occurrence rows) give positional
+    blocks: a ``positions_bin`` delta-varint stream per block — the
+    term_vector with_positions analogue — whose per-posting counts are
+    the retained ``tfs_bin``.  Positions ride per-occurrence rows through
+    the one exchange: an aggregated shuffle would have to carry position
+    ARRAYS, worse than the raw rows it saves.
+
+    ``n_buckets`` defaults to ADAPTIVE: ceil(stats.max_df /
+    target_run_postings) clamped to [1, 1024].  The bucket count trades
+    head-term task size (run ≈ max_df / n_buckets postings — keep ≲ 1M ≈
+    8 MB so no single merge task is outsized) against tail fragmentation
+    (a term with df < n_buckets splits into single-posting runs whose
+    per-block metadata inflates the index).  Small corpora stay at 1
+    bucket; 10^12-doc corpora reach the cap (head term 10^11 df →
     ~100M-posting runs across 1024 tasks)."""
-    if "term_id" not in postings.columns:
-        # string-keyed callers (SQL-parity plane): hash on entry so the
-        # shuffle/sort/encode below stay numeric
-        postings = postings.withColumn("term_id", F.xxhash64("term")).drop("term")
-    if "term_id" not in dfs.columns:
-        dfs = dfs.withColumn("term_id", F.xxhash64("term")).drop("term")
+    positions = "pos" in rows.columns
     if n_buckets is None:
-        max_df = int(dfs.agg(F.max("df")).collect()[0][0] or 1)
-        n_buckets = min(1024, max(1, -(-max_df // target_run_postings)))
+        n_buckets = min(
+            1024, max(1, -(-max(stats.max_df, 1) // target_run_postings))
+        )
     # span over the ACTUAL id range: doc_id = xxhash64(url) is negative for
     # ~half of docs, so a max-only span would double the bucket range (and
     # an all-negative corpus would overflow the int cast).  The range of
@@ -350,62 +378,48 @@ def build_blocks(
     # disjoint doc_id ranges in [0, n_buckets) — their exact boundaries
     # don't matter, only ordering + disjointness (WAND and the ordered-
     # concat merge rely on nothing else).
-    span_d = max(1.0, float(max_doc_id - min_doc_id + 1) / n_buckets)
-    # doclens (16 B/doc) is broadcast when the corpus is small enough that
-    # shipping it beats shuffling the 10-100x larger postings relation;
-    # above the threshold AQE picks the strategy from runtime sizes.  The
-    # df/idf table is NOT joined here at all — idf is per-term, so it is
-    # attached at BLOCK granularity after encoding (~128x fewer rows).
-    dl_side = F.broadcast(doclens) if n_docs <= 20_000_000 else doclens
-    enriched = (
-        postings.join(dl_side, "doc_id")
-        .withColumn(
-            "tf_norm",
-            F.col("tf")
-            / (
-                F.col("tf")
-                + params.k1
-                * (1.0 - params.b + params.b * F.col("dl") / F.lit(avgdl))
-            ),
+    span_d = max(
+        1.0, float(stats.max_doc_id - stats.min_doc_id + 1) / n_buckets
+    )
+    bucket = F.greatest(
+        F.lit(0),
+        F.least(
+            F.lit(n_buckets - 1),
+            F.floor(
+                (F.col("doc_id").cast("double") - F.lit(float(stats.min_doc_id)))
+                / F.lit(span_d)
+            ).cast("int"),
+        ),
+    )
+    last = "pos" if positions else "tf"
+    # explicit N: a bare repartition(cols) is AQE-coalesced toward 64 MB
+    # partitions, which throttles the (Python-side) encode stage to a
+    # handful of tasks regardless of cores — measured flat 8→32 core
+    # scaling until pinned.  2× parallelism keeps every core busy through
+    # stragglers.
+    n_parts = max(rows.sparkSession.sparkContext.defaultParallelism * 2, 16)
+    keys = ["term_id", "bucket", "doc_id"]
+    raw = (
+        rows.withColumn("bucket", bucket)
+        .select(*keys, "dl", last)
+        .repartition(n_parts, "term_id", "bucket")
+        .sortWithinPartitions(*keys, *(["pos"] if positions else []))
+        .mapInArrow(
+            _make_kernel(norm_dtype, params.k1, params.b, stats.avgdl,
+                         positions, store_tf),
+            schema=_kernel_schema(positions, store_tf),
         )
-        .withColumn(
-            "bucket",
-            F.greatest(
-                F.lit(0),
-                F.least(
-                    F.lit(n_buckets - 1),
-                    F.floor(
-                        (F.col("doc_id").cast("double") - F.lit(float(min_doc_id)))
-                        / F.lit(span_d)
-                    ).cast("int"),
-                ),
-            ),
-        )
-        .select(*(_COLS + ["positions"] if positions else _COLS))
     )
-    if not shuffle_partitions:
-        # explicit N: a bare repartition(cols) is AQE-coalesced toward
-        # 64 MB partitions, which throttles the (Python-side) encode stage
-        # to a handful of tasks regardless of cores — measured flat 8→32
-        # core scaling until pinned.  2× parallelism keeps every core busy
-        # through stragglers.
-        sc = postings.sparkSession.sparkContext
-        shuffle_partitions = max(sc.defaultParallelism * 2, 16)
-    part = enriched.repartition(shuffle_partitions, "term_id", "bucket")
-    sorted_part = part.sortWithinPartitions("term_id", "bucket", "doc_id")
-    raw = sorted_part.mapInArrow(
-        _make_kernel(norm_dtype, positions=positions, store_tf=store_tf),
-        schema=blocks_schema(positions=positions, store_tf=store_tf, raw=True),
-    )
-    idf_tbl = dfs.select(
-        "term_id", idf_col(F.col("df"), n_docs).alias("_idf")
-    )
-    if n_docs <= 20_000_000:
-        idf_tbl = F.broadcast(idf_tbl)
+    # df from block metadata: Σ n_docs over the term's blocks.  A window
+    # keeps the plan single-pass (no self-join that would re-run the
+    # kernel); it shuffles BLOCK-granularity rows only.
+    w = Window.partitionBy("term_id")
     return (
-        raw.join(idf_tbl, "term_id")
-        .withColumn("max_score", F.col("max_norm") * F.col("_idf"))
-        .drop("max_norm", "_idf")
+        raw.withColumn("_df", F.sum("n_docs").over(w))
+        .withColumn(
+            "max_score", F.col("max_norm") * idf_col(F.col("_df"), stats.n_docs)
+        )
+        .drop("max_norm", "_df")
     )
 
 

@@ -7,21 +7,32 @@ STAGE 1 — per-build-partition, RESUMABLE (the expensive pass):
     docs slice → extract text (pandas UDF if only html present)
               → upsert dedup by doc_id (last write per url wins — the
                 reference's es.index(id=…) semantics, hugo.py:350-353)
-              → tokenize → local postings (term, doc_id, tf) + doclens
-              → staged parquet per partition + lineage checkpoint
+              → postings.token_relations: tokenize once → vocabulary
+                dictionary → encode rows with dl attached
+              → staged parquet per slice (_stage/<build>/{docs,dict,rows})
+                + a lineage checkpoint recording the slice's encode-row
+                count (read from the parquet footers, no Spark job)
     A re-run with the same input fingerprint skips partitions whose
     checkpoint says done — the distributed generalization of the
     reference's check_index gate (hugo.py:378-385).
 
 STAGE 2 — global merge, cheap relative to stage 1, idempotent:
-    staged partials → N/avgdl/df_stats → salted bucketed block build
-    (operators/spimi.py) → generation directory → ATOMIC publish
-    (catalog pointer swap = the reference's alias swap, hugo.py:465-483).
+    N and the doc-id range (doc store) + Σcf and the df bound
+    (dictionaries) → spimi.build_blocks over the staged encode rows: one
+    salted (term_id, bucket) exchange → encode → generation directory
+    (blocks, df_stats = Σ n_docs over the written blocks, surfaces = the
+    dictionaries' (raw, term_id), deletions, docs) → ATOMIC publish
+    (catalog pointer swap = the reference's alias swap,
+    hugo.py:465-483).
+
+operators/fused.fused_build_blocks runs the same two steps without the
+staging, for callers that want blocks in memory.
 
 Scale notes: stage 1's unit of restart is a build partition (a hash slice
 of urls), sized so one slice ≈ one executor-wave of work; at 1000
-executors you'd run ~100 slices of ~1 TB.  Stage 2 shuffles (term, bucket)
-— the salt bounds the head-term task; everything else is map-side.
+executors you'd run ~100 slices of ~1 TB.  Each slice broadcasts only its
+own vocabulary.  Stage 2 shuffles (term_id, bucket) — the salt bounds the
+head-term task; everything else is map-side.
 """
 
 from __future__ import annotations
@@ -35,10 +46,7 @@ from pyspark.sql.window import Window
 from docs_indexer_spark.config import BLOCK_SIZE, BM25Params
 from docs_indexer_spark.extraction.udfs import html2text_udf
 from docs_indexer_spark.operators import spimi
-from docs_indexer_spark.operators.postings import (
-    corpus_stats,
-    token_relations,
-)
+from docs_indexer_spark.operators.postings import token_relations
 from docs_indexer_spark.sources.catalog import SnapshotCatalog
 
 
@@ -205,28 +213,20 @@ def build_index(
         )
         if "html" in part.columns:
             part = with_extracted_text(part)
-        # action 2: postings slice — the single extract+tokenize pass.
-        # doclens are NOT written separately: dl == sum(tf) per doc by
-        # construction, so stage 2 derives them from postings (plus dl=0
-        # rows for token-less docs via the doc store) — one extraction
-        # per slice instead of two.  token_relations keeps Python to
-        # O(|vocab|) (distinct-term stemming), not O(tokens).
-        # cache=False: this slice runs two actions (postings + term dict)
-        # whose shared prefix is the cheap tokenize pass; persisting the
-        # exploded relation costs more than recomputing it
+        # actions 2+3: the slice's dictionary and encode rows — the single
+        # extract+tokenize pass (token_relations keeps Python to
+        # O(|vocab|): stemming runs on distinct surface forms).  dl rides
+        # every encode row, so stage 2 needs no doclens aggregate
         rel = token_relations(
-            part, "text", analyzer=analyzer, cache=False, term_ids=True,
-            positions=positions,
+            part, "text", analyzer=analyzer, positions=positions
         )
-        rel.postings.write.mode("overwrite").parquet(
-            f"{stage_root}/postings/p={p}"
+        rel.dictionary.write.mode("overwrite").parquet(f"{stage_root}/dict/p={p}")
+        rows_path = f"{stage_root}/rows/p={p}"
+        rel.rows.write.mode("overwrite").parquet(rows_path)
+        rel.unpersist()
+        catalog.checkpoint_done(
+            build_id, p, fingerprint, _parquet_rows(rows_path), started
         )
-        rel.terms.write.mode("overwrite").parquet(f"{stage_root}/terms/p={p}")
-        rel.surfaces.write.mode("overwrite").parquet(
-            f"{stage_root}/surfaces/p={p}"
-        )
-        rows = -1  # row count is recorded by stage-2 metrics; avoid extra job
-        catalog.checkpoint_done(build_id, p, fingerprint, rows, started)
         n_done_now += 1
         if fail_after_partition is not None and p >= fail_after_partition:
             raise RuntimeError(f"injected failure after partition {p}")
@@ -234,46 +234,16 @@ def build_index(
 
     # ---- stage 2: global merge ----
     t1 = time.time()
-    posting_cols = ["term_id", "doc_id", "tf"] + (
-        ["positions"] if positions else []
-    )
-    postings = spark.read.parquet(f"{stage_root}/postings").select(*posting_cols)
     docs_store = spark.read.parquet(f"{stage_root}/docs").drop("p")
-    # dl == sum(tf) per doc; token-less docs get dl=0 via the doc store
-    tok_counts = postings.groupBy("doc_id").agg(
-        F.sum("tf").cast("int").alias("dl")
+    # select() drops the staged partition column p=N, which would
+    # otherwise make per-slice duplicates survive the distincts below
+    dictionary = spark.read.parquet(f"{stage_root}/dict").select(
+        "raw", "term_id", "term", "cf"
     )
-    doclens = (
-        docs_store.select("doc_id")
-        .join(tok_counts, "doc_id", "left")
-        .fillna(0, subset=["dl"])
-    )
-    n_docs, avgdl = corpus_stats(doclens)
-    # select() first: the staged path contributes a partition column p=N
-    # which would make per-slice duplicates survive the distinct
-    terms_dict = (
-        spark.read.parquet(f"{stage_root}/terms")
-        .select("term_id", "term")
-        .distinct()
-    )
-    dfs = (
-        postings.groupBy("term_id")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .join(terms_dict, "term_id")
-    )
-    id_row = doclens.agg(
-        F.max("doc_id").alias("mx"), F.min("doc_id").alias("mn")
-    ).collect()[0]
+    stats = spimi.index_stats(docs_store, dictionary)
     blocks = spimi.build_blocks(
-        postings, doclens, dfs, n_docs, avgdl,
-        int(id_row["mx"]), int(id_row["mn"]),
-        params=params, n_buckets=n_buckets, positions=positions,
-    )
-
-    surfaces = (
-        spark.read.parquet(f"{stage_root}/surfaces")
-        .select("raw", "term_id")
-        .distinct()
+        spark.read.parquet(f"{stage_root}/rows").drop("p"), stats,
+        params=params, n_buckets=n_buckets,
     )
 
     gen, gen_path = catalog.stage_generation(table, fingerprint)
@@ -281,8 +251,17 @@ def build_index(
     # Iceberg-manifest analogue: per-file term_id min/max from parquet
     # footers, so per-query reads drop whole files before footer I/O
     SnapshotCatalog.write_manifest(f"{gen_path}/blocks.parquet", "term_id")
-    surfaces.coalesce(8).write.mode("overwrite").parquet(
-        f"{gen_path}/surfaces.parquet"
+    dictionary.select("raw", "term_id").distinct().coalesce(8).write.mode(
+        "overwrite"
+    ).parquet(f"{gen_path}/surfaces.parquet")
+    # df = Σ n_docs over the term's WRITTEN blocks (block-granularity
+    # rows; the encode never re-runs), published non-null (a required
+    # parquet column) like every df_stats generation before it
+    dfs = (
+        spark.read.parquet(f"{gen_path}/blocks.parquet")
+        .groupBy("term_id")
+        .agg(F.coalesce(F.sum("n_docs"), F.lit(0)).cast("long").alias("df"))
+        .join(dictionary.select("term_id", "term").distinct(), "term_id")
     )
     dfs.coalesce(8).write.mode("overwrite").parquet(f"{gen_path}/df_stats.parquet")
     # SymSpell deletion-neighborhood index over the index vocabulary
@@ -305,15 +284,14 @@ def build_index(
     ).sortWithinPartitions("variant").write.mode("overwrite").parquet(
         f"{gen_path}/deletions.parquet"
     )
-    doclens.coalesce(8).write.mode("overwrite").parquet(f"{gen_path}/doclens.parquet")
     # published in BOTH id modes: serving-side filtered search and
     # rendering joins must read generation-pinned doc rows
     docs_store.write.mode("overwrite").parquet(f"{gen_path}/docs.parquet")
     t_stage2 = time.time() - t1
 
     metrics = {
-        "n_docs": n_docs,
-        "avgdl": avgdl,
+        "n_docs": stats.n_docs,
+        "avgdl": stats.avgdl,
         "analyzer": analyzer,
         "partitions_built": n_done_now,
         "partitions_skipped": len(done),
@@ -328,8 +306,21 @@ def build_index(
         "block_size": BLOCK_SIZE,
     }
     catalog.publish(table, gen, fingerprint, metrics)
-    # the staged postings/docs and lineage checkpoints served their purpose
+    # the staged rows/docs and lineage checkpoints served their purpose
     # once the generation is live — without this every build leaks a full
-    # copy of its postings under _stage/
+    # copy of its encode rows under _stage/
     catalog.cleanup_build(build_id)
     return metrics
+
+
+def _parquet_rows(path: str) -> int:
+    """Row count of a written parquet directory from its file footers
+    (pyarrow; no Spark job)."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    return sum(
+        pq.ParquetFile(f).metadata.num_rows
+        for f in glob.glob(f"{path}/*.parquet")
+    )

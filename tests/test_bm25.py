@@ -15,6 +15,7 @@ from docs_indexer_spark.operators.postings import (
     doc_lengths,
     idf_col,
     token_postings,
+    token_relations,
     with_tokens,
 )
 from docs_indexer_spark.oracle import OracleIndex
@@ -56,9 +57,9 @@ def index(spark, documents):
     doclens = doc_lengths(toks).cache()
     n, avgdl = corpus_stats(doclens)
     dfs = df_stats(postings)
-    ids = doclens.agg(F.max("doc_id").alias("mx"), F.min("doc_id").alias("mn")).collect()[0]
+    rel = token_relations(documents, analyzer=ANALYZER)
     blocks = spimi.build_blocks(
-        postings, doclens, dfs, n, avgdl, int(ids["mx"]), int(ids["mn"]), n_buckets=8
+        rel.rows, spimi.index_stats(documents, rel.dictionary), n_buckets=8
     ).cache()
     idf_rows = (
         dfs.withColumn("idf", idf_col(F.col("df"), n))

@@ -70,6 +70,26 @@ def test_resume_after_failure(spark, documents, catalog):
     ]
 
 
+def test_checkpoint_records_encode_rows(spark, documents, catalog):
+    """A slice's lineage checkpoint records its staged encode-row count
+    (read from the parquet footers) instead of a -1 placeholder."""
+    import json
+    import os
+
+    with pytest.raises(RuntimeError, match="injected failure"):
+        build_index(
+            spark, documents, catalog, fingerprint="fp-rows",
+            id_col="doc_id", n_build_partitions=2, fail_after_partition=0,
+        )
+    build_id = "build-fp-rows"
+    with open(os.path.join(
+        catalog.root, "_checkpoints", build_id, "part-00000.json"
+    )) as f:
+        rec = json.load(f)
+    staged = spark.read.parquet(f"{catalog.root}/_stage/{build_id}/rows/p=0")
+    assert rec["rows"] == staged.count() > 0
+
+
 def test_concurrent_publish_serializes(tmp_path):
     """Concurrent publishers must not interleave: every snapshot-log entry
     survives and the pointer ends on one of the published generations

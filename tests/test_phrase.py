@@ -72,21 +72,11 @@ def test_phrase_occurrences(spark, phrase_docs):
 
 def _build_pos_blocks(spark, docs, n_buckets=4):
     from docs_indexer_spark.operators import spimi
-    from docs_indexer_spark.operators.postings import corpus_stats
+    from docs_indexer_spark.operators.postings import token_relations
 
-    postings = token_positions(docs).withColumn(
-        "term_id", F.xxhash64("term")
-    )
-    doclens = postings.groupBy("doc_id").agg(F.sum("tf").cast("int").alias("dl"))
-    n, avgdl = corpus_stats(doclens)
-    dfs = postings.groupBy("term_id").agg(F.count(F.lit(1)).alias("df"))
-    ids = doclens.agg(F.max("doc_id").alias("mx"), F.min("doc_id").alias("mn")).collect()[0]
-    blocks = spimi.build_blocks(
-        postings.select("term_id", "doc_id", "tf", "positions"),
-        doclens, dfs, n, avgdl, int(ids["mx"]), int(ids["mn"]),
-        n_buckets=n_buckets, positions=True,
-    )
-    return blocks
+    rel = token_relations(docs, analyzer="simple", positions=True)
+    stats = spimi.index_stats(docs, rel.dictionary)
+    return spimi.build_blocks(rel.rows, stats, n_buckets=n_buckets)
 
 
 def test_position_blocks_roundtrip(spark, phrase_docs):

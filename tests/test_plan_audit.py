@@ -37,6 +37,85 @@ def test_blocks_scan_prunes_terms(spark, tmp_path):
     assert "PushedFilters" in plan and "In(term_id" in plan
 
 
+def _final_plan(df) -> list[str]:
+    """Lines of an EXECUTED adaptive plan's final plan."""
+    plan = _plan(df)
+    assert "isFinalPlan=true" in plan
+    return plan.split("== Initial Plan ==")[0].splitlines()
+
+
+def _subtree(lines: list[str], node: str) -> list[str]:
+    """The lines strictly below the first ``node`` line of a plan tree."""
+    i = next(j for j, line in enumerate(lines) if node in line)
+    depth = len(lines[i]) - len(lines[i].lstrip(" +-:"))
+    out = []
+    for line in lines[i + 1:]:
+        if len(line) - len(line.lstrip(" +-:")) <= depth:
+            break
+        out.append(line)
+    return out
+
+
+_JOIN_KEYS = re.compile(r"(?:HashJoin|SortMergeJoin)\s*\[([^\]]*)\]")
+
+
+@pytest.mark.parametrize("positions", [False, True], ids=["tf", "positions"])
+def test_build_plans_have_one_posting_exchange(
+    spark, tmp_path, monkeypatch, positions
+):
+    """Build shape gate for ``build_index``.  Stage 1 (per slice): the
+    dictionary joins by broadcast on the raw-form hash — no collect_list
+    aggregate and no doc_id-keyed join of postings.  Stage 2: the encode
+    moves posting-sized rows through exactly ONE exchange,
+    hashpartitioning(term_id, bucket), ahead of the kernel."""
+    from docs_indexer_spark.operators import spimi
+    from docs_indexer_spark.plans import build_index as plan
+    from docs_indexer_spark.sources.catalog import SnapshotCatalog
+
+    captured = {}
+
+    def capture(name, fn):
+        def wrapped(*a, **kw):
+            captured[name] = out = fn(*a, **kw)
+            return out
+        return wrapped
+
+    monkeypatch.setattr(
+        plan, "token_relations", capture("rel", plan.token_relations)
+    )
+    monkeypatch.setattr(
+        spimi, "build_blocks", capture("blocks", spimi.build_blocks)
+    )
+    # keep the staged rows readable so the captured encode can re-run
+    monkeypatch.setattr(SnapshotCatalog, "cleanup_build", lambda self, b: None)
+    docs = spark.read.parquet(f"{SF}/documents.parquet").filter(
+        F.col("doc_id") < 200
+    )
+    plan.build_index(
+        spark, docs, SnapshotCatalog(str(tmp_path / "wh")), "fp-shape",
+        id_col="doc_id", n_build_partitions=2, n_buckets=4,
+        analyzer="stop", positions=positions,
+    )
+
+    rows = captured["rel"].rows
+    rows.collect()
+    stage1 = _final_plan(rows)
+    assert not any("collect_list" in line for line in stage1)
+    joins = [m.group(1) for line in stage1 for m in _JOIN_KEYS.finditer(line)]
+    assert joins and all("doc_id" not in keys for keys in joins), joins
+    assert any("BroadcastHashJoin" in line for line in stage1)
+
+    blocks = captured["blocks"]
+    blocks.collect()
+    below_kernel = _subtree(_final_plan(blocks), "MapInArrow")
+    exchanges = [line for line in below_kernel if "Exchange" in line]
+    assert len(exchanges) == 1, exchanges
+    assert re.search(
+        r"Exchange hashpartitioning\(term_id#\d+L?, bucket#\d+, \d+\)",
+        exchanges[0],
+    ), exchanges
+
+
 def test_simhash_plan_has_no_cartesian_join(spark):
     plan = _plan(E.queries()["simhash_near_dups"](spark, SF))
     assert "CartesianProduct" not in plan
