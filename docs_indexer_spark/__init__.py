@@ -25,3 +25,7 @@ OpenSearch.  This package re-expresses both planes Spark-first:
 """
 
 __version__ = "0.1.0"
+
+from docs_indexer_spark import _worker
+
+_worker.install()

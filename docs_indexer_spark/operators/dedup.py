@@ -264,6 +264,8 @@ def _simhash_list_kernel(batches):
             continue
         ids = batch.column(0).to_numpy(zero_copy_only=False)
         hs = batch.column(1)
+        if hs.null_count:
+            raise ValueError("simhash list kernel: null hash rows in batch")
         lens = pc.list_value_length(hs).to_numpy(
             zero_copy_only=False
         ).astype(np.int64)

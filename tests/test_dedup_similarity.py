@@ -454,6 +454,26 @@ def test_simhash_vectorized_identical_to_native(spark):
         assert a == b and a, fam
 
 
+def test_simhash_list_kernel_rejects_null_hash_rows():
+    """A null hash-array row would misalign the flattened offsets and
+    corrupt every later doc's simhash in the batch; the kernel raises."""
+    import pyarrow as pa
+
+    from docs_indexer_spark.operators.dedup import _simhash_list_kernel
+
+    hs = pa.array([[1, 2, 3], None, [4, 5]], pa.list_(pa.int64()))
+    ids = pa.array([1, 2, 3], pa.int64())
+    batch = pa.RecordBatch.from_arrays([ids, hs], names=["_id", "_hs"])
+    with pytest.raises(ValueError, match="null hash rows"):
+        list(_simhash_list_kernel([batch]))
+    ok = pa.RecordBatch.from_arrays(
+        [ids, pa.array([[1, 2, 3], [], [4, 5]], pa.list_(pa.int64()))],
+        names=["_id", "_hs"],
+    )
+    out = pa.Table.from_batches(list(_simhash_list_kernel([ok])))
+    assert out.column("_id").to_pylist() == [1, 3]
+
+
 def test_rp_kernel_signatures_identical_to_native(spark):
     """The Arrow RP-signature kernel accumulates dimension-by-dimension —
     the same float64 order as the native zip_with fold — so near-dup
