@@ -29,12 +29,16 @@ from pyspark.sql import functions as F
 from docs_indexer_spark.config import BM25Params, DEFAULT_TOP_K
 from docs_indexer_spark.operators.compression import (
     decode_tf_norms,
-    delta_decode_doc_ids,
+    segmented_cumsum,
+    varint_decode_bytes,
 )
 from docs_indexer_spark.operators.postings import idf_col
+from docs_indexer_spark.session import local_frame
 
 if TYPE_CHECKING:
     from pyspark.broadcast import Broadcast
+
+TOPK_SCHEMA = "doc_id long, score double"
 
 
 def score_from_tokens(
@@ -60,9 +64,7 @@ def score_from_tokens(
     """
     terms = sorted(set(query_terms))
     if not terms:
-        return postings.sparkSession.createDataFrame(
-            [], "doc_id long, score double"
-        )
+        return local_frame(postings.sparkSession, TOPK_SCHEMA)
     hits = postings.filter(F.col("term").isin(terms))
     dfs = hits.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     scored = (
@@ -96,47 +98,82 @@ def score_from_tokens(
 def decode_blocks_iter(
     block_batches: Iterator[pd.DataFrame],
     idf: Mapping[int, float],
-    allowed_bc=None,
+    allowed: np.ndarray | None = None,
 ) -> Iterator[pd.DataFrame]:
-    """mapInPandas kernel: compressed blocks → (doc_id, partial score).
-    ``allowed_bc`` (a broadcast sorted unique int64 array) is a FILTERED
-    query's doc set: blocks whose ``[first_doc_id, last_doc_id]`` range
-    holds none of it are skipped before decode, and decoded postings are
-    masked to it before they ever leave the kernel."""
+    """Compressed blocks → (doc_id, partial score): the exact scorer's
+    decode, run by its mapInPandas stage and by IndexReader's
+    driver-local route.  ``allowed`` (a sorted unique int64 array) is a
+    FILTERED query's doc set: blocks whose ``[first_doc_id,
+    last_doc_id]`` range holds none of it are skipped before decode, and
+    decoded postings are masked to it before they ever leave the
+    kernel."""
     from docs_indexer_spark.operators.wand import _in_sorted, blocks_containing
 
-    allowed = allowed_bc.value if allowed_bc is not None else None
     for pdf in block_batches:
         if allowed is not None and len(pdf):
             pdf = pdf[blocks_containing(
                 pdf["first_doc_id"].values, pdf["last_doc_id"].values, allowed
             )]
+        w = np.array(
+            [idf.get(int(t)) or 0.0 for t in pdf["term_id"].values],
+            dtype=np.float64,
+        )
+        pdf, w = pdf[w > 0], w[w > 0]
         if pdf.empty:
             continue
-        out_ids: list[np.ndarray] = []
-        out_scores: list[np.ndarray] = []
-        for term, ids_bin, norms_bin in zip(
-            pdf["term_id"].values, pdf["doc_ids_bin"].values, pdf["tf_norms_bin"].values
-        ):
-            w = idf.get(int(term))
-            if not w:
-                continue
-            ids = delta_decode_doc_ids(ids_bin)
-            norms = decode_tf_norms(norms_bin, len(ids)).astype(np.float64)
-            if allowed is not None:
-                keep = _in_sorted(ids, allowed)
-                ids, norms = ids[keep], norms[keep]
-                if not len(ids):
-                    continue
-            out_ids.append(ids)
-            out_scores.append(norms * w)
-        if out_ids:
-            yield pd.DataFrame(
-                {
-                    "doc_id": np.concatenate(out_ids),
-                    "partial": np.concatenate(out_scores),
-                }
-            )
+        # every block's varint stream decodes in one pass over the
+        # joined bytes, not block by block
+        gaps, n = varint_decode_bytes(pdf["doc_ids_bin"].values)
+        ids = segmented_cumsum(gaps, n)
+        scores = decode_tf_norms(
+            b"".join(pdf["tf_norms_bin"].values), len(ids)
+        ).astype(np.float64) * np.repeat(w, n)
+        if allowed is not None:
+            keep = _in_sorted(ids, allowed)
+            ids, scores = ids[keep], scores[keep]
+        if len(ids):
+            yield pd.DataFrame({"doc_id": ids, "partial": scores})
+
+
+def topk_partials(
+    doc_ids: np.ndarray,
+    partials: np.ndarray,
+    k: int,
+    n_required: int | None = None,
+    after: "tuple[float, int] | None" = None,
+    exclude: int | None = None,
+) -> tuple[np.ndarray, np.ndarray]:
+    """(doc_id, partial) postings → the exact top ``k`` as (doc_ids,
+    scores) sorted by (score desc, doc_id asc): the fused sum + count
+    aggregate and top-k of the exact scorer in one numpy pass — the
+    driver-local route's scorer and WAND's exhaustive drain.
+
+    ``n_required`` keeps only docs with that many partials (boolean AND:
+    a doc has one posting per term); ``after=(score, doc_id)`` keeps
+    only docs strictly after the cursor in the result order;
+    ``exclude`` drops one doc id (more_like_this's seed)."""
+    uniq, inv = np.unique(doc_ids, return_inverse=True)
+    # bincount's contiguous accumulate is ~10x faster than the np.add.at
+    # scatter path on large inverse arrays
+    acc = np.bincount(inv, weights=partials, minlength=len(uniq))
+    keep = np.ones(len(uniq), dtype=bool)
+    if n_required is not None:
+        keep &= np.bincount(inv, minlength=len(uniq)) == n_required
+    if after is not None:
+        s0, d0 = float(after[0]), int(after[1])
+        keep &= (acc < s0) | ((acc == s0) & (uniq > d0))
+    if exclude is not None:
+        keep &= uniq != exclude
+    uniq, acc = uniq[keep], acc[keep]
+    if 0 < k < len(uniq):
+        # candidate cut: every doc scoring at least the k-th value (ties
+        # INCLUDED, so the doc_id tie-break keeps its winner), then one
+        # exact sort of the survivors
+        kth = np.partition(acc, len(acc) - k)[len(acc) - k]
+        cut = acc >= kth
+        uniq, acc = uniq[cut], acc[cut]
+    order = np.lexsort((uniq, -acc))[:k]
+    return uniq[order], acc[order]
 
 
 def score_from_blocks(
@@ -182,7 +219,7 @@ def score_from_blocks(
     """
     terms = sorted(set(query_term_ids))
     if not terms:
-        return blocks.sparkSession.createDataFrame([], "doc_id long, score double")
+        return local_frame(blocks.sparkSession, TOPK_SCHEMA)
     allowed_bc = None
     allowed_df = None
     if isinstance(allowed, DataFrame):
@@ -192,9 +229,7 @@ def score_from_blocks(
 
         allowed_bc = broadcast_allowed(blocks.sparkSession.sparkContext, allowed)
         if allowed_bc is None:
-            return blocks.sparkSession.createDataFrame(
-                [], "doc_id long, score double"
-            )
+            return local_frame(blocks.sparkSession, TOPK_SCHEMA)
     # the unfiltered scan stays 3 columns — range metadata is read only
     # when the kernel prunes blocks against a filter
     cols = ["term_id", "doc_ids_bin", "tf_norms_bin"]
@@ -202,7 +237,10 @@ def score_from_blocks(
         cols += ["first_doc_id", "last_doc_id"]
     hit = blocks.filter(F.col("term_id").isin(terms)).select(*cols)
     partials = hit.mapInPandas(
-        lambda it: decode_blocks_iter(it, idf, allowed_bc=allowed_bc),
+        lambda it: decode_blocks_iter(
+            it, idf,
+            allowed=allowed_bc.value if allowed_bc is not None else None,
+        ),
         schema="doc_id long, partial double",
     )
     if allowed_df is not None:
@@ -275,9 +313,7 @@ def score_most_fields(
             )
         )
     if not parts:
-        return fields[0][0].sparkSession.createDataFrame(
-            [], "doc_id long, score double"
-        )
+        return local_frame(fields[0][0].sparkSession, TOPK_SCHEMA)
     u = parts[0]
     for p in parts[1:]:
         u = u.unionByName(p)

@@ -77,6 +77,54 @@ def varint_decode(buf: bytes) -> np.ndarray:
     return vals
 
 
+def varint_decode_streams(
+    data, offsets: np.ndarray
+) -> tuple[np.ndarray, np.ndarray]:
+    """Decode the LEB128 streams lying back to back in ``data`` (stream
+    i is bytes ``offsets[i]:offsets[i+1]``) in ONE vectorized pass:
+    → (all values in order, number of values per stream)."""
+    offsets = np.asarray(offsets, dtype=np.int64)
+    b = np.frombuffer(data, dtype=np.uint8)[offsets[0]:offsets[-1]]
+    ends = np.flatnonzero((b & 0x80) == 0)
+    counts = np.diff(np.searchsorted(ends, offsets - offsets[0]))
+    return varint_decode(b), counts
+
+
+def varint_decode_column(col) -> tuple[np.ndarray, np.ndarray]:
+    """:func:`varint_decode_streams` over a binary Arrow column, whose
+    data buffer already holds its values back to back."""
+    import pyarrow as pa
+
+    if isinstance(col, pa.ChunkedArray):
+        col = col.combine_chunks()
+    if not len(col):  # a zero-length array may carry no offsets buffer
+        return np.empty(0, dtype=np.uint64), np.empty(0, dtype=np.int64)
+    width = np.int64 if pa.types.is_large_binary(col.type) else np.int32
+    _, offs_buf, data_buf = col.buffers()
+    offs = np.frombuffer(offs_buf, dtype=width)[
+        col.offset: col.offset + len(col) + 1
+    ]
+    return varint_decode_streams(data_buf or b"", offs)
+
+
+def varint_decode_bytes(values) -> tuple[np.ndarray, np.ndarray]:
+    """:func:`varint_decode_streams` over a sequence of ``bytes``."""
+    lens = np.fromiter(map(len, values), dtype=np.int64, count=len(values))
+    return varint_decode_streams(
+        b"".join(values), np.concatenate(([0], np.cumsum(lens)))
+    )
+
+
+def segmented_cumsum(gaps: np.ndarray, counts: np.ndarray) -> np.ndarray:
+    """Running sums of ``gaps`` restarted at every run of ``counts``
+    values — many delta streams undone in one pass (int64, wrapping
+    like the per-stream decode)."""
+    c = np.cumsum(gaps.astype(np.int64))
+    starts = np.concatenate(([0], np.cumsum(counts)))[:-1]
+    prefix = np.concatenate(([0], c))[starts]
+    return c - np.repeat(prefix, counts)
+
+
 def delta_encode_doc_ids(doc_ids: np.ndarray) -> bytes:
     """Strictly-increasing int64 docIDs → gap-encoded varint stream."""
     ids = np.ascontiguousarray(doc_ids, dtype=np.int64)

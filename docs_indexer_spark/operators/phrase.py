@@ -27,8 +27,12 @@ from __future__ import annotations
 
 import math
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from docs_indexer_spark.session import local_frame
 
 # the rarest-lead decode's bucket shuffle costs about as much as decoding
 # this many head-term blocks (fit on a 10,000-doc positional index,
@@ -131,6 +135,106 @@ def phrase_occurrences(
     )
 
 
+def rarest_lead(
+    tids: list[int], nd: dict[int, int], block_size: int | None = None
+) -> int | None:
+    """The phrase term whose docs should prune the others' blocks, or
+    None when pruning cannot pay (see :func:`phrase_match_blocks`).
+    ``nd`` maps every term of ``tids`` to its df."""
+    from docs_indexer_spark.config import BLOCK_SIZE
+
+    if block_size is None:
+        block_size = BLOCK_SIZE
+    terms = set(tids)
+    rare = min(terms, key=lambda t: nd[t])
+    df_max = max(nd[t] for t in terms)
+    skipped = sum(
+        nd[t] / block_size * math.exp(-block_size * nd[rare] / nd[t])
+        for t in terms if t != rare
+    )
+    if (
+        len(terms) > 1
+        and nd[rare] * block_size <= df_max
+        and skipped >= LEAD_MIN_SKIPPED_BLOCKS
+    ):
+        return rare
+    return None
+
+
+def phrase_topk(
+    blocks: pa.Table,
+    term_ids: list[int],
+    offsets: list[int],
+    term_dfs: dict[int, int],
+    k: int,
+    block_size: int | None = None,
+) -> dict[str, np.ndarray]:
+    """:func:`phrase_match_blocks` plus its (n_occurrences desc, doc_id
+    asc) top ``k``, in numpy on one Arrow table holding every hit block
+    of the phrase terms (with positions) — IndexReader's driver-local
+    route.  Same semantics: an occurrence is an anchor ``a`` with
+    ``a + offsets[i]`` in term i's positions for every i, counted once;
+    ``first_pos`` is the least anchor plus ``offsets[0]``.  The same
+    rarest-lead pruning runs over the whole table (buckets only matter
+    to the distributed decode).  Returns the result columns."""
+    from docs_indexer_spark.operators.spimi import (
+        _positions_batch,
+        lead_pruned,
+    )
+    from docs_indexer_spark.operators.wand import _in_sorted
+
+    tids = [int(t) for t in term_ids]
+    lead = rarest_lead(tids, term_dfs, block_size)
+    if lead is not None:
+        blocks = lead_pruned(blocks, lead)
+    dec = _positions_batch(blocks)
+    term = dec.column("term_id").to_numpy()
+    doc = dec.column("doc_id").to_numpy()
+    pos = dec.column("positions")
+    n_pos = np.diff(pos.offsets.to_numpy())
+    # only docs holding every phrase term can match: drop the other
+    # postings before touching their positions
+    docs = None
+    for t in set(tids):
+        d = np.unique(doc[term == t])
+        docs = d if docs is None else np.intersect1d(
+            docs, d, assume_unique=True
+        )
+    rows = _in_sorted(doc, docs)
+    flat = pos.values.to_numpy()[np.repeat(rows, n_pos)].astype(np.int64)
+    if not len(flat):
+        return {"doc_id": np.empty(0, np.int64),
+                "n_occurrences": np.empty(0, np.int32),
+                "first_pos": np.empty(0, np.int32)}
+    p_doc = np.repeat(np.searchsorted(docs, doc[rows]), n_pos[rows])
+    p_term = np.repeat(term[rows], n_pos[rows])
+    # (doc, anchor) packed into one int64 key: dense doc index times the
+    # anchor span (positions are int32, so the key fits); each slot's
+    # keys are distinct, and the rarest slot's keys are intersected with
+    # every other slot's
+    lo = int(flat.min()) - max(offsets)
+    span = int(flat.max()) - lo + 1
+    acc = None
+    for i in sorted(range(len(tids)), key=lambda i: term_dfs[tids[i]]):
+        m = p_term == tids[i]
+        keys = np.sort(p_doc[m] * span + (flat[m] - offsets[i] - lo))
+        acc = keys if acc is None else acc[_in_sorted(acc, keys)]
+    # keys sort by doc, then anchor: a doc's first key is its least anchor
+    hit_doc = acc // span
+    first = np.flatnonzero(
+        np.concatenate(([True], hit_doc[1:] != hit_doc[:-1]))
+    )
+    res_doc = docs[hit_doc[first]]
+    n_occ = np.diff(np.append(first, len(acc)))
+    first_pos = acc[first] % span + lo + offsets[0]
+    top = np.lexsort((res_doc, -n_occ))[:k]
+    return {
+        "doc_id": res_doc[top],
+        "n_occurrences": n_occ[top].astype(np.int32),
+        "first_pos": first_pos[top].astype(np.int32),
+    }
+
+
 def phrase_match_blocks(
     blocks: DataFrame,
     term_ids: list[int],
@@ -184,17 +288,14 @@ def phrase_match_blocks(
     ``block_size`` is B in that calibration — callers reading a
     PUBLISHED index should pass the generation's recorded block size
     (IndexReader does); the default is this build's config.BLOCK_SIZE.
+    The decision itself is :func:`rarest_lead`.
     """
-    from docs_indexer_spark.config import BLOCK_SIZE
     from docs_indexer_spark.operators.spimi import decode_position_blocks
 
-    if block_size is None:
-        block_size = BLOCK_SIZE
     if offsets is None:
         offsets = list(range(len(term_ids)))
     tids = [int(t) for t in term_ids]
     cand = blocks.filter(F.col("term_id").isin(tids))
-    spark = blocks.sparkSession
     if term_dfs is not None:
         nd = {int(t): int(df) for t, df in term_dfs.items()}
     else:
@@ -207,22 +308,11 @@ def phrase_match_blocks(
     if any(t not in nd or nd[t] <= 0 for t in set(tids)):
         # a phrase term absent from the index can never match — answer
         # without touching a single block
-        return spark.createDataFrame(
-            [], f"{id_col} long, n_occurrences int, first_pos int"
+        return local_frame(
+            blocks.sparkSession,
+            f"{id_col} long, n_occurrences int, first_pos int",
         )
-    rare = min(set(tids), key=lambda t: nd[t])
-    df_max = max(nd[t] for t in set(tids))
-    skipped = sum(
-        nd[t] / block_size * math.exp(-block_size * nd[rare] / nd[t])
-        for t in set(tids) if t != rare
-    )
-    lead = (
-        rare
-        if len(set(tids)) > 1
-        and nd[rare] * block_size <= df_max
-        and skipped >= LEAD_MIN_SKIPPED_BLOCKS
-        else None
-    )
+    lead = rarest_lead(tids, nd, block_size)
     # ONE decode pass + ONE doc-keyed aggregate instead of k−1 joins:
     # the old per-term join chain both re-ran the (Catalyst-opaque)
     # positional decode once per phrase term AND paid an exchange per

@@ -428,40 +428,28 @@ _POSITIONS_SCHEMA = "term_id long, doc_id long, positions array<int>"
 
 def _positions_batch(rows) -> pa.RecordBatch:
     """Decode positional block rows (an Arrow batch or table) into
-    (term_id, doc_id, positions) postings — per-block numpy, never
-    per-posting Python.  Positions un-delta by segmented cumsum keyed on
-    the tf runs."""
+    (term_id, doc_id, positions) postings — each binary column's varint
+    streams decode in one vectorized pass, never per block or per
+    posting in Python.  Doc ids un-delta per block and positions per
+    posting, by segmented cumsum."""
     from docs_indexer_spark.operators.compression import (
-        delta_decode_doc_ids,
-        varint_decode,
+        segmented_cumsum,
+        varint_decode_column,
     )
 
-    out_tid, out_ids, out_vals, out_offs = [], [], [np.empty(0, np.int64)], [0]
-    for tid, ids_bin, tfs_bin, pos_bin in zip(
-        rows.column("term_id").to_pylist(),
-        rows.column("doc_ids_bin").to_pylist(),
-        rows.column("tfs_bin").to_pylist(),
-        rows.column("positions_bin").to_pylist(),
-    ):
-        ids = delta_decode_doc_ids(ids_bin)
-        tfs = varint_decode(tfs_bin).astype(np.int64)
-        gaps = varint_decode(pos_bin).astype(np.int64)
-        starts = np.concatenate(([0], np.cumsum(tfs)))[:-1]
-        c = np.cumsum(gaps)
-        base = c[starts] - gaps[starts]
-        out_tid.append(np.full(len(ids), tid, dtype=np.int64))
-        out_ids.append(ids)
-        out_vals.append(c - np.repeat(base, tfs))
-        out_offs.extend((out_offs[-1] + np.cumsum(tfs)).tolist())
+    id_gaps, n_docs = varint_decode_column(rows.column("doc_ids_bin"))
+    tfs = varint_decode_column(rows.column("tfs_bin"))[0].astype(np.int64)
+    pos_gaps = varint_decode_column(rows.column("positions_bin"))[0]
+    offsets = np.concatenate(([0], np.cumsum(tfs)))
     return pa.RecordBatch.from_arrays(
         [
-            pa.array(np.concatenate(out_tid or [np.empty(0, np.int64)]),
-                     type=pa.int64()),
-            pa.array(np.concatenate(out_ids or [np.empty(0, np.int64)]),
-                     type=pa.int64()),
+            pa.array(np.repeat(
+                rows.column("term_id").to_numpy().astype(np.int64), n_docs
+            ), type=pa.int64()),
+            pa.array(segmented_cumsum(id_gaps, n_docs), type=pa.int64()),
             pa.ListArray.from_arrays(
-                pa.array(out_offs, type=pa.int32()),
-                pa.array(np.concatenate(out_vals).astype(np.int32),
+                pa.array(offsets, type=pa.int32()),
+                pa.array(segmented_cumsum(pos_gaps, tfs).astype(np.int32),
                          type=pa.int32()),
             ),
         ],
@@ -497,29 +485,39 @@ def decode_position_blocks(
 
         return blocks.mapInArrow(kernel, schema=_POSITIONS_SCHEMA)
 
-    from docs_indexer_spark.operators.compression import delta_decode_doc_ids
-    from docs_indexer_spark.operators.wand import blocks_containing
-
     lead_term = int(lead_term)
 
     def per_bucket(table: pa.Table) -> pa.Table:
-        is_lead = table.column("term_id").to_numpy() == lead_term
-        lead_docs = np.sort(np.concatenate([np.empty(0, np.int64)] + [
-            delta_decode_doc_ids(b) for b in
-            table.column("doc_ids_bin").filter(pa.array(is_lead)).to_pylist()
-        ]))
-        keep = is_lead | blocks_containing(
-            table.column("first_doc_id").to_numpy(),
-            table.column("last_doc_id").to_numpy(),
-            lead_docs,
+        return pa.Table.from_batches(
+            [_positions_batch(lead_pruned(table, lead_term))]
         )
-        kept = _positions_batch(table.filter(pa.array(keep)))
-        return pa.Table.from_batches([kept])
 
     return blocks.select(
         "term_id", "bucket", "first_doc_id", "last_doc_id",
         "doc_ids_bin", "tfs_bin", "positions_bin",
     ).groupBy("bucket").applyInArrow(per_bucket, schema=_POSITIONS_SCHEMA)
+
+
+def lead_pruned(table: pa.Table, lead_term: int) -> pa.Table:
+    """The positional block rows of ``table`` a phrase containing
+    ``lead_term`` can match in: every block of the lead term, and each
+    other block whose ``[first_doc_id, last_doc_id]`` range holds one of
+    the lead term's docs (wand.blocks_containing).  Exact over any set of
+    whole doc ranges: one bucket's rows, or a query's every hit block."""
+    from docs_indexer_spark.operators.compression import delta_decode_doc_ids
+    from docs_indexer_spark.operators.wand import blocks_containing
+
+    is_lead = table.column("term_id").to_numpy() == lead_term
+    lead_docs = np.sort(np.concatenate([np.empty(0, np.int64)] + [
+        delta_decode_doc_ids(b) for b in
+        table.column("doc_ids_bin").filter(pa.array(is_lead)).to_pylist()
+    ]))
+    keep = is_lead | blocks_containing(
+        table.column("first_doc_id").to_numpy(),
+        table.column("last_doc_id").to_numpy(),
+        lead_docs,
+    )
+    return table.filter(pa.array(keep))
 
 
 def write_blocks(blocks: DataFrame, path: str, term_partitions: int = 32) -> None:

@@ -25,10 +25,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from docs_indexer_spark.config import DEFAULT_TOP_K
+from docs_indexer_spark.operators.bm25 import TOPK_SCHEMA, topk_partials
 from docs_indexer_spark.operators.compression import (
     decode_tf_norms,
     delta_decode_doc_ids,
 )
+from docs_indexer_spark.session import local_frame
 
 if TYPE_CHECKING:
     from pyspark.broadcast import Broadcast
@@ -44,6 +46,15 @@ _EXHAUSTED = np.iinfo(np.int64).max
 # r5) it buys ~2× (5.7 → 2.7 s p95) — so the threshold sits between the
 # two regimes, keyed on per-query block count, not corpus size.
 AUTO_SPLIT_MIN_BLOCKS = 4096
+
+# the degenerate-regime detector in wand_topk_lists judges pruning only
+# after this many full evaluations, or after an eighth of the bucket's
+# longest list if that is fewer: a fixed floor alone never trips in a
+# small bucket (313 docs per bucket on a 10,000-doc, 32-bucket index),
+# where an OR of the 30/100/300 most frequent terms walked every doc in
+# Python: 7.0/11.9/24.6 s against 1.8/2.0/2.3 s exhaustive, and
+# 3.5/5.7/9.7 s with the relative floor (4-core machine, local[3])
+DRAIN_MIN_EVALS = 8192
 
 
 def _in_sorted(values: np.ndarray, sorted_arr: np.ndarray) -> np.ndarray:
@@ -238,10 +249,11 @@ def _drain_exact(
     re-scored.  Result set is therefore identical to the pointer walk.
 
     ``after`` (pagination cursor) masks accumulated totals to the
-    strictly-after set BEFORE the candidate cut.  A case-(b) partial
-    score that slips through the mask is still harmless: the drain only
-    runs with a full heap, so θ is the k-th QUALIFYING score and
-    partial < total < θ can never displace an entry.
+    strictly-after set BEFORE the top-k cut (bm25.topk_partials).  A
+    case-(b) partial score that slips through the mask is still
+    harmless: the drain only runs with a full heap, so θ is the k-th
+    QUALIFYING score and partial < total < θ can never displace an
+    entry.
     """
     ids_parts: list[np.ndarray] = []
     sc_parts: list[np.ndarray] = []
@@ -259,27 +271,12 @@ def _drain_exact(
         lst._load()
     if not ids_parts:
         return
-    ids = np.concatenate(ids_parts)
-    sc = np.concatenate(sc_parts)
-    uniq, inv = np.unique(ids, return_inverse=True)
-    # bincount's contiguous accumulate is ~10x faster than the np.add.at
-    # scatter path on large inverse arrays — this IS the hot loop of the
-    # degenerate (head-term) regime at 10M+ docs
-    acc = np.bincount(inv, weights=sc, minlength=len(uniq))
-    if after is not None:
-        s0, d0 = float(after[0]), int(after[1])
-        keep = (acc < s0) | ((acc == s0) & (uniq > d0))
-        uniq, acc = uniq[keep], acc[keep]
-        if not len(uniq):
-            return
-    if len(uniq) > 4 * k:
-        # candidate cut before the heap loop — keep every doc scoring at
-        # least the 4k-th value (ties INCLUDED, so the doc_id tie-break
-        # can never lose its winner at the cut boundary)
-        kth = np.partition(acc, len(acc) - 4 * k)[len(acc) - 4 * k]
-        keep = acc >= kth
-        uniq, acc = uniq[keep], acc[keep]
-    for d, s in zip(uniq.tolist(), acc.tolist()):
+    # the drained docs' exact top-k is a superset of what they can add
+    # to the heap (a doc outside it has k drained docs ranked above it)
+    top_ids, top_scores = topk_partials(
+        np.concatenate(ids_parts), np.concatenate(sc_parts), k, after=after
+    )
+    for d, s in zip(top_ids.tolist(), top_scores.tolist()):
         entry = (float(s), -int(d))
         if len(heap) < k:
             heapq.heappush(heap, entry)
@@ -316,6 +313,9 @@ def wand_topk_lists(
     heap: list[tuple[float, int]] = []  # (score, -doc_id) min-heap
     evals = 0
     skips = 0
+    drain_floor = min(DRAIN_MIN_EVALS, max(
+        [1] + [int(b["n_docs"].sum()) // 8 for b in term_blocks.values()]
+    ))
     if after is not None:
         a_s, a_d = float(after[0]), int(after[1])
 
@@ -330,7 +330,7 @@ def wand_topk_lists(
         # evaluations vastly outnumber skips the bounds aren't pruning
         # (all-head-term query, uniform maxima) — switch this bucket to
         # one vectorized exact drain instead of a per-doc Python walk
-        if evals >= 8192 and skips * 10 < evals and len(heap) >= k:
+        if evals >= drain_floor and skips * 10 < evals and len(heap) >= k:
             _drain_exact(lists, heap, k, after=after)
             break
         active = [l for l in lists if not l.exhausted]
@@ -450,17 +450,15 @@ def wand_topk(
     unsliced plan unchanged."""
     terms = sorted(set(query_term_ids))
     if not terms:
-        return blocks.sparkSession.createDataFrame([], "doc_id long, score double")
+        return local_frame(blocks.sparkSession, TOPK_SCHEMA)
     allowed_bc = None
     if allowed is not None:
         allowed_bc = broadcast_allowed(blocks.sparkSession.sparkContext, allowed)
         if allowed_bc is None:
-            return blocks.sparkSession.createDataFrame(
-                [], "doc_id long, score double"
-            )
+            return local_frame(blocks.sparkSession, TOPK_SCHEMA)
     hit = blocks.filter(F.col("term_id").isin(terms)).select(
-        "term_id", "bucket", "block_seq", "first_doc_id", "last_doc_id",
-        "max_score", "doc_ids_bin", "tf_norms_bin",
+        "term_id", "bucket", "block_seq", "n_docs", "first_doc_id",
+        "last_doc_id", "max_score", "doc_ids_bin", "tf_norms_bin",
     )
 
     bounds = None
@@ -498,9 +496,7 @@ def wand_topk(
             .collect()
         )
         if not bounds:
-            return blocks.sparkSession.createDataFrame(
-                [], "doc_id long, score double"
-            )
+            return local_frame(blocks.sparkSession, TOPK_SCHEMA)
         if split == "auto":
             n_blocks = sum(int(r["_nb"]) for r in bounds)
             cores = blocks.sparkSession.sparkContext.defaultParallelism

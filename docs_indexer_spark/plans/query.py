@@ -9,10 +9,16 @@ SURVEY.md §3.3):
     → top-k (score desc, doc_id asc)
     → join the doc store for rendering fields
 
-Execution boundaries: driver parses/plans, executors scan + score their
-buckets, TakeOrderedAndProject merges k rows to the driver.  Every query
-kind runs its scoring kernel as its ONE Python stage and starts no Spark
-job while planning (docs/DESIGN.md "Serving cost model").
+Two routes (docs/DESIGN.md "Serving cost model"):
+
+- driver-local, for a query whose estimated hit blocks are at most
+  :data:`LOCAL_MAX_BLOCKS`: the driver reads the query's blocks with
+  pyarrow and runs the same kernels in-process; the already-sorted top-k
+  comes back as a DataFrame over an Arrow table — no Spark job at all;
+- distributed, above it: executors scan + score their buckets and
+  TakeOrderedAndProject merges k rows to the driver.  Every query kind
+  runs its scoring kernel as its ONE Python stage and starts no Spark
+  job while planning.
 """
 
 from __future__ import annotations
@@ -23,6 +29,7 @@ import threading
 from collections import OrderedDict
 
 import numpy as np
+import pyarrow as pa
 import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
@@ -32,13 +39,45 @@ from docs_indexer_spark.config import DEFAULT_TOP_K, BM25Params
 from docs_indexer_spark.functions.analysis import analyze_text
 from docs_indexer_spark.functions.xxh import spark_xxhash64_str
 from docs_indexer_spark.operators import bm25, wand
+from docs_indexer_spark.operators.bm25 import TOPK_SCHEMA
+from docs_indexer_spark.session import local_frame
 from docs_indexer_spark.sources.catalog import SnapshotCatalog
 
-# resolved string filters one reader keeps (doc-id array + broadcast
-# each, ≤ max_driver_filter_docs ids).  The memo only pays for traffic
-# that repeats a filter string; 8 is a memory bound (8 × 4 MB of ids at
-# the default max_driver_filter_docs), not a measured working set
+# resolved string filters one reader keeps (doc-id array, plus its
+# broadcast once a distributed route has needed one; ≤
+# max_driver_filter_docs ids).  The memo only pays for traffic that
+# repeats a filter string; 8 is a memory bound (8 × 4 MB of ids at the
+# default max_driver_filter_docs), not a measured working set
 FILTER_MEMO_SIZE = 8
+
+# a query whose estimated hit blocks (IndexReader._est_blocks) are at
+# most this many runs on the driver instead of as Spark jobs.  Fitted by
+# a sweep of both routes on 10,000- and 200,000-doc indexes, 4-core
+# machine, local[3] (docs/DESIGN.md "Serving cost model"): the local
+# route costs ~0.2 s plus ~0.5 µs per posting and won at every measured
+# size, by 2× at 13k blocks and 1.1× at 67k against the distributed
+# exact scorer, whose 3 cores catch up near ~100k blocks.  The cap sits
+# where local is still ~1.6× faster, and it bounds a local query's
+# driver memory at this many times the largest block's bytes
+LOCAL_MAX_BLOCKS = 32768
+
+PHRASE_SCHEMA = "doc_id long, n_occurrences int, first_pos int"
+# the block columns each local kernel reads
+_SCORED_COLUMNS = ["term_id", "doc_ids_bin", "tf_norms_bin"]
+_RANGE_COLUMNS = ["first_doc_id", "last_doc_id"]
+_POSITION_COLUMNS = [
+    "term_id", "first_doc_id", "last_doc_id", "doc_ids_bin", "tfs_bin",
+    "positions_bin",
+]
+
+
+def _local_path(uri: str) -> str:
+    """A file URI from ``DataFrame.inputFiles()`` as a path pyarrow
+    opens; other schemes pass through."""
+    from urllib.parse import unquote, urlparse
+
+    u = urlparse(uri)
+    return unquote(u.path) if u.scheme == "file" else uri
 
 
 class IndexReader:
@@ -82,8 +121,9 @@ class IndexReader:
         )
         self._lock = threading.Lock()
         self._df_stats: DataFrame | None = None
-        # where string → (sorted doc ids, their broadcast or None if empty)
-        self._filters: "OrderedDict[str, tuple]" = OrderedDict()
+        # where string → [sorted doc ids, their broadcast or None]; the
+        # broadcast is made the first time a distributed route needs it
+        self._filters: "OrderedDict[str, list]" = OrderedDict()
         # per-bucket doc-id bounds, lazily cached once per generation —
         # lets wand_topk's auto-split decide and slice with NO per-query
         # block-metadata job (see _bucket_bounds)
@@ -131,6 +171,75 @@ class IndexReader:
             )
         except (FileNotFoundError, ValueError):
             return self.blocks
+
+    def _local_blocks(self, term_ids, columns: list[str]) -> pa.Table:
+        """The hit blocks of ``term_ids`` read on the driver: the files of
+        the same manifest-pruned relation the distributed scan reads
+        (:meth:`_blocks_for`, so both routes read identical inputs),
+        with ``term_id IN`` pushed into pyarrow's row-group pruning."""
+        ids = sorted(int(t) for t in term_ids)
+        files = [_local_path(f) for f in self._blocks_for(ids).inputFiles()]
+        return ds.dataset(files, format="parquet").to_table(
+            columns=columns, filter=ds.field("term_id").isin(ids)
+        )
+
+    def _est_blocks(self, dfs) -> int:
+        """Hit-block estimate for terms with document frequencies
+        ``dfs``: Σ ceil(df/B) undercounts only when a term's postings
+        spread over many buckets, so pad by one bucket's worth of blocks
+        per term."""
+        bsz = int(self.meta["metrics"].get("block_size") or 128)
+        n_buckets = max(1, len(self._bucket_bounds()))
+        return sum(-(-int(df) // bsz) + n_buckets for df in dfs)
+
+    def _route(
+        self, dfs, where=None, max_driver_docs: int = 500_000,
+        split: "int | str" = "auto",
+    ):
+        """Where a scored query over terms with document frequencies
+        ``dfs`` (term_id → df) runs: ``(local, allowed, est)``.
+
+        It runs on the driver when its estimated hit blocks ``est`` are
+        at most :data:`LOCAL_MAX_BLOCKS`, its filter (if any) resolved to
+        a driver-side id array, and the caller asked for no split > 1;
+        ``allowed`` is then that sorted array or None.  Otherwise
+        ``allowed`` is the distributed scorers' filter argument
+        (:meth:`_filter_arg`); ``est`` is None under an explicit split."""
+        est = None
+        if not (isinstance(split, int) and split > 1):
+            est = self._est_blocks(dfs.values())
+        if est is None or est > LOCAL_MAX_BLOCKS:
+            return False, self._filter_arg(where, max_driver_docs), est
+        ids, rel = self._resolve_filter(where, max_driver_docs)
+        if rel is not None:
+            return False, rel, est
+        return True, ids, est
+
+    def _local_topk(
+        self, idf: dict[int, float], k: int, allowed=None,
+        n_required: int | None = None, after=None, exclude: int | None = None,
+    ) -> DataFrame:
+        """The driver-local route of every scored kind: the exact
+        scorer's decode kernel (filter block pruning included) over the
+        query's blocks, then the fused sum/count, AND, ``search_after``
+        and top-k of :func:`bm25.topk_partials`."""
+        if not idf or (allowed is not None and not len(allowed)):
+            return local_frame(self.spark, TOPK_SCHEMA)
+        cols = _SCORED_COLUMNS + (
+            _RANGE_COLUMNS if allowed is not None else []
+        )
+        pdf = self._local_blocks(idf, cols).to_pandas()
+        parts = list(bm25.decode_blocks_iter([pdf], idf, allowed=allowed))
+        if not parts:
+            return local_frame(self.spark, TOPK_SCHEMA)
+        doc_ids, scores = bm25.topk_partials(
+            np.concatenate([p["doc_id"].values for p in parts]),
+            np.concatenate([p["partial"].values for p in parts]),
+            k, n_required=n_required, after=after, exclude=exclude,
+        )
+        return local_frame(
+            self.spark, TOPK_SCHEMA, {"doc_id": doc_ids, "score": scores}
+        )
 
     def _dfs(self, term_ids) -> dict[int, int]:
         """term_id → df for the ids present in the vocabulary (an
@@ -198,14 +307,15 @@ class IndexReader:
         selectivity means near-exhaustive scoring anyway.
 
         A selective STRING filter is memoized for the reader's pinned
-        generation: its sorted ids and their one broadcast (``allowed``
-        is then that broadcast; an empty filter stays an empty array),
-        so a repeated filter costs no Spark job and no new broadcast.
-        The memo is an LRU of :data:`FILTER_MEMO_SIZE` entries shared by
-        concurrent queries.  Eviction only unpersists the broadcast, so a
-        query built before its filter was evicted still runs; :meth:`close`
-        destroys the memoized ones, so run filtered results before closing
-        the reader.  Column and DataFrame predicates resolve per query."""
+        generation: its sorted ids, so a repeated filter costs no Spark
+        job, and the ids' one broadcast once a distributed route needs it
+        (:meth:`_shipped`; the driver-local route never does).  The memo
+        is an LRU of :data:`FILTER_MEMO_SIZE` entries shared by
+        concurrent queries.  Eviction only unpersists a broadcast, so a
+        query built before its filter was evicted still runs;
+        :meth:`close` destroys the memoized ones, so run filtered results
+        before closing the reader.  Column and DataFrame predicates
+        resolve per query."""
         if where is None:
             return None, None
         if isinstance(where, str):
@@ -214,7 +324,7 @@ class IndexReader:
                 if memo is not None:
                     self._filters.move_to_end(where)
             if memo is not None and len(memo[0]) <= max_driver_docs:
-                return (memo[0] if memo[1] is None else memo[1]), None
+                return memo[0], None
         if isinstance(where, DataFrame):
             # pre-resolved doc_id relation (search_hybrid resolves the
             # predicate ONCE and shares it across arms)
@@ -233,25 +343,18 @@ class IndexReader:
             return ids, None
         return self._memoize_filter(where, ids), None
 
-    def _memoize_filter(self, where: str, ids: np.ndarray):
-        """Insert a resolved string filter into the LRU memo; returns
-        what the scorers take as ``allowed`` for it."""
-        bc = self.spark.sparkContext.broadcast(ids) if len(ids) else None
-        unused, evicted = None, []
+    def _memoize_filter(self, where: str, ids: np.ndarray) -> np.ndarray:
+        """Insert a resolved string filter into the LRU memo; returns its
+        ids (a concurrent query's, if that one got there first)."""
+        evicted = []
         with self._lock:
             memo = self._filters.get(where)
             if memo is not None:
-                # a concurrent query resolved the same filter first; ours
-                # was never handed out
-                unused = bc
-                ids, bc = memo
                 self._filters.move_to_end(where)
-            else:
-                self._filters[where] = (ids, bc)
-                while len(self._filters) > FILTER_MEMO_SIZE:
-                    evicted.append(self._filters.popitem(last=False)[1][1])
-        if unused is not None:
-            unused.destroy()
+                return memo[0]
+            self._filters[where] = [ids, None]
+            while len(self._filters) > FILTER_MEMO_SIZE:
+                evicted.append(self._filters.popitem(last=False)[1][1])
         # an evicted broadcast may still sit in the closure of a query
         # built but not yet run: only drop the executors' copies (a later
         # task re-fetches it) and leave the rest to Spark's ContextCleaner
@@ -259,7 +362,31 @@ class IndexReader:
         for old in evicted:
             if old is not None:
                 old.unpersist()
-        return ids if bc is None else bc
+        return ids
+
+    def _shipped(self, where, ids):
+        """A resolved selective filter as the distributed scorers take it:
+        a memoized string filter's ONE broadcast, made the first time a
+        distributed route needs it; any other id array as it is (the
+        scorer broadcasts it per query), and an empty one too."""
+        if ids is None or not len(ids) or not isinstance(where, str):
+            return ids
+        with self._lock:
+            memo = self._filters.get(where)
+            if memo is None:  # evicted since it resolved
+                return ids
+            if memo[1] is not None:
+                return memo[1]
+        bc = self.spark.sparkContext.broadcast(memo[0])
+        with self._lock:
+            if memo[1] is None and self._filters.get(where) is memo:
+                memo[1] = bc
+                return bc
+            winner = memo[1]
+        # a concurrent query shipped it first, or it was evicted: ours
+        # was never handed out
+        bc.destroy()
+        return ids if winner is None else winner
 
     def search(
         self,
@@ -308,42 +435,30 @@ class IndexReader:
         terms = analyze_text(query, self.analyzer)
         idf, dfs = self._idf_df(sorted(set(terms)))
         ids = sorted(idf)
-        blocks = self._blocks_for(ids)
-        allowed, allowed_df = self._resolve_filter(
-            where, max_driver_filter_docs
+        if operator == "and" and len(ids) < len(set(terms)):
+            # a term absent from the index can never AND-match
+            return local_frame(self.spark, TOPK_SCHEMA)
+        local, allowed, est = self._route(
+            dfs, where, max_driver_filter_docs, split
         )
-        if operator == "and":
-            if len(ids) < len(set(terms)):
-                # a term absent from the index can never AND-match
-                return self.spark.createDataFrame([], "doc_id long, score double")
-            return bm25.score_from_blocks(
-                blocks, idf, ids, k=k, require_all=True,
-                allowed=allowed if allowed is not None else allowed_df,
-                after=search_after,
+        if local:
+            return self._local_topk(
+                idf, k, allowed, after=search_after,
+                n_required=len(ids) if operator == "and" else None,
             )
-        if allowed_df is not None:
-            # broad filter: exhaustive scoring + semi-join beats WAND
-            # (upper-bound pruning buys little when most docs are
+        blocks = self._blocks_for(ids)
+        if operator == "and" or exact or isinstance(allowed, DataFrame):
+            # a broad filter takes exhaustive scoring + semi-join over
+            # WAND (upper-bound pruning buys little when most docs are
             # eligible, and the filter relation must stay distributed)
             return bm25.score_from_blocks(
-                blocks, idf, ids, k=k, allowed=allowed_df, after=search_after
+                blocks, idf, ids, k=k, require_all=operator == "and",
+                allowed=allowed, after=search_after,
             )
-        if exact:
-            return bm25.score_from_blocks(
-                blocks, idf, ids, k=k, allowed=allowed, after=search_after
-            )
-        # block-count estimate from the dfs already in hand: Σ ceil(df/B)
-        # undercounts only when a term's postings spread over many
-        # buckets, so pad by one bucket's worth of blocks per term.  A
-        # filter does not shrink it: every hit block still ships to the
-        # bucket kernels, which prune it there.  A perf-only decision
-        # either way (split never changes results).
+        # a filter does not shrink the block estimate: every hit block
+        # still ships to the bucket kernels, which prune it there.  A
+        # perf-only decision either way (split never changes results).
         fast = split == "auto"
-        est = None
-        if fast:
-            bsz = int(self.meta["metrics"].get("block_size") or 128)
-            n_buckets = max(1, len(self._bucket_bounds()))
-            est = sum(-(-df // bsz) + n_buckets for df in dfs.values())
         return wand.wand_topk(
             blocks, idf, ids, k=k, allowed=allowed, split=split,
             after=search_after,
@@ -352,11 +467,11 @@ class IndexReader:
         )
 
     def _filter_arg(self, where, max_driver_docs: int = 500_000):
-        """``where`` → the ``allowed`` argument for the block scorers
-        (bitset array or its memoized broadcast if selective, doc_id
-        relation otherwise, None if unfiltered)."""
+        """``where`` → the ``allowed`` argument for the distributed block
+        scorers (bitset array or its memoized broadcast if selective,
+        doc_id relation otherwise, None if unfiltered)."""
         allowed, df = self._resolve_filter(where, max_driver_docs)
-        return allowed if allowed is not None else df
+        return self._shipped(where, allowed) if df is None else df
 
     def search_prefix(
         self,
@@ -378,11 +493,20 @@ class IndexReader:
             .limit(max_expansions)
             .collect()
         )
-        idf = {int(r["term_id"]): self._idf_of(r["df"]) for r in rows}
+        dfs = {int(r["term_id"]): int(r["df"]) for r in rows}
+        return self._scored(dfs, k, where)
+
+    def _scored(self, dfs: dict[int, int], k: int, where=None) -> DataFrame:
+        """Exact BM25 top-k of the OR of the terms with document
+        frequencies ``dfs`` (term_id → df), on the route :meth:`_route`
+        picks."""
+        idf = {t: self._idf_of(df) for t, df in dfs.items()}
+        local, allowed, _ = self._route(dfs, where)
+        if local:
+            return self._local_topk(idf, k, allowed)
         ids = sorted(idf)
         return bm25.score_from_blocks(
-            self._blocks_for(ids), idf, ids, k=k,
-            allowed=self._filter_arg(where),
+            self._blocks_for(ids), idf, ids, k=k, allowed=allowed
         )
 
     def _fuzzy_candidates(
@@ -451,9 +575,9 @@ class IndexReader:
 
         terms = sorted(set(analyze_text(query, self.analyzer)))
         if not terms:
-            return self.spark.createDataFrame([], "doc_id long, score double")
+            return local_frame(self.spark, TOPK_SCHEMA)
         cands = self._fuzzy_candidates(terms, fuzziness)
-        idf: dict[int, float] = {}
+        dfs: dict[int, int] = {}
         for t in terms:
             verified = [
                 c for c in cands
@@ -461,12 +585,8 @@ class IndexReader:
             ]
             verified.sort(key=lambda c: (-c[2], c[0]))
             for _, tid, df in verified[:max_expansions]:
-                idf[tid] = self._idf_of(df)
-        ids = sorted(idf)
-        return bm25.score_from_blocks(
-            self._blocks_for(ids), idf, ids, k=k,
-            allowed=self._filter_arg(where),
-        )
+                dfs[tid] = df
+        return self._scored(dfs, k, where)
 
     def search_phrase(
         self, query: str, k: int = DEFAULT_TOP_K, where=None
@@ -483,7 +603,10 @@ class IndexReader:
         first_pos), ranked by occurrence count then doc_id.
         """
         from docs_indexer_spark.functions.analysis import analyze_with_positions
-        from docs_indexer_spark.operators.phrase import phrase_match_blocks
+        from docs_indexer_spark.operators.phrase import (
+            phrase_match_blocks,
+            phrase_topk,
+        )
 
         if not self.meta["metrics"].get("positions"):
             raise ValueError(
@@ -491,21 +614,25 @@ class IndexReader:
                 "phrase queries need the positional stream"
             )
         terms_pos = analyze_with_positions(query, self.analyzer)
-        if not terms_pos:
-            return self.spark.createDataFrame(
-                [], "doc_id long, n_occurrences int, first_pos int"
-            )
-        terms = [t for t, _ in terms_pos]
-        offsets = [p for _, p in terms_pos]
         # term ids and dfs from the driver-side term table: no Spark job
-        # before the decode, an early-out on unindexed terms inside
-        # phrase_match_blocks, and real document frequencies for its
+        # before the decode, and real document frequencies for the
         # rarest-lead decision
-        term_ids = [spark_xxhash64_str(t) for t in terms]
+        term_ids = [spark_xxhash64_str(t) for t, _ in terms_pos]
+        offsets = [p for _, p in terms_pos]
+        dfs = self._dfs(term_ids)
+        if not terms_pos or any(dfs.get(t, 0) <= 0 for t in term_ids):
+            # a phrase term absent from the index can never match
+            return local_frame(self.spark, PHRASE_SCHEMA)
+        bsz = self.meta["metrics"].get("block_size")
+        est = self._est_blocks(dfs.values())
+        if where is None and est <= LOCAL_MAX_BLOCKS:
+            return local_frame(self.spark, PHRASE_SCHEMA, phrase_topk(
+                self._local_blocks(dfs, _POSITION_COLUMNS), term_ids,
+                offsets, dfs, k, block_size=bsz,
+            ))
         res = phrase_match_blocks(
             self._blocks_for(term_ids), term_ids, offsets=offsets,
-            term_dfs=self._dfs(term_ids),
-            block_size=self.meta["metrics"].get("block_size"),
+            term_dfs=dfs, block_size=bsz,
         )
         if where is not None:
             # filter-then-rank: phrase results are doc-sparse already,
@@ -582,13 +709,13 @@ class IndexReader:
             docs.filter(F.col(id_col) == doc_id).select(text_col).first()
         )
         if row is None or not row[0]:
-            return self.spark.createDataFrame([], "doc_id long, score double")
+            return local_frame(self.spark, TOPK_SCHEMA)
         tf = Counter(analyze_text(row[0], self.analyzer))
         tf = Counter(
             {t: c for t, c in tf.items() if c >= min_term_freq}
         )
         if not tf:
-            return self.spark.createDataFrame([], "doc_id long, score double")
+            return local_frame(self.spark, TOPK_SCHEMA)
         stats = self.df_stats.filter(
             F.col("term").isin(sorted(tf))
             & (F.col("df") >= min_doc_freq)
@@ -604,7 +731,12 @@ class IndexReader:
                 for r in stats
             ),
         )[:max_query_terms]
-        idf = {tid: self._idf_of(df) for _, _, tid, df in weighted}
+        dfs = {tid: df for _, _, tid, df in weighted}
+        idf = {t: self._idf_of(df) for t, df in dfs.items()}
+        if self._route(dfs)[0]:
+            # the seed drops inside the numpy top-k: a filter on top of
+            # the local frame would start Spark jobs again
+            return self._local_topk(idf, k, exclude=doc_id)
         ids = sorted(idf)
         top = bm25.score_from_blocks(
             self._blocks_for(ids), idf, ids, k=k + 1

@@ -47,6 +47,27 @@ def get_spark(
     return builder.getOrCreate()
 
 
+def local_frame(spark: SparkSession, schema: str, columns=None):
+    """A small driver-side result — ``columns`` maps each field of the
+    DDL ``schema`` to its values, already in result order; None is the
+    empty answer — as a DataFrame that runs NO Spark job.  It is built
+    from an Arrow table, which Spark plans as a LocalTableScan.  A
+    Python-list ``createDataFrame`` starts a job at collect, and an
+    ``orderBy``/``limit``/``filter`` on top of any local relation starts
+    jobs again, so callers hand over the final rows."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    struct = _parse_datatype_string(schema)
+    arrow = to_arrow_schema(struct)
+    if columns is None:
+        table = arrow.empty_table()
+    else:
+        table = pa.table([columns[f.name] for f in struct.fields], schema=arrow)
+    return spark.createDataFrame(table, schema=struct)
+
+
 def spread(df, min_partitions: int | None = None, key: str | None = None):
     """Ensure a compute-heavy map stage has at least core-count partitions.
 

@@ -25,6 +25,31 @@ def documents(spark):
     return spark.read.parquet(f"{SF_DIR}/documents.parquet")
 
 
+# IndexReader's two routes, as the LOCAL_MAX_BLOCKS value that sends
+# every query down each: the small test indexes are all below the real
+# crossover, so without forcing the distributed route no reader test
+# would run it
+ROUTES = {"distributed": 0, "local": 10**9}
+
+
+def on_both_routes(monkeypatch):
+    """Iterate once per IndexReader route, with ``LOCAL_MAX_BLOCKS``
+    forcing every query onto it; yields the route's name."""
+    from docs_indexer_spark.plans import query
+
+    for name, cap in ROUTES.items():
+        monkeypatch.setattr(query, "LOCAL_MAX_BLOCKS", cap)
+        yield name
+
+
+@pytest.fixture
+def distributed_route(monkeypatch):
+    """Force every IndexReader query onto the distributed route."""
+    from docs_indexer_spark.plans import query
+
+    monkeypatch.setattr(query, "LOCAL_MAX_BLOCKS", ROUTES["distributed"])
+
+
 def rank_identical(expected, actual, tol=1e-6):
     """Compare two [(doc_id, score)] top-k lists under the pinned tie-break,
     treating docs whose scores differ by < tol as interchangeable within a

@@ -19,7 +19,7 @@ from docs_indexer_spark.operators.postings import (
     with_tokens,
 )
 from docs_indexer_spark.oracle import OracleIndex
-from tests.conftest import rank_identical
+from tests.conftest import on_both_routes, rank_identical
 
 ANALYZER = "english"
 
@@ -140,7 +140,7 @@ def test_oracle_score_sanity(oracle, corpus):
     assert abs(oracle.score("spark join", doc_id) - score) < 1e-12
 
 
-def test_search_fuzzy_published_index(spark, tmp_path):
+def test_search_fuzzy_published_index(spark, tmp_path, monkeypatch):
     """Fuzzy serving path: a 1-edit misspelling scores against the
     expansion's own idf — equal to an exact search when the expansion
     resolves to exactly the intended vocabulary term."""
@@ -157,18 +157,19 @@ def test_search_fuzzy_published_index(spark, tmp_path):
     build_index(spark, docs, cat, fingerprint="fp-fz", id_col="doc_id",
                 n_build_partitions=1, analyzer="stop")
     reader = IndexReader(spark, cat)
-    want = [(r["doc_id"], round(r["score"], 9))
-            for r in reader.search("window", k=5, exact=True).collect()]
-    # "windoq" is 1 edit from "window" and from nothing else in the vocab
-    got = [(r["doc_id"], round(r["score"], 9))
-           for r in reader.search_fuzzy("windoq", k=5).collect()]
-    assert got == want and got
-    # unmatched gibberish → empty
-    assert reader.search_fuzzy("zzzzqqqq", k=5).count() == 0
+    for _ in on_both_routes(monkeypatch):
+        want = [(r["doc_id"], round(r["score"], 9))
+                for r in reader.search("window", k=5, exact=True).collect()]
+        # "windoq" is 1 edit from "window" and from nothing else in the vocab
+        got = [(r["doc_id"], round(r["score"], 9))
+               for r in reader.search_fuzzy("windoq", k=5).collect()]
+        assert got == want and got
+        # unmatched gibberish → empty
+        assert reader.search_fuzzy("zzzzqqqq", k=5).count() == 0
     reader.close()
 
 
-def test_more_like_this_serving(spark, tmp_path):
+def test_more_like_this_serving(spark, tmp_path, monkeypatch):
     """Serving-path MLT over a published index: related docs share the
     seed's representative terms; the seed itself is excluded."""
     from pyspark.sql import functions as F
@@ -184,13 +185,14 @@ def test_more_like_this_serving(spark, tmp_path):
     build_index(spark, docs, cat, fingerprint="fp-mlt", id_col="doc_id",
                 n_build_partitions=1, analyzer="stop")
     reader = IndexReader(spark, cat)
-    rows = reader.more_like_this(7, docs, k=10).collect()
-    got = [r["doc_id"] for r in rows]
-    assert len(got) == 10 and 7 not in got
-    assert all(rows[i]["score"] >= rows[i + 1]["score"]
-               for i in range(len(rows) - 1))
-    # a missing seed yields empty, not an error
-    assert reader.more_like_this(10**15, docs).count() == 0
+    for _ in on_both_routes(monkeypatch):
+        rows = reader.more_like_this(7, docs, k=10).collect()
+        got = [r["doc_id"] for r in rows]
+        assert len(got) == 10 and 7 not in got
+        assert all(rows[i]["score"] >= rows[i + 1]["score"]
+                   for i in range(len(rows) - 1))
+        # a missing seed yields empty, not an error
+        assert reader.more_like_this(10**15, docs).count() == 0
     reader.close()
 
 

@@ -19,7 +19,7 @@ from docs_indexer_spark.operators import bm25, wand
 from docs_indexer_spark.operators.fused import fused_build_blocks
 from docs_indexer_spark.operators.postings import idf_col
 
-from tests.conftest import rank_identical
+from tests.conftest import on_both_routes, rank_identical
 
 TERMS = ["spark", "join", "window"]
 
@@ -150,10 +150,13 @@ def test_block_metadata_pruning_drops_blocks(fused, allowed):
     assert kept < total
 
 
-def test_index_reader_search_where_end_to_end(spark, corpus, tmp_path):
+def test_index_reader_search_where_end_to_end(
+    spark, corpus, tmp_path, monkeypatch
+):
     """Full serving path: build+publish via the catalog, then
     IndexReader.search(where=...) in all three routes (WAND bitset,
-    exact bitset, distributed semi-join) against filter-then-score."""
+    exact bitset, distributed semi-join) against filter-then-score, on
+    the driver-local route and the distributed one."""
     from docs_indexer_spark.plans.build_index import build_index
     from docs_indexer_spark.plans.query import IndexReader
     from docs_indexer_spark.sources.catalog import SnapshotCatalog
@@ -168,20 +171,22 @@ def test_index_reader_search_where_end_to_end(spark, corpus, tmp_path):
         r["doc_id"] for r in docs.filter(F.expr(where)).select("doc_id").collect()
     }
     q = " ".join(TERMS)
-    full = reader.search(q, k=100_000, exact=True).collect()
-    expected = sorted(
-        ((r["doc_id"], r["score"]) for r in full if r["doc_id"] in allowed_set),
-        key=lambda x: (-x[1], x[0]),
-    )[:10]
-    for kwargs in (
-        {},                                   # WAND + bitset
-        {"exact": True},                      # exact + bitset
-        {"max_driver_filter_docs": 0},        # force distributed semi-join
-    ):
-        got = reader.search(q, k=10, where=where, **kwargs).collect()
-        rank_identical(expected, [(r["doc_id"], r["score"]) for r in got])
-    # unindexed-filter sanity: a filter matching nothing yields no hits
-    assert reader.search(q, k=10, where="n_chars < 0").count() == 0
+    for _ in on_both_routes(monkeypatch):
+        full = reader.search(q, k=100_000, exact=True).collect()
+        expected = sorted(
+            ((r["doc_id"], r["score"]) for r in full
+             if r["doc_id"] in allowed_set),
+            key=lambda x: (-x[1], x[0]),
+        )[:10]
+        for kwargs in (
+            {},                                   # WAND + bitset
+            {"exact": True},                      # exact + bitset
+            {"max_driver_filter_docs": 0},        # force distributed semi-join
+        ):
+            got = reader.search(q, k=10, where=where, **kwargs).collect()
+            rank_identical(expected, [(r["doc_id"], r["score"]) for r in got])
+        # unindexed-filter sanity: a filter matching nothing yields no hits
+        assert reader.search(q, k=10, where="n_chars < 0").count() == 0
     reader.close()
 
 
@@ -212,10 +217,12 @@ def test_wand_split_rank_identical(fused, allowed, split):
     )
 
 
-def test_filtered_prefix_fuzzy_phrase_end_to_end(spark, corpus, tmp_path):
+def test_filtered_prefix_fuzzy_phrase_end_to_end(
+    spark, corpus, tmp_path, monkeypatch
+):
     """The filter composes with EVERY query type: prefix, fuzzy, and
     phrase results under `where` equal the unfiltered run minus
-    ineligible docs."""
+    ineligible docs, on both IndexReader routes."""
     from docs_indexer_spark.plans.build_index import build_index
     from docs_indexer_spark.plans.query import IndexReader
     from docs_indexer_spark.sources.catalog import SnapshotCatalog
@@ -239,28 +246,31 @@ def test_filtered_prefix_fuzzy_phrase_end_to_end(spark, corpus, tmp_path):
         kept.sort(key=lambda x: (-x[1], x[0]))
         return kept[:10]
 
-    pfx = reader.search_prefix("sp", k=100_000).collect()
-    got = reader.search_prefix("sp", k=10, where=where).collect()
-    rank_identical(
-        expect(pfx, "score"),
-        [(r["doc_id"], r["score"]) for r in got],
-    )
+    for _ in on_both_routes(monkeypatch):
+        pfx = reader.search_prefix("sp", k=100_000).collect()
+        got = reader.search_prefix("sp", k=10, where=where).collect()
+        rank_identical(
+            expect(pfx, "score"),
+            [(r["doc_id"], r["score"]) for r in got],
+        )
 
-    fz = reader.search_fuzzy("spak", k=100_000, fuzziness=1).collect()
-    got = reader.search_fuzzy("spak", k=10, fuzziness=1, where=where).collect()
-    rank_identical(
-        expect(fz, "score"),
-        [(r["doc_id"], r["score"]) for r in got],
-    )
+        fz = reader.search_fuzzy("spak", k=100_000, fuzziness=1).collect()
+        got = reader.search_fuzzy(
+            "spak", k=10, fuzziness=1, where=where
+        ).collect()
+        rank_identical(
+            expect(fz, "score"),
+            [(r["doc_id"], r["score"]) for r in got],
+        )
 
-    ph = reader.search_phrase("merge sort", k=100_000).collect()
-    got = reader.search_phrase("merge sort", k=10, where=where).collect()
-    exp = sorted(
-        ((r["doc_id"], r["n_occurrences"]) for r in ph
-         if r["doc_id"] in allowed_set),
-        key=lambda x: (-x[1], x[0]),
-    )[:10]
-    assert [(r["doc_id"], r["n_occurrences"]) for r in got] == exp
+        ph = reader.search_phrase("merge sort", k=100_000).collect()
+        got = reader.search_phrase("merge sort", k=10, where=where).collect()
+        exp = sorted(
+            ((r["doc_id"], r["n_occurrences"]) for r in ph
+             if r["doc_id"] in allowed_set),
+            key=lambda x: (-x[1], x[0]),
+        )[:10]
+        assert [(r["doc_id"], r["n_occurrences"]) for r in got] == exp
     reader.close()
 
 
@@ -503,7 +513,7 @@ def test_wand_split_overflow_guard_extreme_doc_ids(spark):
 
 
 def test_filter_emptying_buckets_equals_filter_then_score(
-    spark, positional_index
+    spark, positional_index, monkeypatch
 ):
     """A filter whose docs all sit in the first doc-range bucket leaves
     every other bucket without one eligible block: the kernels prune
@@ -531,17 +541,20 @@ def test_filter_emptying_buckets_equals_filter_then_score(
             key=lambda x: (-x[1], x[0]),
         )[:10]
 
-    want = expect(reader.search(q, k=100_000, exact=True).collect())
-    assert want
-    for kwargs in ({"split": 1}, {"split": 2}, {"split": 4}, {"exact": True}):
-        got = reader.search(q, k=10, where=where, **kwargs).collect()
-        rank_identical(want, [(r["doc_id"], r["score"]) for r in got])
-    want_and = expect(
-        reader.search(q, k=100_000, operator="and").collect()
-    )
-    assert want_and
-    got = reader.search(q, k=10, where=where, operator="and").collect()
-    rank_identical(want_and, [(r["doc_id"], r["score"]) for r in got])
+    for _ in on_both_routes(monkeypatch):
+        want = expect(reader.search(q, k=100_000, exact=True).collect())
+        assert want
+        for kwargs in (
+            {"split": 1}, {"split": 2}, {"split": 4}, {"exact": True}
+        ):
+            got = reader.search(q, k=10, where=where, **kwargs).collect()
+            rank_identical(want, [(r["doc_id"], r["score"]) for r in got])
+        want_and = expect(
+            reader.search(q, k=100_000, operator="and").collect()
+        )
+        assert want_and
+        got = reader.search(q, k=10, where=where, operator="and").collect()
+        rank_identical(want_and, [(r["doc_id"], r["score"]) for r in got])
     reader.close()
 
 
@@ -576,7 +589,7 @@ def _record_broadcasts(monkeypatch):
 
 
 def test_filter_memo_bounds_and_releases_broadcasts(
-    spark, positional_index, monkeypatch
+    spark, positional_index, monkeypatch, distributed_route
 ):
     """Resolved string filters are memoized per reader in a bounded LRU:
     3× the bound of distinct filters leave at most the bound of live
@@ -618,7 +631,7 @@ def test_filter_memo_bounds_and_releases_broadcasts(
 
 
 def test_query_built_before_its_filter_is_evicted_still_runs(
-    spark, positional_index
+    spark, positional_index, distributed_route
 ):
     """search() returns a lazy DataFrame whose kernel closure holds the
     memoized filter broadcast.  Evicting that filter (another client of
@@ -650,7 +663,7 @@ def test_query_built_before_its_filter_is_evicted_still_runs(
 
 
 def test_filter_memo_under_concurrent_queries(
-    spark, serving_docs, positional_index, monkeypatch
+    spark, serving_docs, positional_index, monkeypatch, distributed_route
 ):
     """One reader serves concurrent queries: threads resolving an
     overlapping set of 1.5× the memo bound of filters (so inserts race,

@@ -8,10 +8,13 @@ OpenSearch MLT defaults max_query_terms=25 / min_term_freq=2 /
 min_doc_freq=5.
 """
 
+import itertools
+
 import pytest
 from pyspark.sql import functions as F
 
 from docs_indexer_spark.functions.fuzzy import osa_distance
+from tests.conftest import on_both_routes
 
 
 def test_osa_distance_semantics():
@@ -72,7 +75,9 @@ def fuzzy_index(spark, tmp_path_factory):
     return cat, docs
 
 
-def test_search_fuzzy_transposition_via_symspell(spark, fuzzy_index):
+def test_search_fuzzy_transposition_via_symspell(
+    spark, fuzzy_index, monkeypatch
+):
     """A transposed misspelling must return EXACTLY the hits of the
     correctly spelled query — through the published deletion index, with
     no vocabulary levenshtein scan in the candidate plan."""
@@ -85,11 +90,12 @@ def test_search_fuzzy_transposition_via_symspell(spark, fuzzy_index):
     assert os.path.exists(os.path.join(gen, "deletions.parquet"))
 
     reader = IndexReader(spark, cat)
-    want = [(r["doc_id"], round(r["score"], 9))
-            for r in reader.search("window", k=5, exact=True).collect()]
-    got = [(r["doc_id"], round(r["score"], 9))
-           for r in reader.search_fuzzy("winodw", k=5).collect()]
-    assert got == want and got, "transposition must match at fuzziness 1"
+    for _ in on_both_routes(monkeypatch):
+        want = [(r["doc_id"], round(r["score"], 9))
+                for r in reader.search("window", k=5, exact=True).collect()]
+        got = [(r["doc_id"], round(r["score"], 9))
+               for r in reader.search_fuzzy("winodw", k=5).collect()]
+        assert got == want and got, "transposition must match at fuzziness 1"
 
     # plan audit: the SymSpell candidate probe reads ONLY
     # deletions.parquet, through the variant filter, on the driver — it
@@ -121,7 +127,9 @@ def test_search_fuzzy_transposition_via_symspell(spark, fuzzy_index):
     reader.close()
 
 
-def test_search_fuzzy_fallback_without_deletion_index(spark, fuzzy_index):
+def test_search_fuzzy_fallback_without_deletion_index(
+    spark, fuzzy_index, monkeypatch
+):
     """Generations published before deletions.parquet existed fall back
     to a threshold-Levenshtein-bounded df_stats scan + the same OSA
     verify — results identical to the SymSpell path."""
@@ -142,7 +150,9 @@ def test_search_fuzzy_fallback_without_deletion_index(spark, fuzzy_index):
 
     r1 = IndexReader(spark, cat)
     r2 = IndexReader(spark, cat2)
-    for q in ["winodw", "windoq", "zzzzqqqq"]:
+    for _, q in itertools.product(
+        on_both_routes(monkeypatch), ["winodw", "windoq", "zzzzqqqq"]
+    ):
         a = [(r["doc_id"], round(r["score"], 9))
              for r in r1.search_fuzzy(q, k=5).collect()]
         b = [(r["doc_id"], round(r["score"], 9))
@@ -153,7 +163,7 @@ def test_search_fuzzy_fallback_without_deletion_index(spark, fuzzy_index):
     shutil.rmtree(clone)
 
 
-def test_expansion_caps(spark, fuzzy_index):
+def test_expansion_caps(spark, fuzzy_index, monkeypatch):
     """Lucene max_expansions (default 50): a short prefix expands to the
     top-df terms only — the expansion a 10⁸-term vocabulary would
     otherwise flood the driver with is capped BEFORE the collect."""
@@ -168,20 +178,23 @@ def test_expansion_caps(spark, fuzzy_index):
         .limit(1)
         .collect()[0]["term"]
     )
-    capped = [(r["doc_id"], round(r["score"], 9))
-              for r in reader.search_prefix("s", k=5,
-                                            max_expansions=1).collect()]
-    single = [(r["doc_id"], round(r["score"], 9))
-              for r in reader.search(top, k=5, exact=True).collect()]
-    assert capped == single and capped
-    # uncapped expands wider → different (or equal) result set, but must
-    # not error; and fuzzy accepts the cap parameter too
-    assert reader.search_prefix("s", k=5).count() == 5
-    assert reader.search_fuzzy("winodw", k=3, max_expansions=1).count() == 3
+    for _ in on_both_routes(monkeypatch):
+        capped = [(r["doc_id"], round(r["score"], 9))
+                  for r in reader.search_prefix("s", k=5,
+                                                max_expansions=1).collect()]
+        single = [(r["doc_id"], round(r["score"], 9))
+                  for r in reader.search(top, k=5, exact=True).collect()]
+        assert capped == single and capped
+        # uncapped expands wider → different (or equal) result set, but
+        # must not error; and fuzzy accepts the cap parameter too
+        assert reader.search_prefix("s", k=5).count() == 5
+        assert reader.search_fuzzy(
+            "winodw", k=3, max_expansions=1
+        ).count() == 3
     reader.close()
 
 
-def test_mlt_parameter_fidelity(spark, fuzzy_index):
+def test_mlt_parameter_fidelity(spark, fuzzy_index, monkeypatch):
     """OpenSearch MLT knobs: min_term_freq drops seed-rare terms,
     min_doc_freq drops corpus-rare terms, max_query_terms caps the query
     set.  Defaults (25/2/5) must behave like OpenSearch — permissive
@@ -190,22 +203,23 @@ def test_mlt_parameter_fidelity(spark, fuzzy_index):
 
     cat, docs = fuzzy_index
     reader = IndexReader(spark, cat)
-    # permissive = the pre-round-4 shape (top-5 tf·idf, no df floors)
-    rows = reader.more_like_this(
-        7, docs, k=10, max_query_terms=5, min_term_freq=1, min_doc_freq=1
-    ).collect()
-    assert len(rows) == 10 and 7 not in {r["doc_id"] for r in rows}
-    # defaults: still non-empty on a natural corpus, seed excluded
-    drows = reader.more_like_this(7, docs, k=10).collect()
-    assert drows and 7 not in {r["doc_id"] for r in drows}
-    # min_term_freq high enough to kill every term → empty, not error
-    assert reader.more_like_this(
-        7, docs, k=10, min_term_freq=10**6
-    ).count() == 0
-    # min_doc_freq high enough to kill every term → empty, not error
-    assert reader.more_like_this(
-        7, docs, k=10, min_doc_freq=10**6
-    ).count() == 0
+    for _ in on_both_routes(monkeypatch):
+        # permissive = the pre-round-4 shape (top-5 tf·idf, no df floors)
+        rows = reader.more_like_this(
+            7, docs, k=10, max_query_terms=5, min_term_freq=1, min_doc_freq=1
+        ).collect()
+        assert len(rows) == 10 and 7 not in {r["doc_id"] for r in rows}
+        # defaults: still non-empty on a natural corpus, seed excluded
+        drows = reader.more_like_this(7, docs, k=10).collect()
+        assert drows and 7 not in {r["doc_id"] for r in drows}
+        # min_term_freq high enough to kill every term → empty, not error
+        assert reader.more_like_this(
+            7, docs, k=10, min_term_freq=10**6
+        ).count() == 0
+        # min_doc_freq high enough to kill every term → empty, not error
+        assert reader.more_like_this(
+            7, docs, k=10, min_doc_freq=10**6
+        ).count() == 0
     reader.close()
 
 

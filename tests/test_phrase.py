@@ -10,6 +10,7 @@ from docs_indexer_spark.operators.phrase import (
     phrase_occurrences,
     token_positions,
 )
+from tests.conftest import on_both_routes
 
 
 @pytest.fixture(scope="module")
@@ -121,10 +122,12 @@ def test_position_blocks_roundtrip_corpus(spark):
     assert got == want
 
 
-def test_published_positional_index_phrase_search(spark, tmp_path):
+def test_published_positional_index_phrase_search(
+    spark, tmp_path, monkeypatch
+):
     """End-to-end: build_index(positions=True) → published index →
     IndexReader.search_phrase, with english-analyzer position increments
-    (a stopword in the query keeps its gap)."""
+    (a stopword in the query keeps its gap), on both reader routes."""
     from docs_indexer_spark.plans.build_index import build_index
     from docs_indexer_spark.plans.query import IndexReader
     from docs_indexer_spark.sources.catalog import SnapshotCatalog
@@ -146,24 +149,25 @@ def test_published_positional_index_phrase_search(spark, tmp_path):
     assert metrics["positions"] is True
     reader = IndexReader(spark, catalog)
 
-    hits = {
-        r["doc_id"]: r["n_occurrences"]
-        for r in reader.search_phrase("merge sort").collect()
-    }
-    # english analyzer drops 'the', so doc 1 ("merge the sort") keeps a
-    # 2-gap and does NOT match the adjacent phrase...
-    assert hits == {0: 1, 4: 2}
-    # ...but the query "merge the sort" carries the same increment: docs
-    # with a 2-gap match — doc 1 (stopword hole) AND doc 3 (any token may
-    # fill a position-increment hole, exactly Lucene match_phrase); doc 0
-    # ("the merge sort...": merge@1, sort@2 — gap 1) does not.
-    gap_hits = {
-        r["doc_id"]: r["n_occurrences"]
-        for r in reader.search_phrase("merge the sort").collect()
-    }
-    assert gap_hits == {1: 1, 3: 1}
-    # unindexed term → empty, no error
-    assert reader.search_phrase("merge zzzmissing").count() == 0
+    for _ in on_both_routes(monkeypatch):
+        hits = {
+            r["doc_id"]: r["n_occurrences"]
+            for r in reader.search_phrase("merge sort").collect()
+        }
+        # english analyzer drops 'the', so doc 1 ("merge the sort") keeps a
+        # 2-gap and does NOT match the adjacent phrase...
+        assert hits == {0: 1, 4: 2}
+        # ...but the query "merge the sort" carries the same increment: docs
+        # with a 2-gap match — doc 1 (stopword hole) AND doc 3 (any token may
+        # fill a position-increment hole, exactly Lucene match_phrase); doc 0
+        # ("the merge sort...": merge@1, sort@2 — gap 1) does not.
+        gap_hits = {
+            r["doc_id"]: r["n_occurrences"]
+            for r in reader.search_phrase("merge the sort").collect()
+        }
+        assert gap_hits == {1: 1, 3: 1}
+        # unindexed term → empty, no error
+        assert reader.search_phrase("merge zzzmissing").count() == 0
 
     # a non-positional index refuses phrase queries with a clear error
     cat2 = SnapshotCatalog(str(tmp_path / "wh2"))
@@ -287,8 +291,11 @@ def test_search_phrase_rarest_lead_equals_positions(
     doc ids, occurrence counts and first positions, in rank order.  On
     this small index the head term has too few blocks for the lead to
     pay for its shuffle, so the default takes the plain decode (same
-    answer) and the test lifts the fixed-cost floor to engage it."""
+    answer) and the test lifts the fixed-cost floor to engage it.  The
+    plan checks need the distributed route; the driver-local route must
+    give the same answer with and without the lead."""
     from docs_indexer_spark.operators import phrase as phrase_mod
+    from docs_indexer_spark.plans import query
     from docs_indexer_spark.plans.query import IndexReader
 
     phrase = list(phrase_pairs["rare_lead"])
@@ -307,6 +314,9 @@ def test_search_phrase_rarest_lead_equals_positions(
                for r in res.collect()]
         return got, res._jdf.queryExecution().executedPlan().toString()
 
+    monkeypatch.setattr(query, "LOCAL_MAX_BLOCKS", 10**9)
+    assert run()[0] == want
+    monkeypatch.setattr(query, "LOCAL_MAX_BLOCKS", 0)
     got, plan = run()
     assert "FlatMapGroupsInArrow" not in plan, "too few blocks to pay"
     assert got == want
@@ -314,4 +324,6 @@ def test_search_phrase_rarest_lead_equals_positions(
     got, plan = run()
     assert "FlatMapGroupsInArrow" in plan, "rarest-lead pruning must engage"
     assert got == want
+    monkeypatch.setattr(query, "LOCAL_MAX_BLOCKS", 10**9)
+    assert run()[0] == want
     reader.close()

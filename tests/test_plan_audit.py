@@ -203,13 +203,15 @@ def _executed_python_nodes(df) -> list[str]:
 
 
 def test_serving_runs_one_python_stage_per_query(
-    spark, positional_index, phrase_pairs, monkeypatch
+    spark, positional_index, phrase_pairs, monkeypatch, distributed_route
 ):
     """Serving cost gate: every Python stage pays a fixed per-task worker
     start-up (docs/DESIGN.md "Serving cost model"), so each IndexReader
     query kind must run its scoring kernel as its ONLY Python node, and
     — once a warm-up query has cached the reader's per-generation state
-    and filter — building the query must start no Spark job."""
+    and filter — building the query must start no Spark job.  This is
+    the distributed route's gate; the small test index would otherwise
+    take the driver-local route (test_small_queries_start_no_spark_job)."""
     from docs_indexer_spark.operators import phrase
     from docs_indexer_spark.plans.query import IndexReader
 
@@ -251,4 +253,56 @@ def test_serving_runs_one_python_stage_per_query(
     # rarest-lead decode
     assert nodes["phrase"] == ["MapInArrow"], nodes
     assert nodes["phrase_rare_lead"] == ["FlatMapGroupsInArrow"], nodes
+    reader.close()
+
+
+def test_small_queries_start_no_spark_job(
+    spark, positional_index, phrase_pairs
+):
+    """Driver-local route gate: once a warm-up query has cached the
+    reader's per-generation state and filter, a query of every kind
+    whose hit blocks are below the crossover starts NO Spark job, from
+    building its DataFrame through collecting it — and neither do the
+    empty answers of an AND or a phrase with an unindexed term."""
+    from docs_indexer_spark.plans.query import IndexReader
+
+    reader = IndexReader(spark, positional_index)
+    where = "lang = 'de'"
+    last = reader.search("spark join window", k=3).collect()[-1]
+    kinds = {
+        "bm25": lambda: reader.search("spark join window", k=10),
+        "exact": lambda: reader.search("spark join", k=10, exact=True),
+        "and": lambda: reader.search("spark join", k=10, operator="and"),
+        "search_after": lambda: reader.search(
+            "spark join window", k=10,
+            search_after=(last["score"], last["doc_id"]),
+        ),
+        "phrase": lambda: reader.search_phrase(
+            " ".join(phrase_pairs["dense"]), k=10
+        ),
+        "fuzzy": lambda: reader.search_fuzzy("winodw", k=10),
+        "filtered": lambda: reader.search(
+            "spark join window", k=10, where=where
+        ),
+        "and_unindexed": lambda: reader.search(
+            "spark zzzunindexed", k=10, operator="and"
+        ),
+        "phrase_unindexed": lambda: reader.search_phrase(
+            "spark zzzunindexed", k=10
+        ),
+    }
+    for run in kinds.values():
+        run().collect()
+    sc = spark.sparkContext
+    started = {}
+    for name, run in kinds.items():
+        group = f"local-route-{name}"
+        sc.setJobGroup(group, name)
+        try:
+            rows = run().collect()
+        finally:
+            sc.setJobGroup("", "")
+        assert bool(rows) == ("unindexed" not in name), name
+        started[name] = sc.statusTracker().getJobIdsForGroup(group)
+    assert all(v == [] for v in started.values()), started
     reader.close()
