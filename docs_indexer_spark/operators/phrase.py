@@ -202,10 +202,11 @@ def phrase_topk(
         )
     rows = _in_sorted(doc, docs)
     flat = pos.values.to_numpy()[np.repeat(rows, n_pos)].astype(np.int64)
+    none = {"doc_id": np.empty(0, np.int64),
+            "n_occurrences": np.empty(0, np.int32),
+            "first_pos": np.empty(0, np.int32)}
     if not len(flat):
-        return {"doc_id": np.empty(0, np.int64),
-                "n_occurrences": np.empty(0, np.int32),
-                "first_pos": np.empty(0, np.int32)}
+        return none
     p_doc = np.repeat(np.searchsorted(docs, doc[rows]), n_pos[rows])
     p_term = np.repeat(term[rows], n_pos[rows])
     # (doc, anchor) packed into one int64 key: dense doc index times the
@@ -219,6 +220,8 @@ def phrase_topk(
         m = p_term == tids[i]
         keys = np.sort(p_doc[m] * span + (flat[m] - offsets[i] - lo))
         acc = keys if acc is None else acc[_in_sorted(acc, keys)]
+    if not len(acc):  # the terms co-occur, never at the phrase offsets
+        return none
     # keys sort by doc, then anchor: a doc's first key is its least anchor
     hit_doc = acc // span
     first = np.flatnonzero(

@@ -46,9 +46,9 @@ def _same_scored(monkeypatch, run, nonempty=True):
     return local
 
 
-def _same_phrase(monkeypatch, run):
+def _same_phrase(monkeypatch, run, nonempty=True):
     local, dist = _both(monkeypatch, run)
-    assert _phrase(local) == _phrase(dist) and local
+    assert _phrase(local) == _phrase(dist) and bool(local) == nonempty
     return local
 
 
@@ -88,12 +88,35 @@ def test_bm25_exact_and_match(reader, monkeypatch):
 def test_k_beyond_hit_count(reader, monkeypatch, serving_docs):
     from docs_indexer_spark.functions.analysis import analyze_text
 
-    texts = [r["text"] for r in serving_docs.select("text").collect()]
-    n_hits = sum("quokka" in analyze_text(t, "stop") for t in texts)
+    docs = [
+        set(analyze_text(r["text"], "stop"))
+        for r in serving_docs.select("text").collect()
+    ]
+    n_hits = sum("quokka" in d for d in docs)
     local = _same_scored(
         monkeypatch, lambda: reader.search("quokka", k=1000)
     )
     assert len(local) == n_hits
+    # hit blocks that decode to postings, yet nothing qualifies: a
+    # search_after cursor at the last hit, and an AND of two indexed
+    # terms that share no doc
+    last = local[-1]
+    _same_scored(
+        monkeypatch,
+        lambda: reader.search(
+            "quokka", k=10, search_after=(last["score"], last["doc_id"])
+        ),
+        nonempty=False,
+    )
+    other = next(
+        t for t in sorted(set().union(*docs))
+        if t.isalpha() and not any("quokka" in d and t in d for d in docs)
+    )
+    _same_scored(
+        monkeypatch,
+        lambda: reader.search(f"quokka {other}", k=10, operator="and"),
+        nonempty=False,
+    )
 
 
 def test_selective_filters(reader, monkeypatch):
@@ -171,7 +194,9 @@ def test_prefix_and_more_like_this(reader, monkeypatch, serving_docs):
     assert len(local) == 10 and 7 not in {r["doc_id"] for r in local}
 
 
-def test_phrase_offsets_and_repeats(reader, monkeypatch, positions):
+def test_phrase_offsets_and_repeats(
+    reader, monkeypatch, positions, phrase_pairs
+):
     # a stopword inside the query keeps its gap: "a the b" matches b two
     # positions after a; a leading stopword shifts first_pos
     gap = _most_common(
@@ -189,6 +214,27 @@ def test_phrase_offsets_and_repeats(reader, monkeypatch, positions):
     )
     _same_phrase(
         monkeypatch, lambda: reader.search_phrase(f"{rep} the {rep}", k=50)
+    )
+
+    # terms that share docs but never meet at the phrase offsets: both
+    # routes answer nothing
+    def adjacent(a, b):
+        return any(
+            p + 1 in terms[b] for terms in positions.values()
+            if a in terms and b in terms for p in terms[a]
+        )
+
+    b, a = phrase_pairs["dense"]
+    if adjacent(a, b):  # the reversed pair occurs too: take another
+        a, b = _most_common(
+            (x, y) for terms in positions.values()
+            for x in terms for y in terms
+            if x != y and x.isalpha() and y.isalpha() and not adjacent(x, y)
+        )
+    assert any(a in t and b in t for t in positions.values())
+    _same_phrase(
+        monkeypatch, lambda: reader.search_phrase(f"{a} {b}", k=50),
+        nonempty=False,
     )
 
 
