@@ -521,10 +521,14 @@ def lead_pruned(table: pa.Table, lead_term: int) -> pa.Table:
 
 
 def write_blocks(blocks: DataFrame, path: str, term_partitions: int = 32) -> None:
-    """Persist the block index term-clustered so query-time
-    `term_id IN (...)` filters prune parquet row groups (min/max stats)."""
+    """Persist the block index range-clustered by term_id: each of the
+    ``term_partitions`` files holds one disjoint term_id range, sorted
+    within by (term_id, bucket, block_seq).  A term's blocks all live in
+    one file, so the manifest's per-file [min, max]
+    (SnapshotCatalog.write_manifest) keeps one file per query term, and
+    `term_id IN (...)` filters prune row groups within it."""
     (
-        blocks.repartition(term_partitions, "term_id")
+        blocks.repartitionByRange(term_partitions, "term_id")
         .sortWithinPartitions("term_id", "bucket", "block_seq")
         .write.mode("overwrite")
         .parquet(path)

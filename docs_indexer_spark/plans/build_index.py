@@ -250,7 +250,9 @@ def build_index(
     spimi.write_blocks(blocks, f"{gen_path}/blocks.parquet")
     # Iceberg-manifest analogue: per-file term_id min/max from parquet
     # footers, so per-query reads drop whole files before footer I/O
-    SnapshotCatalog.write_manifest(f"{gen_path}/blocks.parquet", "term_id")
+    manifest = SnapshotCatalog.write_manifest(
+        f"{gen_path}/blocks.parquet", "term_id"
+    )
     dictionary.select("raw", "term_id").distinct().coalesce(8).write.mode(
         "overwrite"
     ).parquet(f"{gen_path}/surfaces.parquet")
@@ -264,6 +266,12 @@ def build_index(
         .join(dictionary.select("term_id", "term").distinct(), "term_id")
     )
     dfs.coalesce(8).write.mode("overwrite").parquet(f"{gen_path}/df_stats.parquet")
+    # the deletion index reads the df_stats just written, with its known
+    # schema (no inference job), rather than re-running the block scan,
+    # aggregate and dictionary join behind ``dfs``
+    df_stats = spark.read.schema(dfs.schema).parquet(
+        f"{gen_path}/df_stats.parquet"
+    )
     # SymSpell deletion-neighborhood index over the index vocabulary
     # (variant → term, every ≤2-deletion variant): fuzzy queries become
     # equi-join probes + a driver-side Damerau-OSA verify on the handful
@@ -278,7 +286,7 @@ def build_index(
     # vocabulary this table is ~45× vocabulary rows, so a coalesced write
     # would both serialize the build and defeat serving-side pruning
     deletion_index(
-        dfs.select("term", F.col("df").alias("cf")), max_edits=2
+        df_stats.select("term", F.col("df").alias("cf")), max_edits=2
     ).select("variant", "term").repartitionByRange(
         16, "variant"
     ).sortWithinPartitions("variant").write.mode("overwrite").parquet(
@@ -304,6 +312,10 @@ def build_index(
         # pruning) read the REAL postings-per-block of this generation
         # instead of assuming the builder's compile-time constant
         "block_size": BLOCK_SIZE,
+        # layout of the published block files, from the manifest: their
+        # count and the range partitioner's skew (rows of the largest
+        # file over the mean)
+        **_layout_stats(manifest),
     }
     catalog.publish(table, gen, fingerprint, metrics)
     # the staged rows/docs and lineage checkpoints served their purpose
@@ -311,6 +323,17 @@ def build_index(
     # copy of its encode rows under _stage/
     catalog.cleanup_build(build_id)
     return metrics
+
+
+def _layout_stats(manifest: dict) -> dict:
+    """``block_files`` and ``block_rows_max_over_mean`` of a block
+    dataset's manifest (SnapshotCatalog.write_manifest)."""
+    rows = [e["rows"] for e in manifest["files"]]
+    mean = sum(rows) / len(rows) if rows else 0.0
+    return {
+        "block_files": len(rows),
+        "block_rows_max_over_mean": max(rows) / mean if mean else 0.0,
+    }
 
 
 def _parquet_rows(path: str) -> int:

@@ -292,8 +292,9 @@ class SnapshotCatalog:
         per data file with the footer-derived min/max of ``key`` (metadata
         only — no data pages are read).  This is the Iceberg manifest: a
         query can drop whole FILES before Spark ever opens their footers
-        for row-group pruning.  Pays off on term-clustered block files
-        (spimi.write_blocks sorts by term_id within term-hashed files)."""
+        for row-group pruning.  Pays off on range-clustered block files
+        (spimi.write_blocks writes disjoint term_id ranges, one per file,
+        so a lookup of one term keeps one file)."""
         import pyarrow.parquet as pq
 
         entries = []

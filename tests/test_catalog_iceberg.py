@@ -5,11 +5,14 @@ Iceberg (commit retries, manifests, incremental reads) unchanged."""
 
 import json
 import os
+import shutil
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from docs_indexer_spark.sources.catalog import CommitConflictError, SnapshotCatalog
+from tests.conftest import ROUTES, on_both_routes, rank_identical
 
 
 def test_optimistic_commit_conflict(tmp_path):
@@ -85,6 +88,131 @@ def test_manifest_pruned_search_matches_full(spark, published_index):
     )
     want = [(r["doc_id"], round(r["score"], 9)) for r in full.collect()]
     assert got == want and got
+
+
+def _manifest(cat) -> dict:
+    blocks_dir = os.path.join(cat.generation_path("index"), "blocks.parquet")
+    with open(os.path.join(blocks_dir, "_MANIFEST.json")) as f:
+        return json.load(f)
+
+
+def test_manifest_ranges_are_disjoint(published_index):
+    """spimi.write_blocks range-partitions by term_id: the block files'
+    [min, max] ranges never overlap, and the generation's metrics record
+    the layout the manifest describes."""
+    cat, _ = published_index
+    files = _manifest(cat)["files"]
+    spans = sorted((e["min"], e["max"]) for e in files)
+    assert all(lo <= hi for lo, hi in spans)
+    assert all(a_hi < b_lo for (_, a_hi), (b_lo, _) in zip(spans, spans[1:]))
+    metrics = cat.current_generation("index")["metrics"]
+    rows = [e["rows"] for e in files]
+    assert metrics["block_files"] == len(files)
+    assert metrics["block_rows_max_over_mean"] == pytest.approx(
+        max(rows) * len(rows) / sum(rows)
+    )
+
+
+def test_read_pruned_keeps_one_file_per_term(spark, published_index):
+    """Every indexed term lies in exactly one file's manifest range, and
+    the pruned read of one term keeps exactly that file (checked through
+    read_pruned_at on every file's boundary terms)."""
+    cat, reader = published_index
+    files = _manifest(cat)["files"]
+    lo = np.array([e["min"] for e in files])
+    hi = np.array([e["max"] for e in files])
+    ids = reader._term_ids
+    covering = ((ids[:, None] >= lo) & (ids[:, None] <= hi)).sum(axis=1)
+    assert (covering == 1).all()
+    gen = cat.generation_path("index")
+    for e in files:
+        for tid in {e["min"], e["max"]}:
+            kept = SnapshotCatalog.read_pruned_at(
+                spark, gen, "blocks.parquet", "term_id", [tid]
+            ).inputFiles()
+            assert [os.path.basename(f) for f in kept] == [e["file"]]
+
+
+def test_local_search_reads_a_file_per_query_term(spark, published_index,
+                                                   monkeypatch):
+    """A k-term search on the driver-local route reads at most k block
+    files: the file list comes from the manifest-pruned relation."""
+    from docs_indexer_spark.plans import query
+
+    cat, reader = published_index
+    read_pruned_at = SnapshotCatalog.read_pruned_at
+    kept = []
+
+    def spy(*args, **kwargs):
+        df = read_pruned_at(*args, **kwargs)
+        kept.append(len(df.inputFiles()))
+        return df
+
+    monkeypatch.setattr(SnapshotCatalog, "read_pruned_at", staticmethod(spy))
+    monkeypatch.setattr(query, "LOCAL_MAX_BLOCKS", ROUTES["local"])
+    for q in ("spark", "spark join", "spark join window"):
+        k = len(reader._idf(q.split()))
+        kept.clear()
+        assert reader.search(q, k=10).collect()
+        assert kept and max(kept) <= k, (q, kept)
+
+
+@pytest.fixture(scope="module")
+def hash_layout(spark, positional_index, tmp_path_factory):
+    """A copy of the positional serving index whose blocks are rewritten
+    in the earlier hash layout (term_ids hashed across 32 files), as a
+    generation published before range partitioning would have them."""
+    from docs_indexer_spark.plans.query import IndexReader
+
+    root = str(tmp_path_factory.mktemp("wh_hash") / "wh")
+    shutil.copytree(positional_index.root, root)
+    cat = SnapshotCatalog(root)
+    path = os.path.join(cat.generation_path("index"), "blocks.parquet")
+    (
+        spark.read.parquet(path).repartition(32, "term_id")
+        .sortWithinPartitions("term_id", "bucket", "block_seq")
+        .write.parquet(path + ".hash")
+    )
+    shutil.rmtree(path)
+    os.rename(path + ".hash", path)
+    SnapshotCatalog.write_manifest(path, "term_id")
+    reader = IndexReader(spark, cat)
+    yield cat, reader
+    reader.close()
+
+
+def test_hash_layout_generation_serves_identically(
+    spark, positional_index, hash_layout, phrase_pairs, monkeypatch
+):
+    """A generation written with the old hash layout still answers every
+    kind exactly like the range-clustered one, on both routes; only its
+    pruning keeps more files."""
+    from docs_indexer_spark.plans.query import IndexReader
+
+    hash_cat, old = hash_layout
+    spans = sorted((e["min"], e["max"]) for e in _manifest(hash_cat)["files"])
+    assert any(a_hi >= b_lo for (_, a_hi), (b_lo, _) in zip(spans, spans[1:]))
+    new = IndexReader(spark, positional_index)
+    phrase = " ".join(phrase_pairs["dense"])
+    scored = [
+        lambda r: r.search("spark join window", k=10),
+        lambda r: r.search("spark join window", k=10, exact=True),
+        lambda r: r.search("spark join", k=10, operator="and"),
+        lambda r: r.search("spark window", k=10, where="lang = 'en'"),
+        lambda r: r.search_fuzzy("sprak", k=10),
+    ]
+    try:
+        for route in on_both_routes(monkeypatch):
+            for run in scored:
+                want = [(x["doc_id"], x["score"]) for x in run(new).collect()]
+                got = [(x["doc_id"], x["score"]) for x in run(old).collect()]
+                assert want, route
+                rank_identical(want, got, tol=1e-9)
+            want = new.search_phrase(phrase, k=10).collect()
+            got = old.search_phrase(phrase, k=10).collect()
+            assert want and [tuple(x) for x in got] == [tuple(x) for x in want]
+    finally:
+        new.close()
 
 
 def test_read_pruned_unindexed_term_is_empty(spark, published_index):
