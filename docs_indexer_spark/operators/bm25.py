@@ -9,28 +9,33 @@ Two scoring paths, both exact:
   ``orderBy(...).limit(k)`` which Catalyst executes as
   TakeOrderedAndProject (per-partition heap top-k + driver merge — no
   global sort, no full shuffle).
-- :func:`score_from_blocks` — decodes the compressed posting blocks
-  (operators/spimi.py) with a vectorized mapInPandas and feeds the same
-  aggregate.  Used to cross-check the compressed index and as the exact
-  fallback for block-max WAND (operators/wand.py).
+- :func:`score_from_blocks` — the compressed posting blocks
+  (operators/spimi.py) scored by ONE numpy kernel, :func:`blocks_topk`
+  (decode + per-doc sum/count + AND + ``search_after`` + top-k), run once
+  per doc-range bucket then merged by TakeOrderedAndProject.  IndexReader
+  serves exact, ``operator="and"``, fuzzy, prefix, broad-filter and
+  more_like_this queries through it; its driver-local route runs the
+  same kernel over all of a query's blocks, and block-max WAND
+  (operators/wand.py) drains through :func:`topk_partials`.
 
 Tie-break pinned everywhere: score DESC, doc_id ASC.
 """
 
 from __future__ import annotations
 
-from typing import TYPE_CHECKING, Iterable, Iterator, Mapping
+from typing import TYPE_CHECKING, Iterable, Mapping
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from docs_indexer_spark.config import BM25Params, DEFAULT_TOP_K
 from docs_indexer_spark.operators.compression import (
+    binary_column_bytes,
     decode_tf_norms,
     segmented_cumsum,
-    varint_decode_bytes,
+    varint_decode_column,
 )
 from docs_indexer_spark.operators.postings import idf_col
 from docs_indexer_spark.session import local_frame
@@ -39,6 +44,13 @@ if TYPE_CHECKING:
     from pyspark.broadcast import Broadcast
 
 TOPK_SCHEMA = "doc_id long, score double"
+
+
+def kernel_columns(filtered: bool) -> list[str]:
+    """The block columns :func:`blocks_topk` reads: an unfiltered query
+    needs no range metadata, a filtered one prunes blocks by it."""
+    cols = ["term_id", "doc_ids_bin", "tf_norms_bin"]
+    return cols + ["first_doc_id", "last_doc_id"] if filtered else cols
 
 
 def score_from_tokens(
@@ -95,50 +107,50 @@ def score_from_tokens(
     )
 
 
-def decode_blocks_iter(
-    block_batches: Iterator[pd.DataFrame],
+def decode_partials(
+    blocks: pa.Table,
     idf: Mapping[int, float],
     allowed: np.ndarray | None = None,
-) -> Iterator[pd.DataFrame]:
-    """Compressed blocks → (doc_id, partial score): the exact scorer's
-    decode, run by its mapInPandas stage and by IndexReader's
-    driver-local route.  ``allowed`` (a sorted unique int64 array) is a
-    FILTERED query's doc set: blocks whose ``[first_doc_id,
-    last_doc_id]`` range holds none of it are skipped before decode, and
-    decoded postings are masked to it before they ever leave the
-    kernel."""
+) -> tuple[np.ndarray, np.ndarray]:
+    """Compressed blocks (an Arrow table) → (doc_id, partial score) per
+    posting.  ``allowed`` (a sorted unique int64 array) is a FILTERED
+    query's doc set: blocks whose ``[first_doc_id, last_doc_id]`` range
+    holds none of it are skipped before decode, and decoded postings are
+    masked to it.  Postings come out in term_id order, so a doc's
+    partials sum in the same order on every route and in every run."""
     from docs_indexer_spark.operators.wand import _in_sorted, blocks_containing
 
-    for pdf in block_batches:
-        if allowed is not None and len(pdf):
-            pdf = pdf[blocks_containing(
-                pdf["first_doc_id"].values, pdf["last_doc_id"].values, allowed
-            )]
-        w = np.array(
-            [idf.get(int(t)) or 0.0 for t in pdf["term_id"].values],
-            dtype=np.float64,
-        )
-        pdf, w = pdf[w > 0], w[w > 0]
-        if pdf.empty:
-            continue
-        # every block's varint stream decodes in one pass over the
-        # joined bytes, not block by block
-        gaps, n = varint_decode_bytes(pdf["doc_ids_bin"].values)
-        ids = segmented_cumsum(gaps, n)
-        scores = decode_tf_norms(
-            b"".join(pdf["tf_norms_bin"].values), len(ids)
-        ).astype(np.float64) * np.repeat(w, n)
-        if allowed is not None:
-            keep = _in_sorted(ids, allowed)
-            ids, scores = ids[keep], scores[keep]
-        if len(ids):
-            yield pd.DataFrame({"doc_id": ids, "partial": scores})
+    if allowed is not None and blocks.num_rows:
+        blocks = blocks.filter(pa.array(blocks_containing(
+            blocks.column("first_doc_id").to_numpy(),
+            blocks.column("last_doc_id").to_numpy(),
+            allowed,
+        )))
+    tids = blocks.column("term_id").to_numpy()
+    if np.any(tids[1:] < tids[:-1]):
+        blocks = blocks.sort_by("term_id")
+        tids = blocks.column("term_id").to_numpy()
+    uniq, inv = np.unique(tids, return_inverse=True)
+    w = np.array([idf.get(int(t)) or 0.0 for t in uniq], dtype=np.float64)[inv]
+    if not (w > 0).all():
+        blocks, w = blocks.filter(pa.array(w > 0)), w[w > 0]
+    # every block's varint stream decodes in one pass over the column's
+    # joined bytes, not block by block
+    gaps, n = varint_decode_column(blocks.column("doc_ids_bin"))
+    ids = segmented_cumsum(gaps, n)
+    scores = decode_tf_norms(
+        binary_column_bytes(blocks.column("tf_norms_bin")), len(ids)
+    ).astype(np.float64) * np.repeat(w, n)
+    if allowed is not None:
+        keep = _in_sorted(ids, allowed)
+        ids, scores = ids[keep], scores[keep]
+    return ids, scores
 
 
 def topk_partials(
     doc_ids: np.ndarray,
     partials: np.ndarray,
-    k: int,
+    k: int | None,
     n_required: int | None = None,
     after: "tuple[float, int] | None" = None,
     exclude: int | None = None,
@@ -151,11 +163,14 @@ def topk_partials(
     ``n_required`` keeps only docs with that many partials (boolean AND:
     a doc has one posting per term); ``after=(score, doc_id)`` keeps
     only docs strictly after the cursor in the result order;
-    ``exclude`` drops one doc id (more_like_this's seed)."""
+    ``exclude`` drops one doc id (more_like_this's seed).  ``k=None``
+    keeps every qualifying doc."""
     uniq, inv = np.unique(doc_ids, return_inverse=True)
     # bincount's contiguous accumulate is ~10x faster than the np.add.at
     # scatter path on large inverse arrays
-    acc = np.bincount(inv, weights=partials, minlength=len(uniq))
+    acc = np.bincount(inv, weights=partials, minlength=len(uniq)).astype(
+        np.float64, copy=False
+    )  # (an empty bincount is int64)
     keep = np.ones(len(uniq), dtype=bool)
     if n_required is not None:
         keep &= np.bincount(inv, minlength=len(uniq)) == n_required
@@ -165,7 +180,7 @@ def topk_partials(
     if exclude is not None:
         keep &= uniq != exclude
     uniq, acc = uniq[keep], acc[keep]
-    if 0 < k < len(uniq):
+    if k is not None and 0 < k < len(uniq):
         # candidate cut: every doc scoring at least the k-th value (ties
         # INCLUDED, so the doc_id tie-break keeps its winner), then one
         # exact sort of the survivors
@@ -176,6 +191,28 @@ def topk_partials(
     return uniq[order], acc[order]
 
 
+def blocks_topk(
+    blocks: pa.Table,
+    idf: Mapping[int, float],
+    k: int | None,
+    allowed: np.ndarray | None = None,
+    n_required: int | None = None,
+    after: "tuple[float, int] | None" = None,
+    exclude: int | None = None,
+) -> tuple[np.ndarray, np.ndarray]:
+    """The exact scorer: :func:`decode_partials` then
+    :func:`topk_partials` over one Arrow table of hit blocks.  Both
+    routes run it — IndexReader's driver-local route once over a query's
+    every hit block, :func:`score_from_blocks` once per bucket (buckets
+    partition the doc space, so a bucket's answer is exact for its
+    docs)."""
+    ids, partials = decode_partials(blocks, idf, allowed)
+    return topk_partials(
+        ids, partials, k, n_required=n_required, after=after,
+        exclude=exclude,
+    )
+
+
 def score_from_blocks(
     blocks: DataFrame,
     idf: Mapping[int, float],
@@ -184,8 +221,19 @@ def score_from_blocks(
     require_all: bool = False,
     allowed: "np.ndarray | Broadcast | DataFrame | None" = None,
     after: "tuple[float, int] | None" = None,
+    exclude: int | None = None,
 ) -> DataFrame:
     """Exact BM25 top-k from the compressed block index.
+
+    Plan: `term_id IN (...)` (prunes row groups before any decode) →
+    groupBy(bucket).applyInArrow(:func:`blocks_topk`) →
+    TakeOrderedAndProject(k).  Buckets partition the doc space, so each
+    bucket's top-k is exact for its docs and the exchange carries
+    compressed blocks keyed by bucket — never a row per posting.
+
+    ``require_all=True`` = boolean AND: a document has at most one posting
+    per term, so its partial COUNT equals its distinct matched terms —
+    compared against the scoring term count inside the kernel.
 
     ``after=(score, doc_id)`` — cursor pagination (OpenSearch
     ``search_after`` under the ``[_score desc, doc_id asc]`` sort): only
@@ -193,29 +241,23 @@ def score_from_blocks(
     the top-k, so page N+1 costs the same one pass as page 1 and the
     driver never re-materializes earlier pages (the from+size shape
     does).  The float equality in the tie-arm is sound because the
-    cursor is a score this same deterministic plan produced.
+    cursor is a score this same deterministic kernel produced.
 
-    The `term_id IN (...)` filter prunes row groups before any decode;
-    decode is vectorized numpy inside mapInPandas; the final aggregate +
-    top-k is native.
-
-    ``require_all=True`` = boolean AND: a document has at most one posting
-    per term, so the per-doc partial COUNT equals its distinct matched
-    terms — compared against the scoring term count, no extra shuffle.
+    ``exclude`` drops one doc id before the cut (more_like_this's seed).
 
     ``allowed`` restricts scoring to a document filter set (OpenSearch
     bool-filter semantics), in one of two shapes chosen by the caller's
     filter cardinality:
 
     - numpy array of doc_ids, or a broadcast of one the caller owns
-      (SELECTIVE filter; see wand.broadcast_allowed): inside the decode
-      kernel, blocks with no eligible doc are metadata-pruned before
-      decode and decoded postings are masked — no extra stage, no
-      shuffle;
-    - DataFrame with a doc_id column (LARGE filter): a distributed
-      LEFT SEMI join on the partials before the aggregate — low
-      selectivity means near-exhaustive scoring anyway, so the doc_id
-      shuffle is the scalable plan and nothing driver-sized exists.
+      (SELECTIVE filter; see wand.broadcast_allowed): inside the kernel,
+      blocks with no eligible doc are metadata-pruned before decode and
+      decoded postings are masked — no extra stage, no shuffle;
+    - DataFrame with a doc_id column (LARGE filter): the kernel keeps
+      every scored doc of its bucket (no cut), a distributed LEFT SEMI
+      join on doc_id filters them, then the global cut — low selectivity
+      means near-exhaustive scoring anyway, and nothing driver-sized
+      exists.
     """
     terms = sorted(set(query_term_ids))
     if not terms:
@@ -230,37 +272,28 @@ def score_from_blocks(
         allowed_bc = broadcast_allowed(blocks.sparkSession.sparkContext, allowed)
         if allowed_bc is None:
             return local_frame(blocks.sparkSession, TOPK_SCHEMA)
-    # the unfiltered scan stays 3 columns — range metadata is read only
-    # when the kernel prunes blocks against a filter
-    cols = ["term_id", "doc_ids_bin", "tf_norms_bin"]
-    if allowed_bc is not None:
-        cols += ["first_doc_id", "last_doc_id"]
-    hit = blocks.filter(F.col("term_id").isin(terms)).select(*cols)
-    partials = hit.mapInPandas(
-        lambda it: decode_blocks_iter(
-            it, idf,
+    n_required = (
+        len([t for t in terms if idf.get(int(t))]) if require_all else None
+    )
+    cut = None if allowed_df is not None else k
+
+    def per_bucket(table: pa.Table) -> pa.Table:
+        doc_ids, scores = blocks_topk(
+            table, idf, cut,
             allowed=allowed_bc.value if allowed_bc is not None else None,
-        ),
-        schema="doc_id long, partial double",
+            n_required=n_required, after=after, exclude=exclude,
+        )
+        return pa.table({"doc_id": doc_ids, "score": scores})
+
+    scored = (
+        blocks.filter(F.col("term_id").isin(terms))
+        .select("bucket", *kernel_columns(allowed_bc is not None))
+        .groupBy("bucket")
+        .applyInArrow(per_bucket, schema=TOPK_SCHEMA)
     )
     if allowed_df is not None:
-        partials = partials.join(allowed_df, "doc_id", "left_semi")
-    scored = partials.groupBy("doc_id").agg(
-        F.sum("partial").alias("score"),
-        F.count(F.lit(1)).alias("_nt"),
-    )
-    if require_all:
-        n_scoring = len([t for t in terms if idf.get(int(t))])
-        scored = scored.filter(F.col("_nt") == n_scoring)
-    if after is not None:
-        s0, d0 = float(after[0]), int(after[1])
-        scored = scored.filter(
-            (F.col("score") < s0)
-            | ((F.col("score") == s0) & (F.col("doc_id") > d0))
-        )
-    return (
-        scored.drop("_nt").orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-    )
+        scored = scored.join(allowed_df, "doc_id", "left_semi")
+    return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
 def score_most_fields(

@@ -90,29 +90,40 @@ def varint_decode_streams(
     return varint_decode(b), counts
 
 
-def varint_decode_column(col) -> tuple[np.ndarray, np.ndarray]:
-    """:func:`varint_decode_streams` over a binary Arrow column, whose
-    data buffer already holds its values back to back."""
+def _binary_buffers(col):
+    """(data buffer, value offsets) of a binary Arrow column, whose data
+    buffer holds its values back to back; None for a zero-length column
+    (it may carry no offsets buffer)."""
     import pyarrow as pa
 
     if isinstance(col, pa.ChunkedArray):
         col = col.combine_chunks()
-    if not len(col):  # a zero-length array may carry no offsets buffer
-        return np.empty(0, dtype=np.uint64), np.empty(0, dtype=np.int64)
+    if not len(col):
+        return None
     width = np.int64 if pa.types.is_large_binary(col.type) else np.int32
     _, offs_buf, data_buf = col.buffers()
     offs = np.frombuffer(offs_buf, dtype=width)[
         col.offset: col.offset + len(col) + 1
     ]
-    return varint_decode_streams(data_buf or b"", offs)
+    return data_buf or b"", offs
 
 
-def varint_decode_bytes(values) -> tuple[np.ndarray, np.ndarray]:
-    """:func:`varint_decode_streams` over a sequence of ``bytes``."""
-    lens = np.fromiter(map(len, values), dtype=np.int64, count=len(values))
-    return varint_decode_streams(
-        b"".join(values), np.concatenate(([0], np.cumsum(lens)))
-    )
+def varint_decode_column(col) -> tuple[np.ndarray, np.ndarray]:
+    """:func:`varint_decode_streams` over a binary Arrow column."""
+    bufs = _binary_buffers(col)
+    if bufs is None:
+        return np.empty(0, dtype=np.uint64), np.empty(0, dtype=np.int64)
+    return varint_decode_streams(*bufs)
+
+
+def binary_column_bytes(col) -> np.ndarray:
+    """The values of a binary Arrow column joined, as a uint8 array —
+    no per-value copy."""
+    bufs = _binary_buffers(col)
+    if bufs is None:
+        return np.empty(0, dtype=np.uint8)
+    data, offs = bufs
+    return np.frombuffer(data, dtype=np.uint8)[offs[0]:offs[-1]]
 
 
 def segmented_cumsum(gaps: np.ndarray, counts: np.ndarray) -> np.ndarray:

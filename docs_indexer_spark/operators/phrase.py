@@ -15,17 +15,19 @@ advances positions — exactly Lucene's position-increment behavior ("big
 data" matches in "big the data"-free text but "big ... data" with a
 stopword between keeps the gap, as OpenSearch would).
 
-Phrase matching is pure native array algebra, no UDF: the phrase occurs at
-position p iff p ∈ P(t0) ∩ (P(t1)−1) ∩ … ∩ (P(tk)−k); the per-term
-positional arrays are joined on doc_id (the first term's postings seed the
-join; every further term is an inner join that can only shrink the set).
-At 10^12 docs each join is a shuffle on doc_id of ONLY the phrase terms'
-postings — the term_id filter prunes the block/posting scan first.
+Phrase matching: the phrase occurs at anchor p iff p + offsetᵢ ∈ P(tᵢ)
+for every term i.  :func:`phrase_occurrences` states it in native array
+algebra over the uncompressed positional postings (the reference the
+tests and the oracle row compare against).  Over the compressed block
+index it is ONE numpy kernel, :func:`phrase_topk`: IndexReader's
+driver-local route runs it over a query's every hit block, and
+:func:`phrase_match_blocks` runs it once per doc-range bucket
+(buckets partition the doc space, so each bucket's matches are exact)
+— the exchange carries the phrase terms' compressed blocks keyed by
+bucket, never decoded positions keyed by doc_id.
 """
 
 from __future__ import annotations
-
-import math
 
 import numpy as np
 import pyarrow as pa
@@ -34,11 +36,11 @@ from pyspark.sql import functions as F
 
 from docs_indexer_spark.session import local_frame
 
-# the rarest-lead decode's bucket shuffle costs about as much as decoding
-# this many head-term blocks (fit on a 10,000-doc positional index,
-# 4-core machine: +83 ms per query for the extra stage, 2.1 ms saved per
-# skipped block), so the lead engages only when it expects to skip more
-LEAD_MIN_SKIPPED_BLOCKS = 40
+# the positional block columns :func:`phrase_topk` reads
+POSITION_COLUMNS = [
+    "term_id", "first_doc_id", "last_doc_id", "doc_ids_bin", "tfs_bin",
+    "positions_bin",
+]
 
 
 def token_positions(
@@ -139,24 +141,28 @@ def rarest_lead(
     tids: list[int], nd: dict[int, int], block_size: int | None = None
 ) -> int | None:
     """The phrase term whose docs should prune the others' blocks, or
-    None when pruning cannot pay (see :func:`phrase_match_blocks`).
-    ``nd`` maps every term of ``tids`` to its df."""
+    None when pruning cannot pay.  ``nd`` maps every term of ``tids`` to
+    its df.
+
+    The result docs are a subset of the RAREST term's docs (Lucene's
+    advance()-driven conjunction, at block granularity): with rare docs
+    spread uniformly, the kept fraction of a head term's blocks is
+    ≈ 1 − e^(−λ) for λ = B·df_rare/df_head (B = postings per block), so
+    the lead engages when df_rare·B ≤ df_head (λ ≤ 1 → ≥37% skipped, far
+    more for clustered or very rare terms).  The other terms' blocks are
+    tested against the rare term's DOCS, not its blocks' ranges: a sparse
+    term's blocks span doc ranges that cover the whole space.
+    Both-terms-frequent phrases pay O(Σ df) like every positional engine.
+    ``block_size`` is B:
+    callers reading a PUBLISHED index pass the generation's recorded
+    block size; the default is this build's config.BLOCK_SIZE."""
     from docs_indexer_spark.config import BLOCK_SIZE
 
     if block_size is None:
         block_size = BLOCK_SIZE
     terms = set(tids)
     rare = min(terms, key=lambda t: nd[t])
-    df_max = max(nd[t] for t in terms)
-    skipped = sum(
-        nd[t] / block_size * math.exp(-block_size * nd[rare] / nd[t])
-        for t in terms if t != rare
-    )
-    if (
-        len(terms) > 1
-        and nd[rare] * block_size <= df_max
-        and skipped >= LEAD_MIN_SKIPPED_BLOCKS
-    ):
+    if len(terms) > 1 and nd[rare] * block_size <= max(nd[t] for t in terms):
         return rare
     return None
 
@@ -166,17 +172,21 @@ def phrase_topk(
     term_ids: list[int],
     offsets: list[int],
     term_dfs: dict[int, int],
-    k: int,
-    block_size: int | None = None,
+    k: int | None,
+    lead: int | None = None,
 ) -> dict[str, np.ndarray]:
-    """:func:`phrase_match_blocks` plus its (n_occurrences desc, doc_id
-    asc) top ``k``, in numpy on one Arrow table holding every hit block
-    of the phrase terms (with positions) — IndexReader's driver-local
-    route.  Same semantics: an occurrence is an anchor ``a`` with
-    ``a + offsets[i]`` in term i's positions for every i, counted once;
-    ``first_pos`` is the least anchor plus ``offsets[0]``.  The same
-    rarest-lead pruning runs over the whole table (buckets only matter
-    to the distributed decode).  Returns the result columns."""
+    """Phrase matching and its (n_occurrences desc, doc_id asc) top
+    ``k`` (None: every match), in numpy on one Arrow table of positional
+    hit blocks of the phrase terms — the definition of a phrase match
+    over the block index, which both serving routes run: over a query's
+    every hit block (IndexReader's driver-local route) or over one
+    bucket's (:func:`phrase_match_blocks`).  An occurrence is an anchor
+    ``a`` with ``a + offsets[i]`` in term i's positions for every i,
+    counted once; ``first_pos`` is the least anchor plus ``offsets[0]``.
+    ``term_dfs`` (term_id → df) orders the intersections rarest first;
+    ``lead`` (:func:`rarest_lead`) drops, before any position decode,
+    the blocks holding none of that term's docs (spimi.lead_pruned).
+    Returns the result columns."""
     from docs_indexer_spark.operators.spimi import (
         _positions_batch,
         lead_pruned,
@@ -184,7 +194,6 @@ def phrase_topk(
     from docs_indexer_spark.operators.wand import _in_sorted
 
     tids = [int(t) for t in term_ids]
-    lead = rarest_lead(tids, term_dfs, block_size)
     if lead is not None:
         blocks = lead_pruned(blocks, lead)
     dec = _positions_batch(blocks)
@@ -247,9 +256,15 @@ def phrase_match_blocks(
     block_size: int | None = None,
 ) -> DataFrame:
     """Phrase matching over the COMPRESSED block index (requires blocks
-    built with ``positions=True``): decode only the phrase terms' blocks
-    (term_id IN (...) prunes the parquet scan), then run the same native
-    position-set algebra as :func:`phrase_occurrences`.
+    built with ``positions=True``): every matching doc with
+    (n_occurrences, first_pos), as :func:`phrase_occurrences` gives them
+    over the uncompressed postings.
+
+    Plan: `term_id IN (...)` (prunes the parquet scan to the phrase
+    terms' blocks) → groupBy(bucket).applyInArrow(:func:`phrase_topk`
+    with no cut).  Buckets partition the doc space, so a bucket's
+    matches are exact: no doc-keyed exchange, and every block decodes at
+    most once.
 
     ``term_ids`` are xxhash64(term) of the phrase terms IN ORDER.
     ``offsets`` are each term's position offset within the phrase
@@ -258,47 +273,18 @@ def phrase_match_blocks(
     where the terms are two apart — Lucene match_phrase's position
     increments.
 
-    LEAD-WITH-THE-RAREST (Lucene's advance()-driven conjunction,
-    re-expressed at block granularity): the result docs are a subset of
-    the RAREST term's docs, so the position decode groups the blocks by
-    bucket, decodes the rare term's doc ids there FIRST (O(df_rare) —
-    its doc-id stream, not positions) and decodes another term's block
-    only if its [first_doc_id, last_doc_id] CONTAINS at least one rare
-    doc — a vectorized searchsorted over block METADATA inside the same
-    kernel (spimi.decode_position_blocks ``lead_term``): no job before
-    the decode, no second Python stage.  A "the <rare-word>" phrase then
-    decodes O(df_rare) of the head term's postings instead of O(df_head).
-    Block-RANGE overlap against the rare term's own blocks would NOT
-    work: a sparse term's 128-posting blocks span wide doc ranges that
-    cover the whole space.
-
     ``term_dfs`` (term_id → df) lets the caller supply document
     frequencies it already holds (IndexReader's driver-side term table;
     the fused build's df relation) so NO extra job runs here; without it
-    one block-metadata aggregate computes them.  Pruning engages only
-    when it can pay for the bucket shuffle it needs: with rare docs
-    uniformly spread, the kept fraction of a head term's blocks is
-    ≈ 1 − e^(−λ) for λ = B·df_rare/df_head (B = postings per block), so
-    pruning requires df_rare·B ≤ df_head (λ ≤ 1 → ≥37% skipped, far more
-    for clustered or very rare terms) AND an expected Σ (df/B)·e^(−λ)
-    skipped blocks over the other terms of at least
-    :data:`LEAD_MIN_SKIPPED_BLOCKS`, the shuffle's fixed cost in block
-    decodes; both-terms-frequent phrases pay O(Σ df) like every
-    positional engine.  Intersections always run in
-    ascending-df order so intermediate results never exceed the rarest
-    relation.
-
-    ``block_size`` is B in that calibration — callers reading a
-    PUBLISHED index should pass the generation's recorded block size
-    (IndexReader does); the default is this build's config.BLOCK_SIZE.
-    The decision itself is :func:`rarest_lead`.
+    one block-metadata aggregate computes them.  They decide the
+    rarest-lead block pruning (:func:`rarest_lead`, with ``block_size``
+    as B) on the driver; the kernel applies it per bucket.
     """
-    from docs_indexer_spark.operators.spimi import decode_position_blocks
-
     if offsets is None:
         offsets = list(range(len(term_ids)))
     tids = [int(t) for t in term_ids]
     cand = blocks.filter(F.col("term_id").isin(tids))
+    schema = f"{id_col} long, n_occurrences int, first_pos int"
     if term_dfs is not None:
         nd = {int(t): int(df) for t, df in term_dfs.items()}
     else:
@@ -311,52 +297,16 @@ def phrase_match_blocks(
     if any(t not in nd or nd[t] <= 0 for t in set(tids)):
         # a phrase term absent from the index can never match — answer
         # without touching a single block
-        return local_frame(
-            blocks.sparkSession,
-            f"{id_col} long, n_occurrences int, first_pos int",
-        )
+        return local_frame(blocks.sparkSession, schema)
     lead = rarest_lead(tids, nd, block_size)
-    # ONE decode pass + ONE doc-keyed aggregate instead of k−1 joins:
-    # the old per-term join chain both re-ran the (Catalyst-opaque)
-    # positional decode once per phrase term AND paid an exchange per
-    # join side.  Here every candidate block decodes at most once and a
-    # conditional aggregate pivots each doc's per-term position arrays
-    # into one row — first(when(term_id = tᵢ, positions − offsetᵢ))
-    # is deterministic because decoded postings hold exactly one row per
-    # (term, doc).  Docs missing any phrase term aggregate to NULL for
-    # that slot and are dropped — inner-join semantics unchanged.
-    dec = decode_position_blocks(cand, lead_term=lead)
-    aggs = [
-        F.first(
-            F.when(
-                F.col("term_id") == F.lit(tids[i]),
-                F.transform("positions", _shift(offsets[i])),
-            ),
-            ignorenulls=True,
-        ).alias(f"p{i}")
-        for i in range(len(tids))
-    ]
-    grouped = dec.groupBy(id_col).agg(*aggs)
-    present = None
-    for i in range(len(tids)):
-        c = F.col(f"p{i}").isNotNull()
-        present = c if present is None else (present & c)
-    # ascending-df intersect order (commutative; _hits are phrase-start
-    # anchors regardless of order)
-    order = sorted(range(len(tids)), key=lambda i: nd[tids[i]])
-    acc = F.col(f"p{order[0]}")
-    for i in order[1:]:
-        acc = F.array_intersect(acc, F.col(f"p{i}"))
-    # _hits holds anchor positions shifted down by offsets[0]; add it back
-    # so first_pos is the first matched term's ACTUAL stream position even
-    # when the phrase starts with a filtered stopword (offsets[0] > 0).
-    return (
-        grouped.filter(present)
-        .select(F.col(id_col), acc.alias("_hits"))
-        .filter(F.size("_hits") > 0)
-        .select(
-            id_col,
-            F.size("_hits").alias("n_occurrences"),
-            (F.array_min("_hits") + F.lit(int(offsets[0]))).alias("first_pos"),
+
+    def per_bucket(table: pa.Table) -> pa.Table:
+        res = phrase_topk(table, tids, offsets, nd, None, lead=lead)
+        return pa.table(
+            [res["doc_id"], res["n_occurrences"], res["first_pos"]],
+            names=[id_col, "n_occurrences", "first_pos"],
         )
-    )
+
+    return cand.select("bucket", *POSITION_COLUMNS).groupBy(
+        "bucket"
+    ).applyInArrow(per_bucket, schema=schema)

@@ -23,8 +23,9 @@ doc_id — the salt.  Consequences:
   doc_id ranges, so the per-term global order is simply
   ``(bucket, block_seq)`` — merging partial results is an ordered CONCAT of
   already-encoded blocks: no decode, no re-sort, no second shuffle;
-- block-max WAND also exploits the bucketing: buckets partition the doc
-  space, so per-bucket WAND + global top-k merge is exact.
+- the serving kernels exploit the bucketing too: buckets partition the
+  doc space, so a per-bucket WAND, exact-scorer or phrase kernel plus
+  one global top-k merge is exact.
 
 Execution shape: ``repartition(term_id, bucket)`` →
 ``sortWithinPartitions(term_id, bucket, doc_id[, pos])`` → ``mapInArrow``
@@ -423,9 +424,6 @@ def build_blocks(
     )
 
 
-_POSITIONS_SCHEMA = "term_id long, doc_id long, positions array<int>"
-
-
 def _positions_batch(rows) -> pa.RecordBatch:
     """Decode positional block rows (an Arrow batch or table) into
     (term_id, doc_id, positions) postings — each binary column's varint
@@ -455,47 +453,6 @@ def _positions_batch(rows) -> pa.RecordBatch:
         ],
         names=["term_id", "doc_id", "positions"],
     )
-
-
-def decode_position_blocks(
-    blocks: DataFrame, lead_term: int | None = None
-) -> DataFrame:
-    """Block index (positions=True) → (term_id, doc_id, positions) rows.
-
-    Used by the phrase plane: the caller filters term_id IN (phrase terms)
-    FIRST so the parquet scan prunes to the handful of terms' blocks; the
-    decode is one vectorized Arrow kernel (:func:`_positions_batch`).
-
-    ``lead_term`` (a term_id among the rows) turns on rarest-lead block
-    pruning INSIDE the decode: the rows group by bucket — buckets are
-    disjoint doc ranges, so a group holds every block of its docs — and
-    per bucket the lead term's doc ids are decoded first (its doc-id
-    stream only); every other term's block is decoded only if its
-    ``[first_doc_id, last_doc_id]`` range holds one of them
-    (wand.blocks_containing).  A dropped block's postings sit in docs
-    without the lead term, which a phrase containing it can never match.
-    The grouping shuffles every hit block, a fixed cost the caller
-    weighs against the blocks it skips (phrase.LEAD_MIN_SKIPPED_BLOCKS).
-    """
-    if lead_term is None:
-        def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-            for batch in batches:
-                if batch.num_rows:
-                    yield _positions_batch(batch)
-
-        return blocks.mapInArrow(kernel, schema=_POSITIONS_SCHEMA)
-
-    lead_term = int(lead_term)
-
-    def per_bucket(table: pa.Table) -> pa.Table:
-        return pa.Table.from_batches(
-            [_positions_batch(lead_pruned(table, lead_term))]
-        )
-
-    return blocks.select(
-        "term_id", "bucket", "first_doc_id", "last_doc_id",
-        "doc_ids_bin", "tfs_bin", "positions_bin",
-    ).groupBy("bucket").applyInArrow(per_bucket, schema=_POSITIONS_SCHEMA)
 
 
 def lead_pruned(table: pa.Table, lead_term: int) -> pa.Table:

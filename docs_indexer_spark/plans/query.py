@@ -62,13 +62,6 @@ FILTER_MEMO_SIZE = 8
 LOCAL_MAX_BLOCKS = 32768
 
 PHRASE_SCHEMA = "doc_id long, n_occurrences int, first_pos int"
-# the block columns each local kernel reads
-_SCORED_COLUMNS = ["term_id", "doc_ids_bin", "tf_norms_bin"]
-_RANGE_COLUMNS = ["first_doc_id", "last_doc_id"]
-_POSITION_COLUMNS = [
-    "term_id", "first_doc_id", "last_doc_id", "doc_ids_bin", "tfs_bin",
-    "positions_bin",
-]
 
 
 def _local_path(uri: str) -> str:
@@ -220,22 +213,15 @@ class IndexReader:
         n_required: int | None = None, after=None, exclude: int | None = None,
     ) -> DataFrame:
         """The driver-local route of every scored kind: the exact
-        scorer's decode kernel (filter block pruning included) over the
-        query's blocks, then the fused sum/count, AND, ``search_after``
-        and top-k of :func:`bm25.topk_partials`."""
+        scorer's kernel :func:`bm25.blocks_topk` (filter block pruning,
+        sum/count, AND, ``search_after`` and top-k) over all of the
+        query's blocks."""
         if not idf or (allowed is not None and not len(allowed)):
             return local_frame(self.spark, TOPK_SCHEMA)
-        cols = _SCORED_COLUMNS + (
-            _RANGE_COLUMNS if allowed is not None else []
-        )
-        pdf = self._local_blocks(idf, cols).to_pandas()
-        parts = list(bm25.decode_blocks_iter([pdf], idf, allowed=allowed))
-        if not parts:
-            return local_frame(self.spark, TOPK_SCHEMA)
-        doc_ids, scores = bm25.topk_partials(
-            np.concatenate([p["doc_id"].values for p in parts]),
-            np.concatenate([p["partial"].values for p in parts]),
-            k, n_required=n_required, after=after, exclude=exclude,
+        doc_ids, scores = bm25.blocks_topk(
+            self._local_blocks(idf, bm25.kernel_columns(allowed is not None)),
+            idf, k, allowed=allowed,
+            n_required=n_required, after=after, exclude=exclude,
         )
         return local_frame(
             self.spark, TOPK_SCHEMA, {"doc_id": doc_ids, "score": scores}
@@ -604,8 +590,10 @@ class IndexReader:
         """
         from docs_indexer_spark.functions.analysis import analyze_with_positions
         from docs_indexer_spark.operators.phrase import (
+            POSITION_COLUMNS,
             phrase_match_blocks,
             phrase_topk,
+            rarest_lead,
         )
 
         if not self.meta["metrics"].get("positions"):
@@ -627,8 +615,8 @@ class IndexReader:
         est = self._est_blocks(dfs.values())
         if where is None and est <= LOCAL_MAX_BLOCKS:
             return local_frame(self.spark, PHRASE_SCHEMA, phrase_topk(
-                self._local_blocks(dfs, _POSITION_COLUMNS), term_ids,
-                offsets, dfs, k, block_size=bsz,
+                self._local_blocks(dfs, POSITION_COLUMNS), term_ids,
+                offsets, dfs, k, lead=rarest_lead(term_ids, dfs, bsz),
             ))
         res = phrase_match_blocks(
             self._blocks_for(term_ids), term_ids, offsets=offsets,
@@ -733,18 +721,13 @@ class IndexReader:
         )[:max_query_terms]
         dfs = {tid: df for _, _, tid, df in weighted}
         idf = {t: self._idf_of(df) for t, df in dfs.items()}
+        # the seed drops inside the numpy top-k on both routes: a filter
+        # on top of the local frame would start Spark jobs again
         if self._route(dfs)[0]:
-            # the seed drops inside the numpy top-k: a filter on top of
-            # the local frame would start Spark jobs again
             return self._local_topk(idf, k, exclude=doc_id)
         ids = sorted(idf)
-        top = bm25.score_from_blocks(
-            self._blocks_for(ids), idf, ids, k=k + 1
-        )
-        return (
-            top.filter(F.col("doc_id") != doc_id)
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
+        return bm25.score_from_blocks(
+            self._blocks_for(ids), idf, ids, k=k, exclude=doc_id
         )
 
     def search_with_docs(

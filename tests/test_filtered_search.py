@@ -123,6 +123,38 @@ def test_filtered_require_all(fused, allowed):
     rank_identical(expected, [(r["doc_id"], r["score"]) for r in got])
 
 
+def test_broad_filter_composes_with_and_and_cursor(spark, fused, allowed):
+    """A DataFrame (broad) filter moves the top-k cut behind its
+    semi-join: combined with ``require_all=True``, with ``after=`` and
+    with both, it equals filter-then-score over the whole ranking."""
+    idf = _idf_map(fused, TERMS)
+    allowed_df = spark.createDataFrame(
+        [(int(d),) for d in allowed], "doc_id long"
+    )
+    keep = set(allowed)
+
+    def ranked(**kw):
+        return [
+            (r["doc_id"], r["score"])
+            for r in bm25.score_from_blocks(
+                fused.blocks, idf, sorted(idf), **kw
+            ).collect()
+        ]
+
+    for require_all in (False, True):
+        full = [
+            (d, s) for d, s in ranked(k=100_000, require_all=require_all)
+            if d in keep
+        ]
+        assert len(full) > 12, require_all
+        cursor = (full[4][1], full[4][0])
+        for after, want in ((None, full[:10]), (cursor, full[5:15])):
+            rank_identical(want, ranked(
+                k=10, require_all=require_all, allowed=allowed_df,
+                after=after,
+            ))
+
+
 def test_empty_filter_returns_empty(fused):
     idf = _idf_map(fused, TERMS)
     assert wand.wand_topk(

@@ -175,15 +175,14 @@ def test_fused_positions_equal_postings(spark, analyzer):
     ``phrase.token_positions``, english against the oracle's
     ``analyze_with_positions``."""
     from docs_indexer_spark.operators.phrase import token_positions
-    from docs_indexer_spark.operators.spimi import decode_position_blocks
 
     docs = _docs(spark)
     fused = fused_build_blocks(
         docs, analyzer=analyzer, n_buckets=4, positions=True
     )
     got = {
-        (r["term_id"], r["doc_id"]): list(r["positions"])
-        for r in decode_position_blocks(fused.blocks).collect()
+        (r["term_id"], r["doc_id"]): r["positions"]
+        for r in _positions_batch(fused.blocks.toArrow()).to_pylist()
     }
     fused.unpersist()
     if analyzer == "english":

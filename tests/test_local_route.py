@@ -241,10 +241,11 @@ def test_phrase_offsets_and_repeats(
 def test_phrase_rarest_lead_settings(reader, monkeypatch, phrase_pairs):
     from docs_indexer_spark.operators import phrase
 
+    lead = phrase.rarest_lead
     for pair in phrase_pairs.values():
         q = " ".join(pair)
-        for floor in (phrase.LEAD_MIN_SKIPPED_BLOCKS, 0):
-            monkeypatch.setattr(phrase, "LEAD_MIN_SKIPPED_BLOCKS", floor)
+        for decide in (lambda *a, **kw: None, lead):
+            monkeypatch.setattr(phrase, "rarest_lead", decide)
             _same_phrase(monkeypatch, lambda: reader.search_phrase(q, k=50))
     # k below the match count cuts by (n_occurrences desc, doc_id asc)
     q = " ".join(phrase_pairs["dense"])

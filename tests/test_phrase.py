@@ -5,6 +5,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from docs_indexer_spark.functions.xxh import spark_xxhash64_str
 from docs_indexer_spark.operators.phrase import (
     phrase_match_blocks,
     phrase_occurrences,
@@ -80,10 +81,20 @@ def _build_pos_blocks(spark, docs, n_buckets=4):
     return spimi.build_blocks(rel.rows, stats, n_buckets=n_buckets)
 
 
+def _decoded_positions(blocks):
+    """{(term_id, doc_id): positions} of positional blocks, through the
+    phrase kernel's decode (spimi._positions_batch)."""
+    from docs_indexer_spark.operators.spimi import _positions_batch
+
+    return {
+        (r["term_id"], r["doc_id"]): r["positions"]
+        for r in _positions_batch(blocks.toArrow()).to_pylist()
+    }
+
+
 def test_position_blocks_roundtrip(spark, phrase_docs):
     """Decoded (term_id, doc_id, positions) must equal the uncompressed
     positional postings exactly."""
-    from docs_indexer_spark.operators.spimi import decode_position_blocks
 
     postings = token_positions(phrase_docs).withColumn(
         "term_id", F.xxhash64("term")
@@ -93,18 +104,13 @@ def test_position_blocks_roundtrip(spark, phrase_docs):
         for r in postings.collect()
     }
     blocks = _build_pos_blocks(spark, phrase_docs)
-    got = {
-        (r["term_id"], r["doc_id"]): list(r["positions"])
-        for r in decode_position_blocks(blocks).collect()
-    }
-    assert got == want
+    assert _decoded_positions(blocks) == want
 
 
 def test_position_blocks_roundtrip_corpus(spark):
     """Roundtrip across real block boundaries: sf0.001 corpus has head
     terms with df ~900 ≫ BLOCK_SIZE, so multi-block chains + bucket splits
     are exercised."""
-    from docs_indexer_spark.operators.spimi import decode_position_blocks
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").filter(
         F.col("doc_id") < 300
@@ -115,11 +121,7 @@ def test_position_blocks_roundtrip_corpus(spark):
         for r in postings.collect()
     }
     blocks = _build_pos_blocks(spark, docs, n_buckets=8)
-    got = {
-        (r["term_id"], r["doc_id"]): list(r["positions"])
-        for r in decode_position_blocks(blocks).collect()
-    }
-    assert got == want
+    assert _decoded_positions(blocks) == want
 
 
 def test_published_positional_index_phrase_search(
@@ -229,11 +231,10 @@ def test_phrase_blocks_rarest_lead_pruning(spark, monkeypatch):
     rarer co-occurring term) must produce matches identical to the
     position-postings oracle through the pruned block path, and a
     phrase containing a term absent from the index answers empty
-    WITHOUT decoding any blocks (metadata-only early-out).  The
-    fixed-cost floor is lifted: 300 docs never reach it."""
+    WITHOUT decoding any blocks (metadata-only early-out).  The same
+    phrase with the lead switched off gives the same matches."""
     from docs_indexer_spark.operators import phrase as phrase_mod
 
-    monkeypatch.setattr(phrase_mod, "LEAD_MIN_SKIPPED_BLOCKS", 0)
     docs = spark.read.parquet(
         "/root/testdata/sf0.001/documents.parquet"
     ).filter(F.col("doc_id") < 300)
@@ -270,11 +271,25 @@ def test_phrase_blocks_rarest_lead_pruning(spark, monkeypatch):
         .collect()[0][0]
         for t in phrase
     ]
-    got = {
-        (r["doc_id"], r["n_occurrences"], r["first_pos"])
-        for r in phrase_match_blocks(blocks, tids).collect()
-    }
+    # 300 docs are too few for df_rare · BLOCK_SIZE ≤ df_head: a smaller
+    # calibration block size engages the lead over the same blocks
+    nd = dict(zip(tids, (df_count[t] for t in phrase)))
+    lead_b = nd[tids[0]] // nd[tids[1]]
+    assert phrase_mod.rarest_lead(tids, nd, lead_b) == tids[1]
+
+    def run():
+        return {
+            (r["doc_id"], r["n_occurrences"], r["first_pos"])
+            for r in phrase_match_blocks(
+                blocks, tids, block_size=lead_b
+            ).collect()
+        }
+
+    got = run()
     assert got == want and got
+    with monkeypatch.context() as m:
+        m.setattr(phrase_mod, "rarest_lead", lambda *a, **kw: None)
+        assert run() == want
 
     # absent term → empty without decode
     missing = spark.createDataFrame([("zz-not-a-term",)], "t string") \
@@ -286,14 +301,11 @@ def test_search_phrase_rarest_lead_equals_positions(
     spark, serving_docs, positional_index, phrase_pairs, monkeypatch
 ):
     """A published-index phrase query whose rarest-lead pruning engages
-    (the per-bucket decode drops the head term's blocks that hold no
-    rare-term doc) equals phrase_occurrences over the token positions —
-    doc ids, occurrence counts and first positions, in rank order.  On
-    this small index the head term has too few blocks for the lead to
-    pay for its shuffle, so the default takes the plain decode (same
-    answer) and the test lifts the fixed-cost floor to engage it.  The
-    plan checks need the distributed route; the driver-local route must
-    give the same answer with and without the lead."""
+    (the kernel drops the head term's blocks that hold no rare-term doc)
+    equals phrase_occurrences over the token positions — doc ids,
+    occurrence counts and first positions, in rank order — on both
+    routes, and so does the same query with the lead switched off.  The
+    distributed route runs the kernel once per bucket."""
     from docs_indexer_spark.operators import phrase as phrase_mod
     from docs_indexer_spark.plans import query
     from docs_indexer_spark.plans.query import IndexReader
@@ -307,6 +319,10 @@ def test_search_phrase_rarest_lead_equals_positions(
     )
     assert want
     reader = IndexReader(spark, positional_index)
+    tids = [spark_xxhash64_str(t) for t in phrase]
+    assert phrase_mod.rarest_lead(
+        tids, reader._dfs(tids), reader.meta["metrics"].get("block_size")
+    ) is not None, "rarest-lead pruning must engage"
 
     def run():
         res = reader.search_phrase(" ".join(phrase), k=1000)
@@ -314,16 +330,15 @@ def test_search_phrase_rarest_lead_equals_positions(
                for r in res.collect()]
         return got, res._jdf.queryExecution().executedPlan().toString()
 
-    monkeypatch.setattr(query, "LOCAL_MAX_BLOCKS", 10**9)
-    assert run()[0] == want
-    monkeypatch.setattr(query, "LOCAL_MAX_BLOCKS", 0)
-    got, plan = run()
-    assert "FlatMapGroupsInArrow" not in plan, "too few blocks to pay"
-    assert got == want
-    monkeypatch.setattr(phrase_mod, "LEAD_MIN_SKIPPED_BLOCKS", 0)
-    got, plan = run()
-    assert "FlatMapGroupsInArrow" in plan, "rarest-lead pruning must engage"
-    assert got == want
-    monkeypatch.setattr(query, "LOCAL_MAX_BLOCKS", 10**9)
-    assert run()[0] == want
+    for lead in ("on", "off"):
+        if lead == "off":
+            monkeypatch.setattr(
+                phrase_mod, "rarest_lead", lambda *a, **kw: None
+            )
+        monkeypatch.setattr(query, "LOCAL_MAX_BLOCKS", 10**9)
+        assert run()[0] == want, lead
+        monkeypatch.setattr(query, "LOCAL_MAX_BLOCKS", 0)
+        got, plan = run()
+        assert "FlatMapGroupsInArrow" in plan, lead
+        assert got == want, lead
     reader.close()

@@ -203,7 +203,7 @@ def _executed_python_nodes(df) -> list[str]:
 
 
 def test_serving_runs_one_python_stage_per_query(
-    spark, positional_index, phrase_pairs, monkeypatch, distributed_route
+    spark, positional_index, phrase_pairs, distributed_route
 ):
     """Serving cost gate: every Python stage pays a fixed per-task worker
     start-up (docs/DESIGN.md "Serving cost model"), so each IndexReader
@@ -211,17 +211,18 @@ def test_serving_runs_one_python_stage_per_query(
     — once a warm-up query has cached the reader's per-generation state
     and filter — building the query must start no Spark job.  This is
     the distributed route's gate; the small test index would otherwise
-    take the driver-local route (test_small_queries_start_no_spark_job)."""
-    from docs_indexer_spark.operators import phrase
+    take the driver-local route (test_small_queries_start_no_spark_job).
+    Every kind but WAND runs the driver-local route's own kernel once
+    per bucket, so no plan may shuffle rows by doc_id."""
     from docs_indexer_spark.plans.query import IndexReader
 
-    # the small index's head terms have too few blocks for the rarest-lead
-    # decode to pay for its shuffle; lift that floor to cover the route
-    monkeypatch.setattr(phrase, "LEAD_MIN_SKIPPED_BLOCKS", 0)
     reader = IndexReader(spark, positional_index)
     where = "lang = 'de'"
     kinds = {
         "bm25": lambda: reader.search("spark join window", k=10),
+        "exact": lambda: reader.search(
+            "spark join window", k=10, exact=True
+        ),
         "and": lambda: reader.search("spark join", k=10, operator="and"),
         "phrase": lambda: reader.search_phrase(
             " ".join(phrase_pairs["dense"]), k=10
@@ -238,6 +239,7 @@ def test_serving_runs_one_python_stage_per_query(
         assert run().collect()
     sc = spark.sparkContext
     nodes = {}
+    doc_exchanges = {}
     for name, run in kinds.items():
         group = f"plan-shape-{name}"
         sc.setJobGroup(group, name)
@@ -248,11 +250,16 @@ def test_serving_runs_one_python_stage_per_query(
         assert sc.statusTracker().getJobIdsForGroup(group) == [], name
         df.collect()
         nodes[name] = _executed_python_nodes(df)
+        doc_exchanges[name] = re.findall(
+            r"Exchange hashpartitioning\(doc_id", _plan(df)
+        )
     assert all(len(v) == 1 for v in nodes.values()), nodes
-    # both phrase routes are covered: plain decode and the per-bucket
-    # rarest-lead decode
-    assert nodes["phrase"] == ["MapInArrow"], nodes
-    assert nodes["phrase_rare_lead"] == ["FlatMapGroupsInArrow"], nodes
+    assert not any(doc_exchanges.values()), doc_exchanges
+    # one per-bucket kernel per kind; both phrase cases are covered: the
+    # dense pair keeps every block, the rare-lead pair prunes the head
+    # term's blocks by the rare term's docs inside the same kernel
+    for name in ("exact", "and", "fuzzy", "phrase", "phrase_rare_lead"):
+        assert nodes[name] == ["FlatMapGroupsInArrow"], nodes
     reader.close()
 
 
