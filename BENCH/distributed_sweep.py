@@ -12,9 +12,13 @@ times so runs of two source trees can be checked for identical results.
         --corpus CORPUS --out RUN.json
 
 ``--tree`` is the source checkout to import the engine from (put it on
-PYTHONPATH as well, so Spark's Python workers import the same code);
+PYTHONPATH as well, so Spark's Python workers import the same code, and
+run the script from a directory that holds no ``docs_indexer_spark``:
+the workers search their working directory first, so started from
+another checkout's root they would run that checkout's kernels);
 ``--corpus`` is the parquet the index was built from, read only to find
-adjacent head-term pairs for the phrases.
+adjacent head-term pairs for the phrases.  ``--kinds phrase`` (or
+``exact,and``) times only those query kinds.
 """
 
 from __future__ import annotations
@@ -67,7 +71,9 @@ def main() -> None:
     ap.add_argument("--k", type=int, default=10)
     ap.add_argument("--route", choices=("distributed", "local"),
                     default="distributed")
+    ap.add_argument("--kinds", default="exact,and,phrase")
     args = ap.parse_args()
+    kinds = set(args.kinds.split(","))
     sys.path.insert(0, args.tree)
 
     from docs_indexer_spark.functions.analysis import analyze_text
@@ -100,6 +106,7 @@ def main() -> None:
             p, k=args.k)))
 
     query.LOCAL_MAX_BLOCKS = 0 if args.route == "distributed" else 10**9
+    queries = [(n, r) for n, r in queries if n.split("_")[0] in kinds]
     for name, run in queries:
         if name in ("exact_3", "phrase_0"):
             run().collect()

@@ -15,9 +15,13 @@ Per-block metadata kept alongside (columns, not in the payload): n_docs,
 first/last doc_id, max_tf, max_tf_norm.  Block-max WAND upper-bounds a
 term's contribution by idf * max_tf_norm without decoding the block.
 
-PForDelta was considered (Zukowski et al., ICDE 2006); plain varint wins
-here because numpy-vectorized LEB128 already decodes at >100M ints/sec/core
-and keeps the oracle trivially equivalent.
+PForDelta was considered (Zukowski et al., ICDE 2006); plain varint stays
+because it keeps the oracle trivially equivalent and the vectorized LEB128
+decode below is fast where the bytes are: on the `serve` phrase pool
+(BENCH/phrase_kernel.py, one core of a 4-core machine) it decodes the
+1-byte-dominant position streams at ~160-175M values/s (~25M/s before
+the terminator-gather decode) and the hashed doc ids' 7-10-byte gaps at
+~7M values/s.
 """
 
 from __future__ import annotations
@@ -58,23 +62,64 @@ def varint_encode(values: np.ndarray) -> bytes:
     return varint_encode_with_lengths(values)[0]
 
 
+def _varint_values(b: np.ndarray, cuts=()) -> tuple[np.ndarray, np.ndarray]:
+    """Decode the LEB128 bytes ``b`` (uint8): → (uint64 values, number
+    of values ending before each byte offset in ``cuts``).  Raises
+    ValueError on a value that still continues at the end of ``b`` or
+    that runs past 64 bits (10 bytes).
+
+    One scan splits terminator bytes from continuation bytes.  When
+    continuation bytes are few (position gaps), every value starts as
+    its terminator byte in one masked gather, and only the continuation
+    bytes are visited again: each belongs to value ``cont[i] - i``, and
+    a run's 7-bit groups OR in below its terminator's.  When they are
+    many (doc-id gaps of hashed ids), every value's low 7 bits come in
+    one gather and only the multi-byte values loop over their further
+    bytes."""
+    cuts = np.asarray(cuts, dtype=np.int64)
+    if not len(b):
+        return np.empty(0, dtype=np.uint64), np.zeros(len(cuts), np.int64)
+    if b[-1] & 0x80:
+        raise ValueError("truncated varint: the last byte continues")
+    if b.max() < 0x80:
+        return b.astype(np.uint64), cuts
+    term = b < 0x80
+    n_vals = int(np.count_nonzero(term))
+    if 2 * (len(b) - n_vals) > n_vals:
+        ends = np.flatnonzero(term)
+        starts = np.concatenate(([0], ends[:-1] + 1))
+        vals = (b[starts] & 0x7F).astype(np.uint64)
+        multi = np.flatnonzero(ends > starts)
+        for j in range(1, 10):
+            if not len(multi):
+                break
+            pos = starts[multi] + j
+            byte = b[pos]
+            if j == 9 and (byte > 1).any():
+                raise ValueError("varint value longer than 64 bits")
+            vals[multi] |= (byte & 0x7F).astype(np.uint64) << _SHIFTS[j]
+            multi = multi[ends[multi] > pos]
+        return vals, np.searchsorted(ends, cuts)
+    vals = b[term].astype(np.uint64)
+    cont = np.flatnonzero(~term)
+    owner = cont - np.arange(len(cont))
+    run = np.flatnonzero(np.concatenate(([True], owner[1:] != owner[:-1])))
+    n_cont = np.diff(np.append(run, len(cont)))
+    multi = owner[run]
+    if n_cont.max() > 9 or (vals[multi[n_cont == 9]] > 1).any():
+        raise ValueError("varint value longer than 64 bits")
+    group = np.arange(len(cont)) - np.repeat(run, n_cont)
+    low = np.bitwise_or.reduceat(
+        (b[cont] & 0x7F).astype(np.uint64) << (group * 7).astype(np.uint64),
+        run,
+    )
+    vals[multi] = (vals[multi] << (n_cont * 7).astype(np.uint64)) | low
+    return vals, cuts - np.searchsorted(cont, cuts)
+
+
 def varint_decode(buf: bytes) -> np.ndarray:
     """Decode a LEB128 stream into a uint64 array, vectorized."""
-    b = np.frombuffer(buf, dtype=np.uint8)
-    if len(b) == 0:
-        return np.empty(0, dtype=np.uint64)
-    last_idx = np.nonzero((b & 0x80) == 0)[0]
-    starts = np.empty_like(last_idx)
-    starts[0] = 0
-    starts[1:] = last_idx[:-1] + 1
-    vals = np.zeros(len(starts), dtype=np.uint64)
-    for j in range(10):
-        pos = starts + j
-        mask = pos <= last_idx
-        if not mask.any():
-            break
-        vals[mask] |= (b[pos[mask]].astype(np.uint64) & np.uint64(0x7F)) << _SHIFTS[j]
-    return vals
+    return _varint_values(np.frombuffer(buf, dtype=np.uint8))[0]
 
 
 def varint_decode_streams(
@@ -82,12 +127,17 @@ def varint_decode_streams(
 ) -> tuple[np.ndarray, np.ndarray]:
     """Decode the LEB128 streams lying back to back in ``data`` (stream
     i is bytes ``offsets[i]:offsets[i+1]``) in ONE vectorized pass:
-    → (all values in order, number of values per stream)."""
+    → (all values in order, number of values per stream).  Raises
+    ValueError when a non-empty stream ends inside a value, which
+    would otherwise run on into the next stream."""
     offsets = np.asarray(offsets, dtype=np.int64)
     b = np.frombuffer(data, dtype=np.uint8)[offsets[0]:offsets[-1]]
-    ends = np.flatnonzero((b & 0x80) == 0)
-    counts = np.diff(np.searchsorted(ends, offsets - offsets[0]))
-    return varint_decode(b), counts
+    rel = offsets - offsets[0]
+    last = rel[1:][rel[1:] > rel[:-1]] - 1
+    if len(last) and (b[last] & 0x80).any():
+        raise ValueError("truncated varint stream: ends inside a value")
+    vals, before = _varint_values(b, rel)
+    return vals, np.diff(before)
 
 
 def _binary_buffers(col):
@@ -129,11 +179,14 @@ def binary_column_bytes(col) -> np.ndarray:
 def segmented_cumsum(gaps: np.ndarray, counts: np.ndarray) -> np.ndarray:
     """Running sums of ``gaps`` restarted at every run of ``counts``
     values — many delta streams undone in one pass (int64, wrapping
-    like the per-stream decode)."""
-    c = np.cumsum(gaps.astype(np.int64))
-    starts = np.concatenate(([0], np.cumsum(counts)))[:-1]
-    prefix = np.concatenate(([0], c))[starts]
-    return c - np.repeat(prefix, counts)
+    like the per-stream decode).  Each run's first gap is lowered by the
+    sum of the run before it, so one plain cumsum restarts at every run."""
+    g = gaps.astype(np.int64)
+    counts = np.asarray(counts)
+    starts = (np.cumsum(counts) - counts)[counts > 0]
+    if len(starts) > 1:
+        g[starts[1:]] -= np.add.reduceat(g, starts)[:-1]
+    return np.cumsum(g, out=g)
 
 
 def delta_encode_doc_ids(doc_ids: np.ndarray) -> bytes:

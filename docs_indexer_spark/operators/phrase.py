@@ -171,79 +171,90 @@ def phrase_topk(
     blocks: pa.Table,
     term_ids: list[int],
     offsets: list[int],
-    term_dfs: dict[int, int],
     k: int | None,
     lead: int | None = None,
 ) -> dict[str, np.ndarray]:
     """Phrase matching and its (n_occurrences desc, doc_id asc) top
     ``k`` (None: every match), in numpy on one Arrow table of positional
-    hit blocks of the phrase terms — the definition of a phrase match
-    over the block index, which both serving routes run: over a query's
-    every hit block (IndexReader's driver-local route) or over one
-    bucket's (:func:`phrase_match_blocks`).  An occurrence is an anchor
-    ``a`` with ``a + offsets[i]`` in term i's positions for every i,
-    counted once; ``first_pos`` is the least anchor plus ``offsets[0]``.
-    ``term_dfs`` (term_id → df) orders the intersections rarest first;
-    ``lead`` (:func:`rarest_lead`) drops, before any position decode,
-    the blocks holding none of that term's docs (spimi.lead_pruned).
-    Returns the result columns."""
+    hit blocks of the phrase terms, in any row order — the definition of
+    a phrase match over the block index, which both serving routes run:
+    over a query's every hit block (IndexReader's driver-local route) or
+    over one bucket's (:func:`phrase_match_blocks`).  An occurrence is an
+    anchor ``a`` with ``a + offsets[i]`` in term i's positions for every
+    i, counted once; ``first_pos`` is the least anchor plus
+    ``offsets[0]``.  ``lead`` (:func:`rarest_lead`) drops, before any
+    position decode, the blocks holding none of that term's docs
+    (spimi.lead_pruned).  Returns the result columns."""
     from docs_indexer_spark.operators.spimi import (
-        _positions_batch,
+        decode_positions,
         lead_pruned,
     )
     from docs_indexer_spark.operators.wand import _in_sorted
 
     tids = [int(t) for t in term_ids]
-    if lead is not None:
-        blocks = lead_pruned(blocks, lead)
-    dec = _positions_batch(blocks)
-    term = dec.column("term_id").to_numpy()
-    doc = dec.column("doc_id").to_numpy()
-    pos = dec.column("positions")
-    n_pos = np.diff(pos.offsets.to_numpy())
-    # only docs holding every phrase term can match: drop the other
-    # postings before touching their positions
-    docs = None
-    for t in set(tids):
-        d = np.unique(doc[term == t])
-        docs = d if docs is None else np.intersect1d(
-            docs, d, assume_unique=True
-        )
-    rows = _in_sorted(doc, docs)
-    flat = pos.values.to_numpy()[np.repeat(rows, n_pos)].astype(np.int64)
     none = {"doc_id": np.empty(0, np.int64),
             "n_occurrences": np.empty(0, np.int32),
             "first_pos": np.empty(0, np.int32)}
-    if not len(flat):
+    if lead is not None:
+        blocks = lead_pruned(blocks, lead)
+    # blocks in (term_id, first_doc_id) order: a term's blocks cover
+    # disjoint doc ranges, so each term's postings decode to one slice
+    # ascending by doc, and each posting's positions ascend
+    bt = blocks.column("term_id").to_numpy()
+    bf = blocks.column("first_doc_id").to_numpy()
+    if len(bt) > 1 and np.any(
+        (bt[1:] < bt[:-1]) | ((bt[1:] == bt[:-1]) & (bf[1:] < bf[:-1]))
+    ):
+        blocks = blocks.take(np.lexsort((bf, bt)))
+    dec = decode_positions(blocks)
+    terms = sorted(set(tids))
+    lo_p = np.searchsorted(dec.term_id, terms, side="left")
+    hi_p = np.searchsorted(dec.term_id, terms, side="right")
+    # only docs holding every phrase term can match
+    docs = dec.doc_id[lo_p[0]:hi_p[0]]
+    for s, e in zip(lo_p[1:], hi_p[1:]):
+        docs = docs[_in_sorted(docs, dec.doc_id[s:e])]
+    keep = _in_sorted(dec.doc_id, docs)
+    if not keep.any():
         return none
-    p_doc = np.repeat(np.searchsorted(docs, doc[rows]), n_pos[rows])
-    p_term = np.repeat(term[rows], n_pos[rows])
-    # (doc, anchor) packed into one int64 key: dense doc index times the
-    # anchor span (positions are int32, so the key fits); each slot's
-    # keys are distinct, and the rarest slot's keys are intersected with
-    # every other slot's
-    lo = int(flat.min()) - max(offsets)
-    span = int(flat.max()) - lo + 1
-    acc = None
-    for i in sorted(range(len(tids)), key=lambda i: term_dfs[tids[i]]):
-        m = p_term == tids[i]
-        keys = np.sort(p_doc[m] * span + (flat[m] - offsets[i] - lo))
-        acc = keys if acc is None else acc[_in_sorted(acc, keys)]
+    tf = dec.tf[keep]
+    # (doc, position) packed into one int64 key: the dense doc index in
+    # the high 32 bits, the position plus r in the low ones (positions
+    # are int32; offsets rebased to 0..r), so keys ascend within each
+    # term's slice and a shifted anchor never leaves its doc
+    off = [int(o) - min(offsets) for o in offsets]
+    r = max(off)
+    keys = dec.positions[np.repeat(keep, dec.tf)]
+    keys += np.repeat((np.searchsorted(docs, dec.doc_id[keep]) << 32) + r, tf)
+    # each term's slice of the kept positions
+    kept_before = np.concatenate(([0], np.cumsum(keep)))
+    pos_before = np.concatenate(([0], np.cumsum(tf)))
+    term_keys = {
+        t: keys[pos_before[kept_before[s]]:pos_before[kept_before[e]]]
+        for t, s, e in zip(terms, lo_p, hi_p)
+    }
+    # anchors of the slot with the fewest kept positions, then kept
+    # where every other slot's term holds anchor + its offset: the few
+    # anchors are searched in the larger slice, which is never re-keyed
+    slots = sorted(range(len(tids)), key=lambda i: len(term_keys[tids[i]]))
+    acc = term_keys[tids[slots[0]]] - off[slots[0]]
+    for i in slots[1:]:
+        acc = acc[_in_sorted(acc + off[i], term_keys[tids[i]])]
     if not len(acc):  # the terms co-occur, never at the phrase offsets
         return none
     # keys sort by doc, then anchor: a doc's first key is its least anchor
-    hit_doc = acc // span
+    hit_doc = acc >> 32
     first = np.flatnonzero(
         np.concatenate(([True], hit_doc[1:] != hit_doc[:-1]))
     )
-    res_doc = docs[hit_doc[first]]
     n_occ = np.diff(np.append(first, len(acc)))
-    first_pos = acc[first] % span + lo + offsets[0]
-    top = np.lexsort((res_doc, -n_occ))[:k]
+    top = np.argsort(-n_occ, kind="stable")[:k]
     return {
-        "doc_id": res_doc[top],
+        "doc_id": docs[hit_doc[first[top]]],
         "n_occurrences": n_occ[top].astype(np.int32),
-        "first_pos": first_pos[top].astype(np.int32),
+        "first_pos": ((acc[first[top]] & 0xFFFFFFFF) - r + off[0]).astype(
+            np.int32
+        ),
     }
 
 
@@ -301,7 +312,7 @@ def phrase_match_blocks(
     lead = rarest_lead(tids, nd, block_size)
 
     def per_bucket(table: pa.Table) -> pa.Table:
-        res = phrase_topk(table, tids, offsets, nd, None, lead=lead)
+        res = phrase_topk(table, tids, offsets, None, lead=lead)
         return pa.table(
             [res["doc_id"], res["n_occurrences"], res["first_pos"]],
             names=[id_col, "n_occurrences", "first_pos"],

@@ -424,12 +424,21 @@ def build_blocks(
     )
 
 
-def _positions_batch(rows) -> pa.RecordBatch:
-    """Decode positional block rows (an Arrow batch or table) into
-    (term_id, doc_id, positions) postings — each binary column's varint
-    streams decode in one vectorized pass, never per block or per
-    posting in Python.  Doc ids un-delta per block and positions per
-    posting, by segmented cumsum."""
+class Positions(NamedTuple):
+    """Decoded positional postings, one entry per posting in block row
+    order, plus every posting's positions back to back."""
+
+    term_id: np.ndarray   # int64
+    doc_id: np.ndarray    # int64
+    tf: np.ndarray        # int64, also the posting's number of positions
+    positions: np.ndarray  # int64
+
+
+def decode_positions(rows) -> Positions:
+    """Decode positional block rows (an Arrow batch or table) into numpy
+    postings — each binary column's varint streams decode in one
+    vectorized pass, never per block or per posting in Python.  Doc ids
+    un-delta per block and positions per posting, by segmented cumsum."""
     from docs_indexer_spark.operators.compression import (
         segmented_cumsum,
         varint_decode_column,
@@ -438,20 +447,11 @@ def _positions_batch(rows) -> pa.RecordBatch:
     id_gaps, n_docs = varint_decode_column(rows.column("doc_ids_bin"))
     tfs = varint_decode_column(rows.column("tfs_bin"))[0].astype(np.int64)
     pos_gaps = varint_decode_column(rows.column("positions_bin"))[0]
-    offsets = np.concatenate(([0], np.cumsum(tfs)))
-    return pa.RecordBatch.from_arrays(
-        [
-            pa.array(np.repeat(
-                rows.column("term_id").to_numpy().astype(np.int64), n_docs
-            ), type=pa.int64()),
-            pa.array(segmented_cumsum(id_gaps, n_docs), type=pa.int64()),
-            pa.ListArray.from_arrays(
-                pa.array(offsets, type=pa.int32()),
-                pa.array(segmented_cumsum(pos_gaps, tfs).astype(np.int32),
-                         type=pa.int32()),
-            ),
-        ],
-        names=["term_id", "doc_id", "positions"],
+    return Positions(
+        np.repeat(rows.column("term_id").to_numpy().astype(np.int64), n_docs),
+        segmented_cumsum(id_gaps, n_docs),
+        tfs,
+        segmented_cumsum(pos_gaps, tfs),
     )
 
 
@@ -461,14 +461,16 @@ def lead_pruned(table: pa.Table, lead_term: int) -> pa.Table:
     other block whose ``[first_doc_id, last_doc_id]`` range holds one of
     the lead term's docs (wand.blocks_containing).  Exact over any set of
     whole doc ranges: one bucket's rows, or a query's every hit block."""
-    from docs_indexer_spark.operators.compression import delta_decode_doc_ids
+    from docs_indexer_spark.operators.compression import (
+        segmented_cumsum,
+        varint_decode_column,
+    )
     from docs_indexer_spark.operators.wand import blocks_containing
 
     is_lead = table.column("term_id").to_numpy() == lead_term
-    lead_docs = np.sort(np.concatenate([np.empty(0, np.int64)] + [
-        delta_decode_doc_ids(b) for b in
-        table.column("doc_ids_bin").filter(pa.array(is_lead)).to_pylist()
-    ]))
+    lead_docs = np.sort(segmented_cumsum(*varint_decode_column(
+        table.column("doc_ids_bin").filter(pa.array(is_lead))
+    )))
     keep = is_lead | blocks_containing(
         table.column("first_doc_id").to_numpy(),
         table.column("last_doc_id").to_numpy(),

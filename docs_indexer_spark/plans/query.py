@@ -26,10 +26,12 @@ from __future__ import annotations
 import math
 import os
 import threading
+from bisect import bisect_left, bisect_right
 from collections import OrderedDict
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
@@ -73,6 +75,54 @@ def _local_path(uri: str) -> str:
     return unquote(u.path) if u.scheme == "file" else uri
 
 
+class DeletionIndex:
+    """A generation's SymSpell ``deletions.parquet`` (variant → term,
+    sorted and range-partitioned by variant), probed on the driver.
+
+    Every file's footer and every row group's variant [min, max] are
+    parsed once, here: the reader pins its generation, and a published
+    generation never changes.  A probe then reads only the row groups
+    whose range can hold one of its variants (all of a row group without
+    statistics), each file through its own handle, so concurrent queries
+    share the parsed footers safely."""
+
+    def __init__(self, path: str):
+        self.files = sorted(
+            os.path.join(path, f) for f in os.listdir(path)
+            if f.endswith(".parquet")
+        )
+        # (file, its footer, row group, variant min, variant max)
+        self._groups = []
+        for f in self.files:
+            md = pq.read_metadata(f)
+            col = md.schema.names.index("variant")
+            for i in range(md.num_row_groups):
+                st = md.row_group(i).column(col).statistics
+                lo, hi = (
+                    (st.min, st.max) if st is not None and st.has_min_max
+                    else (None, None)
+                )
+                self._groups.append((f, md, i, lo, hi))
+
+    def terms(self, variants: list[str]) -> list[str]:
+        """The term of every row whose variant is one of ``variants``."""
+        vs = sorted(set(variants))
+        hits: dict[str, tuple] = {}
+        for f, md, i, lo, hi in self._groups:
+            if lo is None or bisect_left(vs, lo) < bisect_right(vs, hi):
+                hits.setdefault(f, (md, []))[1].append(i)
+        want = pa.array(vs, pa.string())
+        out: list[str] = []
+        for f, (md, groups) in hits.items():
+            t = pq.ParquetFile(f, metadata=md).read_row_groups(
+                groups, columns=["variant", "term"]
+            )
+            out += t.column("term").filter(
+                pc.is_in(t.column("variant"), value_set=want)
+            ).to_pylist()
+        return out
+
+
 class IndexReader:
     def __init__(self, spark: SparkSession, catalog: SnapshotCatalog):
         self.spark = spark
@@ -105,12 +155,11 @@ class IndexReader:
         order = np.argsort(ids, kind="stable")
         self._term_ids = ids[order]
         self._term_dfs = tbl.column("df").to_numpy().astype(np.int64)[order]
-        # the SymSpell deletion index (variant → term), sorted and
-        # range-partitioned by variant; None for generations published
-        # before it existed
+        # the SymSpell deletion index (variant → term); None for
+        # generations published before it existed
         dels = os.path.join(self.gen_path, "deletions.parquet")
         self._deletions = (
-            ds.dataset(dels, format="parquet") if os.path.exists(dels) else None
+            DeletionIndex(dels) if os.path.exists(dels) else None
         )
         self._lock = threading.Lock()
         self._df_stats: DataFrame | None = None
@@ -503,12 +552,13 @@ class IndexReader:
         neighborhood) rows, never the vocabulary; the caller OSA-verifies.
 
         With the published SymSpell deletion index, the query terms'
-        deletion variants filter ``deletions.parquet`` with pyarrow (the
-        table is sorted by variant, so row-group statistics skip most of
-        it) and the candidates' dfs come from the driver-side term table:
-        no Spark job.  Generations published before the deletion index
-        fall back to a df_stats scan bounded by threshold-Levenshtein
-        ≤ 2·fuzziness (lev ≤ 2·OSA, so the bound is a superset)."""
+        deletion variants are looked up in ``deletions.parquet`` with
+        pyarrow, reading only the row groups whose variant range can hold
+        one (:class:`DeletionIndex`), and the candidates' dfs come from
+        the driver-side term table: no Spark job.  Generations published
+        before the deletion index fall back to a df_stats scan bounded by
+        threshold-Levenshtein ≤ 2·fuzziness (lev ≤ 2·OSA, so the bound is
+        a superset)."""
         if self._deletions is None:
             cond = None
             for t in terms:
@@ -527,11 +577,7 @@ class IndexReader:
         variants = sorted(
             {v for t in terms for v in _deletion_variants(t, fuzziness)}
         )
-        words = sorted(set(
-            self._deletions.to_table(
-                columns=["term"], filter=ds.field("variant").isin(variants)
-            ).column("term").to_pylist()
-        ))
+        words = sorted(set(self._deletions.terms(variants)))
         ids = [spark_xxhash64_str(w) for w in words]
         dfs = self._dfs(ids)
         return [(w, t, dfs[t]) for w, t in zip(words, ids) if t in dfs]
@@ -616,7 +662,7 @@ class IndexReader:
         if where is None and est <= LOCAL_MAX_BLOCKS:
             return local_frame(self.spark, PHRASE_SCHEMA, phrase_topk(
                 self._local_blocks(dfs, POSITION_COLUMNS), term_ids,
-                offsets, dfs, k, lead=rarest_lead(term_ids, dfs, bsz),
+                offsets, k, lead=rarest_lead(term_ids, dfs, bsz),
             ))
         res = phrase_match_blocks(
             self._blocks_for(term_ids), term_ids, offsets=offsets,

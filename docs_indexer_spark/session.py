@@ -8,6 +8,7 @@ cluster: ~2-3× total cores).
 
 from __future__ import annotations
 
+import functools
 import os
 
 from pyspark.sql import SparkSession
@@ -47,6 +48,18 @@ def get_spark(
     return builder.getOrCreate()
 
 
+@functools.lru_cache(maxsize=32)
+def _ddl_schemas(schema: str):
+    """(StructType, Arrow schema) of a DDL string.  Parsing goes through
+    the JVM (~3 ms), and every local result of one kind has the same
+    schema, so each string is parsed once per process."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    struct = _parse_datatype_string(schema)
+    return struct, to_arrow_schema(struct)
+
+
 def local_frame(spark: SparkSession, schema: str, columns=None):
     """A small driver-side result — ``columns`` maps each field of the
     DDL ``schema`` to its values, already in result order; None is the
@@ -56,11 +69,8 @@ def local_frame(spark: SparkSession, schema: str, columns=None):
     ``orderBy``/``limit``/``filter`` on top of any local relation starts
     jobs again, so callers hand over the final rows."""
     import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import _parse_datatype_string
 
-    struct = _parse_datatype_string(schema)
-    arrow = to_arrow_schema(struct)
+    struct, arrow = _ddl_schemas(schema)
     if columns is None:
         table = arrow.empty_table()
     else:

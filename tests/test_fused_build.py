@@ -27,10 +27,21 @@ from docs_indexer_spark.operators.compression import (
     varint_decode,
 )
 from docs_indexer_spark.operators.fused import fused_build_blocks
-from docs_indexer_spark.operators.spimi import _positions_batch
+from docs_indexer_spark.operators.spimi import decode_positions
 from tests.conftest import SF_DIR
 
 SF = f"{SF_DIR}/documents.parquet"
+
+
+def _decoded_positions(table):
+    """{(term_id, doc_id): positions} of positional block rows, through
+    the phrase kernel's decode (spimi.decode_positions)."""
+    dec = decode_positions(table)
+    lists = np.split(dec.positions, np.cumsum(dec.tf)[:-1])
+    return {
+        (int(t), int(d)): p.tolist()
+        for t, d, p in zip(dec.term_id, dec.doc_id, lists)
+    }
 
 # stopwords mid-text, possessives and conflated forms on top of the
 # generated corpus (whose only stopwords are "the" and "a")
@@ -140,14 +151,7 @@ def test_build_index_blocks_match_reference(
         # the stored float32 norm is bit-equal to the reference's
         assert norm == _norm(ref_tf, dl[key[1]], avgdl), key
     if positions:
-        decoded = _positions_batch(table)
-        got_pos = {
-            (t, d): list(p) for t, d, p in zip(
-                decoded.column("term_id").to_pylist(),
-                decoded.column("doc_id").to_pylist(),
-                decoded.column("positions").to_pylist(),
-            )
-        }
+        got_pos = _decoded_positions(table)
         assert got_pos == {k: sorted(v) for k, v in want.items()}
 
     df_pub = {
@@ -180,10 +184,7 @@ def test_fused_positions_equal_postings(spark, analyzer):
     fused = fused_build_blocks(
         docs, analyzer=analyzer, n_buckets=4, positions=True
     )
-    got = {
-        (r["term_id"], r["doc_id"]): r["positions"]
-        for r in _positions_batch(fused.blocks.toArrow()).to_pylist()
-    }
+    got = _decoded_positions(fused.blocks.toArrow())
     fused.unpersist()
     if analyzer == "english":
         want = {}

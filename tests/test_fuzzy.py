@@ -101,27 +101,37 @@ def test_search_fuzzy_transposition_via_symspell(
     # deletions.parquet, through the variant filter, on the driver — it
     # starts no Spark job, so it neither scans df_stats nor runs
     # levenshtein anywhere
+    from docs_indexer_spark.operators.suggest import _deletion_variants
+    from docs_indexer_spark.plans import query
+
     dels = reader._deletions
     root = os.path.join(gen, "deletions.parquet")
     assert dels.files and all(f.startswith(root) for f in dels.files)
-    reads = []
+    reads, opened = [], []
 
     class Recording:
-        def to_table(self, **kwargs):
-            reads.append(kwargs)
-            return dels.to_table(**kwargs)
+        def terms(self, variants):
+            reads.append(list(variants))
+            return dels.terms(variants)
 
+    def parquet_file(path, **kwargs):
+        opened.append(path)
+        return pq_file(path, **kwargs)
+
+    pq_file = query.pq.ParquetFile
     reader._deletions = Recording()
     sc = spark.sparkContext
     sc.setJobGroup("fuzzy-candidate-audit", "candidate probe")
     try:
-        cands = reader._fuzzy_candidates(["winodw"], 1)
+        with monkeypatch.context() as m:
+            m.setattr(query.pq, "ParquetFile", parquet_file)
+            cands = reader._fuzzy_candidates(["winodw"], 1)
     finally:
         sc.setJobGroup("", "")
     assert sc.statusTracker().getJobIdsForGroup("fuzzy-candidate-audit") == []
-    assert len(reads) == 1 and reads[0]["columns"] == ["term"]
-    flt = str(reads[0]["filter"])
-    assert "variant" in flt and "is_in" in flt
+    assert len(reads) == 1
+    assert set(reads[0]) == set(_deletion_variants("winodw", 1))
+    assert opened and all(f in dels.files for f in opened)
     assert "window" in {term for term, _, _ in cands}
     reader._deletions = dels
     reader.close()

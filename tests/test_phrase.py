@@ -83,12 +83,14 @@ def _build_pos_blocks(spark, docs, n_buckets=4):
 
 def _decoded_positions(blocks):
     """{(term_id, doc_id): positions} of positional blocks, through the
-    phrase kernel's decode (spimi._positions_batch)."""
-    from docs_indexer_spark.operators.spimi import _positions_batch
+    phrase kernel's decode (spimi.decode_positions)."""
+    from docs_indexer_spark.operators.spimi import decode_positions
 
+    dec = decode_positions(blocks.toArrow())
+    lists = np.split(dec.positions, np.cumsum(dec.tf)[:-1])
     return {
-        (r["term_id"], r["doc_id"]): r["positions"]
-        for r in _positions_batch(blocks.toArrow()).to_pylist()
+        (int(t), int(d)): p.tolist()
+        for t, d, p in zip(dec.term_id, dec.doc_id, lists)
     }
 
 
