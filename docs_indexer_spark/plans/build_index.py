@@ -49,6 +49,16 @@ from docs_indexer_spark.operators import spimi
 from docs_indexer_spark.operators.postings import token_relations
 from docs_indexer_spark.sources.catalog import SnapshotCatalog
 
+# Parquet row-group size of the published deletions.parquet.  On the
+# `serve` benchmark index (16 files, 753,834 rows) 32 KB cuts the table
+# into 479 row groups of ~1.6k rows, and the fuzzy pool's candidate
+# probe (BENCH/phrase_kernel.py probe_ms, median of 40 queries) took
+# 1.5 ms against 5.9 ms with one row group per file, for 7% more bytes
+# (4.40 against 4.11 MB).  A sweep of the same probe over rewritten
+# copies of the table: 6.6 / 1.4 / 1.2 / 1.6 / 2.1 ms with one row group
+# per file / 8 / 32 / 64 / 128 KB, for +0 / 23 / 7 / 5 / 2% bytes
+DELETION_ROW_GROUP_BYTES = 32 * 1024
+
 
 def prepare_documents(docs: DataFrame, use_extraction: bool = False) -> DataFrame:
     """input_hint table → (doc_id, url, warc_ts, [html,] text, lang).
@@ -272,26 +282,7 @@ def build_index(
     df_stats = spark.read.schema(dfs.schema).parquet(
         f"{gen_path}/df_stats.parquet"
     )
-    # SymSpell deletion-neighborhood index over the index vocabulary
-    # (variant → term, every ≤2-deletion variant): fuzzy queries become
-    # equi-join probes + a driver-side Damerau-OSA verify on the handful
-    # of joined candidates, instead of a per-query vocabulary scan — at a
-    # 10^8-term web vocabulary that is the difference between ms and
-    # minutes per query.  ~45× vocabulary rows at typical term lengths;
-    # built once per published generation.
-    from docs_indexer_spark.operators.suggest import deletion_index
-
-    # range-partitioned + sorted by variant: each query's variant IN-list
-    # prunes whole files via parquet min/max stats — at a 10^8-term web
-    # vocabulary this table is ~45× vocabulary rows, so a coalesced write
-    # would both serialize the build and defeat serving-side pruning
-    deletion_index(
-        df_stats.select("term", F.col("df").alias("cf")), max_edits=2
-    ).select("variant", "term").repartitionByRange(
-        16, "variant"
-    ).sortWithinPartitions("variant").write.mode("overwrite").parquet(
-        f"{gen_path}/deletions.parquet"
-    )
+    write_deletions(df_stats, f"{gen_path}/deletions.parquet")
     # published in BOTH id modes: serving-side filtered search and
     # rendering joins must read generation-pinned doc rows
     docs_store.write.mode("overwrite").parquet(f"{gen_path}/docs.parquet")
@@ -323,6 +314,31 @@ def build_index(
     # copy of its encode rows under _stage/
     catalog.cleanup_build(build_id)
     return metrics
+
+
+def write_deletions(df_stats: DataFrame, path: str) -> None:
+    """Publish the SymSpell deletion-neighborhood index of the vocabulary
+    ``df_stats`` (term, df) at ``path``: (variant, term) for every
+    ≤2-deletion variant.  Fuzzy queries become probes of this table plus
+    a driver-side Damerau-OSA verify of the handful of candidates,
+    instead of a per-query vocabulary scan — at a 10^8-term web
+    vocabulary that is the difference between ms and minutes per query.
+    ~45× vocabulary rows at typical term lengths.
+
+    Range-partitioned + sorted by variant: each query's variant IN-list
+    prunes whole files via parquet min/max stats; a coalesced write would
+    both serialize the build and defeat serving-side pruning.  Row groups
+    of :data:`DELETION_ROW_GROUP_BYTES` let a probe read the few row
+    groups whose variant range holds a query variant, not a whole file."""
+    from docs_indexer_spark.operators.suggest import deletion_index
+
+    deletion_index(
+        df_stats.select("term", F.col("df").alias("cf")), max_edits=2
+    ).select("variant", "term").repartitionByRange(
+        16, "variant"
+    ).sortWithinPartitions("variant").write.mode("overwrite").option(
+        "parquet.block.size", DELETION_ROW_GROUP_BYTES
+    ).parquet(path)
 
 
 def _layout_stats(manifest: dict) -> dict:

@@ -14,7 +14,9 @@ Two routes (docs/DESIGN.md "Serving cost model"):
 - driver-local, for a query whose estimated hit blocks are at most
   :data:`LOCAL_MAX_BLOCKS`: the driver reads the query's blocks with
   pyarrow and runs the same kernels in-process; the already-sorted top-k
-  comes back as a DataFrame over an Arrow table — no Spark job at all;
+  comes back as a :class:`~docs_indexer_spark.session.LazyFrame` over an
+  Arrow table, whose ``collect()`` the driver answers — no Spark job and
+  no JVM call at all;
 - distributed, above it: executors scan + score their buckets and
   TakeOrderedAndProject merges k rows to the driver.  Every query kind
   runs its scoring kernel as its ONE Python stage and starts no Spark
@@ -56,11 +58,15 @@ FILTER_MEMO_SIZE = 8
 # most this many runs on the driver instead of as Spark jobs.  Fitted by
 # a sweep of both routes on 10,000- and 200,000-doc indexes, 4-core
 # machine, local[3] (docs/DESIGN.md "Serving cost model"): the local
-# route costs ~0.2 s plus ~0.5 µs per posting and won at every measured
-# size, by 2× at 13k blocks and 1.1× at 67k against the distributed
-# exact scorer, whose 3 cores catch up near ~100k blocks.  The cap sits
-# where local is still ~1.6× faster, and it bounds a local query's
-# driver memory at this many times the largest block's bytes
+# route then cost ~0.2 s plus ~0.5 µs per posting and won at every
+# measured size, by 2× at 13k blocks and 1.1× at 67k against the
+# distributed exact scorer, whose 3 cores catch up near ~100k blocks.
+# Its fixed cost is now ~5 ms for a scored query on the `serve` index
+# (no Spark relation, result frame or collect crosses into the JVM;
+# BENCH/local_route_layers_change.json); the per-posting cost, which
+# sets the crossover, is unchanged and the cap is not refitted.  The
+# cap sits where local was still ~1.6× faster, and it bounds a local
+# query's driver memory at this many times the largest block's bytes
 LOCAL_MAX_BLOCKS = 32768
 
 PHRASE_SCHEMA = "doc_id long, n_occurrences int, first_pos int"
@@ -217,8 +223,10 @@ class IndexReader:
     def _local_blocks(self, term_ids, columns: list[str]) -> pa.Table:
         """The hit blocks of ``term_ids`` read on the driver: the files of
         the same manifest-pruned relation the distributed scan reads
-        (:meth:`_blocks_for`, so both routes read identical inputs),
-        with ``term_id IN`` pushed into pyarrow's row-group pruning."""
+        (:meth:`_blocks_for`, so both routes read identical inputs; its
+        ``inputFiles()`` come from the manifest and the Spark relation is
+        never built), with ``term_id IN`` pushed into pyarrow's row-group
+        pruning."""
         ids = sorted(int(t) for t in term_ids)
         files = [_local_path(f) for f in self._blocks_for(ids).inputFiles()]
         return ds.dataset(files, format="parquet").to_table(

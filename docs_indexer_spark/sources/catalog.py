@@ -35,6 +35,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from docs_indexer_spark.session import LazyFrame, file_uri
+
 _POINTER = "CURRENT"
 _UNSET = object()
 
@@ -343,7 +345,14 @@ class SnapshotCatalog:
     def read_pruned_at(spark: SparkSession, gen_path: str, name: str,
                        key: str, values: list) -> DataFrame:
         """Manifest-pruned read of an EXPLICIT generation path (see
-        :meth:`read_at` for why readers pin the path)."""
+        :meth:`read_at` for why readers pin the path).
+
+        The pruned relation is a :class:`LazyFrame`: its ``inputFiles()``
+        are the kept files, answered from the manifest, and the Spark
+        relation over them is built only when something else needs it,
+        so a driver-side reader of the files never touches the JVM.  A
+        missing or other-key manifest, a file without stats, or no
+        values return the full relation, as before."""
         root = os.path.join(gen_path, name)
         if not os.path.exists(root):
             raise FileNotFoundError(root)
@@ -352,27 +361,27 @@ class SnapshotCatalog:
             return spark.read.parquet(root)
         with open(mpath) as f:
             manifest = json.load(f)
-        if manifest.get("key") != key:
+        files = manifest["files"] if manifest.get("key") == key else []
+        if not files or any(e["min"] is None for e in files):
+            # no usable manifest, or a stats gap → no pruning
             return spark.read.parquet(root)
-        keep = []
-        for e in manifest["files"]:
-            if e["min"] is None:
-                return spark.read.parquet(root)  # stats gap → no pruning
-            if any(e["min"] <= v <= e["max"] for v in values):
-                keep.append(os.path.join(root, e["file"]))
-        if not keep:
-            # provably empty: keep one file so the schema resolves; the
-            # caller's IN-filter yields zero rows from it
-            keep = [os.path.join(root, manifest["files"][0]["file"])] \
-                if manifest["files"] else [root]
-        reader = spark.read
-        schema = _written_schema(keep[0]) if keep[0] != root else None
-        if schema is not None:
+        keep = [
+            os.path.join(root, e["file"]) for e in files
+            if any(e["min"] <= v <= e["max"] for v in values)
+        ]
+        # provably empty: keep one file so the schema resolves; the
+        # caller's IN-filter yields zero rows from it
+        keep = keep or [os.path.join(root, files[0]["file"])]
+
+        def build() -> DataFrame:
             # Spark infers a parquet schema with a Spark JOB (one per
             # read); a per-query read takes the writer's recorded schema
             # from one footer on the driver instead
-            reader = reader.schema(schema)
-        return reader.parquet(*keep)
+            schema = _written_schema(keep[0])
+            reader = spark.read if schema is None else spark.read.schema(schema)
+            return reader.parquet(*keep)
+
+        return LazyFrame(spark, build, files=[file_uri(p) for p in keep])
 
     # -- incremental snapshot scan (Iceberg incremental-read analogue) ----
     def incremental(self, spark: SparkSession, table: str, name: str,

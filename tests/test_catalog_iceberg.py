@@ -157,6 +157,80 @@ def test_local_search_reads_a_file_per_query_term(spark, published_index,
         assert kept and max(kept) <= k, (q, kept)
 
 
+def test_pruned_input_files_equal_sparks(spark, published_index, tmp_path):
+    """The pruned relation answers ``inputFiles()`` from the manifest with
+    the URIs Spark itself reports for the kept files (also under a path
+    that needs URI quoting), and builds the same relation on first use."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from docs_indexer_spark.plans.query import _local_path
+    from docs_indexer_spark.session import LazyFrame
+
+    cat, reader = published_index
+    odd = tmp_path / "a b" / "ü%x#y"
+    shutil.copytree(cat.generation_path("index"), odd)
+    tids = [int(t) for t in reader._term_ids[[0, 5, -1]]]
+    for gen in (cat.generation_path("index"), str(odd)):
+        for values in ([tids[0]], tids, [123456789]):
+            df = SnapshotCatalog.read_pruned_at(
+                spark, gen, "blocks.parquet", "term_id", values
+            )
+            assert isinstance(df, LazyFrame)
+            files = df.inputFiles()
+            assert files and all(
+                os.path.exists(_local_path(f)) for f in files
+            )
+            own = spark.read.parquet(*map(_local_path, files)).inputFiles()
+            assert sorted(files) == sorted(own)
+            assert sorted(DataFrame.inputFiles(df)) == sorted(files)
+            want = spark.read.parquet(
+                os.path.join(gen, "blocks.parquet")
+            ).filter(F.col("term_id").isin(values))
+            assert sorted(df.filter(F.col("term_id").isin(values)).collect()) \
+                == sorted(want.collect())
+
+
+def test_read_pruned_fallbacks_return_the_full_relation(
+    spark, published_index, tmp_path
+):
+    """No values, a missing manifest, a manifest of another key and a
+    file without stats each read the whole dataset, as a plain Spark
+    relation."""
+    from docs_indexer_spark.session import LazyFrame
+
+    cat, reader = published_index
+    gen = str(tmp_path / "gen")
+    shutil.copytree(cat.generation_path("index"), gen)
+    root = os.path.join(gen, "blocks.parquet")
+    mpath = os.path.join(root, "_MANIFEST.json")
+    with open(mpath) as f:
+        manifest = json.load(f)
+    full = sorted(spark.read.parquet(root).inputFiles())
+    tid = int(reader._term_ids[0])
+
+    def read(values=(tid,)):
+        return SnapshotCatalog.read_pruned_at(
+            spark, gen, "blocks.parquet", "term_id", list(values)
+        )
+
+    def check(df):
+        assert not isinstance(df, LazyFrame)
+        assert sorted(df.inputFiles()) == full
+
+    assert len(read().inputFiles()) < len(full)
+    check(read(()))
+    for edit in (
+        lambda m: {**m, "key": "bucket"},
+        lambda m: {**m, "files": [{**m["files"][0], "min": None}]
+                   + m["files"][1:]},
+    ):
+        with open(mpath, "w") as f:
+            json.dump(edit(manifest), f)
+        check(read())
+    os.remove(mpath)
+    check(read())
+
+
 @pytest.fixture(scope="module")
 def hash_layout(spark, positional_index, tmp_path_factory):
     """A copy of the positional serving index whose blocks are rewritten

@@ -137,6 +137,67 @@ def test_search_fuzzy_transposition_via_symspell(
     reader.close()
 
 
+def test_deletions_published_in_small_sorted_row_groups(spark, tmp_path):
+    """build_index.write_deletions publishes 16 range files of (variant,
+    term) rows sorted by variant, cut into row groups of
+    ~DELETION_ROW_GROUP_BYTES whose variant ranges follow each other; its
+    rows are the vocabulary's deletion index, and a probe reads them back.
+    The vocabulary is 8,000 random words (the test corpora's tables fit
+    in one row group)."""
+    import glob
+    import os
+    import random
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from docs_indexer_spark.operators.suggest import (
+        _deletion_variants,
+        deletion_index,
+    )
+    from docs_indexer_spark.plans.build_index import write_deletions
+    from docs_indexer_spark.plans.query import DeletionIndex
+
+    rng = random.Random(7)
+    words = sorted({
+        "".join(rng.choice("abcdefghijklmnop") for _ in range(rng.randint(4, 9)))
+        for _ in range(8000)
+    })
+    vocab = spark.createDataFrame(
+        [(w, 1 + i % 5) for i, w in enumerate(words)], "term string, df long"
+    )
+    path = str(tmp_path / "deletions.parquet")
+    write_deletions(vocab, path)
+    files = sorted(glob.glob(os.path.join(path, "*.parquet")))
+    assert len(files) == 16
+    rows, spans = [], []
+    for f in files:
+        pf = pq.ParquetFile(f)
+        assert pf.schema_arrow == pa.schema(
+            [("variant", pa.string()), ("term", pa.string())]
+        )
+        t = pf.read()
+        variants = t.column("variant").to_pylist()
+        assert variants == sorted(variants)
+        rows += zip(variants, t.column("term").to_pylist())
+        md = pf.metadata
+        spans += [
+            (md.row_group(i).column(0).statistics.min,
+             md.row_group(i).column(0).statistics.max)
+            for i in range(md.num_row_groups)
+        ]
+    assert all(a_hi <= b_lo for (_, a_hi), (b_lo, _) in zip(spans, spans[1:]))
+    assert len(spans) >= 4 * len(files), len(spans)
+    want = deletion_index(
+        vocab.select("term", F.col("df").alias("cf")), max_edits=2
+    ).select("variant", "term").collect()
+    assert sorted(rows) == sorted(map(tuple, want))
+    probe = _deletion_variants(words[100], 1)
+    assert sorted(DeletionIndex(path).terms(probe)) == sorted(
+        t for v, t in rows if v in set(probe)
+    )
+
+
 def test_search_fuzzy_fallback_without_deletion_index(
     spark, fuzzy_index, monkeypatch
 ):

@@ -5,6 +5,7 @@ relative, phrase rows identical.  Each test forces the two routes by
 monkeypatching LOCAL_MAX_BLOCKS (conftest.on_both_routes) over the
 shared positional serving index."""
 
+import sys
 from collections import Counter
 from concurrent.futures import ThreadPoolExecutor
 
@@ -283,3 +284,149 @@ def test_concurrent_queries_on_the_local_route(
             rank_identical(want[i], g, tol=1e-9)
         else:
             assert g == want[i]
+
+
+def _driver_rows_match_jvm(df, schema):
+    """``df`` is a driver-held answer whose ``collect()`` equals the rows
+    its JVM relation collects: values, their Python types, field names,
+    and the relation's schema is the DDL ``schema``."""
+    from pyspark.sql.classic.dataframe import DataFrame
+    from pyspark.sql.types import StructType
+
+    from docs_indexer_spark.session import LazyFrame
+
+    assert isinstance(df, LazyFrame)
+    rows = df.collect()
+    jvm = DataFrame.collect(df)
+    assert rows == jvm
+    assert [r.asDict() for r in rows] == [r.asDict() for r in jvm]
+    assert [list(map(type, r)) for r in rows] == [
+        list(map(type, r)) for r in jvm
+    ]
+    assert df.schema == StructType.fromDDL(schema)
+    assert all(list(r.__fields__) == df.schema.names for r in rows + jvm)
+    return rows
+
+
+def test_driver_rows_equal_the_jvm_relation(
+    reader, monkeypatch, serving_docs, phrase_pairs
+):
+    """Every local kind and every early-out answers ``collect()`` on the
+    driver with exactly the rows the materialised JVM relation gives."""
+    from docs_indexer_spark.operators import bm25, phrase, wand
+    from docs_indexer_spark.operators.bm25 import TOPK_SCHEMA
+    from docs_indexer_spark.plans import query
+    from docs_indexer_spark.plans.query import PHRASE_SCHEMA
+
+    monkeypatch.setattr(query, "LOCAL_MAX_BLOCKS", 10**9)
+    last = reader.search(Q, k=3).collect()[-1]
+    blocks = reader.blocks
+    answers = {
+        "bm25": lambda: reader.search(Q, k=10),
+        "exact": lambda: reader.search(Q, k=10, exact=True),
+        "and": lambda: reader.search("spark join", k=10, operator="and"),
+        "search_after": lambda: reader.search(
+            Q, k=10, search_after=(last["score"], last["doc_id"])
+        ),
+        "filtered": lambda: reader.search(Q, k=10, where="lang = 'de'"),
+        "fuzzy": lambda: reader.search_fuzzy("winodw", k=10),
+        "prefix": lambda: reader.search_prefix("sp", k=10),
+        "more_like_this": lambda: reader.more_like_this(
+            7, serving_docs, k=10, min_doc_freq=1
+        ),
+        # early-outs of the reader
+        "and_unindexed": lambda: reader.search(
+            "spark zzzunindexed", k=10, operator="and"
+        ),
+        "stopwords": lambda: reader.search("the and of", k=10),
+        "empty_filter": lambda: reader.search(Q, k=10, where="n_chars < 0"),
+        "fuzzy_no_terms": lambda: reader.search_fuzzy("the", k=10),
+        "mlt_no_seed": lambda: reader.more_like_this(
+            -1, serving_docs, k=10
+        ),
+        "mlt_no_terms": lambda: reader.more_like_this(
+            7, serving_docs, k=10, min_term_freq=10**6
+        ),
+        # early-outs of the distributed operators
+        "blocks_no_terms": lambda: bm25.score_from_blocks(blocks, {}, []),
+        "blocks_empty_filter": lambda: bm25.score_from_blocks(
+            blocks, {1: 1.0}, [1], allowed=[]
+        ),
+        "wand_no_terms": lambda: wand.wand_topk(blocks, {}, []),
+        "wand_empty_filter": lambda: wand.wand_topk(
+            blocks, {1: 1.0}, [1], allowed=[]
+        ),
+    }
+    phrases = {
+        "phrase": lambda: reader.search_phrase(
+            " ".join(phrase_pairs["dense"]), k=10
+        ),
+        "phrase_unindexed": lambda: reader.search_phrase(
+            "spark zzzunindexed", k=10
+        ),
+        "phrase_blocks_unindexed": lambda: phrase.phrase_match_blocks(
+            blocks, [1, 2], term_dfs={1: 0, 2: 3}
+        ),
+    }
+    for schema, runs in ((TOPK_SCHEMA, answers), (PHRASE_SCHEMA, phrases)):
+        for name, run in runs.items():
+            rows = _driver_rows_match_jvm(run(), schema)
+            assert bool(rows) == (
+                name in ("bm25", "exact", "and", "search_after", "filtered",
+                         "fuzzy", "prefix", "more_like_this", "phrase")
+            ), name
+
+
+def test_local_answer_to_pandas_and_docs(reader, monkeypatch):
+    """A driver-held answer still converts and joins through Spark."""
+    from docs_indexer_spark.plans import query
+
+    monkeypatch.setattr(query, "LOCAL_MAX_BLOCKS", 10**9)
+    rows = reader.search(Q, k=10).collect()
+    assert rows
+    pdf = reader.search(Q, k=10).toPandas()
+    assert list(pdf.columns) == ["doc_id", "score"]
+    assert list(pdf.itertuples(index=False, name=None)) == [
+        tuple(r) for r in rows
+    ]
+    with_docs = reader.search_with_docs(Q, k=10).collect()
+    assert [(r["doc_id"], r["score"]) for r in with_docs] == _scored(rows)
+    assert all(r["lang"] is not None for r in with_docs)
+
+
+def test_one_local_answer_collected_and_joined_by_8_threads(
+    spark, reader, monkeypatch
+):
+    """8 threads collect and join one driver-held answer at once: every
+    collect gives its rows, every join the same docs, and the JVM
+    relation is built once."""
+    from docs_indexer_spark.plans import query
+
+    monkeypatch.setattr(query, "LOCAL_MAX_BLOCKS", 10**9)
+    want = reader.search(Q, k=10).collect()
+    docs = reader.docs_store().select("doc_id", "lang")
+    built = []
+    create = type(spark).createDataFrame
+
+    def counting(self, *a, **kw):
+        built.append(1)
+        return create(self, *a, **kw)
+
+    monkeypatch.setattr(type(spark), "createDataFrame", counting)
+    df = reader.search(Q, k=10)
+
+    def work(i):
+        if i % 2:
+            return df.collect()
+        return sorted(r["doc_id"] for r in df.join(docs, "doc_id").collect())
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)  # switch threads often, inside the build too
+    try:
+        with ThreadPoolExecutor(8) as pool:
+            got = list(pool.map(work, range(16), timeout=300))
+    finally:
+        sys.setswitchinterval(interval)
+    for i, g in enumerate(got):
+        assert g == (want if i % 2 else sorted(r["doc_id"] for r in want))
+    assert len(built) == 1

@@ -313,3 +313,75 @@ def test_small_queries_start_no_spark_job(
         started[name] = sc.statusTracker().getJobIdsForGroup(group)
     assert all(v == [] for v in started.values()), started
     reader.close()
+
+
+def test_local_route_makes_no_jvm_round_trip(
+    spark, positional_index, phrase_pairs, monkeypatch
+):
+    """Route-aware gate: on the driver-local route a query's search plus
+    ``collect()`` builds no Spark relation and collects nothing through
+    the JVM — no ``createDataFrame``, no ``spark.read``, no
+    ``collectToPython`` (the classic ``DataFrame.collect``) — and starts
+    0 jobs, from the manifest-pruned file list to the result rows.  The
+    distributed route of the same query still runs its Python kernel
+    (test_serving_runs_one_python_stage_per_query)."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from docs_indexer_spark.plans import query
+    from docs_indexer_spark.plans.query import IndexReader
+
+    reader = IndexReader(spark, positional_index)
+    where = "lang = 'de'"
+    kinds = {
+        "bm25": lambda: reader.search("spark join window", k=10),
+        "exact": lambda: reader.search("spark join", k=10, exact=True),
+        "and": lambda: reader.search("spark join", k=10, operator="and"),
+        "phrase": lambda: reader.search_phrase(
+            " ".join(phrase_pairs["dense"]), k=10
+        ),
+        "fuzzy": lambda: reader.search_fuzzy("winodw", k=10),
+        "filtered": lambda: reader.search(
+            "spark join window", k=10, where=where
+        ),
+        "and_unindexed": lambda: reader.search(
+            "spark zzzunindexed", k=10, operator="and"
+        ),
+    }
+    monkeypatch.setattr(query, "LOCAL_MAX_BLOCKS", 10**9)
+    want = {name: run().collect() for name, run in kinds.items()}
+    calls = []
+    session = type(spark)
+    create, read, collect = (
+        session.createDataFrame, session.read, DataFrame.collect
+    )
+
+    def spy(name, fn):
+        def wrapped(*a, **kw):
+            calls.append(name)
+            return fn(*a, **kw)
+        return wrapped
+
+    monkeypatch.setattr(session, "createDataFrame", spy("createDataFrame", create))
+    monkeypatch.setattr(
+        session, "read", property(spy("spark.read", read.fget))
+    )
+    monkeypatch.setattr(DataFrame, "collect", spy("collectToPython", collect))
+    sc = spark.sparkContext
+    started = {}
+    for name, run in kinds.items():
+        group = f"local-jvm-{name}"
+        sc.setJobGroup(group, name)
+        try:
+            rows = run().collect()
+        finally:
+            sc.setJobGroup("", "")
+        started[name] = sc.statusTracker().getJobIdsForGroup(group)
+        assert rows == want[name], name
+        assert bool(rows) == ("unindexed" not in name), name
+    assert calls == [], calls
+    assert all(v == [] for v in started.values()), started
+    # the spies see the JVM path: a distributed query trips them
+    monkeypatch.setattr(query, "LOCAL_MAX_BLOCKS", 0)
+    assert reader.search("spark join", k=10, exact=True).collect()
+    assert "spark.read" in calls and "collectToPython" in calls
+    reader.close()
