@@ -2,8 +2,9 @@
 
 Every query is forced onto the distributed plans (``LOCAL_MAX_BLOCKS = 0``;
 ``--route local`` forces the driver-local route instead, for the crossover):
-exact OR and AND of the 1/3/10/30/100/300 most frequent terms, and
-phrases of adjacent head-term pairs.  One process is one run: a warm-up
+the default ``search()`` OR and the AND of the 1/3/10/30/100/300 most
+frequent terms, and phrases of adjacent head-term pairs.  ``--max-terms
+N`` keeps only the OR and AND queries of at most N terms.  One process is one run: a warm-up
 query of each kind, then each query once, timed from building its
 DataFrame through ``collect()``.  The answers are written out with the
 times so runs of two source trees can be checked for identical results.
@@ -18,7 +19,7 @@ the workers search their working directory first, so started from
 another checkout's root they would run that checkout's kernels);
 ``--corpus`` is the parquet the index was built from, read only to find
 adjacent head-term pairs for the phrases.  ``--kinds phrase`` (or
-``exact,and``) times only those query kinds.
+``or,and``) times only those query kinds.
 """
 
 from __future__ import annotations
@@ -71,7 +72,8 @@ def main() -> None:
     ap.add_argument("--k", type=int, default=10)
     ap.add_argument("--route", choices=("distributed", "local"),
                     default="distributed")
-    ap.add_argument("--kinds", default="exact,and,phrase")
+    ap.add_argument("--kinds", default="or,and,phrase")
+    ap.add_argument("--max-terms", type=int, default=max(N_TERMS))
     args = ap.parse_args()
     kinds = set(args.kinds.split(","))
     sys.path.insert(0, args.tree)
@@ -95,10 +97,9 @@ def main() -> None:
     heads = head_terms(reader, analyze, max(N_TERMS))
     phrases = head_pairs(spark, args.corpus, analyze, heads[:100], N_PHRASES)
     queries = []
-    for n in N_TERMS:
+    for n in (n for n in N_TERMS if n <= args.max_terms):
         q = " ".join(heads[:n])
-        queries.append((f"exact_{n}", lambda q=q: reader.search(
-            q, k=args.k, exact=True)))
+        queries.append((f"or_{n}", lambda q=q: reader.search(q, k=args.k)))
         queries.append((f"and_{n}", lambda q=q: reader.search(
             q, k=args.k, operator="and")))
     for i, p in enumerate(phrases):
@@ -108,7 +109,7 @@ def main() -> None:
     query.LOCAL_MAX_BLOCKS = 0 if args.route == "distributed" else 10**9
     queries = [(n, r) for n, r in queries if n.split("_")[0] in kinds]
     for name, run in queries:
-        if name in ("exact_3", "phrase_0"):
+        if name in ("or_3", "and_3", "phrase_0"):
             run().collect()
     out = {"tree": args.tree, "route": args.route, "phrases": phrases,
            "queries": {}}

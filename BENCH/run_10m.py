@@ -128,8 +128,8 @@ def main() -> None:
         for r in reader.df_stats.orderBy(F.desc("df")).limit(6000).collect()
     ]
     head, mid, rare = ranked[:24], ranked[100:160], ranked[5000:5060]
-    # BM25 takes head terms (block-max WAND + the degenerate-regime
-    # vectorized drain).  Phrase sets: both-mid (pays O(Σ df) like every
+    # BM25 takes head terms (the exhaustive per-bucket block kernel).
+    # Phrase sets: both-mid (pays O(Σ df) like every
     # positional engine) and head+rare (the rarest-lead containment
     # prune decodes O(df_rare) of the head list).
     bm25_qs = [" ".join(head[i::12][:3]) for i in range(12)] + head[:12]

@@ -13,7 +13,7 @@ over the warm reader:
     metadata block pruning route)
   - filtered BM25, BROAD facet (lang='en', 51% → distributed
     left-semi route)
-  - search_after page 2 (cursor from page 1, exact-scorer route)
+  - search_after page 2 (cursor from page 1)
 
 Records BENCH/serve_10m_filtered_r5.json.  Only on an idle box.
 """
@@ -98,7 +98,7 @@ def main() -> None:
           f"{result['filtered_broad_p95_sec']}", file=sys.stderr)
 
     def page2(q):
-        p1 = reader.search(q, k=10, exact=True).collect()
+        p1 = reader.search(q, k=10).collect()
         cur = (float(p1[-1]["score"]), int(p1[-1]["doc_id"]))
         return reader.search(q, k=10, search_after=cur).collect()
 

@@ -243,17 +243,16 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_bm25_wand_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same query answered through the compressed block index + block-max
-    WAND (SURVEY §2 C1/C3) — built via the FUSED production path
-    (operators/fused.py), same oracle, so the driver gate certifies the
-    fused build + compression + WAND plane in one row."""
+    """Same query answered through the compressed block index (SURVEY
+    §2 C1/C3) and the serving scorer, one exhaustive
+    ``bm25.blocks_topk`` per bucket — built via the FUSED production
+    path (operators/fused.py), same oracle, so the driver gate certifies
+    the fused build + compression + block-scoring plane in one row."""
     import numpy as np
-
-    from docs_indexer_spark.operators.wand import wand_topk
 
     fb = _fused_cached(spark, sf_dir, "stop", norm_dtype=np.float64)
     idf = _fb_idf(spark, fb, BM25_TERMS)
-    top = wand_topk(fb.blocks, idf, sorted(idf), k=10)
+    top = bm25.score_from_blocks(fb.blocks, idf, sorted(idf), k=10)
     return top.select("doc_id", F.round("score", 6).alias("score"))
 
 
@@ -266,15 +265,13 @@ def q_bm25_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter: [...]}``; the reference's keyword ``type``/``breadcrumb_*``
     and ``date`` fields exist for this — mappings/hugo.json:9-53).
 
-    Filter-then-score through block-max WAND: the doc predicate pushes
-    down into the doc-table parquet scan, the resulting doc_id set
-    becomes an in-kernel bitset, blocks containing no eligible doc are
-    metadata-pruned inside the per-bucket kernel before decode
-    (operators/wand.py blocks_containing), and masked WAND keeps every
-    bound a valid upper bound so the top-k is exactly filter-then-score."""
+    Filter-then-score through the per-bucket block kernel: the doc
+    predicate pushes down into the doc-table parquet scan, the resulting
+    doc_id set becomes an in-kernel bitset, blocks containing no eligible
+    doc are metadata-pruned inside the kernel before decode
+    (bm25.blocks_containing), and decoded postings are masked to the set,
+    so the top-k is exactly filter-then-score."""
     import numpy as np
-
-    from docs_indexer_spark.operators.wand import wand_topk
 
     fb = _fused_cached(spark, sf_dir, "stop", norm_dtype=np.float64)
     allowed = np.sort(
@@ -285,7 +282,9 @@ def q_bm25_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .to_numpy(dtype=np.int64)
     )
     idf = _fb_idf(spark, fb, BM25_TERMS)
-    top = wand_topk(fb.blocks, idf, sorted(idf), k=10, allowed=allowed)
+    top = bm25.score_from_blocks(
+        fb.blocks, idf, sorted(idf), k=10, allowed=allowed
+    )
     return top.select("doc_id", F.round("score", 6).alias("score"))
 
 
@@ -366,19 +365,19 @@ def _english_stemmap() -> list[tuple[str, str]]:
 def q_bm25_english_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 top-10 under the PRODUCTION ``english`` analyzer (possessive
     strip + stopword + Porter — the build_index default and the chain a
-    100-TB build runs), answered through the fused block index + block-max
-    WAND.  The oracle twin stems via the inlined surface→stem dictionary
-    (see :func:`_english_stemmap`), so this row driver-gates the analyzer
-    plane that was previously pytest-only (round-2 verdict item 1)."""
+    100-TB build runs), answered through the fused block index and the
+    per-bucket block kernel.  The oracle twin stems via the inlined
+    surface→stem dictionary (see :func:`_english_stemmap`), so this row
+    driver-gates the analyzer plane that was previously pytest-only
+    (round-2 verdict item 1)."""
     import numpy as np
 
     from docs_indexer_spark.functions.analysis import analyze_text
-    from docs_indexer_spark.operators.wand import wand_topk
 
     fb = _fused_cached(spark, sf_dir, "english", norm_dtype=np.float64)
     stems = sorted(set(analyze_text(EN_QUERY, "english")))
     idf = _fb_idf(spark, fb, stems)
-    top = wand_topk(fb.blocks, idf, sorted(idf), k=10)
+    top = bm25.score_from_blocks(fb.blocks, idf, sorted(idf), k=10)
     return top.select("doc_id", F.round("score", 6).alias("score"))
 
 

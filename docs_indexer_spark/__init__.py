@@ -13,7 +13,7 @@ OpenSearch.  This package re-expresses both planes Spark-first:
                configures these in OpenSearch (common.py:4-31,
                mappings/hugo.json)
 - operators/   inverted-index construction, posting-block compression
-               (delta+varint), BM25 exact scoring, block-max WAND top-k,
+               (delta+varint), exact BM25 block scoring and top-k,
                dedup / similarity / text-quality operators
 - plans/       end-to-end build + query pipelines with per-partition
                lineage checkpoints and atomic publish

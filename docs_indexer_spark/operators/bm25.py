@@ -13,10 +13,13 @@ Two scoring paths, both exact:
   (operators/spimi.py) scored by ONE numpy kernel, :func:`blocks_topk`
   (decode + per-doc sum/count + AND + ``search_after`` + top-k), run once
   per doc-range bucket then merged by TakeOrderedAndProject.  IndexReader
-  serves exact, ``operator="and"``, fuzzy, prefix, broad-filter and
-  more_like_this queries through it; its driver-local route runs the
-  same kernel over all of a query's blocks, and block-max WAND
-  (operators/wand.py) drains through :func:`topk_partials`.
+  serves every scored query through it above its driver-local cap (OR,
+  AND, filtered, ``search_after``, fuzzy, prefix and more_like_this),
+  and its driver-local route runs the same kernel over all of a query's
+  blocks.  The kernel is exhaustive: it decodes every hit posting, sums
+  per doc and cuts the top k.  No block-max bound is consulted, so the
+  blocks' ``max_score`` column is not read (docs/DESIGN.md "One
+  exhaustive block kernel").
 
 Tie-break pinned everywhere: score DESC, doc_id ASC.
 """
@@ -44,6 +47,45 @@ if TYPE_CHECKING:
     from pyspark.broadcast import Broadcast
 
 TOPK_SCHEMA = "doc_id long, score double"
+
+
+def _in_sorted(values: np.ndarray, sorted_arr: np.ndarray) -> np.ndarray:
+    """Boolean membership of ``values`` in a SORTED unique array —
+    vectorized searchsorted, the numpy filter-bitset primitive."""
+    if len(sorted_arr) == 0:
+        return np.zeros(len(values), dtype=bool)
+    idx = np.searchsorted(sorted_arr, values)
+    idx[idx == len(sorted_arr)] = len(sorted_arr) - 1
+    return sorted_arr[idx] == values
+
+
+def blocks_containing(
+    firsts: np.ndarray, lasts: np.ndarray, sorted_ids: np.ndarray
+) -> np.ndarray:
+    """Boolean mask of the blocks whose ``[first_doc_id, last_doc_id]``
+    range holds at least one of ``sorted_ids`` (a SORTED doc-id array) —
+    two searchsorted calls over block METADATA, no decode.  The one block
+    pruning primitive of the serving kernels: the filter bitset in
+    :func:`decode_partials`, the rarest term's docs in the phrase
+    position decode.  A block it drops can only decode to postings the
+    caller would discard."""
+    lo = np.searchsorted(sorted_ids, firsts, side="left")
+    hi = np.searchsorted(sorted_ids, lasts, side="right")
+    return hi > lo
+
+
+def broadcast_allowed(sc, allowed) -> "Broadcast | None":
+    """A filter's doc ids as ONE broadcast (one ship per executor, not a
+    closure copy per task).  ``allowed`` is a doc-id array in any order,
+    or a ``Broadcast`` of a sorted unique int64 array that the caller
+    owns (IndexReader's filter memo), which is passed through.  None
+    when the filter admits no document."""
+    from pyspark.broadcast import Broadcast
+
+    if isinstance(allowed, Broadcast):
+        return allowed if len(allowed.value) else None
+    arr = np.unique(np.asarray(allowed, dtype=np.int64))
+    return sc.broadcast(arr) if len(arr) else None
 
 
 def kernel_columns(filtered: bool) -> list[str]:
@@ -118,8 +160,6 @@ def decode_partials(
     holds none of it are skipped before decode, and decoded postings are
     masked to it.  Postings come out in term_id order, so a doc's
     partials sum in the same order on every route and in every run."""
-    from docs_indexer_spark.operators.wand import _in_sorted, blocks_containing
-
     if allowed is not None and blocks.num_rows:
         blocks = blocks.filter(pa.array(blocks_containing(
             blocks.column("first_doc_id").to_numpy(),
@@ -157,8 +197,7 @@ def topk_partials(
 ) -> tuple[np.ndarray, np.ndarray]:
     """(doc_id, partial) postings → the exact top ``k`` as (doc_ids,
     scores) sorted by (score desc, doc_id asc): the fused sum + count
-    aggregate and top-k of the exact scorer in one numpy pass — the
-    driver-local route's scorer and WAND's exhaustive drain.
+    aggregate and top-k of the exact scorer in one numpy pass.
 
     ``n_required`` keeps only docs with that many partials (boolean AND:
     a doc has one posting per term); ``after=(score, doc_id)`` keeps
@@ -250,7 +289,7 @@ def score_from_blocks(
     filter cardinality:
 
     - numpy array of doc_ids, or a broadcast of one the caller owns
-      (SELECTIVE filter; see wand.broadcast_allowed): inside the kernel,
+      (SELECTIVE filter; see :func:`broadcast_allowed`): inside the kernel,
       blocks with no eligible doc are metadata-pruned before decode and
       decoded postings are masked — no extra stage, no shuffle;
     - DataFrame with a doc_id column (LARGE filter): the kernel keeps
@@ -267,8 +306,6 @@ def score_from_blocks(
     if isinstance(allowed, DataFrame):
         allowed_df = allowed.select("doc_id")
     elif allowed is not None:
-        from docs_indexer_spark.operators.wand import broadcast_allowed
-
         allowed_bc = broadcast_allowed(blocks.sparkSession.sparkContext, allowed)
         if allowed_bc is None:
             return local_frame(blocks.sparkSession, TOPK_SCHEMA)

@@ -12,8 +12,8 @@ workers, never per-row Python.  Format per block (≤ BLOCK_SIZE postings):
   time — at 10^12 docs the doclen table is not broadcastable).
 
 Per-block metadata kept alongside (columns, not in the payload): n_docs,
-first/last doc_id, max_tf, max_tf_norm.  Block-max WAND upper-bounds a
-term's contribution by idf * max_tf_norm without decoding the block.
+first/last doc_id, max_tf, max_tf_norm.  The serving kernels prune
+blocks by their first/last doc_id only; no reader uses the max columns.
 
 PForDelta was considered (Zukowski et al., ICDE 2006); plain varint stays
 because it keeps the oracle trivially equivalent and the vectorized LEB128

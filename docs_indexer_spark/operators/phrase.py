@@ -189,7 +189,7 @@ def phrase_topk(
         decode_positions,
         lead_pruned,
     )
-    from docs_indexer_spark.operators.wand import _in_sorted
+    from docs_indexer_spark.operators.bm25 import _in_sorted
 
     tids = [int(t) for t in term_ids]
     none = {"doc_id": np.empty(0, np.int64),

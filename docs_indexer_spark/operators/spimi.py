@@ -24,8 +24,8 @@ doc_id — the salt.  Consequences:
   ``(bucket, block_seq)`` — merging partial results is an ordered CONCAT of
   already-encoded blocks: no decode, no re-sort, no second shuffle;
 - the serving kernels exploit the bucketing too: buckets partition the
-  doc space, so a per-bucket WAND, exact-scorer or phrase kernel plus
-  one global top-k merge is exact.
+  doc space, so a per-bucket exact-scorer or phrase kernel plus one
+  global top-k merge is exact.
 
 Execution shape: ``repartition(term_id, bucket)`` →
 ``sortWithinPartitions(term_id, bucket, doc_id[, pos])`` → ``mapInArrow``
@@ -56,7 +56,7 @@ from docs_indexer_spark.config import BLOCK_SIZE, BM25Params
 from docs_indexer_spark.operators.compression import varint_encode_with_lengths
 from docs_indexer_spark.operators.postings import idf_col
 
-# Scoring reads ONLY doc_ids_bin + tf_norms_bin (wand.py / bm25.py); raw
+# Scoring reads ONLY doc_ids_bin + tf_norms_bin (bm25.py); raw
 # tf values are redundant with the stored norm on the serving path, so
 # the default block row does NOT carry a tfs_bin stream (−20-25% block
 # bytes through the encode exchange and at rest).  Positional blocks DO
@@ -377,8 +377,8 @@ def build_blocks(
     # hashed ids can exceed int64 (≈2^64 wide), so the bucket is computed
     # in double space: long→double is monotone, so buckets remain ordered
     # disjoint doc_id ranges in [0, n_buckets) — their exact boundaries
-    # don't matter, only ordering + disjointness (WAND and the ordered-
-    # concat merge rely on nothing else).
+    # don't matter, only ordering + disjointness (the serving kernels and
+    # the ordered-concat merge rely on nothing else).
     span_d = max(
         1.0, float(stats.max_doc_id - stats.min_doc_id + 1) / n_buckets
     )
@@ -459,13 +459,13 @@ def lead_pruned(table: pa.Table, lead_term: int) -> pa.Table:
     """The positional block rows of ``table`` a phrase containing
     ``lead_term`` can match in: every block of the lead term, and each
     other block whose ``[first_doc_id, last_doc_id]`` range holds one of
-    the lead term's docs (wand.blocks_containing).  Exact over any set of
+    the lead term's docs (bm25.blocks_containing).  Exact over any set of
     whole doc ranges: one bucket's rows, or a query's every hit block."""
     from docs_indexer_spark.operators.compression import (
         segmented_cumsum,
         varint_decode_column,
     )
-    from docs_indexer_spark.operators.wand import blocks_containing
+    from docs_indexer_spark.operators.bm25 import blocks_containing
 
     is_lead = table.column("term_id").to_numpy() == lead_term
     lead_docs = np.sort(segmented_cumsum(*varint_decode_column(

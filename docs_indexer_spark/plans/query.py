@@ -5,7 +5,8 @@ SURVEY.md §3.3):
     analyze query string with the index's analyzer
     → per-term idf lookup (driver-side: xxhash64 term ids searched in the
       reader's sorted (term_id, df) arrays — no Spark job)
-    → block-max WAND (or exact scoring) over the published block index
+    → exact BM25 over the published block index (one exhaustive
+      per-bucket kernel, bm25.blocks_topk)
     → top-k (score desc, doc_id asc)
     → join the doc store for rendering fields
 
@@ -39,10 +40,10 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from docs_indexer_spark.config import DEFAULT_TOP_K, BM25Params
+from docs_indexer_spark.config import DEFAULT_TOP_K
 from docs_indexer_spark.functions.analysis import analyze_text
 from docs_indexer_spark.functions.xxh import spark_xxhash64_str
-from docs_indexer_spark.operators import bm25, wand
+from docs_indexer_spark.operators import bm25
 from docs_indexer_spark.operators.bm25 import TOPK_SCHEMA
 from docs_indexer_spark.session import local_frame
 from docs_indexer_spark.sources.catalog import SnapshotCatalog
@@ -55,12 +56,14 @@ from docs_indexer_spark.sources.catalog import SnapshotCatalog
 FILTER_MEMO_SIZE = 8
 
 # a query whose estimated hit blocks (IndexReader._est_blocks) are at
-# most this many runs on the driver instead of as Spark jobs.  Fitted by
-# a sweep of both routes on 10,000- and 200,000-doc indexes, 4-core
-# machine, local[3] (docs/DESIGN.md "Serving cost model"): the local
-# route then cost ~0.2 s plus ~0.5 µs per posting and won at every
-# measured size, by 2× at 13k blocks and 1.1× at 67k against the
-# distributed exact scorer, whose 3 cores catch up near ~100k blocks.
+# most this many runs on the driver instead of as Spark jobs; above it,
+# every scored kind runs the same bm25.blocks_topk kernel once per
+# bucket.  Fitted by a sweep of both routes on 10,000- and 200,000-doc
+# indexes, 4-core machine, local[3] (docs/DESIGN.md "Serving cost
+# model"): the local route then cost ~0.2 s plus ~0.5 µs per posting
+# and won at every measured size, by 2× at 13k blocks and 1.1× at 67k
+# against the distributed scorer, whose 3 cores catch up near ~100k
+# blocks.
 # Its fixed cost is now ~5 ms for a scored query on the `serve` index
 # (no Spark relation, result frame or collect crosses into the JVM;
 # BENCH/local_route_layers_change.json); the per-posting cost, which
@@ -172,10 +175,9 @@ class IndexReader:
         # where string → [sorted doc ids, their broadcast or None]; the
         # broadcast is made the first time a distributed route needs it
         self._filters: "OrderedDict[str, list]" = OrderedDict()
-        # per-bucket doc-id bounds, lazily cached once per generation —
-        # lets wand_topk's auto-split decide and slice with NO per-query
-        # block-metadata job (see _bucket_bounds)
-        self._bounds_cache: "list[tuple[int, int, int]] | None" = None
+        # the generation's bucket count, counted on first use
+        # (:meth:`_n_buckets`)
+        self._n_buckets_cache: int | None = None
 
     @property
     def df_stats(self) -> DataFrame:
@@ -239,31 +241,24 @@ class IndexReader:
         spread over many buckets, so pad by one bucket's worth of blocks
         per term."""
         bsz = int(self.meta["metrics"].get("block_size") or 128)
-        n_buckets = max(1, len(self._bucket_bounds()))
+        n_buckets = max(1, self._n_buckets())
         return sum(-(-int(df) // bsz) + n_buckets for df in dfs)
 
-    def _route(
-        self, dfs, where=None, max_driver_docs: int = 500_000,
-        split: "int | str" = "auto",
-    ):
+    def _route(self, dfs, where=None, max_driver_docs: int = 500_000):
         """Where a scored query over terms with document frequencies
-        ``dfs`` (term_id → df) runs: ``(local, allowed, est)``.
+        ``dfs`` (term_id → df) runs: ``(local, allowed)``.
 
-        It runs on the driver when its estimated hit blocks ``est`` are
-        at most :data:`LOCAL_MAX_BLOCKS`, its filter (if any) resolved to
-        a driver-side id array, and the caller asked for no split > 1;
-        ``allowed`` is then that sorted array or None.  Otherwise
-        ``allowed`` is the distributed scorers' filter argument
-        (:meth:`_filter_arg`); ``est`` is None under an explicit split."""
-        est = None
-        if not (isinstance(split, int) and split > 1):
-            est = self._est_blocks(dfs.values())
-        if est is None or est > LOCAL_MAX_BLOCKS:
-            return False, self._filter_arg(where, max_driver_docs), est
+        It runs on the driver when its estimated hit blocks are at most
+        :data:`LOCAL_MAX_BLOCKS` and its filter (if any) resolved to a
+        driver-side id array; ``allowed`` is then that sorted array or
+        None.  Otherwise ``allowed`` is the distributed scorer's filter
+        argument (:meth:`_filter_arg`)."""
+        if self._est_blocks(dfs.values()) > LOCAL_MAX_BLOCKS:
+            return False, self._filter_arg(where, max_driver_docs)
         ids, rel = self._resolve_filter(where, max_driver_docs)
         if rel is not None:
-            return False, rel, est
-        return True, ids, est
+            return False, rel
+        return True, ids
 
     def _local_topk(
         self, idf: dict[int, float], k: int, allowed=None,
@@ -309,25 +304,15 @@ class IndexReader:
     def _idf(self, terms: list[str]) -> dict[int, float]:
         return self._idf_df(terms)[0]
 
-    def _bucket_bounds(self) -> "list[tuple[int, int, int]]":
-        """(bucket, min first_doc_id, max last_doc_id) over the WHOLE
-        generation, computed once and cached — the auto-split serving
-        fast path slices against these instead of aggregating the
-        query's hit blocks every request (one block-metadata job per
-        reader lifetime instead of per query)."""
-        if self._bounds_cache is None:
-            rows = (
-                self.blocks.groupBy("bucket")
-                .agg(
-                    F.min("first_doc_id").alias("lo"),
-                    F.max("last_doc_id").alias("hi"),
-                )
-                .collect()
+    def _n_buckets(self) -> int:
+        """The number of doc-range buckets in the WHOLE generation,
+        counted once per reader lifetime (one block-metadata job) and
+        cached."""
+        if self._n_buckets_cache is None:
+            self._n_buckets_cache = len(
+                self.blocks.select("bucket").distinct().collect()
             )
-            self._bounds_cache = [
-                (int(r["bucket"]), int(r["lo"]), int(r["hi"])) for r in rows
-            ]
-        return self._bounds_cache
+        return self._n_buckets_cache
 
     def docs_store(self) -> DataFrame:
         """The pinned generation's document store (rendering + keyword/
@@ -435,17 +420,20 @@ class IndexReader:
         self,
         query: str,
         k: int = DEFAULT_TOP_K,
-        exact: bool = False,
         operator: str = "or",
         where=None,
         max_driver_filter_docs: int = 500_000,
-        split: int | str = "auto",
         search_after: "tuple[float, int] | None" = None,
     ) -> DataFrame:
-        """``operator="and"`` = OpenSearch operator:and (every query term
-        must match) — routed through the exact scorer, whose per-doc
-        partial count gives the AND filter for free; WAND's upper-bound
-        pruning is an OR-semantics optimization.
+        """Exact BM25 top-k of ``query``.  Every shape runs the one
+        exhaustive block kernel, :func:`bm25.blocks_topk`: on the driver
+        over all of the query's hit blocks when they are few
+        (:data:`LOCAL_MAX_BLOCKS`), else once per bucket in one
+        ``applyInArrow`` stage (:func:`bm25.score_from_blocks`).
+
+        ``operator="and"`` = OpenSearch operator:and (every query term
+        must match): the kernel's per-doc partial count gives the AND
+        filter for free.
 
         ``where`` composes an exact-match / range filter over the doc
         store's keyword and date fields WITH relevance scoring — the
@@ -458,55 +446,21 @@ class IndexReader:
         metadata block pruning, broad filters a distributed semi-join —
         see :meth:`_resolve_filter`.
 
-        ``split`` > 1 slices each index bucket's doc range into that
-        many independent WAND tasks — serving-side parallelism when the
-        build's bucket count is below the cluster's core count (rank-
-        identical; see wand_topk).  The default ``"auto"`` sizes the
-        slicing from block metadata: 1 on small/selective queries (plan
-        unchanged), cores//n_buckets (≤8) on block-heavy ones — at 10M
-        docs this took head-term p95 from 5.7 s to 2.7 s on 32 cores.
-
         ``search_after=(score, doc_id)`` — cursor pagination under the
         ``[_score desc, doc_id asc]`` sort (OpenSearch ``search_after``):
         pass the previous page's last sort key to get the next ``k``.
-        Served THROUGH WAND: an at-or-before-cursor doc is simply not
-        qualifying at heap insertion, so θ (the k-th qualifying score)
-        stays a valid pruning threshold and every page costs one WAND
-        pass — a page-1+page-2 pair measured 22.9 s → 4.7 s p50 at 10M
-        docs vs the exact route (BENCH/serve_10m_filtered_r5.json).
-        Composes with ``where``/``operator``/``exact`` unchanged."""
-        terms = analyze_text(query, self.analyzer)
-        idf, dfs = self._idf_df(sorted(set(terms)))
-        ids = sorted(idf)
-        if operator == "and" and len(ids) < len(set(terms)):
+        The kernel drops every doc at or before the cursor before its
+        top-k cut, so each page costs one pass.  Composes with
+        ``where`` and ``operator`` unchanged."""
+        terms = set(analyze_text(query, self.analyzer))
+        dfs = self._dfs(spark_xxhash64_str(t) for t in terms)
+        if operator == "and" and len(dfs) < len(terms):
             # a term absent from the index can never AND-match
             return local_frame(self.spark, TOPK_SCHEMA)
-        local, allowed, est = self._route(
-            dfs, where, max_driver_filter_docs, split
-        )
-        if local:
-            return self._local_topk(
-                idf, k, allowed, after=search_after,
-                n_required=len(ids) if operator == "and" else None,
-            )
-        blocks = self._blocks_for(ids)
-        if operator == "and" or exact or isinstance(allowed, DataFrame):
-            # a broad filter takes exhaustive scoring + semi-join over
-            # WAND (upper-bound pruning buys little when most docs are
-            # eligible, and the filter relation must stay distributed)
-            return bm25.score_from_blocks(
-                blocks, idf, ids, k=k, require_all=operator == "and",
-                allowed=allowed, after=search_after,
-            )
-        # a filter does not shrink the block estimate: every hit block
-        # still ships to the bucket kernels, which prune it there.  A
-        # perf-only decision either way (split never changes results).
-        fast = split == "auto"
-        return wand.wand_topk(
-            blocks, idf, ids, k=k, allowed=allowed, split=split,
+        return self._scored(
+            dfs, k, where, max_driver_docs=max_driver_filter_docs,
+            n_required=len(dfs) if operator == "and" else None,
             after=search_after,
-            est_n_blocks=est,
-            bounds_rows=self._bucket_bounds() if fast else None,
         )
 
     def _filter_arg(self, where, max_driver_docs: int = 500_000):
@@ -539,17 +493,26 @@ class IndexReader:
         dfs = {int(r["term_id"]): int(r["df"]) for r in rows}
         return self._scored(dfs, k, where)
 
-    def _scored(self, dfs: dict[int, int], k: int, where=None) -> DataFrame:
-        """Exact BM25 top-k of the OR of the terms with document
-        frequencies ``dfs`` (term_id → df), on the route :meth:`_route`
-        picks."""
+    def _scored(
+        self, dfs: dict[int, int], k: int, where=None,
+        max_driver_docs: int = 500_000, n_required: int | None = None,
+        after=None, exclude: int | None = None,
+    ) -> DataFrame:
+        """Exact BM25 top-k of the terms with document frequencies
+        ``dfs`` (term_id → df), on the route :meth:`_route` picks; the
+        keywords are :func:`bm25.blocks_topk`'s."""
         idf = {t: self._idf_of(df) for t, df in dfs.items()}
-        local, allowed, _ = self._route(dfs, where)
+        local, allowed = self._route(dfs, where, max_driver_docs)
         if local:
-            return self._local_topk(idf, k, allowed)
+            return self._local_topk(
+                idf, k, allowed, n_required=n_required, after=after,
+                exclude=exclude,
+            )
         ids = sorted(idf)
         return bm25.score_from_blocks(
-            self._blocks_for(ids), idf, ids, k=k, allowed=allowed
+            self._blocks_for(ids), idf, ids, k=k,
+            require_all=n_required is not None, allowed=allowed,
+            after=after, exclude=exclude,
         )
 
     def _fuzzy_candidates(
@@ -773,15 +736,10 @@ class IndexReader:
                 for r in stats
             ),
         )[:max_query_terms]
-        dfs = {tid: df for _, _, tid, df in weighted}
-        idf = {t: self._idf_of(df) for t, df in dfs.items()}
         # the seed drops inside the numpy top-k on both routes: a filter
         # on top of the local frame would start Spark jobs again
-        if self._route(dfs)[0]:
-            return self._local_topk(idf, k, exclude=doc_id)
-        ids = sorted(idf)
-        return bm25.score_from_blocks(
-            self._blocks_for(ids), idf, ids, k=k, exclude=doc_id
+        return self._scored(
+            {tid: df for _, _, tid, df in weighted}, k, exclude=doc_id
         )
 
     def search_with_docs(

@@ -56,7 +56,6 @@ def main() -> None:
     q.add_argument("--warehouse", required=True)
     q.add_argument("--q", required=True)
     q.add_argument("--k", type=int, default=10)
-    q.add_argument("--exact", action="store_true")
     q.add_argument("--phrase", action="store_true",
                    help="exact-phrase query (requires a --positions build)")
     q.add_argument("--op", choices=["or", "and"], default="or",
@@ -150,7 +149,7 @@ def main() -> None:
             if args.after:
                 s, d = args.after.rsplit(":", 1)
                 after = (float(s), int(d))
-            rows = reader.search(args.q, k=args.k, exact=args.exact,
+            rows = reader.search(args.q, k=args.k,
                                  operator=args.op, where=args.where,
                                  search_after=after).collect()
             hits = [{"doc_id": r["doc_id"], "score": r["score"]} for r in rows]

@@ -1,4 +1,4 @@
-"""Rank-identity gate: the Spark engine (all three scoring paths) must
+"""Rank-identity gate: the Spark engine (both scoring paths) must
 match the single-process oracle — docIDs exactly, scores to 1e-6 relative —
 on a query set covering rare terms, head terms, stopword-only queries,
 stemmer conflation, absent terms (SURVEY.md §5, FIXTURES.md §6)."""
@@ -108,30 +108,6 @@ def test_exact_from_blocks_rank_identical(index, oracle, query):
     rank_identical(expected, actual, tol=1e-5)  # float32 tf_norm storage
 
 
-@pytest.mark.parametrize("query", QUERIES)
-def test_wand_rank_identical(index, oracle, query):
-    from docs_indexer_spark.operators.wand import wand_topk
-
-    expected = oracle.topk(query, k=10)
-    got = wand_topk(index["blocks"], index["idf"], _ids(index, query), k=10).collect()
-    actual = [(int(r["doc_id"]), float(r["score"])) for r in got]
-    rank_identical(expected, actual, tol=1e-5)
-
-
-def test_wand_matches_exact_blocks_k50(index):
-    """exact-vs-WAND cross-check at a larger k (SURVEY §5)."""
-    from docs_indexer_spark.operators.wand import wand_topk
-
-    ids = _ids(index, "spark join window batch")
-    exact = bm25.score_from_blocks(index["blocks"], index["idf"], ids, k=50).collect()
-    wand = wand_topk(index["blocks"], index["idf"], ids, k=50).collect()
-    rank_identical(
-        [(int(r["doc_id"]), float(r["score"])) for r in exact],
-        [(int(r["doc_id"]), float(r["score"])) for r in wand],
-        tol=1e-9,
-    )
-
-
 def test_oracle_score_sanity(oracle, corpus):
     """Single-doc score agrees with topk's accumulation."""
     top = oracle.topk("spark join", k=1)
@@ -159,7 +135,7 @@ def test_search_fuzzy_published_index(spark, tmp_path, monkeypatch):
     reader = IndexReader(spark, cat)
     for _ in on_both_routes(monkeypatch):
         want = [(r["doc_id"], round(r["score"], 9))
-                for r in reader.search("window", k=5, exact=True).collect()]
+                for r in reader.search("window", k=5).collect()]
         # "windoq" is 1 edit from "window" and from nothing else in the vocab
         got = [(r["doc_id"], round(r["score"], 9))
                for r in reader.search_fuzzy("windoq", k=5).collect()]

@@ -81,7 +81,7 @@ def test_manifest_pruned_search_matches_full(spark, published_index):
     cat, reader = published_index
     query = "spark join window"
     got = [(r["doc_id"], round(r["score"], 9))
-           for r in reader.search(query, k=10, exact=True).collect()]
+           for r in reader.search(query, k=10).collect()]
     idf = reader._idf(sorted(set(query.split())))
     full = bm25.score_from_blocks(
         cat.read(spark, "index", "blocks.parquet"), idf, sorted(idf), k=10
@@ -270,7 +270,6 @@ def test_hash_layout_generation_serves_identically(
     phrase = " ".join(phrase_pairs["dense"])
     scored = [
         lambda r: r.search("spark join window", k=10),
-        lambda r: r.search("spark join window", k=10, exact=True),
         lambda r: r.search("spark join", k=10, operator="and"),
         lambda r: r.search("spark window", k=10, where="lang = 'en'"),
         lambda r: r.search_fuzzy("sprak", k=10),

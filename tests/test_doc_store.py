@@ -89,7 +89,7 @@ def test_search_operator_and_and_prefix(spark, tmp_path):
     # AND scores equal the OR scores of the same docs (same BM25 sum)
     or_scores = {
         r["doc_id"]: round(r["score"], 9)
-        for r in reader.search("alpha beta", k=10, exact=True).collect()
+        for r in reader.search("alpha beta", k=10).collect()
     }
     for r in reader.search("alpha beta", k=10, operator="and").collect():
         assert round(r["score"], 9) == or_scores[r["doc_id"]]

@@ -9,13 +9,11 @@ top-k" — post-filtering a top-k would miss eligible hits and is the bug
 these tests exist to catch.
 """
 
-import math
-
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from docs_indexer_spark.operators import bm25, wand
+from docs_indexer_spark.operators import bm25
 from docs_indexer_spark.operators.fused import fused_build_blocks
 from docs_indexer_spark.operators.postings import idf_col
 
@@ -50,6 +48,18 @@ def _idf_map(fb, terms):
     return {int(r["term_id"]): float(r["idf"]) for r in rows}
 
 
+def _kernel_topk(fb, idf, k, allowed=None):
+    """The driver-local route's kernel, :func:`bm25.blocks_topk`, over
+    every hit block of ``idf``'s terms: [(doc_id, score)]."""
+    blocks = (
+        fb.blocks.filter(F.col("term_id").isin(sorted(idf)))
+        .select(*bm25.kernel_columns(allowed is not None))
+        .toArrow()
+    )
+    ids, scores = bm25.blocks_topk(blocks, idf, k, allowed=allowed)
+    return list(zip(ids.tolist(), scores.tolist()))
+
+
 def _reference_filtered_topk(fb, idf, allowed_set, k=10):
     """Ground truth: exact unfiltered scoring of the whole corpus, then a
     Python-side filter, then the pinned (score desc, doc_id asc) top-k."""
@@ -75,13 +85,20 @@ def allowed(corpus):
     return ids
 
 
-def test_filtered_wand_equals_filter_then_score(fused, allowed):
+def test_filtered_wand_equals_filter_then_score(spark, fused, allowed):
+    """The default OR under a filter bitset equals filter-then-score on
+    both routes: the driver-local kernel over all hit blocks, and the
+    per-bucket scorer handed the filter as a caller-owned broadcast (the
+    reader's filter memo shape)."""
     idf = _idf_map(fused, TERMS)
     expected = _reference_filtered_topk(fused, idf, set(allowed), k=10)
-    got = wand.wand_topk(
-        fused.blocks, idf, sorted(idf), k=10,
-        allowed=np.array(allowed, dtype=np.int64),
+    arr = np.array(allowed, dtype=np.int64)
+    rank_identical(expected, _kernel_topk(fused, idf, 10, allowed=arr))
+    bc = spark.sparkContext.broadcast(arr)
+    got = bm25.score_from_blocks(
+        fused.blocks, idf, sorted(idf), k=10, allowed=bc
     ).collect()
+    bc.destroy()
     rank_identical(expected, [(r["doc_id"], r["score"]) for r in got])
 
 
@@ -157,10 +174,9 @@ def test_broad_filter_composes_with_and_and_cursor(spark, fused, allowed):
 
 def test_empty_filter_returns_empty(fused):
     idf = _idf_map(fused, TERMS)
-    assert wand.wand_topk(
-        fused.blocks, idf, sorted(idf), k=10,
-        allowed=np.array([], dtype=np.int64),
-    ).count() == 0
+    assert _kernel_topk(
+        fused, idf, 10, allowed=np.array([], dtype=np.int64)
+    ) == []
     assert bm25.score_from_blocks(
         fused.blocks, idf, sorted(idf), k=10,
         allowed=np.array([], dtype=np.int64),
@@ -176,7 +192,7 @@ def test_block_metadata_pruning_drops_blocks(fused, allowed):
         F.col("term_id").isin(sorted(idf))
     ).select("first_doc_id", "last_doc_id").toPandas()
     total = len(hit)
-    kept = int(wand.blocks_containing(
+    kept = int(bm25.blocks_containing(
         hit["first_doc_id"].values, hit["last_doc_id"].values, one
     ).sum())
     assert kept < total
@@ -186,9 +202,9 @@ def test_index_reader_search_where_end_to_end(
     spark, corpus, tmp_path, monkeypatch
 ):
     """Full serving path: build+publish via the catalog, then
-    IndexReader.search(where=...) in all three routes (WAND bitset,
-    exact bitset, distributed semi-join) against filter-then-score, on
-    the driver-local route and the distributed one."""
+    IndexReader.search(where=...) with both filter shapes (in-kernel
+    bitset, distributed semi-join) against filter-then-score, on the
+    driver-local route and the distributed one."""
     from docs_indexer_spark.plans.build_index import build_index
     from docs_indexer_spark.plans.query import IndexReader
     from docs_indexer_spark.sources.catalog import SnapshotCatalog
@@ -204,15 +220,14 @@ def test_index_reader_search_where_end_to_end(
     }
     q = " ".join(TERMS)
     for _ in on_both_routes(monkeypatch):
-        full = reader.search(q, k=100_000, exact=True).collect()
+        full = reader.search(q, k=100_000).collect()
         expected = sorted(
             ((r["doc_id"], r["score"]) for r in full
              if r["doc_id"] in allowed_set),
             key=lambda x: (-x[1], x[0]),
         )[:10]
         for kwargs in (
-            {},                                   # WAND + bitset
-            {"exact": True},                      # exact + bitset
+            {},                                   # in-kernel bitset
             {"max_driver_filter_docs": 0},        # force distributed semi-join
         ):
             got = reader.search(q, k=10, where=where, **kwargs).collect()
@@ -220,33 +235,6 @@ def test_index_reader_search_where_end_to_end(
         # unindexed-filter sanity: a filter matching nothing yields no hits
         assert reader.search(q, k=10, where="n_chars < 0").count() == 0
     reader.close()
-
-
-@pytest.mark.parametrize("split", [2, 4, 7])
-def test_wand_split_rank_identical(fused, allowed, split):
-    """Bucket sub-splitting is a parallelism knob, never a semantics one:
-    split-S WAND must equal split-1 WAND exactly, with and without a
-    filter bitset."""
-    idf = _idf_map(fused, TERMS)
-    base = wand.wand_topk(fused.blocks, idf, sorted(idf), k=10).collect()
-    got = wand.wand_topk(
-        fused.blocks, idf, sorted(idf), k=10, split=split
-    ).collect()
-    rank_identical(
-        [(r["doc_id"], r["score"]) for r in base],
-        [(r["doc_id"], r["score"]) for r in got],
-    )
-    arr = np.array(allowed, dtype=np.int64)
-    base_f = wand.wand_topk(
-        fused.blocks, idf, sorted(idf), k=10, allowed=arr
-    ).collect()
-    got_f = wand.wand_topk(
-        fused.blocks, idf, sorted(idf), k=10, allowed=arr, split=split
-    ).collect()
-    rank_identical(
-        [(r["doc_id"], r["score"]) for r in base_f],
-        [(r["doc_id"], r["score"]) for r in got_f],
-    )
 
 
 def test_filtered_prefix_fuzzy_phrase_end_to_end(
@@ -436,42 +424,6 @@ def test_significant_terms_planted_lift(spark):
     assert "common" not in out and "filler" not in out  # no lift
 
 
-def test_search_after_wand_equals_exact(fused):
-    """Cursor pagination through WAND must produce the identical page
-    sequence as the exact scorer, at several depths, with and without a
-    filter, and with bucket sub-splitting."""
-    from docs_indexer_spark.operators.wand import wand_topk
-
-    terms = ["merge", "query", "sort"]
-    idf = _idf_map(fused, terms)
-    full = bm25.score_from_blocks(
-        fused.blocks, idf, sorted(idf), k=40
-    ).collect()
-    cursor = None
-    got = []
-    for _ in range(4):
-        page = wand_topk(
-            fused.blocks, idf, sorted(idf), k=10, after=cursor
-        ).collect()
-        if not page:
-            break
-        got.extend(page)
-        cursor = (float(page[-1]["score"]), int(page[-1]["doc_id"]))
-    assert [(r["doc_id"], round(r["score"], 9)) for r in got] == [
-        (r["doc_id"], round(r["score"], 9)) for r in full
-    ]
-    # split composes with the cursor (cursor taken from the WAND path
-    # itself, the real serving handoff — bit-identical scores there)
-    p1 = wand_topk(fused.blocks, idf, sorted(idf), k=10).collect()
-    cur = (float(p1[-1]["score"]), int(p1[-1]["doc_id"]))
-    p2_split = wand_topk(
-        fused.blocks, idf, sorted(idf), k=10, after=cur, split=3
-    ).collect()
-    assert [(r["doc_id"], round(r["score"], 9)) for r in p2_split] == [
-        (r["doc_id"], round(r["score"], 9)) for r in full[10:20]
-    ]
-
-
 def test_search_hybrid_accepts_ivfpq_index(spark, corpus, tmp_path):
     """The documented 'IvfPqIndex-or-IvfIndex' contract: hybrid serving
     must work with the PQ-codes index too, filtered and unfiltered."""
@@ -515,14 +467,14 @@ def test_search_hybrid_accepts_ivfpq_index(spark, corpus, tmp_path):
 
 
 def test_wand_split_overflow_guard_extreme_doc_ids(spark):
-    """A bucket whose doc-id span exceeds what int64 slice math can
-    represent (full-range xxhash64-style ids in ONE bucket) must fall
-    back to the unsliced plan instead of wrapping slice indices and
-    silently dropping blocks' documents from the top-k."""
-    imax = (1 << 63) - 1
+    """Doc ids at both ends of int64 in ONE bucket (a full-range
+    xxhash64-style span, 2^64 wide): the per-bucket scorer and the
+    driver-local kernel return every matching doc with equal answers,
+    and a filter down to the two extreme ids returns exactly those two
+    (block pruning and the bitset stay exact at the int64 edges)."""
+    imin, imax = -(1 << 63), (1 << 63) - 1
     rows = [
-        (-(1 << 62) * 2 + i, f"spark join window doc {i} alpha beta")
-        for i in range(6)
+        (imin + i, f"spark join window doc {i} alpha beta") for i in range(6)
     ] + [
         (imax - 5 + i, f"spark join window doc tail {i} gamma")
         for i in range(5)
@@ -532,25 +484,30 @@ def test_wand_split_overflow_guard_extreme_doc_ids(spark):
         docs, analyzer="stop", n_buckets=1, norm_dtype=np.float64
     )
     idf = _idf_map(fb, TERMS)
-    base = wand.wand_topk(fb.blocks, idf, sorted(idf), k=10).collect()
-    for split in (2, 4, "auto"):
-        got = wand.wand_topk(
-            fb.blocks, idf, sorted(idf), k=10, split=split
+    dist = [
+        (r["doc_id"], r["score"])
+        for r in bm25.score_from_blocks(
+            fb.blocks, idf, sorted(idf), k=20
         ).collect()
-        rank_identical(
-            [(r["doc_id"], r["score"]) for r in base],
-            [(r["doc_id"], r["score"]) for r in got],
-        )
-    assert len(base) == 10
+    ]
+    assert sorted(d for d, _ in dist) == sorted(d for d, _ in rows)
+    rank_identical(dist, _kernel_topk(fb, idf, 20), tol=1e-9)
+    ends = [imin, imax - 1]
+    arr = np.array(ends, dtype=np.int64)
+    got = bm25.score_from_blocks(
+        fb.blocks, idf, sorted(idf), k=20, allowed=arr
+    ).collect()
+    assert sorted(r["doc_id"] for r in got) == ends
+    assert sorted(d for d, _ in _kernel_topk(fb, idf, 20, allowed=arr)) == ends
 
 
 def test_filter_emptying_buckets_equals_filter_then_score(
     spark, positional_index, monkeypatch
 ):
     """A filter whose docs all sit in the first doc-range bucket leaves
-    every other bucket without one eligible block: the kernels prune
-    those buckets to nothing and must still give filter-then-score
-    through WAND at split 1, 2 and 4, the exact scorer and AND."""
+    every other bucket without one eligible block: the kernel prunes
+    those buckets to nothing and must still give filter-then-score for
+    OR and AND."""
     from docs_indexer_spark.plans.query import IndexReader
 
     reader = IndexReader(spark, positional_index)
@@ -560,7 +517,7 @@ def test_filter_emptying_buckets_equals_filter_then_score(
     hit = reader.blocks.filter(F.col("term_id").isin(ids)).select(
         "bucket", "first_doc_id", "last_doc_id"
     ).toPandas()
-    kept = wand.blocks_containing(
+    kept = bm25.blocks_containing(
         hit["first_doc_id"].values, hit["last_doc_id"].values,
         np.arange(100, dtype=np.int64),
     )
@@ -574,13 +531,10 @@ def test_filter_emptying_buckets_equals_filter_then_score(
         )[:10]
 
     for _ in on_both_routes(monkeypatch):
-        want = expect(reader.search(q, k=100_000, exact=True).collect())
+        want = expect(reader.search(q, k=100_000).collect())
         assert want
-        for kwargs in (
-            {"split": 1}, {"split": 2}, {"split": 4}, {"exact": True}
-        ):
-            got = reader.search(q, k=10, where=where, **kwargs).collect()
-            rank_identical(want, [(r["doc_id"], r["score"]) for r in got])
+        got = reader.search(q, k=10, where=where).collect()
+        rank_identical(want, [(r["doc_id"], r["score"]) for r in got])
         want_and = expect(
             reader.search(q, k=100_000, operator="and").collect()
         )
@@ -675,7 +629,7 @@ def test_query_built_before_its_filter_is_evicted_still_runs(
     reader = IndexReader(spark, positional_index)
     where = "n_chars >= 400"
     q = " ".join(TERMS)
-    routes = ({}, {"split": 2}, {"exact": True}, {"operator": "and"})
+    routes = ({}, {"operator": "and"})
     want = [
         [(r["doc_id"], r["score"])
          for r in reader.search(q, k=10, where=where, **kw).collect()]

@@ -92,7 +92,7 @@ def test_search_fuzzy_transposition_via_symspell(
     reader = IndexReader(spark, cat)
     for _ in on_both_routes(monkeypatch):
         want = [(r["doc_id"], round(r["score"], 9))
-                for r in reader.search("window", k=5, exact=True).collect()]
+                for r in reader.search("window", k=5).collect()]
         got = [(r["doc_id"], round(r["score"], 9))
                for r in reader.search_fuzzy("winodw", k=5).collect()]
         assert got == want and got, "transposition must match at fuzziness 1"
@@ -254,7 +254,7 @@ def test_expansion_caps(spark, fuzzy_index, monkeypatch):
                   for r in reader.search_prefix("s", k=5,
                                                 max_expansions=1).collect()]
         single = [(r["doc_id"], round(r["score"], 9))
-                  for r in reader.search(top, k=5, exact=True).collect()]
+                  for r in reader.search(top, k=5).collect()]
         assert capped == single and capped
         # uncapped expands wider → different (or equal) result set, but
         # must not error; and fuzzy accepts the cap parameter too

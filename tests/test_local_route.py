@@ -70,7 +70,7 @@ def _most_common(pairs):
 
 
 def test_bm25_exact_and_match(reader, monkeypatch):
-    for kw in ({}, {"exact": True}, {"operator": "and"}):
+    for kw in ({}, {"operator": "and"}):
         _same_scored(monkeypatch, lambda: reader.search(Q, k=10, **kw))
     _same_scored(monkeypatch, lambda: reader.search("spark", k=10))
     # an unindexed term AND-matches nothing, on either route
@@ -126,7 +126,7 @@ def test_selective_filters(reader, monkeypatch):
     from docs_indexer_spark.plans import query
 
     where = "lang = 'de'"
-    for kw in ({}, {"exact": True}, {"operator": "and"}):
+    for kw in ({}, {"operator": "and"}):
         # twice: the second resolves from the filter memo
         for _ in range(2):
             _same_scored(
@@ -313,7 +313,9 @@ def test_driver_rows_equal_the_jvm_relation(
 ):
     """Every local kind and every early-out answers ``collect()`` on the
     driver with exactly the rows the materialised JVM relation gives."""
-    from docs_indexer_spark.operators import bm25, phrase, wand
+    import numpy as np
+
+    from docs_indexer_spark.operators import bm25, phrase
     from docs_indexer_spark.operators.bm25 import TOPK_SCHEMA
     from docs_indexer_spark.plans import query
     from docs_indexer_spark.plans.query import PHRASE_SCHEMA
@@ -321,9 +323,9 @@ def test_driver_rows_equal_the_jvm_relation(
     monkeypatch.setattr(query, "LOCAL_MAX_BLOCKS", 10**9)
     last = reader.search(Q, k=3).collect()[-1]
     blocks = reader.blocks
+    empty_bc = reader.spark.sparkContext.broadcast(np.empty(0, np.int64))
     answers = {
         "bm25": lambda: reader.search(Q, k=10),
-        "exact": lambda: reader.search(Q, k=10, exact=True),
         "and": lambda: reader.search("spark join", k=10, operator="and"),
         "search_after": lambda: reader.search(
             Q, k=10, search_after=(last["score"], last["doc_id"])
@@ -352,9 +354,11 @@ def test_driver_rows_equal_the_jvm_relation(
         "blocks_empty_filter": lambda: bm25.score_from_blocks(
             blocks, {1: 1.0}, [1], allowed=[]
         ),
-        "wand_no_terms": lambda: wand.wand_topk(blocks, {}, []),
-        "wand_empty_filter": lambda: wand.wand_topk(
-            blocks, {1: 1.0}, [1], allowed=[]
+        "blocks_and_no_terms": lambda: bm25.score_from_blocks(
+            blocks, {}, [], require_all=True, after=(1.0, 0)
+        ),
+        "blocks_empty_broadcast": lambda: bm25.score_from_blocks(
+            blocks, {1: 1.0}, [1], allowed=empty_bc
         ),
     }
     phrases = {
@@ -372,9 +376,10 @@ def test_driver_rows_equal_the_jvm_relation(
         for name, run in runs.items():
             rows = _driver_rows_match_jvm(run(), schema)
             assert bool(rows) == (
-                name in ("bm25", "exact", "and", "search_after", "filtered",
+                name in ("bm25", "and", "search_after", "filtered",
                          "fuzzy", "prefix", "more_like_this", "phrase")
             ), name
+    empty_bc.destroy()
 
 
 def test_local_answer_to_pandas_and_docs(reader, monkeypatch):

@@ -212,17 +212,15 @@ def test_serving_runs_one_python_stage_per_query(
     and filter — building the query must start no Spark job.  This is
     the distributed route's gate; the small test index would otherwise
     take the driver-local route (test_small_queries_start_no_spark_job).
-    Every kind but WAND runs the driver-local route's own kernel once
-    per bucket, so no plan may shuffle rows by doc_id."""
+    Every kind runs the driver-local route's own Arrow kernel once per
+    bucket, so no plan may shuffle rows by doc_id or run a pandas group
+    stage."""
     from docs_indexer_spark.plans.query import IndexReader
 
     reader = IndexReader(spark, positional_index)
     where = "lang = 'de'"
     kinds = {
         "bm25": lambda: reader.search("spark join window", k=10),
-        "exact": lambda: reader.search(
-            "spark join window", k=10, exact=True
-        ),
         "and": lambda: reader.search("spark join", k=10, operator="and"),
         "phrase": lambda: reader.search_phrase(
             " ".join(phrase_pairs["dense"]), k=10
@@ -240,6 +238,7 @@ def test_serving_runs_one_python_stage_per_query(
     sc = spark.sparkContext
     nodes = {}
     doc_exchanges = {}
+    pandas_stages = {}
     for name, run in kinds.items():
         group = f"plan-shape-{name}"
         sc.setJobGroup(group, name)
@@ -250,16 +249,17 @@ def test_serving_runs_one_python_stage_per_query(
         assert sc.statusTracker().getJobIdsForGroup(group) == [], name
         df.collect()
         nodes[name] = _executed_python_nodes(df)
+        plan = _plan(df)
         doc_exchanges[name] = re.findall(
-            r"Exchange hashpartitioning\(doc_id", _plan(df)
+            r"Exchange hashpartitioning\(doc_id", plan
         )
-    assert all(len(v) == 1 for v in nodes.values()), nodes
+        pandas_stages[name] = re.findall(r"FlatMapGroupsInPandas", plan)
     assert not any(doc_exchanges.values()), doc_exchanges
+    assert not any(pandas_stages.values()), pandas_stages
     # one per-bucket kernel per kind; both phrase cases are covered: the
     # dense pair keeps every block, the rare-lead pair prunes the head
     # term's blocks by the rare term's docs inside the same kernel
-    for name in ("exact", "and", "fuzzy", "phrase", "phrase_rare_lead"):
-        assert nodes[name] == ["FlatMapGroupsInArrow"], nodes
+    assert all(v == ["FlatMapGroupsInArrow"] for v in nodes.values()), nodes
     reader.close()
 
 
@@ -278,7 +278,6 @@ def test_small_queries_start_no_spark_job(
     last = reader.search("spark join window", k=3).collect()[-1]
     kinds = {
         "bm25": lambda: reader.search("spark join window", k=10),
-        "exact": lambda: reader.search("spark join", k=10, exact=True),
         "and": lambda: reader.search("spark join", k=10, operator="and"),
         "search_after": lambda: reader.search(
             "spark join window", k=10,
@@ -334,7 +333,6 @@ def test_local_route_makes_no_jvm_round_trip(
     where = "lang = 'de'"
     kinds = {
         "bm25": lambda: reader.search("spark join window", k=10),
-        "exact": lambda: reader.search("spark join", k=10, exact=True),
         "and": lambda: reader.search("spark join", k=10, operator="and"),
         "phrase": lambda: reader.search_phrase(
             " ".join(phrase_pairs["dense"]), k=10
@@ -382,6 +380,6 @@ def test_local_route_makes_no_jvm_round_trip(
     assert all(v == [] for v in started.values()), started
     # the spies see the JVM path: a distributed query trips them
     monkeypatch.setattr(query, "LOCAL_MAX_BLOCKS", 0)
-    assert reader.search("spark join", k=10, exact=True).collect()
+    assert reader.search("spark join", k=10).collect()
     assert "spark.read" in calls and "collectToPython" in calls
     reader.close()
